@@ -1726,18 +1726,45 @@ join tiers t on e.value >= t.lo and e.value < t.hi
 """
 
 
+def _code_digest(code, h) -> None:
+    """Feed a code object's bytecode, constants (nested code objects
+    recursively, frozensets in a hash-seed-independent order) and the
+    names it calls into ``h``. Line numbers are not part of ``co_code``,
+    so moving a builder within the file keeps its digest."""
+    h.update(code.co_code)
+    h.update(repr(code.co_names).encode())
+    for c in code.co_consts:
+        if hasattr(c, "co_code"):
+            _code_digest(c, h)
+        elif isinstance(c, frozenset):
+            h.update(repr(sorted(map(repr, c))).encode())
+        else:
+            h.update(repr(c).encode())
+
+
 def _materialize_once(sf_dir: str, kind: str, build) -> str:
     """Build a per-sf_dir format fixture under /tmp exactly once,
     ATOMICALLY: ``build(staging_dir)`` writes into a fresh staging
     directory which is then renamed into place, so a killed run can
     never leave a half-written table that a later exists-check trusts.
-    A concurrent winner's rename is tolerated."""
+    A concurrent winner's rename is tolerated. The directory is
+    ``drill_spark_<kind>_<sf tag>_<code tag>``: the code tag digests the
+    builder's code, so a changed builder never reuses a fixture its
+    older version wrote, and building removes the fixtures other
+    versions of the builder left for the same ``sf_dir`` and kind (so
+    builders that share a kind must share their code, or each build
+    evicts the other's)."""
     import hashlib
+    import re
     import shutil
     import tempfile
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    final = os.path.join(tempfile.gettempdir(), f"drill_spark_{kind}_{tag}")
+    sf_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    h = hashlib.md5()
+    _code_digest(build.__code__, h)
+    tmp = tempfile.gettempdir()
+    name = f"drill_spark_{kind}_{sf_tag}_{h.hexdigest()[:12]}"
+    final = os.path.join(tmp, name)
     if os.path.isdir(final):
         return final
     staging = f"{final}.staging.{os.getpid()}"
@@ -1749,6 +1776,13 @@ def _materialize_once(sf_dir: str, kind: str, build) -> str:
         if not os.path.isdir(final):  # lost a race is fine; else re-raise
             raise
         shutil.rmtree(staging, ignore_errors=True)
+    # other builder versions' fixtures (and the code-less tag older
+    # releases used); staging directories are never touched
+    stale = re.compile(
+        rf"drill_spark_{re.escape(kind)}_{sf_tag}(?:_[0-9a-f]{{12}})?")
+    for other in os.listdir(tmp):
+        if other != name and stale.fullmatch(other):
+            shutil.rmtree(os.path.join(tmp, other), ignore_errors=True)
     return final
 
 

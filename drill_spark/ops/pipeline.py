@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
+from drill_spark.ops import quote_ident
+
 # Engine-portable PII patterns (valid in both Java regex and RE2, so the
 # DuckDB oracles run the identical expressions).
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -368,8 +370,10 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
                for k in range(2, 11)])
     )
 
+    qid, qtext = quote_ident(id_col), quote_ident(text_col)
+
     def _seg(sep: str) -> str:
-        return (f"array_sort(filter(transform(split(lower({text_col}), "
+        return (f"array_sort(filter(transform(split(lower({qtext}), "
                 f"'{sep}'), x -> regexp_replace(x, '^\\\\s+|\\\\s+$', '')), "
                 f"x -> x != ''))")
 
@@ -389,7 +393,7 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
         ]
 
     segs = (
-        df.selectExpr(f"{id_col} as id",
+        df.selectExpr(f"{qid} as id",
                       _seg("\\\\n") + " as __lines",
                       _seg("\\\\n\\\\n") + " as __paras")
         .selectExpr(
@@ -401,7 +405,7 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     out = (
         base.join(fr, "id", "left").join(segs, "id")
         .selectExpr(
-            f"id as {id_col}",
+            f"id as {qid}",
             "dup_line_frac", "dup_line_char_frac",
             "dup_para_frac", "dup_para_char_frac",
             *[f"round(coalesce(__ch{k}, 0) / total_chars, 4) as {nm}"

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from drill_spark.ops import quote_ident
 from drill_spark.ops.dedup import tokens
 from drill_spark.ops.hofutil import bind_once
 
@@ -339,7 +340,7 @@ def _window_cooccur_sql(df: DataFrame, qs: list[str], window: int,
     def lit(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    low = f"lower({text_col})"
+    low = f"lower({quote_ident(text_col)})"
     pre = " AND ".join(f"contains({low}, {lit(t)})" for t in qs)
     streams = ", ".join(
         f"filter(zip_with(w, sequence(1, greatest(size(w), 1)), "
@@ -371,7 +372,7 @@ def _window_cooccur_sql(df: DataFrame, qs: list[str], window: int,
           f"w -> aggregate({merged}, {init}, {step}, {finish})), 1) "
           f"as bigint)")
     return (df.where(pre)
-            .selectExpr(id_col, f"{nw} as n_windows")
+            .selectExpr(quote_ident(id_col), f"{nw} as n_windows")
             .where("n_windows > 0"))
 
 

@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from drill_spark.ops import quote_ident
 from drill_spark.ops.dedup import normalize_text, tokens
 
 # Tiny per-language stopword lexicons for the n-gram/stopword-hit
@@ -182,12 +183,13 @@ def trigram_lm_score(df: DataFrame, id_col: str = "doc_id",
     """
     # sequence(1, 0) runs DESCENDING in Spark, so docs shorter than 3
     # chars must produce an empty array, not a backwards range
+    qtext = quote_ident(text_col)
     grams = df.select(
         F.col(id_col),
         F.explode(F.expr(
-            f"CASE WHEN length({text_col}) >= 3 THEN "
-            f"transform(sequence(1, length({text_col}) - 2), "
-            f"i -> substring({text_col}, i, 3)) ELSE array() END"
+            f"CASE WHEN length({qtext}) >= 3 THEN "
+            f"transform(sequence(1, length({qtext}) - 2), "
+            f"i -> substring({qtext}, i, 3)) ELSE array() END"
         )).alias("g"),
     ).withColumn("b", F.expr("substring(g, 1, 2)"))
     c3 = grams.groupBy("g").agg(F.count("*").alias("c3"))

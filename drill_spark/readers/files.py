@@ -24,9 +24,125 @@ from __future__ import annotations
 
 import os
 import re
+import stat
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# entries a session's SchemaStore keeps before evicting the least
+# recently used one
+SCHEMA_STORE_SIZE = 256
+
+
+class SchemaStore:
+    """Inferred reader schemas, reused across a session's statements.
+
+    Spark's JSON/CSV/XML sources scan their input once to infer the
+    schema and again to run the query; Drill discovers schema during
+    its single scan (ScanBatch OK_NEW_SCHEMA). A stored schema handed
+    back to the reader with ``.schema()`` skips the inference job. The
+    key holds everything inference depends on: the absolute local
+    path, the format, the final reader options, the session's conf
+    snapshot and a listing fingerprint (relative name, size, mtime,
+    ctime and inode of every file under the path), so adding,
+    deleting or rewriting a file, or changing an option or conf,
+    infers afresh. Globs, non-local URIs and relative paths are never
+    stored. ``inferred``/``reused`` count inference runs and hits."""
+
+    def __init__(self):
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+        self.inferred = 0
+        self.reused = 0
+
+    def key(self, spark: SparkSession, path: str, fmt: str, options: dict):
+        """The entry key for one read, or None when the path is not
+        storable (glob, URI, relative, missing or not listable)."""
+        if not os.path.isabs(path) or any(ch in path for ch in "*?[{"):
+            return None
+        try:
+            listing = _listing(path)
+        except OSError:  # missing path, broken symlink, unreadable dir
+            return None
+        # the JVM map's string form: one py4j round trip, where the
+        # Python-side spark.conf.getAll converts it entry by entry
+        confs = spark._jsparkSession.conf().getAll().toString()
+        opts = tuple(sorted((str(k), str(v)) for k, v in options.items()))
+        return (os.path.abspath(path), fmt, opts, confs, listing)
+
+    def get(self, key):
+        with self._lock:
+            hit = self._entries.get(key) if key is not None else None
+            if hit is not None:
+                self._entries.move_to_end(key)
+                self.reused += 1
+            return hit
+
+    def put(self, key, entry) -> None:
+        with self._lock:
+            self.inferred += 1
+            if key is None:
+                return
+            self._entries[key] = entry
+            self._entries.move_to_end(key)
+            while len(self._entries) > SCHEMA_STORE_SIZE:
+                self._entries.popitem(last=False)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+
+def _listing(path: str) -> tuple:
+    """(relative name, size, mtime_ns, ctime_ns, inode) of every file
+    under ``path`` (the path itself when it is a file). Raises OSError
+    for a symlinked directory under ``path``: Spark reads through it,
+    so its files would belong in the listing."""
+
+    def sig(rel, st):
+        return (rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns, st.st_ino)
+
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (sig("", st),)
+    out = []
+
+    def walk(d, prefix):
+        # scandir, not os.walk: its entries carry their own names and
+        # types, which makes listing large directories ~3x faster
+        with os.scandir(d) as it:
+            entries = sorted(it, key=lambda e: e.name)
+        for e in entries:
+            if not e.is_dir():
+                out.append(sig(prefix + e.name, e.stat()))
+            elif e.is_symlink():
+                raise OSError(f"symlinked directory: {e.path}")
+            else:
+                walk(e.path, prefix + e.name + "/")
+
+    walk(path, "")
+    return tuple(out)
+
+
+def _read_reusing_schema(store, spark, reader, path, fmt, options, load, infer=None):
+    """``load(reader)`` through the session's SchemaStore. ``infer()``
+    returns (DataFrame, extra reader options the read settled on);
+    both are stored, and a hit re-applies them with the stored schema
+    so Spark runs no inference job. Without a store this is exactly
+    ``infer()``."""
+    infer = infer or (lambda: (load(reader), {}))
+    if store is None:
+        return infer()[0]
+    key = store.key(spark, path, fmt, options)
+    hit = store.get(key)
+    if hit is not None:
+        schema, extra = hit
+        return load(reader.schema(schema).options(**extra))
+    df, extra = infer()
+    store.put(key, (df.schema, extra))
+    return df
 
 
 def read_auto(
@@ -42,6 +158,7 @@ def read_auto(
     # property, planner/sql/handlers/SchemaHandler.java,
     # TestSchemaWithTableFunction.java): skip inference, use the DDL
     schema = options.pop("schema", None)
+    store = getattr(session, "schema_store", None)
     fmt = fmt.lower()
     if fmt in ("log", "httpd", "syslog"):
         from drill_spark.readers import logs
@@ -57,14 +174,16 @@ def read_auto(
         ]
         return logs.read_log(spark, path, regex, fields)
     if fmt == "json":
-        return read_json(spark, path, schema=schema, **_json_kwargs(options, session))
+        return read_json(spark, path, schema=schema, store=store,
+                         **_json_kwargs(options, session))
     if fmt in ("csv", "text", "tsv", "psv"):
         delim = {"tsv": "\t", "psv": "|"}.get(fmt)
         if delim and "delimiter" not in options:
             options["delimiter"] = delim
-        return read_csv(spark, path, schema=schema, **_csv_kwargs(options, session))
+        return read_csv(spark, path, schema=schema, store=store,
+                        **_csv_kwargs(options, session))
     if fmt == "xml":
-        return read_xml(spark, path, schema=schema, options=options)
+        return read_xml(spark, path, schema=schema, options=options, store=store)
     if fmt == "ltsv":
         return read_ltsv(spark, path, schema=schema)
     if fmt in ("excel", "xlsx"):
@@ -343,6 +462,7 @@ def read_json(
     schema: str | None = None,
     options: dict | None = None,
     extended: bool = False,
+    store: SchemaStore | None = None,
 ) -> DataFrame:
     """JSON with Drill semantics: multiline objects OK, schema unioned
     across files (OK_NEW_SCHEMA analog resolved at read time), and
@@ -355,18 +475,31 @@ def read_json(
     variant_get(v, '$.field' [, type]), inspect via
     schema_of_variant/typeof. This is strictly more faithful than
     Drill's union (arbitrary nesting, no subtype enumeration).
+
+    A session's ``store`` reuses the schema (and the multiLine outcome)
+    an earlier read of the same unchanged files inferred; a provided
+    schema and union_mode infer nothing and bypass it.
     """
-    reader = spark.read.options(**(options or {}))
+    opts = dict(options or {})
+    if all_text_mode and not union_mode:
+        opts["primitivesAsString"] = "true"
+    reader = spark.read.options(**opts)
     if schema:
         reader = reader.schema(schema)
     if union_mode:
         reader = reader.option("singleVariantColumn", "v")
-    elif all_text_mode:
-        reader = reader.option("primitivesAsString", "true")
-    # Drill's JSON reader accepts both NDJSON and pretty-printed files.
-    df = reader.option("multiLine", "false").json(path)
-    if df.columns == ["_corrupt_record"]:
-        df = reader.option("multiLine", "true").json(path)
+
+    def infer():
+        # Drill's JSON reader accepts both NDJSON and pretty-printed files.
+        df = reader.option("multiLine", "false").json(path)
+        if df.columns == ["_corrupt_record"]:
+            return reader.option("multiLine", "true").json(path), {"multiLine": "true"}
+        return df, {"multiLine": "false"}
+
+    if schema or union_mode:
+        store = None
+    df = _read_reusing_schema(store, spark, reader, path, "json", opts,
+                              lambda r: r.json(path), infer)
     if extended:
         df = decode_extended_json(df)
     return df
@@ -468,16 +601,21 @@ def read_csv(
     delimiter: str = ",",
     schema: str | None = None,
     options: dict | None = None,
+    store: SchemaStore | None = None,
 ) -> DataFrame:
     """CSV with Drill's two models: named columns (extractHeader=true or
     a provided schema) or the `columns[n]` array model for headerless
-    files."""
-    reader = spark.read.options(**(options or {})).option("delimiter", delimiter)
+    files. A session's ``store`` holds the raw reader schema (`_c0`...
+    for headerless files), never the `columns` wrapper."""
+    opts = {**(options or {}), "delimiter": delimiter,
+            "header": "true" if header else "false"}
+    reader = spark.read.options(**opts)
     if schema:
-        return reader.schema(schema).option("header", "true" if header else "false").csv(path)
+        return reader.schema(schema).csv(path)
+    raw = _read_reusing_schema(store, spark, reader, path, "csv", opts,
+                               lambda r: r.csv(path))
     if header:
-        return reader.option("header", "true").csv(path)
-    raw = reader.option("header", "false").csv(path)
+        return raw
     # columns[n] model: a single array column named `columns`
     return raw.select(F.array(*[F.col(c) for c in raw.columns]).alias("columns"))
 
@@ -488,6 +626,7 @@ def read_xml(
     row_tag: str = "row",
     schema: str | None = None,
     options: dict | None = None,
+    store: SchemaStore | None = None,
 ) -> DataFrame:
     """XML reader (contrib/format-xml XMLFormatPlugin analog).
 
@@ -500,10 +639,11 @@ def read_xml(
     """
     opts = dict(options or {})
     opts.setdefault("rowTag", opts.pop("dataLevel", row_tag))
-    reader = spark.read.options(**opts)
+    reader = spark.read.options(**opts).format("xml")
     if schema:
-        reader = reader.schema(schema)
-    return reader.format("xml").load(path)
+        return reader.schema(schema).load(path)
+    return _read_reusing_schema(store, spark, reader, path, "xml", opts,
+                                lambda r: r.load(path))
 
 
 def read_ltsv(

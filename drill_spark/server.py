@@ -185,7 +185,8 @@ class _Handler(BaseHTTPRequestHandler):
 
     def _ui_profile_detail(self, s, qid: str) -> None:
         """Per-query profile page (the reference's /profiles/{queryid}:
-        full statement + the captured physical plan)."""
+        full statement + the captured physical plan, plus how many
+        path-table reads inferred a schema or reused a stored one)."""
         p = next((x for x in s.profiles if x.get("queryId") == qid), None)
         if p is None:
             self._reply_html(404, "Profile", f"<p>no profile {_esc(qid)}</p>")
@@ -194,6 +195,8 @@ class _Handler(BaseHTTPRequestHandler):
             _table(["field", "value"],
                    [("queryId", p.get("queryId", "")), ("state", p["state"]),
                     ("plan_ms", p["plan_ms"]),
+                    ("schema_inferred", p["schema_inferred"]),
+                    ("schema_reused", p["schema_reused"]),
                     ("start_ts", p["start_ts"].isoformat())])
             + f"<h2>Statement</h2><pre>{_esc(p['query'])}</pre>"
             + "<h2>Physical plan</h2><pre>"

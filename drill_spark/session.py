@@ -23,9 +23,12 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.files import SchemaStore
 
 FIXTURE_TABLES = (
     "region",
@@ -39,6 +42,7 @@ FIXTURE_TABLES = (
     "documents",
     "embeddings",
 )
+
 
 def _truthy(v: str) -> bool:
     return str(v).strip().lower() in ("true", "1", "on", "yes")
@@ -272,7 +276,13 @@ class DrillSession:
     vector_indexes: dict[str, str] = field(default_factory=dict)  # name -> index dir
     profiles: list[dict] = field(default_factory=list)
     temp_tables: list[str] = field(default_factory=list)
+    # inferred path-table schemas reused across statements (readers/files.py)
+    schema_store: SchemaStore = field(default_factory=SchemaStore)
     _view_counter: int = 0
+    # rewrite temp views (_drill_path_N/_drill_tf_N): the running
+    # statement's, per thread, and those kept until close()
+    _statement: threading.local = field(default_factory=threading.local, repr=False)
+    _kept_views: list[str] = field(default_factory=list)
     # hadoop-conf keys this SESSION mutated -> the value before the first
     # mutation (None = key was unset). The hadoopConfiguration is
     # SparkContext-global, so Drill's session-scoped option semantics
@@ -509,7 +519,15 @@ class DrillSession:
 
         Each statement is recorded in ``profiles`` (sys.profiles analog:
         Drill's QueryManager keeps per-query profiles). plan_ms covers
-        rewrite+analysis; execution is lazy and runs on the action."""
+        rewrite+analysis; execution is lazy and runs on the action.
+        schema_inferred/schema_reused count the path-table reads that
+        ran schema inference and those served by ``schema_store``.
+
+        The temp views the rewrite registered for path tables and table
+        functions are dropped when the statement returns: the returned
+        DataFrame is already analyzed, so it no longer needs the names.
+        A statement Spark may store as SQL text (see
+        ``_keep_statement_views``) keeps them until ``close()``."""
         import datetime
         import time
         import uuid
@@ -524,6 +542,10 @@ class DrillSession:
             "state": "FAILED",
             "plan": "",
         }
+        store = self.schema_store
+        inferred, reused = store.inferred, store.reused
+        outer = getattr(self._statement, "views", None)
+        self._statement.views = views = []
         t0 = time.perf_counter()
         try:
             df = execute(self, query)
@@ -539,7 +561,11 @@ class DrillSession:
                 pass  # streaming frames / non-plannable results
             return df
         finally:
+            self._statement.views = outer
+            self._drop_views(views)
             entry["plan_ms"] = round((time.perf_counter() - t0) * 1000, 3)
+            entry["schema_inferred"] = store.inferred - inferred
+            entry["schema_reused"] = store.reused - reused
             self.profiles.append(entry)
             if len(self.profiles) > 1000:  # bounded history, like the web UI
                 del self.profiles[:-1000]
@@ -590,7 +616,30 @@ class DrillSession:
 
     def _fresh_view(self, hint: str = "t") -> str:
         self._view_counter += 1
-        return f"_drill_{hint}_{self._view_counter}"
+        name = f"_drill_{hint}_{self._view_counter}"
+        views = getattr(self._statement, "views", None)
+        (self._kept_views if views is None else views).append(name)
+        return name
+
+    def _keep_statement_views(self) -> None:
+        """Keep the running statement's rewrite views until ``close()``.
+        For statements Spark may store as SQL text and resolve again on
+        every use (a SQL function body, a temp view, CACHE TABLE): the
+        stored text names the views."""
+        views = getattr(self._statement, "views", None)
+        if views:
+            self._kept_views += views
+            views.clear()
+
+    def _drop_views(self, names: list[str]) -> None:
+        """Drop temp views through the session catalog, not
+        ``spark.catalog.dropTempView``: that one also uncaches every
+        cached plan over the view, e.g. a cached
+        ``select * from dfs.`...``` frame."""
+        catalog = self.spark._jsparkSession.sessionState().catalog()
+        for name in names:
+            catalog.dropTempView(name)
+        names.clear()
 
     def close(self) -> None:
         """End the session: drop session-scoped temp tables and
@@ -601,6 +650,8 @@ class DrillSession:
 
         for hconf in list(self._hadoop_prior):
             self._restore_hadoop(hconf)
+        self._drop_views(self._kept_views)
+        self.schema_store.clear()
         for path in self.temp_tables:
             shutil.rmtree(path, ignore_errors=True)
         self.temp_tables.clear()

@@ -66,6 +66,12 @@ _TABLE_FN = re.compile(
     r"table\(\s*((?:\w+\.)+)`([^`]+)`\s*\(((?:'[^']*'|\"[^\"]*\"|[^)])*)\)\s*\)",
     re.IGNORECASE,
 )
+# a query, or EXPLAIN/DESCRIBE of one (after leading comments and
+# parentheses): Spark analyzes it once and stores no SQL text that
+# names the rewrite's temp views
+_PLAIN_QUERY = re.compile(
+    r"(?:\s|--[^\n]*|/\*.*?\*/|\()*(?:SELECT|WITH|VALUES|EXPLAIN|DESC|DESCRIBE)\b",
+    re.IGNORECASE | re.DOTALL)
 _USE = re.compile(r"^\s*USE\s+`?([\w.]+)`?\s*;?\s*$", re.IGNORECASE)
 _SHOW_SCHEMAS = re.compile(r"^\s*SHOW\s+(?:SCHEMAS|DATABASES)\s*;?\s*$", re.IGNORECASE)
 _DESCRIBE_SCHEMA = re.compile(r"^\s*DESCRIBE\s+SCHEMA\s+`?([\w.]+)`?\s*;?\s*$", re.IGNORECASE)
@@ -1919,7 +1925,12 @@ def execute(session, query: str) -> DataFrame:
         parts.append(seg)
         query = "".join(parts)
 
-    df = spark.sql(rewrite(session, query))
+    text = rewrite(session, query)
+    if not _PLAIN_QUERY.match(query):
+        # Spark may store this statement's text (a SQL function body, a
+        # temp view, CACHE TABLE) and resolve it on every later use
+        session._keep_statement_views()
+    df = spark.sql(text)
     mv = _match_materialized(session, query, df)
     return mv if mv is not None else df
 

@@ -2191,3 +2191,46 @@ def test_collocations_lift_replay(spark):
     rep = plans.explain_report(collocations(df, min_count=5, top_k=10))
     assert not rep["python_eval"]
     assert rep["joins"].get("BroadcastHashJoin", 0) >= 2, rep
+
+
+def test_materialize_once_keys_by_builder_code(tmp_path, monkeypatch):
+    """Two different builders on the same sf_dir get different fixture
+    directories, so a changed builder never reuses an older build; the
+    same builder reuses its directory without building again, and a
+    build removes the other version's fixture (and one under the
+    code-less tag) for the same sf_dir and kind, not other fixtures."""
+    import hashlib
+    import os
+    import tempfile
+
+    from drill_spark.extops import _materialize_once
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    built = []
+
+    def build_a(d):
+        built.append("a")
+        os.makedirs(d)
+        open(os.path.join(d, "v"), "w").write("a")
+
+    def build_b(d):
+        built.append("b")
+        os.makedirs(d)
+        open(os.path.join(d, "v"), "w").write("b")
+
+    sf = str(tmp_path / "sf")
+    sf_tag = hashlib.md5(os.path.abspath(sf).encode()).hexdigest()[:12]
+    legacy = tmp_path / f"drill_spark_probe_{sf_tag}"
+    other_kind = tmp_path / f"drill_spark_probe2_{sf_tag}"
+    legacy.mkdir()
+    other_kind.mkdir()
+    da = _materialize_once(sf, "probe", build_a)
+    assert open(os.path.join(da, "v")).read() == "a"
+    assert not legacy.exists() and other_kind.exists()
+    assert _materialize_once(sf, "probe", build_a) == da
+    db = _materialize_once(sf, "probe", build_b)
+    assert da != db
+    assert open(os.path.join(db, "v")).read() == "b"
+    assert not os.path.exists(da)
+    assert _materialize_once(sf, "probe", build_b) == db
+    assert built == ["a", "b"]

@@ -1313,3 +1313,35 @@ def test_retrieval_eval_replay(spark):
     assert got["b"] == (1, 0, 0.0, 0)
     assert got["d"] == (1, 0, 0.0, 0)
     assert "c" not in got                      # no relevance judgments
+
+
+def test_sql_text_builders_quote_column_names(spark):
+    """The SQL-text builders backtick-quote id_col/text_col: a frame whose
+    columns are named `doc id`/`body text` gives the same rows as the
+    plain-named run."""
+    from drill_spark.ops import quote_ident
+    from drill_spark.ops.pipeline import gopher_repetition
+    from drill_spark.ops.search import window_cooccur
+    from drill_spark.ops.text import trigram_lm_score
+
+    plain = spark.createDataFrame([
+        (1, "alpha beta gamma alpha beta delta"),
+        (2, "line one\nline one\nline two"),
+        (3, "para a\n\npara a\n\npara b alpha x delta"),
+        (4, "the cat sat the cat sat the cat sat"),
+    ], "doc_id long, text string")
+    odd = plain.toDF("doc id", "body text")
+    runs = [
+        lambda df, i, t: gopher_repetition(df, id_col=i, text_col=t),
+        lambda df, i, t: window_cooccur(df, ["alpha", "delta"], window=10,
+                                        id_col=i, text_col=t),
+        lambda df, i, t: trigram_lm_score(df, id_col=i, text_col=t),
+    ]
+    for run in runs:
+        a = run(plain, "doc_id", "text")
+        b = run(odd, "doc id", "body text")
+        assert b.columns[0] == "doc id"
+        got = sorted(map(tuple, b.collect()))
+        assert got == sorted(map(tuple, a.collect())) and got
+    assert quote_ident("a`b") == "`a``b`"
+    assert spark.range(1).toDF("a`b").selectExpr(quote_ident("a`b")).columns == ["a`b"]

@@ -527,3 +527,251 @@ def test_extended_json_relaxed_scalars(spark, tmp_path):
     two = read_json(spark, str(p2), extended=True).collect()[0]
     assert str(one.a) == "2020-01-01 00:00:10"
     assert str(two.a) == "2020-01-01 00:00:10"
+
+
+# ---------------- inferred-schema reuse (SchemaStore) ----------------
+
+
+@pytest.fixture(scope="module")
+def store_session(spark):
+    from drill_spark.session import DrillSession
+
+    s = DrillSession(spark=spark)
+    yield s
+    s.close()
+
+
+def _counts(s):
+    p = s.profiles[-1]
+    return p["schema_inferred"], p["schema_reused"]
+
+
+def _same(a, b):
+    assert a.dtypes == b.dtypes
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def _hit_matches_fresh(s, sql):
+    """Run ``sql`` on an empty store (inference), then again (a hit);
+    the hit must be the same frame as the fresh inference."""
+    s.schema_store.clear()
+    fresh = s.sql(sql)
+    assert _counts(s) == (1, 0)
+    hit = s.sql(sql)
+    assert _counts(s) == (0, 1)
+    _same(hit, fresh)
+    return hit
+
+
+def test_schema_store_json_drift(store_session, tmp_path):
+    """NDJSON whose late file widens a type and adds a field."""
+    d = tmp_path / "drift"
+    d.mkdir()
+    (d / "a.json").write_text('{"id": 1, "v": 10, "p": {"k": 1}}\n'
+                              '{"id": 2, "v": 20, "p": {"k": 2}}\n')
+    (d / "b.json").write_text('{"id": 3, "v": 2.5, "p": {"k": 3.5}, "w": "x"}\n')
+    hit = _hit_matches_fresh(store_session, f"select * from dfs.`{d}`")
+    assert dict(hit.dtypes)["v"] == "double" and "w" in hit.columns
+    assert hit.count() == 3
+
+
+def test_schema_store_pretty_json_keeps_multiline(store_session, tmp_path):
+    """The multiLine fallback's outcome is stored with the schema: a hit
+    on a pretty-printed file must not read it as NDJSON."""
+    p = tmp_path / "pretty.json"
+    p.write_text(json.dumps([{"id": 1, "tags": ["a", "b"], "m": {"x": 1}},
+                             {"id": 2, "tags": [], "m": {"x": 2}}], indent=2))
+    hit = _hit_matches_fresh(store_session, f"select * from dfs.`{p}`")
+    assert sorted(r.id for r in hit.collect()) == [1, 2]
+    assert "_corrupt_record" not in hit.columns
+
+
+def test_schema_store_corrupt_record(store_session, tmp_path):
+    p = tmp_path / "bad.json"
+    p.write_text('{"id": 1, "v": 10}\n{"id": 2, "v":\n{"id": 3, "v": 30}\n')
+    hit = _hit_matches_fresh(store_session, f"select * from dfs.`{p}`")
+    assert "_corrupt_record" in hit.columns
+    assert sum(r._corrupt_record is not None for r in hit.collect()) == 1
+
+
+def test_schema_store_all_text_mode_toggle(store_session, spark, tmp_path):
+    """The option is part of the key: toggling it between two identical
+    queries infers again, and toggling back reuses the typed entry."""
+    s = store_session
+    p = tmp_path / "typed.json"
+    p.write_text('{"id": 1, "v": 1.5, "ok": true}\n{"id": 2, "v": 2.5, "ok": false}\n')
+    sql = f"select * from dfs.`{p}`"
+    typed = _hit_matches_fresh(s, sql)
+    s.set_option("store.json.all_text_mode", "true")
+    try:
+        text = s.sql(sql)
+        assert _counts(s) == (1, 0)
+        _same(text, read_json(spark, str(p), all_text_mode=True))
+        assert set(dict(text.dtypes).values()) == {"string"}
+        _same(s.sql(sql), text)
+        assert _counts(s) == (0, 1)
+    finally:
+        s.reset_option("store.json.all_text_mode")
+    _same(s.sql(sql), typed)
+    assert _counts(s) == (0, 1)
+
+
+def test_schema_store_corrupt_column_conf(store_session, spark, tmp_path):
+    """A changed spark.sql conf (here the corrupt-record column name)
+    forces a fresh inference."""
+    s = store_session
+    p = tmp_path / "bad2.json"
+    p.write_text('{"id": 1}\n{"id": \n')
+    sql = f"select * from dfs.`{p}`"
+    _hit_matches_fresh(s, sql)
+    spark.conf.set("spark.sql.columnNameOfCorruptRecord", "_bad")
+    try:
+        df = s.sql(sql)
+        assert _counts(s) == (1, 0)
+        assert "_bad" in df.columns and "_corrupt_record" not in df.columns
+        _same(df, read_json(spark, str(p)))
+    finally:
+        spark.conf.unset("spark.sql.columnNameOfCorruptRecord")
+    assert "_corrupt_record" in s.sql(sql).columns
+    assert _counts(s) == (0, 1)
+
+
+@pytest.mark.parametrize("name, body, table", [
+    ("h.csv", "a,b\n1,x\n2,y\n",
+     "table(dfs.`{p}`(type => 'text', extractHeader => 'true'))"),
+    ("n.csv", "1,x\n2,y,extra\n3\n", "dfs.`{p}`"),
+    ("t.tsv", "1\tx\n2\ty\n", "dfs.`{p}`"),
+    ("p.psv", "1|x\n2|y\n", "dfs.`{p}`"),
+    ("hp.psv", "a|b\n1|x\n",
+     "table(dfs.`{p}`(type => 'psv', extractHeader => 'true'))"),
+])
+def test_schema_store_csv_models(store_session, tmp_path, name, body, table):
+    """Header and columns[] models: the store holds the raw reader
+    schema, so a headerless hit still wraps `_c0`... into `columns`."""
+    p = tmp_path / name
+    p.write_text(body)
+    hit = _hit_matches_fresh(store_session, "select * from " + table.format(p=p))
+    if "extractHeader" in table:
+        assert hit.columns == ["a", "b"]
+    else:
+        assert hit.columns == ["columns"]
+
+
+def test_schema_store_xml(store_session, tmp_path):
+    p = tmp_path / "rows.xml"
+    p.write_text("<rows><r><id>1</id><v>a</v></r><r><id>2</id><w>1.5</w></r></rows>")
+    hit = _hit_matches_fresh(
+        store_session, f"select * from table(dfs.`{p}`(type => 'xml', rowTag => 'r'))")
+    assert sorted(hit.columns) == ["id", "v", "w"] and hit.count() == 2
+
+
+def test_schema_store_sees_file_changes(store_session, spark, tmp_path):
+    """Adding a file, rewriting one in place (same name, same size, mtime
+    restored) and deleting one each force a fresh inference."""
+    s = store_session
+    d = tmp_path / "changing"
+    d.mkdir()
+    a = d / "a.json"
+    a.write_text('{"id":1,"v":10}\n')
+    sql = f"select * from dfs.`{d}`"
+    _hit_matches_fresh(s, sql)
+
+    (d / "b.json").write_text('{"id": 2, "v": 2.5, "w": "new"}\n')
+    added = s.sql(sql)
+    assert _counts(s) == (1, 0)
+    _same(added, read_json(spark, str(d)))
+    assert "w" in added.columns
+
+    st = a.stat()
+    a.write_text('{"id":1,"u":10}\n')  # same size
+    os.utime(a, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert a.stat().st_size == st.st_size and a.stat().st_mtime_ns == st.st_mtime_ns
+    rewritten = s.sql(sql)
+    assert _counts(s) == (1, 0)
+    _same(rewritten, read_json(spark, str(d)))
+    assert "u" in rewritten.columns
+
+    (d / "b.json").unlink()
+    deleted = s.sql(sql)
+    assert _counts(s) == (1, 0)
+    _same(deleted, read_json(spark, str(d)))
+    assert deleted.columns == ["id", "u"]
+
+
+def test_schema_store_bypassed_by_schema_and_union(store_session, tmp_path):
+    """A provided schema and union (variant) mode infer nothing, so they
+    neither read nor fill the store."""
+    s = store_session
+    p = tmp_path / "by.json"
+    p.write_text('{"id": 1, "v": 10}\n')
+    s.schema_store.clear()
+    df = s.sql(f"select * from table(dfs.`{p}`(type => 'json', "
+               "schema => 'id bigint, v string'))")
+    assert dict(df.dtypes) == {"id": "bigint", "v": "string"}
+    assert _counts(s) == (0, 0)
+    df = s.sql(f"select * from table(dfs.`{p}`(type => 'json', unionType => 'true'))")
+    assert df.columns == ["v"] and df.count() == 1
+    assert _counts(s) == (0, 0)
+    assert not s.schema_store._entries
+
+
+def test_schema_store_lru_bound(spark, tmp_path, monkeypatch):
+    from drill_spark.readers import files
+    from drill_spark.readers.files import SchemaStore
+
+    monkeypatch.setattr(files, "SCHEMA_STORE_SIZE", 2)
+    store = SchemaStore()
+    for i in range(3):
+        p = tmp_path / f"f{i}.json"
+        p.write_text('{"id": 1}\n')
+        read_json(spark, str(p), store=store)
+    assert len(store._entries) == 2 and store.inferred == 3
+    read_json(spark, str(tmp_path / "f0.json"), store=store)  # evicted
+    assert store.inferred == 4 and store.reused == 0
+    read_json(spark, str(tmp_path / "f2.json"), store=store)
+    assert store.reused == 1
+
+
+def test_schema_store_key_lists_subdirectories(spark, tmp_path):
+    """The key's listing covers nested directories; a path that cannot
+    be listed (a broken symlink inside it) or holds a symlinked
+    directory is not stored."""
+    from drill_spark.readers.files import SchemaStore
+
+    store = SchemaStore()
+    d = tmp_path / "nested"
+    (d / "y=1").mkdir(parents=True)
+    (d / "y=1" / "a.json").write_text('{"id": 1}\n')
+    k1 = store.key(spark, str(d), "json", {})
+    assert k1 == store.key(spark, str(d), "json", {})
+    (d / "y=2").mkdir()
+    (d / "y=2" / "b.json").write_text('{"id": 2}\n')
+    assert store.key(spark, str(d), "json", {}) != k1
+    os.symlink(d / "y=1", d / "y=3")
+    assert store.key(spark, str(d), "json", {}) is None
+    os.remove(d / "y=3")
+    assert store.key(spark, str(d), "json", {}) is not None
+    os.symlink(tmp_path / "missing.json", d / "dangling.json")
+    assert store.key(spark, str(d), "json", {}) is None
+
+
+def test_schema_store_skips_globs(store_session, tmp_path):
+    d = tmp_path / "globbed"
+    d.mkdir()
+    (d / "a.json").write_text('{"id": 1}\n')
+    s = store_session
+    s.schema_store.clear()
+    for _ in range(2):
+        s.sql(f"select * from dfs.`{d}/*.json`").collect()
+        assert _counts(s) == (1, 0)
+    assert not s.schema_store._entries
+
+
+def test_profile_counts_one_path_query_twice(store_session, tmp_path):
+    p = tmp_path / "twice.json"
+    p.write_text('{"id": 1}\n')
+    s = store_session
+    s.sql(f"select * from dfs.`{p}`").collect()
+    assert _counts(s) == (1, 0)
+    s.sql(f"select * from dfs.`{p}`").collect()
+    assert _counts(s) == (0, 1)

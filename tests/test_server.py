@@ -227,3 +227,25 @@ def test_rest_basic_auth():
             assert e.code == 401
     finally:
         srv.shutdown()
+
+
+def test_profile_page_shows_schema_reuse(rest, session):
+    """The profile record and its REST page carry how many path-table
+    reads inferred a schema and how many reused a stored one."""
+    import re as _re
+
+    q = {"query": "select name from dfs.web.`people.json` where age > 30",
+         "autoLimit": "10"}
+    session.schema_store.clear()
+    seen = []
+    for _ in range(2):
+        _post_form(f"{rest}/query", q)
+        p = session.profiles[-1]
+        seen.append((p["schema_inferred"], p["schema_reused"]))
+        code, _, page = _get(f"{rest}/profiles/{p['queryId']}")
+        assert code == 200
+        shown = dict(_re.findall(
+            r"<td>(schema_\w+)</td><td>(\d+)</td>", page))
+        assert shown == {"schema_inferred": str(seen[-1][0]),
+                         "schema_reused": str(seen[-1][1])}
+    assert seen == [(1, 0), (0, 1)]

@@ -1631,3 +1631,71 @@ def test_pipeline_table_function_r13_faces(dsession):
         "input => 'r13_docs'))").collect()
     lib = encoding_qa(docs).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, lib)) and got
+
+
+def _drill_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith("_drill_")}
+
+
+def test_rewrite_views_dropped_after_statement(dsession):
+    """Path tables and table functions register `_drill_path_N` /
+    `_drill_tf_N` views only for the statement that named them: none is
+    left in the catalog (or INFORMATION_SCHEMA.TABLES) afterwards, and
+    the returned frame still runs."""
+    df = dsession.sql(
+        "select p.name, t.a from dfs.data.`people.json` p join table("
+        "dfs.data.`pipes.psv`(type => 'psv', extractHeader => 'true')) t "
+        "on p.id = cast(t.a as int)")
+    assert not _drill_views(dsession.spark)
+    assert sorted(r["name"] for r in df.collect()) == ["ada", "bob"]
+    names = [r.TABLE_NAME for r in dsession.sql(
+        "select TABLE_NAME from INFORMATION_SCHEMA.`TABLES`").collect()]
+    assert not [n for n in names if n.startswith("_drill_")]
+
+
+def test_rewrite_view_drop_keeps_cached_frames(dsession):
+    """The drop goes through the session catalog, which does not uncache
+    plans over the view (spark.catalog.dropTempView would)."""
+    spark = dsession.spark
+    cached = dsession.sql("select * from dfs.data.`people.json`").cache()
+    try:
+        assert cached.count() == 2
+        dsession.sql("select count(*) from dfs.data.`people.json`").collect()
+        assert not _drill_views(spark)
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        assert cm.lookupCachedData(cached._jdf).isDefined()
+        assert cached.is_cached and cached.count() == 2
+    finally:
+        cached.unpersist()
+
+
+def test_views_over_path_tables_outlive_rewrite_views(dsession):
+    """CREATE VIEW over a path table, a persisted .view.drill, and the
+    Spark statements stored as SQL text naming the rewrite view (a
+    CREATE TEMPORARY VIEW, also behind a leading comment, and a SQL
+    table function) all stay usable in later statements."""
+    dsession.sql("CREATE OR REPLACE VIEW seniors_v AS "
+                 "select name from dfs.data.`people.json` where age > 40")
+    dsession.sql("CREATE VIEW dfs.data.seniors_p AS "
+                 "select name from dfs.data.`people.json` where age > 40")
+    dsession.sql("create or replace temporary view seniors_t as "
+                 "select name from dfs.data.`people.json` where age > 40")
+    dsession.sql("-- seniors, commented\n/* block */ create or replace "
+                 "temporary view seniors_c as "
+                 "select name from dfs.data.`people.json` where age > 40")
+    dsession.sql("CREATE OR REPLACE TEMPORARY FUNCTION seniors_f() "
+                 "RETURNS TABLE(name STRING) RETURN "
+                 "select name from dfs.data.`people.json` where age > 40")
+    try:
+        dsession.sql("select count(*) from dfs.data.`people.json`").collect()
+        for q in ("select name from seniors_v",
+                  "select name from dfs.data.`seniors_p.view.drill`",
+                  "select name from seniors_t",
+                  "select name from seniors_c",
+                  "select name from seniors_f()"):
+            assert [r["name"] for r in dsession.sql(q).collect()] == ["bob"]
+    finally:
+        dsession.sql("DROP VIEW dfs.data.seniors_p")
+        dsession.sql("DROP TEMPORARY FUNCTION IF EXISTS seniors_f")
+        for v in ("seniors_v", "seniors_t", "seniors_c"):
+            dsession.spark.catalog.dropTempView(v)
