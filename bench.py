@@ -5,7 +5,7 @@ Prints EXACTLY ONE COMPACT line on stdout — a summary JSON:
    "sf": ..., "n_queries": N, "n_errored": N, "cpus": N, "probe": N}
 The per-query timing map is deliberately NOT on stdout (a 124-query map
 is ~6 KB and overflows the driver's 2 KB tail window); the full detail —
-including per-query timings and setup costs — is written to
+including per-query timings, setup costs and the git revision — is written to
 bench_result.json next to this file AND to bench_result_c{cpus}.json,
 so a low-core scaling run never clobbers the high-core per-query map
 (r14; the r13 scaling comparison was empty for exactly that reason). Everything else (Spark/JVM chatter,
@@ -35,8 +35,20 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+
+
+def _revision(repo: str) -> str:
+    """The checkout's git commit, so detail files from different code
+    revisions are never compared as one run; "unknown" outside git."""
+    try:
+        out = subprocess.run(["git", "rev-parse", "HEAD"], cwd=repo,
+                             capture_output=True, text=True, timeout=10)
+    except (OSError, subprocess.SubprocessError):
+        return "unknown"
+    return out.stdout.strip() if out.returncode == 0 else "unknown"
 
 
 def main() -> None:
@@ -194,15 +206,16 @@ def main() -> None:
         "probe_min": min(probe_samples),
         "probe_max": max(probe_samples),
     }
+    here = os.path.dirname(os.path.abspath(__file__))
     detail = dict(summary)
+    detail["revision"] = _revision(here)
     detail["queries"] = timings
     detail["setup"] = setup
     detail["probe_samples"] = probe_samples
     detail["probe_cold"] = probe_cold
     # fold in the latest sf1 scale soak (scripts/scale_soak.py) so the
     # driver's bench record carries the measured-scaling evidence too
-    soak_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "soak_sf1.json")
+    soak_path = os.path.join(here, "soak_sf1.json")
     if os.path.exists(soak_path):
         try:
             with open(soak_path) as f:
@@ -214,7 +227,6 @@ def main() -> None:
     # a low-core scaling run no longer clobbers the high-core per-query
     # map (r13 PERF could not compute per-query scaling ratios because
     # the c8 run overwrote the c32 detail in the shared file).
-    here = os.path.dirname(os.path.abspath(__file__))
     for fname in ("bench_result.json", f"bench_result_c{cpus}.json"):
         try:
             with open(os.path.join(here, fname), "w") as f:

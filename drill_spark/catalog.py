@@ -69,7 +69,9 @@ def information_schema_columns(session, table: str | None = None) -> DataFrame:
 
 
 def information_schema_schemata(session) -> DataFrame:
-    rows = [Row(CATALOG_NAME="DRILL", SCHEMA_NAME=w, TYPE="file") for w in sorted(session.workspaces)]
+    # TYPE is the storage plugin type, as in Drill's SCHEMATA
+    rows = [Row(CATALOG_NAME="DRILL", SCHEMA_NAME=w, TYPE=ws.kind)
+            for w, ws in sorted(session.workspaces.items())]
     rows += [Row(CATALOG_NAME="DRILL", SCHEMA_NAME=db.name, TYPE="spark") for db in session.spark.catalog.listDatabases()]
     return session.spark.createDataFrame(rows, "CATALOG_NAME string, SCHEMA_NAME string, TYPE string")
 

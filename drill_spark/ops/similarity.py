@@ -21,66 +21,12 @@ Scale design (100 TB, billions of vectors):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _dot(a: str, b: str):
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0D, (acc, v) -> acc + v)")
-
-
-def _arrow_pair_dot():
-    """Arrow-batched pair dot product replaying the Catalyst fold's
-    EXACT arithmetic: per pair a strictly sequential left-to-right
-    float64 accumulation over dimensions (``acc = acc + x_i * y_i`` —
-    the order ``aggregate(zip_with(...))`` evaluates), VECTORIZED
-    across the batch (one fused multiply-add pass per dimension over
-    the whole column). Bit-identical to the expression fold on every
-    well-formed pair; measured ~2.5x the fold's throughput at 250k
-    pairs x dim 64 (the interpreted per-element lambda calls are the
-    fold's cost, not the arithmetic).
-
-    Edge semantics: a NULL vector or ragged pair returns NULL (the
-    fold's zip_with pads the shorter side with NULL, and NULL
-    poisons the sum); a NULL element arrives as NaN through Arrow and
-    yields NaN where the fold yields NULL — both fail every
-    ``cosine >= threshold`` gate identically, which is the only way
-    dedup-pair consumers observe the value. Empty vectors give 0.0 on
-    both paths (the fold's initial accumulator)."""
-
-    @F.pandas_udf("double")
-    def pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        import numpy as np
-
-        va_l = va.tolist()
-        vb_l = vb.tolist()
-        try:
-            xa = np.asarray(va_l, dtype=np.float64)
-            xb = np.asarray(vb_l, dtype=np.float64)
-            ok = xa.ndim == 2 and xb.ndim == 2 and xa.shape == xb.shape
-        except (ValueError, TypeError):
-            ok = False
-        if ok:
-            acc = np.zeros(len(va_l), dtype=np.float64)
-            for i in range(xa.shape[1]):
-                acc = acc + xa[:, i] * xb[:, i]
-            return pd.Series(acc)
-        res: list = []
-        for a, b in zip(va_l, vb_l):
-            if a is None or b is None or len(a) != len(b):
-                res.append(None)
-                continue
-            s = 0.0
-            for x, y in zip(a, b):
-                if x is None or y is None:
-                    s = None
-                    break
-                s = s + float(x) * float(y)
-            res.append(s)
-        return pd.Series(res, dtype="float64")
-
-    return pair_dot
 
 
 def _norm(a: str):
@@ -129,7 +75,6 @@ def cosine_dedup_pairs(
     bucket_col: str = "label",
     threshold: float = 0.95,
     n_salt: int = 8,
-    engine: str = "catalyst",
     prefilter_dims: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs: cosine >= threshold within a
@@ -147,19 +92,6 @@ def cosine_dedup_pairs(
     key (bk, i, j) spreads one bucket over n_salt*(n_salt+1)/2 tasks.
     Same total comparisons, ~n_salt/2 row replication, full cluster
     parallelism. n_salt=1 degrades to the single-block join.
-
-    ``engine`` (r13): ``"catalyst"`` (default) scores pairs with the
-    pure-expression fold — all-JVM, no Python boundary; ``"arrow"``
-    scores them with the Arrow-batched kernel (:func:`_arrow_pair_dot`
-    — the same exact sequential-fold arithmetic, one ArrowEvalPython
-    projection). Equality is pinned in test_extops (both engines,
-    edge cases). The default is catalyst because the pair stage's row
-    volume is quadratic in bucket size: the arrow path serializes BOTH
-    pair-expanded vectors through the Python boundary (O(pairs × dim)
-    bytes — ~20 GB at the 10x soak's 20M pairs), and an interleaved
-    fresh-session A/B at sf0.1 AND the 10x soak fixture measured
-    catalyst faster at both scales (0.49 vs 1.38s, 7.1 vs 8.7s;
-    semantic_dedup 1.9 vs 2.9s, 10.6 vs 15.2s).
 
     The triangle join only spreads the pair work when the EXECUTED join
     exchanges on (bk, i, j); below the broadcast threshold the planner
@@ -250,12 +182,6 @@ def cosine_dedup_pairs(
         )
         .withColumn("i", F.explode(F.expr("sequence(0, j)")))
     )
-    if engine == "arrow":
-        dot = _arrow_pair_dot()("va", "vb")
-    elif engine == "catalyst":
-        dot = _dot("va", "vb")
-    else:
-        raise ValueError(f"cosine_dedup_pairs: unknown engine {engine!r}")
     # i < j blocks hold cross-salt pairs once by construction; the
     # diagonal i == j needs the id order to not double-count
     keep = (F.col("i") < F.col("j")) | (F.col("id_a") < F.col("id_b"))
@@ -284,7 +210,7 @@ def cosine_dedup_pairs(
     return (
         a.join(b, ["bk", "i", "j"])
         .where(keep)
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
+        .withColumn("cosine", F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 4))
         .where(F.col("cosine") >= threshold)
         .select(
             F.col("bk").alias(bucket_col),

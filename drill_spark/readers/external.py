@@ -1,29 +1,35 @@
-"""External storage plugins: JDBC databases and Kafka topics as tables.
+"""External storage plugins: tables that live outside the file system.
 
-Drill references:
-- contrib/storage-jdbc/src/main/java/org/apache/drill/exec/store/jdbc/
-  JdbcStoragePlugin.java — an external RDBMS as a schema; Drill pushes
-  filters/projects/joins down via Calcite's JDBC adapter.
-- contrib/storage-kafka/src/main/java/org/apache/drill/exec/store/kafka/
-  KafkaStoragePlugin.java — a topic scanned as a batch table with
-  kafkaMsgOffset/partition metadata columns.
+Drill's StoragePluginRegistry maps plugin names to reader configs; here
+that is the ``PLUGINS`` table at the bottom of this module, keyed by
+the workspace ``kind`` (``DrillSession.register_workspace(..., kind=)``).
+The workspace path is the plugin's address (a JDBC url, broker list,
+connection uri, Hive database, REST base url); the backticked table
+name and any workspace/query options complete the scan.
 
 Spark-first mapping:
-- JDBC: ``spark.read.format("jdbc")`` — Catalyst's JDBCRelation prunes
-  columns and pushes predicates into the database (visible as
-  PushedFilters in the scan node), the same division of labor as
-  Drill's JdbcPushDownFilter. Scale: a single-partition JDBC read is a
-  driver-side bottleneck at 100 TB, so ``partition_column`` /
-  ``num_partitions`` options map straight onto Spark's partitioned
-  JDBC scan (parallel range queries against the DB).
-- Kafka: ``spark.read.format("kafka")`` with earliest→latest offsets is
-  exactly the reference's batch-topic semantics; partitions map 1:1 to
-  Kafka partitions (one task per partition-range). The connector jar
-  (spark-sql-kafka) is not bundled in every deployment — the error
-  names the gap, like the excel reader's openpyxl gate.
+- Most plugins are Spark connectors behind the Data Sources API's
+  ``format/option/load`` path (the Spark SQL paper's uniform source
+  interface), so each is a ``Connector`` data row: the format, the
+  options built from (path, table), the defaults a user option may
+  override, and the package the gate error names. Connector jars are
+  not bundled in every deployment; a missing one raises a
+  NotImplementedError naming the package, like the excel reader's
+  openpyxl gate. Pushdown is the connector's: JDBC-style sources show
+  PushedFilters in the scan node, the same division of labor as
+  Drill's JdbcPushDownFilter.
+- JDBC keeps its own reader for Spark's partitioned scan
+  (``partition_column``/``num_partitions`` become parallel range
+  queries; a single-partition JDBC read is a driver-side bottleneck at
+  100 TB). Hive resolves through the session catalog; OpenTSDB and
+  remote Drill speak JSON REST with no jar; Google Sheets gates on
+  OAuth credentials before its connector.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -63,85 +69,6 @@ def read_jdbc_table(
         raise
 
 
-KAFKA_COLUMNS = ("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")
-
-
-def read_kafka_topic(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Read a Kafka topic as a batch table (earliest..latest), the
-    reference's KafkaGroupScan semantics. Returns the connector's
-    metadata schema (KAFKA_COLUMNS); decode ``value`` downstream with
-    convert_from / from_json / our avro decode_file."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", opts.pop("startingOffsets", "earliest"))
-        .option("endingOffsets", opts.pop("endingOffsets", "latest"))
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        msg = str(e)
-        if "Failed to find data source: kafka" in msg or "ClassNotFoundException" in msg:
-            raise NotImplementedError(
-                "the spark-sql-kafka connector jar is not bundled in this "
-                "deployment; add org.apache.spark:spark-sql-kafka-0-10 to "
-                "spark.jars.packages to enable kafka workspaces"
-            ) from e
-        raise
-
-
-def read_mongo_collection(
-    spark: SparkSession,
-    connection_uri: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Read ``db.collection`` through the MongoDB Spark connector —
-    the reference's mongo storage plugin semantics (contrib/
-    storage-mongo MongoStoragePlugin.java: a database as a schema,
-    collections as tables, filter/project pushdown via the plugin's
-    scan spec; the Spark connector's aggregation-pipeline pushdown is
-    the same division of labor). ``table`` is ``<db>.<collection>``
-    (Drill's mongo.`db`.`coll` path). Connector jar
-    (org.mongodb.spark:mongo-spark-connector) gated like kafka."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    db, _, coll = table.partition(".")
-    if not coll:
-        raise ValueError(f"mongo table must be db.collection, got {table!r}")
-    reader = (
-        spark.read.format("mongodb")
-        .option("connection.uri", connection_uri)
-        .option("database", db)
-        .option("collection", coll)
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        msg = str(e)
-        if "Failed to find data source: mongodb" in msg or "ClassNotFoundException" in msg:
-            raise NotImplementedError(
-                "the mongo-spark connector jar is not bundled in this "
-                "deployment; add org.mongodb.spark:mongo-spark-connector "
-                "to spark.jars.packages to enable mongo workspaces"
-            ) from e
-        raise
-
-
 def read_hive_table(
     spark: SparkSession,
     database: str,
@@ -172,42 +99,6 @@ def read_hive_table(
     return spark.table(".".join(f"`{p}`" for p in qual.split(".")))
 
 
-def read_elasticsearch_index(
-    spark: SparkSession,
-    nodes: str,
-    index: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Read an index through elasticsearch-hadoop ("es" data source) —
-    the reference's elasticsearch plugin semantics (contrib/
-    storage-elasticsearch ElasticsearchDrillSchemaFactory.java via
-    Calcite's ES adapter: indexes as tables, filters compiled into ES
-    queries; es-hadoop's pushdown option is the same). One Spark task
-    per index shard. Jar gated like kafka."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = (
-        spark.read.format("org.elasticsearch.spark.sql")
-        .option("es.nodes", nodes)
-        .option("es.resource", index)
-        .option("pushdown", opts.pop("pushdown", "true"))
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        msg = str(e)
-        if "Failed to find data source" in msg or "ClassNotFoundException" in msg:
-            raise NotImplementedError(
-                "the elasticsearch-hadoop jar is not bundled in this "
-                "deployment; add org.elasticsearch:elasticsearch-spark-30 "
-                "to spark.jars.packages to enable elasticsearch workspaces"
-            ) from e
-        raise
-
-
 def _gate(e: Exception, source: str, package: str, plugin: str):
     msg = str(e)
     if (f"Failed to find data source: {source}" in msg
@@ -221,172 +112,47 @@ def _gate(e: Exception, source: str, package: str, plugin: str):
     raise e
 
 
-def read_cassandra_table(
+@dataclass(frozen=True)
+class Connector:
+    """A storage plugin read through a Spark connector. ``fixed`` builds
+    the options that address the table from (workspace path, table
+    name); ``defaults`` are options a workspace or query option may
+    override; ``package`` is the artifact the missing-jar error names."""
+
+    format: str
+    fixed: Callable[[str, str], dict]
+    package: str
+    defaults: dict = field(default_factory=dict)
+
+
+def _read_connector(
     spark: SparkSession,
-    contact_points: str,
+    kind: str,
+    conn: Connector,
+    path: str,
     table: str,
     ws_options: dict | None = None,
     query_options: dict | None = None,
 ) -> DataFrame:
-    """Cassandra storage plugin analog (contrib/storage-cassandra
-    CassandraStoragePlugin.java: keyspaces as schemas, tables via the
-    Calcite-Cassandra adapter with filter pushdown). ``table`` is
-    ``<keyspace>.<table>`` (Drill's cassandra.`ks`.`tbl`); reads go
-    through the DataStax Spark connector, which does the same
-    predicate/projection pushdown division of labor. Connector-jar
-    gated like kafka/mongo."""
-    opts = {**(ws_options or {}), **(query_options or {})}
+    fixed = conn.fixed(path, table)
+    opts = {**conn.defaults, **(ws_options or {}), **(query_options or {})}
     opts.pop("type", None)
-    ks, _, tbl = table.partition(".")
-    if not tbl:
-        raise ValueError(f"cassandra table must be keyspace.table, got {table!r}")
-    reader = (
-        spark.read.format("org.apache.spark.sql.cassandra")
-        .option("spark.cassandra.connection.host", contact_points)
-        .option("keyspace", ks)
-        .option("table", tbl)
-    )
-    for k, v in opts.items():
+    reader = spark.read.format(conn.format)
+    # user options after the fixed ones, so they win
+    for k, v in (*fixed.items(), *opts.items()):
         reader = reader.option(k, v)
     try:
         return reader.load()
     except Exception as e:
-        _gate(e, "org.apache.spark.sql.cassandra",
-              "com.datastax.spark:spark-cassandra-connector", "cassandra")
+        _gate(e, conn.format, conn.package, kind)
 
 
-def read_hbase_table(
-    spark: SparkSession,
-    zookeeper_quorum: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """HBase storage plugin analog (contrib/storage-hbase
-    HBaseStoragePlugin.java: row-key pushdown scans over column
-    families). Reads go through the hbase-spark connector; the column
-    mapping (the connector's ``hbase.columns.mapping``) comes from
-    workspace/query options, mirroring how the reference's plugin maps
-    families to Drill maps. Connector-jar gated."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = (
-        spark.read.format("org.apache.hadoop.hbase.spark")
-        .option("hbase.zookeeper.quorum", zookeeper_quorum)
-        .option("hbase.table", table)
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        _gate(e, "org.apache.hadoop.hbase.spark",
-              "org.apache.hbase.connectors.spark:hbase-spark", "hbase")
-
-
-def read_druid_datasource(
-    spark: SparkSession,
-    broker_url: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Druid storage plugin analog (contrib/storage-druid: datasources
-    as tables with filter pushdown into native Druid queries). Reads
-    route through Druid's Avatica JDBC endpoint
-    (``<broker>/druid/v2/sql/avatica/``) via Spark's parallel JDBC
-    source — the same SQL-pushdown division the reference gets from
-    its REST scan spec. Avatica-driver-jar gated."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    url = f"jdbc:avatica:remote:url={broker_url.rstrip('/')}/druid/v2/sql/avatica/"
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("driver", "org.apache.calcite.avatica.remote.Driver")
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        _gate(e, "jdbc", "org.apache.calcite.avatica:avatica-core", "druid")
-
-
-def read_splunk_index(
-    spark: SparkSession,
-    connection_url: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Splunk storage plugin analog (contrib/storage-splunk: indexes as
-    tables, SPL pushdown). Reads go through the splunk-spark connector
-    data source; connector-jar gated with the naming error pattern."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = (
-        spark.read.format("splunk")
-        .option("url", connection_url)
-        .option("index", table)
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        _gate(e, "splunk", "com.splunk.spark:splunk-spark", "splunk")
-
-
-def read_kudu_table(
-    spark: SparkSession,
-    masters: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Kudu storage plugin analog (contrib/storage-kudu: tablets as
-    scan ranges, predicate pushdown). Reads go through the kudu-spark
-    connector; jar gated."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = (
-        spark.read.format("kudu")
-        .option("kudu.master", masters)
-        .option("kudu.table", table)
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        _gate(e, "kudu", "org.apache.kudu:kudu-spark3", "kudu")
-
-
-def read_phoenix_table(
-    spark: SparkSession,
-    zookeeper_url: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """Phoenix storage plugin analog (contrib/storage-phoenix: SQL over
-    HBase with pushdown). Reads go through the phoenix-spark
-    connector; jar gated."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = (
-        spark.read.format("phoenix")
-        .option("zkUrl", zookeeper_url)
-        .option("table", table)
-    )
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        _gate(e, "phoenix", "org.apache.phoenix:phoenix-spark", "phoenix")
+def _split(table: str, kind: str, shape: str, keys: tuple[str, str]) -> dict:
+    """A two-part ``a.b`` table name as the two options ``keys``."""
+    head, _, tail = table.partition(".")
+    if not tail:
+        raise ValueError(f"{kind} table must be {shape}, got {table!r}")
+    return dict(zip(keys, (head, tail)))
 
 
 def read_opentsdb_metric(
@@ -448,6 +214,7 @@ def read_opentsdb_metric(
         spark.sparkContext.parallelize(lines, max(1, len(lines) // 5000 + 1)))
 
 
+
 def read_googlesheets_tab(
     spark: SparkSession,
     spreadsheet_id: str,
@@ -480,28 +247,6 @@ def read_googlesheets_tab(
     except Exception as e:
         _gate(e, "com.github.potix2.spark.google.spreadsheets",
               "com.github.potix2:spark-google-spreadsheets", "googlesheets")
-
-
-def read_maprdb_table(
-    spark: SparkSession,
-    _path: str,
-    table: str,
-    ws_options: dict | None = None,
-    query_options: dict | None = None,
-) -> DataFrame:
-    """MapR-DB storage plugin analog (contrib/format-maprdb): JSON
-    tables through the proprietary MapR Spark connector; gated — the
-    connector ships only with the MapR (HPE Ezmeral) platform."""
-    opts = {**(ws_options or {}), **(query_options or {})}
-    opts.pop("type", None)
-    reader = spark.read.format("com.mapr.db.spark.sql").option("tableName", table)
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    try:
-        return reader.load()
-    except Exception as e:
-        _gate(e, "com.mapr.db.spark.sql",
-              "com.mapr.db:maprdb-spark (MapR/Ezmeral platform only)", "maprdb")
 
 
 # Drill type name (REST metadata) → Spark type for the remote-drill
@@ -644,3 +389,98 @@ def read_drill_table(
         spark, base_url, sql, auth=auth,
         auto_limit=int(raw_limit) if raw_limit is not None else None,
         timeout=float(opts.get("timeout", 600.0)))
+
+
+# Storage plugin table (Drill's StoragePluginRegistry): workspace kind
+# -> reader. A reader takes (spark, workspace path, table, workspace
+# options, query options); a Connector row is read by _read_connector.
+# The comment on each row names the reference plugin and what the
+# workspace path holds.
+PLUGINS: dict[str, Connector | Callable[..., DataFrame]] = {
+    # contrib/storage-jdbc; path: JDBC url
+    "jdbc": read_jdbc_table,
+    # contrib/storage-hive; path: default metastore database
+    "hive": read_hive_table,
+    # contrib/storage-opentsdb; path: REST base url
+    "opentsdb": read_opentsdb_metric,
+    # contrib/storage-googlesheets; path: spreadsheet id
+    "googlesheets": read_googlesheets_tab,
+    # contrib/storage-drill; path: remote REST base url
+    "drill": read_drill_table,
+    # contrib/storage-kafka; path: bootstrap servers; a topic read as a
+    # batch table (earliest..latest) with the connector's metadata columns
+    "kafka": Connector(
+        "kafka",
+        lambda path, t: {"kafka.bootstrap.servers": path, "subscribe": t},
+        "org.apache.spark:spark-sql-kafka-0-10",
+        {"startingOffsets": "earliest", "endingOffsets": "latest"}),
+    # contrib/storage-mongo; path: connection uri; table: db.collection
+    "mongo": Connector(
+        "mongodb",
+        lambda path, t: {"connection.uri": path, **_split(
+            t, "mongo", "db.collection", ("database", "collection"))},
+        "org.mongodb.spark:mongo-spark-connector"),
+    # contrib/storage-elasticsearch; path: nodes; table: index
+    "elasticsearch": Connector(
+        "org.elasticsearch.spark.sql",
+        lambda path, t: {"es.nodes": path, "es.resource": t},
+        "org.elasticsearch:elasticsearch-spark-30",
+        {"pushdown": "true"}),
+    # contrib/storage-cassandra; path: contact points; table: keyspace.table
+    "cassandra": Connector(
+        "org.apache.spark.sql.cassandra",
+        lambda path, t: {"spark.cassandra.connection.host": path, **_split(
+            t, "cassandra", "keyspace.table", ("keyspace", "table"))},
+        "com.datastax.spark:spark-cassandra-connector"),
+    # contrib/storage-hbase; path: zookeeper quorum; the column mapping
+    # (hbase.columns.mapping) comes from options
+    "hbase": Connector(
+        "org.apache.hadoop.hbase.spark",
+        lambda path, t: {"hbase.zookeeper.quorum": path, "hbase.table": t},
+        "org.apache.hbase.connectors.spark:hbase-spark"),
+    # contrib/storage-druid; path: broker url, read through its Avatica
+    # JDBC endpoint with Spark's JDBC source
+    "druid": Connector(
+        "jdbc",
+        lambda path, t: {
+            "url": f"jdbc:avatica:remote:url={path.rstrip('/')}/druid/v2/sql/avatica/",
+            "dbtable": t,
+            "driver": "org.apache.calcite.avatica.remote.Driver"},
+        "org.apache.calcite.avatica:avatica-core"),
+    # contrib/storage-splunk; path: connection url; table: index
+    "splunk": Connector(
+        "splunk",
+        lambda path, t: {"url": path, "index": t},
+        "com.splunk.spark:splunk-spark"),
+    # contrib/storage-kudu; path: masters
+    "kudu": Connector(
+        "kudu",
+        lambda path, t: {"kudu.master": path, "kudu.table": t},
+        "org.apache.kudu:kudu-spark3"),
+    # contrib/storage-phoenix; path: zookeeper url
+    "phoenix": Connector(
+        "phoenix",
+        lambda path, t: {"zkUrl": path, "table": t},
+        "org.apache.phoenix:phoenix-spark"),
+    # contrib/format-maprdb; path unused; the connector ships only with
+    # the MapR (HPE Ezmeral) platform
+    "maprdb": Connector(
+        "com.mapr.db.spark.sql",
+        lambda path, t: {"tableName": t},
+        "com.mapr.db:maprdb-spark (MapR/Ezmeral platform only)"),
+}
+
+
+def read_plugin(
+    spark: SparkSession,
+    kind: str,
+    path: str,
+    table: str,
+    ws_options: dict | None = None,
+    query_options: dict | None = None,
+) -> DataFrame:
+    """Read ``table`` from a workspace of storage ``kind`` (a PLUGINS key)."""
+    plugin = PLUGINS[kind]
+    if isinstance(plugin, Connector):
+        return _read_connector(spark, kind, plugin, path, table, ws_options, query_options)
+    return plugin(spark, path, table, ws_options, query_options)

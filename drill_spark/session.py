@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drill_spark.readers.external import PLUGINS
 from drill_spark.readers.files import SchemaStore
 
 FIXTURE_TABLES = (
@@ -238,22 +239,19 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 @dataclass
 class Workspace:
-    """Drill workspace: a named root (directory, JDBC url, or Kafka
-    cluster) tables resolve against.
+    """Drill workspace: a named root (a directory, or the address of an
+    external storage plugin) tables resolve against.
 
     Reference: storage plugin config workspaces
-    (exec/java-exec/.../store/dfs/WorkspaceConfig.java); kind='jdbc'
-    mirrors contrib/storage-jdbc JdbcStoragePlugin.java (tables resolve
-    through the external DB, predicates/projections pushed into it);
-    kind='kafka' mirrors contrib/storage-kafka KafkaStoragePlugin.java
-    (a topic read as a batch table).
+    (exec/java-exec/.../store/dfs/WorkspaceConfig.java); the non-file
+    kinds mirror the contrib/storage-* plugins.
     """
 
     name: str
     path: str
     default_format: str = "parquet"
     writable: bool = False
-    kind: str = "file"  # file | jdbc | kafka
+    kind: str = "file"  # "file" or a key of readers.external.PLUGINS
     options: dict = field(default_factory=dict)
 
 
@@ -299,189 +297,33 @@ class DrillSession:
 
     # ---------------- workspace / table resolution ----------------
 
-    def register_workspace(self, name: str, path: str, default_format: str = "parquet",
-                           writable: bool = False) -> None:
-        self.workspaces[name] = Workspace(name, path, default_format, writable=writable)
-
-    def register_jdbc_workspace(
+    def register_workspace(
         self,
         name: str,
-        url: str,
-        driver: str | None = None,
-        properties: dict[str, str] | None = None,
-    ) -> None:
-        """JDBC storage plugin analog (contrib/storage-jdbc
-        JdbcStoragePlugin.java): ``select * from name.`TABLE``` reads
-        TABLE through spark.read.jdbc. Catalyst's JDBC relation pushes
-        filters and column pruning INTO the external database, matching
-        Drill's JdbcPushDownFilter rules — verified by plan test."""
-        opts = dict(properties or {})
-        if driver:
-            opts["driver"] = driver
-        self.workspaces[name] = Workspace(name, url, kind="jdbc", options=opts)
-
-    def register_kafka_workspace(
-        self,
-        name: str,
-        bootstrap_servers: str,
+        path: str,
+        default_format: str = "parquet",
+        writable: bool = False,
+        *,
+        kind: str = "file",
         options: dict[str, str] | None = None,
     ) -> None:
-        """Kafka storage plugin analog (contrib/storage-kafka
-        KafkaStoragePlugin.java): ``select * from name.`topic``` reads
-        the topic as a BATCH table (earliest..latest) through Spark's
-        kafka source, exposing the reference's metadata columns
-        (key/value/topic/partition/offset/timestamp). Requires the
-        spark-sql-kafka connector jar; without it the error names the
-        missing piece instead of failing obscurely."""
+        """Register a workspace (Drill's storage plugin config). ``kind``
+        is ``"file"`` (a directory root; ``default_format`` and
+        ``writable`` apply) or a key of ``readers.external.PLUGINS``, whose
+        comments say what ``path`` holds for each kind (a JDBC url,
+        Kafka bootstrap servers, a Hive database, ...). ``options`` are
+        the plugin config; query options of ``table(ws.`t`(...))``
+        override them. Only file workspaces are writable."""
+        if kind != "file":
+            if kind not in PLUGINS:
+                raise ValueError(
+                    f"unknown workspace kind {kind!r}; expected 'file' or one of "
+                    f"{sorted(PLUGINS)}")
+            if writable:
+                raise ValueError(f"{kind} workspaces are read-only; only file "
+                                 "workspaces take writable=True")
         self.workspaces[name] = Workspace(
-            name, bootstrap_servers, kind="kafka", options=dict(options or {})
-        )
-
-    def register_mongo_workspace(
-        self, name: str, connection_uri: str, options: dict[str, str] | None = None
-    ) -> None:
-        """Mongo storage plugin analog (contrib/storage-mongo
-        MongoStoragePlugin.java): ``select * from name.`db.coll``` reads
-        the collection through the mongo-spark connector (aggregation
-        pushdown); without the jar the error names the missing piece."""
-        self.workspaces[name] = Workspace(
-            name, connection_uri, kind="mongo", options=dict(options or {})
-        )
-
-    def register_hive_workspace(
-        self, name: str = "hive", database: str = "default",
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Hive storage plugin analog (contrib/storage-hive/core
-        HiveStoragePlugin.java): metastore databases as schemas, tables
-        resolved through the session's Hive catalog — Spark's
-        HiveExternalCatalog speaks to the same metastore Drill's plugin
-        reads via HiveMetadataProvider. ``select * from name.`tbl```
-        resolves ``database.tbl``; ``name.`db.tbl``` overrides the
-        database. Requires a session built with ``get_spark(hive=True)``
-        (catalogImplementation=hive); gated with a naming error
-        otherwise. Read-only, like the reference's plugin."""
-        self.workspaces[name] = Workspace(
-            name, database, kind="hive", options=dict(options or {})
-        )
-
-    def register_elasticsearch_workspace(
-        self, name: str, nodes: str, options: dict[str, str] | None = None
-    ) -> None:
-        """Elasticsearch plugin analog (contrib/storage-elasticsearch):
-        ``select * from name.`index``` reads the index through
-        elasticsearch-hadoop (filter pushdown, task per shard); jar
-        gated with a naming error like kafka."""
-        self.workspaces[name] = Workspace(
-            name, nodes, kind="elasticsearch", options=dict(options or {})
-        )
-
-    def register_cassandra_workspace(
-        self, name: str, contact_points: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Cassandra plugin analog (contrib/storage-cassandra):
-        ``select * from name.`ks.tbl``` through the DataStax Spark
-        connector (predicate/projection pushdown); jar gated."""
-        self.workspaces[name] = Workspace(
-            name, contact_points, kind="cassandra", options=dict(options or {})
-        )
-
-    def register_hbase_workspace(
-        self, name: str, zookeeper_quorum: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """HBase plugin analog (contrib/storage-hbase): tables through
-        the hbase-spark connector with a columns mapping option; jar
-        gated."""
-        self.workspaces[name] = Workspace(
-            name, zookeeper_quorum, kind="hbase", options=dict(options or {})
-        )
-
-    def register_druid_workspace(
-        self, name: str, broker_url: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Druid plugin analog (contrib/storage-druid): datasources via
-        the broker's Avatica JDBC endpoint through Spark's JDBC source;
-        Avatica-driver gated."""
-        self.workspaces[name] = Workspace(
-            name, broker_url, kind="druid", options=dict(options or {})
-        )
-
-    def register_splunk_workspace(
-        self, name: str, connection_url: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Splunk plugin analog (contrib/storage-splunk): indexes via
-        the splunk-spark data source; jar gated."""
-        self.workspaces[name] = Workspace(
-            name, connection_url, kind="splunk", options=dict(options or {})
-        )
-
-    def register_kudu_workspace(
-        self, name: str, masters: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Kudu plugin analog (contrib/storage-kudu): tables via the
-        kudu-spark connector; jar gated."""
-        self.workspaces[name] = Workspace(
-            name, masters, kind="kudu", options=dict(options or {})
-        )
-
-    def register_phoenix_workspace(
-        self, name: str, zookeeper_url: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Phoenix plugin analog (contrib/storage-phoenix): tables via
-        the phoenix-spark connector; jar gated."""
-        self.workspaces[name] = Workspace(
-            name, zookeeper_url, kind="phoenix", options=dict(options or {})
-        )
-
-    def register_opentsdb_workspace(
-        self, name: str, base_url: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """OpenTSDB plugin — REAL (contrib/storage-opentsdb): metrics
-        as tables over the /api/query JSON REST endpoint, no connector
-        jar needed; time range / aggregator / downsample come from
-        workspace or query options."""
-        self.workspaces[name] = Workspace(
-            name, base_url, kind="opentsdb", options=dict(options or {})
-        )
-
-    def register_drill_workspace(
-        self, name: str, base_url: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Drill plugin — REAL (contrib/storage-drill): tables on a
-        REMOTE Drill(-spark) cluster over its REST query API, no jar
-        needed; ``user``/``password`` options enable Basic auth and a
-        ``query`` option delegates arbitrary SQL to the remote."""
-        self.workspaces[name] = Workspace(
-            name, base_url, kind="drill", options=dict(options or {})
-        )
-
-    def register_googlesheets_workspace(
-        self, name: str, spreadsheet_id: str,
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """Google Sheets plugin analog (contrib/storage-googlesheets):
-        tabs as tables; gated on OAuth credentials + connector jar."""
-        self.workspaces[name] = Workspace(
-            name, spreadsheet_id, kind="googlesheets", options=dict(options or {})
-        )
-
-    def register_maprdb_workspace(
-        self, name: str, cluster_path: str = "/",
-        options: dict[str, str] | None = None,
-    ) -> None:
-        """MapR-DB plugin analog (contrib/format-maprdb): JSON tables
-        via the proprietary MapR connector; platform gated."""
-        self.workspaces[name] = Workspace(
-            name, cluster_path, kind="maprdb", options=dict(options or {})
-        )
+            name, path, default_format, writable, kind, dict(options or {}))
 
     def serve_jdbc(self, host: str = "127.0.0.1", port: int = 0,
                    sf_dir: str | None = None):

@@ -66,11 +66,12 @@ _TABLE_FN = re.compile(
     r"table\(\s*((?:\w+\.)+)`([^`]+)`\s*\(((?:'[^']*'|\"[^\"]*\"|[^)])*)\)\s*\)",
     re.IGNORECASE,
 )
-# a query, or EXPLAIN/DESCRIBE of one (after leading comments and
-# parentheses): Spark analyzes it once and stores no SQL text that
-# names the rewrite's temp views
+# a query, EXPLAIN/DESCRIBE of one, or an INSERT into a Spark table
+# (after leading comments and parentheses): Spark analyzes (an INSERT
+# also runs) it once and stores no SQL text that names the rewrite's
+# temp views
 _PLAIN_QUERY = re.compile(
-    r"(?:\s|--[^\n]*|/\*.*?\*/|\()*(?:SELECT|WITH|VALUES|EXPLAIN|DESC|DESCRIBE)\b",
+    r"(?:\s|--[^\n]*|/\*.*?\*/|\()*(?:SELECT|WITH|VALUES|EXPLAIN|DESC|DESCRIBE|INSERT)\b",
     re.IGNORECASE | re.DOTALL)
 _USE = re.compile(r"^\s*USE\s+`?([\w.]+)`?\s*;?\s*$", re.IGNORECASE)
 _SHOW_SCHEMAS = re.compile(r"^\s*SHOW\s+(?:SCHEMAS|DATABASES)\s*;?\s*$", re.IGNORECASE)
@@ -988,6 +989,7 @@ def _pipeline_table(session, op: str, opts: dict[str, str]) -> DataFrame:
 
 
 def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | None = None) -> DataFrame:
+    from drill_spark.readers.external import PLUGINS, read_plugin
     from drill_spark.readers.files import read_auto
 
     if ws_name.rstrip(".") in ("http", "https") or rel_path.startswith(("http://", "https://")):
@@ -1002,42 +1004,8 @@ def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | N
             max_pages=int(opts.get("maxPages", opts.get("max_pages", 1))),
         )
     ws = session.workspaces.get(ws_name.rstrip("."))
-    if ws is not None and ws.kind == "jdbc":
-        from drill_spark.readers.external import read_jdbc_table
-
-        return read_jdbc_table(session.spark, ws.path, rel_path, ws.options, options)
-    if ws is not None and ws.kind == "kafka":
-        from drill_spark.readers.external import read_kafka_topic
-
-        return read_kafka_topic(session.spark, ws.path, rel_path, ws.options, options)
-    if ws is not None and ws.kind == "mongo":
-        from drill_spark.readers.external import read_mongo_collection
-
-        return read_mongo_collection(session.spark, ws.path, rel_path, ws.options, options)
-    if ws is not None and ws.kind == "elasticsearch":
-        from drill_spark.readers.external import read_elasticsearch_index
-
-        return read_elasticsearch_index(session.spark, ws.path, rel_path, ws.options, options)
-    if ws is not None and ws.kind == "hive":
-        from drill_spark.readers.external import read_hive_table
-
-        return read_hive_table(session.spark, ws.path, rel_path, ws.options, options)
-    if ws is not None and ws.kind in ("cassandra", "hbase", "druid", "splunk",
-                                      "kudu", "phoenix", "opentsdb",
-                                      "googlesheets", "maprdb", "drill"):
-        from drill_spark.readers import external as _ext
-
-        fn = {"cassandra": _ext.read_cassandra_table,
-              "hbase": _ext.read_hbase_table,
-              "druid": _ext.read_druid_datasource,
-              "splunk": _ext.read_splunk_index,
-              "kudu": _ext.read_kudu_table,
-              "phoenix": _ext.read_phoenix_table,
-              "opentsdb": _ext.read_opentsdb_metric,
-              "googlesheets": _ext.read_googlesheets_tab,
-              "maprdb": _ext.read_maprdb_table,
-              "drill": _ext.read_drill_table}[ws.kind]
-        return fn(session.spark, ws.path, rel_path, ws.options, options)
+    if ws is not None and ws.kind in PLUGINS:
+        return read_plugin(session.spark, ws.kind, ws.path, rel_path, ws.options, options)
     root = ws.path if ws else "/"
     default_fmt = ws.default_format if ws else "parquet"
     path = rel_path if os.path.isabs(rel_path) else os.path.join(root, rel_path)

@@ -17,6 +17,8 @@ never a global sort.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2561,16 +2563,22 @@ def q_tpcds_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     _Q14_BODY, and the hash must (and does) still match. Interleaved
     A/B: 2.80/2.85/2.43s -> 2.34/2.63/2.14s. The checkpoint is
     per-invocation (recomputed from parquet every call), not a cache.
+    Its temp view has a per-invocation name and is dropped once the
+    consumer is analyzed (``spark.sql`` analyzes eagerly), so
+    concurrent invocations do not race on one session-global name.
     """
     _register_decorrelation_views(spark, sf_dir)
     head, rest = _Q14_BODY.split("),\navg_sales", 1)
-    ci = spark.sql(
-        "with " + head + ") select ci_item_sk from cross_items"
-    ).localCheckpoint()
-    ci.createOrReplaceTempView("tpcds_q14_cross_items")
-    return spark.sql(("with avg_sales" + rest).replace(
-        "select ci_item_sk from cross_items",
-        "select ci_item_sk from tpcds_q14_cross_items"))
+    target = "select ci_item_sk from cross_items"
+    assert rest.count(target) == 3, f"q14 body drifted: {target!r} is not used 3 times"
+    ci = spark.sql("with " + head + ") " + target).localCheckpoint()
+    view = f"tpcds_q14_cross_items_{uuid.uuid4().hex}"
+    ci.createOrReplaceTempView(view)
+    try:
+        return spark.sql(("with avg_sales" + rest).replace(
+            target, f"select ci_item_sk from {view}"))
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(view)
 q_tpcds_q64 = _decorrelated(_Q64_BODY)
 q_tpcds_q78 = _decorrelated(_Q78_BODY)
 q_tpcds_q9 = _decorrelated(_Q9_BODY)

@@ -1,15 +1,21 @@
-"""JDBC and Kafka workspaces (contrib/storage-jdbc JdbcStoragePlugin.java,
-contrib/storage-kafka KafkaStoragePlugin.java analogs).
+"""External storage-plugin workspaces (contrib/storage-* analogs),
+registered through ``DrillSession.register_workspace(..., kind=)``.
 
 The JDBC path runs against a REAL embedded Derby database (the derby
 jars ship on Spark's classpath), exercising registration, SQL-front
-resolution, and pushdown; Kafka asserts the documented gate when the
-connector jar is absent (no broker can run in this container).
+resolution, and pushdown; OpenTSDB and remote Drill run against local
+REST servers; every connector row of ``PLUGINS`` asserts its missing-jar
+gate (no connector jar or server is available in the test environment).
 """
 
 from __future__ import annotations
 
 import pytest
+
+from drill_spark.readers.external import PLUGINS, Connector
+from drill_spark.session import DrillSession
+
+DERBY_DRIVER = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
 
 
 @pytest.fixture(scope="module")
@@ -29,9 +35,7 @@ def derby_url(spark, tmp_path_factory):
 
 
 def test_jdbc_workspace_roundtrip(session, derby_url):
-    session.register_jdbc_workspace(
-        "extdb", derby_url, driver="org.apache.derby.iapi.jdbc.AutoloadedDriver"
-    )
+    session.register_workspace("extdb", derby_url, kind="jdbc", options=DERBY_DRIVER)
     rows = session.sql("select NAME, PRICE from extdb.`ITEMS` where PRICE > 1.0").collect()
     assert sorted(r["NAME"] for r in rows) == ["alpha", "beta", "gamma"]
 
@@ -39,9 +43,7 @@ def test_jdbc_workspace_roundtrip(session, derby_url):
 def test_jdbc_filter_pushdown(session, derby_url):
     """Catalyst pushes the predicate INTO the database (Drill's
     JdbcPushDownFilter analog) — the scan node lists PushedFilters."""
-    session.register_jdbc_workspace(
-        "extdb", derby_url, driver="org.apache.derby.iapi.jdbc.AutoloadedDriver"
-    )
+    session.register_workspace("extdb", derby_url, kind="jdbc", options=DERBY_DRIVER)
     df = session.sql("select ID from extdb.`ITEMS` where PRICE > 1.0")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "PRICE" in plan
@@ -55,40 +57,57 @@ def test_jdbc_partitioned_scan(session, derby_url):
         session.spark,
         derby_url,
         "ITEMS",
-        {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"},
+        DERBY_DRIVER,
         {"partition_column": "ID", "lower_bound": "0", "upper_bound": "4", "num_partitions": "2"},
     )
     assert df.rdd.getNumPartitions() == 2
     assert df.count() == 4
 
 
-def test_kafka_workspace_gate(session):
-    """Without the spark-sql-kafka jar the error names the missing
-    piece (documented NONGOALS.md entry covers the broker-less env)."""
-    session.register_kafka_workspace("kf", "localhost:9092")
-    try:
-        session.sql("select * from kf.`events_topic`")
-        has_connector = True
-    except NotImplementedError as e:
-        has_connector = False
-        assert "spark-sql-kafka" in str(e)
-    if has_connector:  # connector bundled: resolution path worked
-        pytest.skip("kafka connector present; no broker to scan in-container")
+@pytest.mark.parametrize(
+    "kind", sorted(k for k, p in PLUGINS.items() if isinstance(p, Connector)))
+def test_connector_gates(session, kind):
+    """Every connector row resolves through the SQL front end and, with
+    no connector jar on the classpath, raises a NotImplementedError
+    naming the exact package to add."""
+    session.register_workspace(f"gate_{kind}", "localhost", kind=kind)
+    with pytest.raises(NotImplementedError) as e:
+        session.sql(f"select * from gate_{kind}.`db.tbl`")
+    assert PLUGINS[kind].package in str(e.value)
 
 
-def test_mongo_workspace_gate(session):
-    """Without the mongo-spark connector jar the error names the
-    missing piece (contrib/storage-mongo parity is connector-gated)."""
-    session.register_mongo_workspace("mg", "mongodb://localhost:27017")
-    try:
-        session.sql("select * from mg.`testdb.coll`")
-        pytest.skip("mongo connector present; no server to scan in-container")
-    except NotImplementedError as e:
-        assert "mongo-spark-connector" in str(e)
+def test_connector_user_options_win(session, derby_url):
+    """Workspace options are set after a row's fixed options, so they
+    override them: the druid row's Avatica url and driver give way to
+    Derby's, and the table reads through the row's JDBC source."""
+    session.register_workspace("druid_derby", "http://unused", kind="druid",
+                               options={"url": derby_url, **DERBY_DRIVER})
+    rows = session.sql("select NAME from druid_derby.`ITEMS` where PRICE > 2").collect()
+    assert sorted(r.NAME for r in rows) == ["beta", "gamma"]
+
+
+def test_bad_workspace_kind_rejected(session):
+    """An unknown kind, and a writable plugin workspace (a CTAS would
+    write under its address as a directory), fail at registration."""
+    with pytest.raises(ValueError, match="unknown workspace kind 'ftp'"):
+        session.register_workspace("bad_kind", "localhost", kind="ftp")
+    with pytest.raises(ValueError, match="jdbc workspaces are read-only"):
+        session.register_workspace("bad_kind", "jdbc:derby:memory:x", writable=True, kind="jdbc")
+    assert "bad_kind" not in session.workspaces
+
+
+def test_schemata_reports_plugin_type(spark, tmp_path):
+    """INFORMATION_SCHEMA.SCHEMATA's TYPE is the storage plugin type."""
+    s = DrillSession(spark=spark)
+    s.register_workspace("dfs.sch", str(tmp_path))
+    s.register_workspace("extsch", "jdbc:derby:memory:none", kind="jdbc")
+    types = {r.SCHEMA_NAME: r.TYPE for r in s.sql(
+        "select SCHEMA_NAME, TYPE from information_schema.schemata").collect()}
+    assert (types["dfs.sch"], types["extsch"]) == ("file", "jdbc")
 
 
 def test_mongo_bad_table_name(session):
-    session.register_mongo_workspace("mg2", "mongodb://localhost:27017")
+    session.register_workspace("mg2", "mongodb://localhost:27017", kind="mongo")
     with pytest.raises(ValueError, match="db.collection"):
         session.sql("select * from mg2.`collonly`")
 
@@ -97,7 +116,7 @@ def test_hive_workspace_gate(session):
     """On a session built without the Hive catalog the error names the
     hive=True flag (catalogImplementation is a static conf, fixed at
     the first session build in the JVM)."""
-    session.register_hive_workspace("hv")
+    session.register_workspace("hv", "default", kind="hive")
     with pytest.raises(NotImplementedError, match="hive=True"):
         session.sql("select * from hv.`sometable`")
 
@@ -126,7 +145,7 @@ def test_hive_catalog_roundtrip(tmp_path):
         spark.sql("CREATE TABLE hdb.t (id INT, name STRING) USING parquet")
         spark.sql("INSERT INTO hdb.t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
         s = DrillSession(spark=spark)
-        s.register_hive_workspace("hive", database="hdb")
+        s.register_workspace("hive", "hdb", kind="hive")
         assert sorted(r.id for r in s.sql("select id from hive.`t`").collect()) == [1, 2, 3]
         assert sorted(r.id for r in s.sql("select id from hive.`hdb.t`").collect()) == [1, 2, 3]
         # the session catalog IS the hive catalog: plain SQL resolves it too
@@ -154,53 +173,10 @@ def test_hive_catalog_roundtrip(tmp_path):
     assert "HIVE_OK" in proc.stdout, proc.stderr[-3000:]
 
 
-def test_elasticsearch_workspace_gate(session):
-    """Without elasticsearch-hadoop the error names the missing jar
-    (contrib/storage-elasticsearch parity is connector-gated)."""
-    session.register_elasticsearch_workspace("es", "localhost:9200")
-    try:
-        session.sql("select * from es.`myindex`")
-        pytest.skip("es-hadoop present; no server to scan in-container")
-    except NotImplementedError as e:
-        assert "elasticsearch-spark" in str(e)
-
-
-@pytest.mark.parametrize("kind,register,table,jar", [
-    ("cassandra", "register_cassandra_workspace", "ks.tbl",
-     "spark-cassandra-connector"),
-    ("hbase", "register_hbase_workspace", "t1", "hbase-spark"),
-    ("druid", "register_druid_workspace", "wikipedia", "avatica"),
-    ("splunk", "register_splunk_workspace", "main", "splunk-spark"),
-])
-def test_remaining_storage_plugin_gates(session, kind, register, table, jar):
-    """contrib/storage-{cassandra,hbase,druid,splunk} analogs: each
-    workspace kind resolves through the matching Spark connector and,
-    with no jar in-container, raises a NotImplementedError naming the
-    exact package to add — the kafka/mongo/ES gate contract."""
-    getattr(session, register)(f"gate_{kind}", "localhost")
-    try:
-        session.sql(f"select * from gate_{kind}.`{table}`")
-        pytest.skip(f"{kind} connector present; no server in-container")
-    except NotImplementedError as e:
-        assert jar in str(e), str(e)
-
-
 def test_cassandra_bad_table_name(session):
-    session.register_cassandra_workspace("cs2", "localhost")
+    session.register_workspace("cs2", "localhost", kind="cassandra")
     with pytest.raises(ValueError, match="keyspace.table"):
         session.sql("select * from cs2.`justatable`")
-
-
-def test_kudu_phoenix_gates(session):
-    for kind, reg, jar in (("kudu", "register_kudu_workspace", "kudu-spark"),
-                           ("phoenix", "register_phoenix_workspace",
-                            "phoenix-spark")):
-        getattr(session, reg)(f"gate2_{kind}", "localhost")
-        try:
-            session.sql(f"select * from gate2_{kind}.`t1`")
-            pytest.skip(f"{kind} connector present")
-        except NotImplementedError as e:
-            assert jar in str(e), str(e)
 
 
 def test_opentsdb_real_rest_scan(session):
@@ -240,8 +216,8 @@ def test_opentsdb_real_rest_scan(session):
     srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
-        session.register_opentsdb_workspace(
-            "tsdb", f"http://127.0.0.1:{srv.server_port}",
+        session.register_workspace(
+            "tsdb", f"http://127.0.0.1:{srv.server_port}", kind="opentsdb",
             options={"start": "2h-ago", "aggregator": "avg"})
         rows = session.sql(
             "select metric, tags.host as host, ts, val from tsdb.`sys.cpu.user` "
@@ -280,8 +256,8 @@ def test_opentsdb_empty_result_keeps_schema(session):
     srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
-        session.register_opentsdb_workspace(
-            "tsdb_empty", f"http://127.0.0.1:{srv.server_port}")
+        session.register_workspace(
+            "tsdb_empty", f"http://127.0.0.1:{srv.server_port}", kind="opentsdb")
         df = session.sql(
             "select metric, tags['host'] as host, ts, val "
             "from tsdb_empty.`no.such.metric`")
@@ -295,10 +271,10 @@ def test_googlesheets_and_maprdb_gates(session):
     """The last two reference plugins: googlesheets gates on OAuth
     credentials before anything else; maprdb gates on the proprietary
     MapR connector."""
-    session.register_googlesheets_workspace("gs", "1abcSHEETID")
+    session.register_workspace("gs", "1abcSHEETID", kind="googlesheets")
     with pytest.raises(NotImplementedError, match="OAuth credentials"):
         session.sql("select * from gs.`Sheet1`")
-    session.register_maprdb_workspace("mdb")
+    session.register_workspace("mdb", "/", kind="maprdb")
     try:
         session.sql("select * from mdb.`/tables/users`")
         pytest.skip("mapr connector present")
@@ -356,8 +332,8 @@ def test_drill_workspace_sql_face_and_auth(session):
 
     srv, port = serve(session, auth=("alice", "s3cret"))
     try:
-        session.register_drill_workspace(
-            "remote", f"http://127.0.0.1:{port}",
+        session.register_workspace(
+            "remote", f"http://127.0.0.1:{port}", kind="drill",
             options={"user": "alice", "password": "s3cret"})
         session.workspaces["remote"].options["query"] = (
             "select r_name from dfs.`/root/testdata/sf0.001/region.parquet` "

@@ -1653,6 +1653,28 @@ def test_rewrite_views_dropped_after_statement(dsession):
     assert not [n for n in names if n.startswith("_drill_")]
 
 
+def test_rewrite_views_dropped_after_passthrough_insert(dsession, tmp_path):
+    """INSERT INTO / OVERWRITE a Spark table from a path table runs once
+    inside the statement and stores no SQL text: the rows land and its
+    rewrite view is dropped with the statement, not kept until close()."""
+    spark = dsession.spark
+    spark.sql(f"CREATE TABLE people_ins (name STRING) USING parquet "
+              f"LOCATION '{tmp_path / 'people_ins'}'")
+    try:
+        dsession.sql("INSERT INTO people_ins select name from dfs.data.`people.json`")
+        dsession.sql("/* seniors */ INSERT INTO people_ins "
+                     "select name from dfs.data.`people.json` where age > 40")
+        assert sorted(r.name for r in spark.table("people_ins").collect()) == [
+            "ada", "bob", "bob"]
+        dsession.sql("INSERT OVERWRITE people_ins "
+                     "select name from dfs.data.`people.json`")
+        assert sorted(r.name for r in spark.table("people_ins").collect()) == [
+            "ada", "bob"]
+        assert not _drill_views(spark)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS people_ins")
+
+
 def test_rewrite_view_drop_keeps_cached_frames(dsession):
     """The drop goes through the session catalog, which does not uncache
     plans over the view (spark.catalog.dropTempView would)."""

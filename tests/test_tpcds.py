@@ -349,6 +349,18 @@ def test_q14_cross_items_is_three_channel_intersection(spark):
             for r in got} <= allowed
 
 
+def test_q14_drops_its_view_and_matches_oracle(spark, duck):
+    """q14 publishes its materialized cross_items under a per-invocation
+    name and drops it once the consumer is analyzed: no tpcds_q14_*
+    view is left, and the result still counts what the oracle counts."""
+    df = tpcds.QUERIES["tpcds_q14"](spark, SF_DIR)
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("tpcds_q14_")]
+    want = duck.execute(
+        f"select count(*) from ({tpcds.ORACLES['tpcds_q14']})").fetchone()[0]
+    assert df.count() == want
+
+
 def test_r13_shapes_plan_no_cartesian(spark):
     """The r13 shape classes (q4 three-channel YoY six-way self-join,
     q35 OR-of-EXISTS demographics, q43 day-of-week pivot, q48
