@@ -1231,7 +1231,7 @@ def ensure_registered(spark: SparkSession) -> None:
         _SESSIONS_REGISTERED.add(spark)
 
 
-def register_all(spark: SparkSession, strict: bool = False) -> list[str]:
+def register_all(spark: SparkSession) -> list[str]:
     """Register the compat functions; returns the list registered.
 
     Uses SQL UDFs (Spark >= 4.0 `CREATE TEMPORARY FUNCTION ... RETURN
@@ -1239,6 +1239,8 @@ def register_all(spark: SparkSession, strict: bool = False) -> list[str]:
     whole-stage codegen — no Python round trip. The general geometry
     surface (WKT in/out) rides on pandas UDFs, the one place per-row
     Python is the honest cost (as in the reference's Java UDFs).
+    Every registration is attempted; if any fails, one RuntimeError
+    names all the failures.
     """
     registered: list[str] = []
     failed: list[tuple[str, Exception]] = []
@@ -1247,8 +1249,6 @@ def register_all(spark: SparkSession, strict: bool = False) -> list[str]:
             spark.sql(_stmt(name, sig, body))
             registered.append(name)
         except Exception as e:
-            # Older Spark without SQL UDFs: skip; python helpers in
-            # drill_spark.ops still provide the functionality.
             failed.append((name, e))
     try:
         registered.extend(_register_geometry_udfs(spark))
@@ -1258,6 +1258,8 @@ def register_all(spark: SparkSession, strict: bool = False) -> list[str]:
         registered.extend(_register_contrib_udfs(spark))
     except Exception as e:
         failed.append(("contrib", e))
-    if strict and failed:
-        raise RuntimeError(f"compat functions failed to register: {failed}")
+    if failed:
+        raise RuntimeError(
+            f"{len(failed)} compat function(s) failed to register: "
+            + "; ".join(f"{n}: {e}" for n, e in failed))
     return registered

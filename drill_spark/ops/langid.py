@@ -13,26 +13,20 @@ the smallest distance wins.
 
 Design (Spark-first, 100 TB shape):
 
-- The per-language profiles are built ONCE, driver-side, in pure
-  Python from small embedded seed corpora (deterministic — no model
-  download, no RNG) and embedded into the plan as literal maps
-  (gram -> rank). L x K entries (~6 x 80) — far below any broadcast
-  threshold; they live inline in the expression tree.
-- Classification is a PER-ROW Catalyst expression: gram explode,
-  count, top-K rank and the L distance sums all happen inside one
-  projection via higher-order functions — the corpus NEVER shuffles.
-  A 100 TB documents table is one scan; the only exchange in a
-  typical "group by predicted language" query is over the bounded
-  (lang) key space.
+- The per-language profiles are built ONCE, in pure Python from
+  small embedded seed corpora (deterministic — no model download, no
+  RNG). L x K entries (~6 x 80), a few KB per worker.
+- Classification is a per-row Arrow-batched pandas UDF
+  (:func:`_lid_kernel`, cached per worker process): gram counting,
+  top-K ranking and the L distance sums run in plain Python over each
+  batch — the corpus NEVER shuffles. A 100 TB documents table is one
+  scan; the only exchange in a typical "group by predicted language"
+  query is over the bounded (lang) key space. The same algorithm as a
+  Catalyst higher-order-function expression was measured at ~11 ms
+  CPU per ~300-char document against ~0.5 ms in the kernel (array_sort,
+  run-length and rank lookups are per-element interpreter calls).
 - All arithmetic is integer (counts, ranks, |rank - rank| sums), so a
   SQL oracle replays it bit-exactly — no float tolerance anywhere.
-- Every intermediate is a HOF lambda VARIABLE, not a projection
-  column (see `_bind`): aliased-column staging is not a reliable
-  defense against Catalyst inlining an expensive expression into a
-  downstream lambda body (measured — `build_mixture` over this
-  operator inlined the normalization regexp into the per-gram
-  `transform`, O(len^2) per document), but a `NamedLambdaVariable`
-  is a bound value no rule can inline.
 
 Normalization: lowercase, every non-[a-z] run collapsed to a single
 space, trimmed, then padded with one leading and one trailing space
@@ -49,8 +43,6 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from drill_spark.ops.hofutil import bind_once as _bind
 
 NGRAM_MAX = 3
 TOP_K = 80
@@ -143,8 +135,8 @@ def _normalize(text: str) -> str:
 def _doc_profile(text: str, k: int = TOP_K,
                  n_max: int = NGRAM_MAX) -> list[str]:
     """Top-k char n-grams of ``text`` by (count desc, gram asc) — the
-    pure-Python twin of the Catalyst expression (used for profile
-    construction and by tests for replay)."""
+    plain reference form, written independently of :func:`_lid_kernel`
+    (used for profile construction and by :func:`classify_lang_py`)."""
     t = _normalize(text)
     counts: dict[str, int] = {}
     for n in range(1, n_max + 1):
@@ -163,170 +155,14 @@ def lang_profiles(k: int = TOP_K) -> dict[str, list[str]]:
     return {lang: _doc_profile(txt, k) for lang, txt in SEED_TEXTS.items()}
 
 
-def _gram_expr(text_col):
-    """All (overlapping) char 1..3-grams of the normalized padded
-    text, each extracted by ONE native ``regexp_extract_all`` call
-    with a zero-width lookahead pattern — the regex engine walks the
-    string once per n, so even if Catalyst inlines the padded-text
-    expression into the calls the cost is a constant factor, never
-    per-element (see :func:`_bind`).
-
-    Pure-whitespace grams must be dropped (the CT profile convention,
-    mirrored by ``_doc_profile`` and the SQL oracle). After
-    normalization the text has NO adjacent spaces (every non-letter
-    run collapsed to one space), so the only possible all-space gram
-    is the single-space 1-gram — excluded by using ``[a-z]`` in the
-    n=1 pattern instead of an interpreted per-gram trim filter."""
-    # normalize AFTER padding so non-letter runs collapse INTO the
-    # boundary spaces: the result never contains adjacent spaces (a
-    # letterless text collapses to the single space " ", which yields
-    # no grams under the patterns below) — for any text with a letter
-    # this equals pad(strip(normalize(text))) exactly.
-    padded = F.regexp_replace(
-        F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" ")),
-        "[^a-z]+", " ",
-    )
-    pats = ["(?=([a-z]))"] + [f"(?=(.{{{n}}}))"
-                              for n in range(2, NGRAM_MAX + 1)]
-    return _bind(padded, lambda p: F.concat(*[
-        F.regexp_extract_all(p, F.lit(pat), 1) for pat in pats
-    ]))
-
-
-_PAIR_T = "struct<gram:string,pos:int>"
-
-
-def _lid_struct(text_col: str, k: int, profiles: dict[str, list[str]]):
-    """The whole per-row Cavnar-Trenkle pipeline as ONE expression
-    returning ``struct<d: bigint, l: string>`` (winning distance +
-    language; d NULL and l 'und' when the document has no grams).
-    Every intermediate is a bound lambda variable (:func:`_bind`), so
-    each step runs exactly once per row regardless of how the
-    enclosing plan gets optimized."""
-
-    def _with_top(top):
-        # out-of-place distances for ALL languages in one pass.
-        # Catalyst's literal-map element_at LINEAR-SCANS the entries
-        # (the same ArrayBasedMapData property as the r7 bloom
-        # finding; jstack showed GetMapValueUtil as the hot frame), so
-        # the six 80-entry per-language maps are merged into ONE
-        # union-keyed map gram -> array of 6 ranks: one scan of the
-        # (deduplicated) union per doc-gram instead of six scans, and
-        # the lookup result is lambda-bound so the six per-language
-        # reads are O(1) array accesses, not repeated scans.
-        # The union map is packed into ONE string literal and parsed
-        # by str_to_map, which CONSTANT-FOLDS into a single map
-        # Literal node: building it from ~2000 create_map/array
-        # literal expression nodes made driver-side analysis/
-        # optimization/codegen of the tree the dominant cost of every
-        # consuming query (jstack showed Expression.toString and
-        # CodeGenerator.doCompile hot on the driver). Ranks are
-        # fixed-width 3-digit fields, decoded with two O(1) substring
-        # + cast ops per language at lookup time.
-        union: dict[str, list[int]] = {}
-        for li, lang in enumerate(LANGS):
-            for rank, gram in enumerate(profiles[lang]):
-                union.setdefault(gram, [k] * len(LANGS))[li] = rank
-        packed = "|".join(
-            gram + ":" + "".join(f"{r:03d}" for r in union[gram])
-            for gram in sorted(union))
-        # str_to_map's delimiters are REGEXES — the pair delimiter
-        # must be escaped or it splits between every character
-        rank_map = F.str_to_map(F.lit(packed), F.lit(r"\|"), F.lit(":"))
-        absent = F.lit("".join([f"{k:03d}"] * len(LANGS)))
-
-        per = F.zip_with(
-            top, F.sequence(F.lit(0), F.size(top) - 1),
-            lambda x, i: _bind(
-                F.coalesce(F.element_at(rank_map, x), absent),
-                lambda el: F.array(*[
-                    F.abs(F.substring(el, 3 * j + 1, 3).cast("int") - i)
-                    for j in range(len(LANGS))
-                ]),
-            ),
-        )
-        zero = F.array(*[F.lit(0).cast("long")] * len(LANGS))
-        dists = F.aggregate(
-            per, zero,
-            lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-        )
-        return _bind(dists, lambda dv: F.array_min(F.array(*[
-            F.struct(F.element_at(dv, li + 1).alias("d"),
-                     F.lit(lang).alias("l"))
-            for li, lang in enumerate(LANGS)
-        ])))
-
-    def _with_ends(ends):
-        # run length = this run's end position minus the previous
-        # run's end position (0 for the first run); each run is packed
-        # into ONE sort-key string "zeropad(10^9 - cnt) || gram" so the
-        # top-K ordering (count desc, gram asc) is the array's NATIVE
-        # binary string order — no interpreted comparator lambda (the
-        # custom-lambda array_sort invoked ~D log D interpreted calls
-        # per document, the single hottest step of the v1 pipeline)
-        prev = F.concat(
-            F.array(F.lit(None).cast(_PAIR_T)),
-            F.slice(ends, 1, F.size(ends) - 1),
-        )
-        keys = F.zip_with(
-            ends, prev,
-            lambda e, p: F.concat(
-                F.lpad(
-                    (F.lit(999999999)
-                     - (e["pos"] - F.coalesce(p["pos"], F.lit(0))))
-                    .cast("string"),
-                    10, "0"),
-                e["gram"],
-            ),
-        )
-        # top-K grams by (count desc, gram asc): native sort, slice,
-        # strip the 10-char count prefix in one O(K) pass
-        top = F.transform(
-            F.slice(F.array_sort(keys), 1, k),
-            lambda key: F.substring(key, 11, 1 << 30),
-        )
-        return _bind(top, _with_top)
-
-    def _with_pairs(pairs):
-        # a run ENDS where the successor differs (or is absent):
-        # sorted-adjacency run-length counting, O(G log G) total
-        nxt = F.concat(
-            F.slice(pairs, 2, F.size(pairs)),
-            F.array(F.lit(None).cast(_PAIR_T)),
-        )
-        ends = F.filter(
-            F.zip_with(
-                pairs, nxt,
-                lambda a, b: F.when(
-                    b.isNull() | (b["gram"] != a["gram"]), a),
-            ),
-            lambda x: x.isNotNull(),
-        )
-        return _bind(ends, _with_ends)
-
-    def _with_sorted(s):
-        pairs = F.zip_with(
-            s, F.sequence(F.lit(1), F.size(s)),
-            lambda e, i: F.struct(e.alias("gram"), i.alias("pos")),
-        )
-        return _bind(pairs, _with_pairs)
-
-    return _bind(_gram_expr(text_col), lambda g: F.when(
-        F.size(g) <= 0,  # size(NULL) = -1 with ANSI off: NULL text
-        F.struct(F.lit(None).cast("long").alias("d"),
-                 F.lit("und").alias("l")),
-    ).otherwise(_bind(F.array_sort(g), _with_sorted)))
-
-
 @lru_cache(maxsize=4)
 def _lid_kernel(k: int):
-    """Cavnar-Trenkle classifier closure for the Arrow path, cached
-    per process (guide §4.5 — a reused Python worker keeps it across
-    batches and tasks); each call
-    classifies one document with the IDENTICAL integer arithmetic as
-    the Catalyst expression and :func:`classify_lang_py` (counts,
-    (-count, gram) ordering, rank-dict lookups with absent-penalty k,
-    (distance, lang) min tie-break). Returns (distance|None, lang)."""
+    """Cavnar-Trenkle classifier closure behind :func:`classify_lang`,
+    cached per process (a reused Python worker keeps it across batches
+    and tasks); each call classifies one document with the same
+    integer arithmetic as :func:`classify_lang_py` (counts, (-count,
+    gram) ordering, rank-dict lookups with absent-penalty k, (distance,
+    lang) min tie-break). Returns (distance|None, lang)."""
     from collections import Counter
 
     profs = {lang: {g: i for i, g in enumerate(lang_profiles(k)[lang])}
@@ -356,67 +192,42 @@ def _lid_kernel(k: int):
 
 def classify_lang(df: DataFrame, text_col: str = "text",
                   out_col: str = "pred_lang", k: int = TOP_K,
-                  keep_distance: bool = False,
-                  spread: bool = True,
-                  engine: str = "arrow") -> DataFrame:
+                  keep_distance: bool = False) -> DataFrame:
     """Append ``out_col`` with the Cavnar-Trenkle language prediction
     ('und' for documents with no letter grams). ``keep_distance``
     additionally appends ``lang_distance`` (the winning out-of-place
     sum — useful as a confidence gate: large = far from every
-    profile; NULL for 'und'). Zero shuffles; one projection whose
-    intermediates are all lambda-bound (:func:`_bind`), so downstream
-    plans (aggregations, joins, mixture builders) can reference the
-    prediction column freely — the worst an optimizer rewrite can do
-    is re-run the whole per-row pipeline once per top-level reference,
-    never per array element.
+    profile; NULL for 'und'). Zero shuffles and no cardinality change:
+    one ArrowEvalPython projection over :func:`_lid_kernel`.
 
-    ``spread`` fans a narrow single-file scan out across the
-    cluster's slots FIRST (ops/pipeline._spread — a no-op for
-    splittable big files and for in-memory/post-shuffle frames):
-    classification is the CPU-bound step, and a small unsplittable
-    input would otherwise serialize it onto one core.
+    A narrow single-file scan is first fanned out across the cluster's
+    slots (ops/pipeline._spread — a no-op for splittable big files and
+    for in-memory/post-shuffle frames): classification is the
+    CPU-bound step, and a small unsplittable input would otherwise
+    serialize it onto one core.
 
     A consumer that references the prediction from SEVERAL plan
     branches (e.g. a mixture's availability aggregate plus its
-    join-back probe) re-runs this expression once per branch —
-    project columns are recomputed per consumer, only exchange
-    outputs are shared. For that shape, project the classified frame
-    down to the narrow columns the consumer needs and put one
-    repartition behind it (see q_lang_mixture): AQE reuses the
-    identical exchange subtree, so the classification runs exactly
-    once.
+    join-back probe) re-runs the UDF once per branch — project columns
+    are recomputed per consumer, only exchange outputs are shared. For
+    that shape, project the classified frame down to the narrow
+    columns the consumer needs and put one repartition behind it (see
+    q_lang_mixture): AQE reuses the identical exchange subtree, so the
+    classification runs exactly once."""
+    from drill_spark.ops.pipeline import _spread
 
-    ``engine`` (r13): ``"arrow"`` (default) classifies inside an
-    Arrow-batched pandas UDF — one ArrowEvalPython projection, still
-    zero shuffles and no cardinality change. Measured at sf0.1 the
-    interpreted-HOF Catalyst expression costs ~11 ms CPU per ~300-char
-    document (array_sort + run-length + rank lookups are per-element
-    interpreter calls), while the identical integer algorithm in the
-    kernel costs ~0.5 ms/doc — 23x less CPU, which at 100 TB is the
-    difference between the LID stage being negligible and it
-    dominating the scan (guide §4.2: per-row logic this heavy belongs
-    in a batched kernel behind the Arrow boundary). ``"catalyst"``
-    keeps the pure-expression path; the equality suite pins
-    arrow == catalyst == the Python replay row-for-row."""
-    if spread:
-        from drill_spark.ops.pipeline import _spread
+    df = _spread(df)
 
-        df = _spread(df)
-    if engine == "arrow":
-        @F.pandas_udf("d bigint, l string")
-        def _lid(s: pd.Series) -> pd.DataFrame:
-            one = _lid_kernel(k)  # cached per worker process
-            pairs = [one(t) for t in s]
-            return pd.DataFrame({
-                "d": pd.array([p[0] for p in pairs], dtype="Int64"),
-                "l": [p[1] for p in pairs],
-            })
+    @F.pandas_udf("d bigint, l string")
+    def _lid(s: pd.Series) -> pd.DataFrame:
+        one = _lid_kernel(k)  # cached per worker process
+        pairs = [one(t) for t in s]
+        return pd.DataFrame({
+            "d": pd.array([p[0] for p in pairs], dtype="Int64"),
+            "l": [p[1] for p in pairs],
+        })
 
-        res = _lid(F.col(text_col))
-    elif engine == "catalyst":
-        res = _lid_struct(text_col, k, lang_profiles(k))
-    else:
-        raise ValueError(f"classify_lang: unknown engine {engine!r}")
+    res = _lid(F.col(text_col))
     out = df.withColumn(out_col, res["l"])
     if keep_distance:
         out = out.withColumn("lang_distance", res["d"])
@@ -425,7 +236,7 @@ def classify_lang(df: DataFrame, text_col: str = "text",
 
 def classify_lang_py(text: str, k: int = TOP_K) -> str:
     """Pure-Python replay of :func:`classify_lang` for one document
-    (tests compare this against the Catalyst result row-by-row)."""
+    (tests compare it against the UDF result row-by-row)."""
     profiles = lang_profiles(k)
     doc = _doc_profile(text, k)
     if not doc:

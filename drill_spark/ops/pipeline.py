@@ -273,7 +273,7 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", impl: str = "sql") -> DataFrame:
+                      text_col: str = "text") -> DataFrame:
     """The FULL Gopher repetition table (Rae et al. 2021, Table A1) —
     the 13-signal published standard, extending
     :func:`repetition_stats`'s two-signal summary:
@@ -309,22 +309,12 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     hash-checks against a closed-form oracle. Documents with zero
     tokens are excluded (the family convention).
 
-    ``impl`` (r14, guide §5 "the driver should do almost no data
-    work"): ``"sql"`` (default) builds the identical expressions as
-    parsed SQL text — the Column-API construction of this 13-signal
-    table cost ~3.5k py4j gateway roundtrips (~1.3s driver wall) per
-    invocation, the same defect class as the r13 minhash/simhash
-    one-expression rewrites; the SQL builder is a handful of parse
-    calls. ``"column"`` keeps the original Column-API construction;
-    ``test_gopher_repetition_sql_impl_matches_column`` pins the two
-    bit-equal (fixture + edge docs), and fractional literals carry
-    the ``D`` suffix so every comparison stays double-typed exactly
-    like the Column form.
+    The table is assembled as parsed SQL text: the same expressions
+    built through the Column API cost ~3.5k py4j gateway roundtrips
+    (~1.3s driver wall) per invocation, the SQL builder a handful of
+    parse calls. Fractional literals carry the ``D`` suffix so every
+    comparison stays double-typed.
     """
-    if impl == "column":
-        return _gopher_repetition_column(df, id_col, text_col)
-    if impl != "sql":
-        raise ValueError(f"gopher_repetition: unknown impl {impl!r}")
     from drill_spark.ops.substr import _token_positions
 
     toks = _token_positions(df, id_col, text_col)
@@ -372,6 +362,10 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
 
     qid, qtext = quote_ident(id_col), quote_ident(text_col)
 
+    # segments strip ALL edge whitespace (trim() is space-only in both
+    # Spark and DuckDB) and are sorted, so an occurrence belongs to a
+    # >=2-count value iff it equals an adjacent element: O(n) per doc,
+    # not the O(n^2) nested filter (a 10^4-line page is normal)
     def _seg(sep: str) -> str:
         return (f"array_sort(filter(transform(split(lower({qtext}), "
                 f"'{sep}'), x -> regexp_replace(x, '^\\\\s+|\\\\s+$', '')), "
@@ -429,163 +423,6 @@ _GOPHER_REPETITION_LIMITS = {
     "dup_7gram_char_frac": 0.13, "dup_8gram_char_frac": 0.12,
     "dup_9gram_char_frac": 0.11, "dup_10gram_char_frac": 0.10,
 }
-
-
-def _gopher_repetition_column(df: DataFrame, id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
-    """Column-API construction of :func:`gopher_repetition` (the
-    pre-r14 form, kept as the equality reference for the SQL builder;
-    same expressions, ~3.5k py4j roundtrips to assemble)."""
-    from pyspark.sql import Window
-
-    from drill_spark.ops.substr import _token_positions
-
-    toks = _token_positions(df, id_col, text_col)
-    base = toks.groupBy("id").agg(
-        F.sum(F.length("tok")).alias("total_chars"))
-
-    wspec = Window.partitionBy("id").orderBy("p").rowsBetween(0, 9)
-    grams = (
-        toks.withColumn("warr", F.collect_list("tok").over(wspec))
-        .select("id", "p", F.explode(F.filter(
-            F.transform(
-                F.sequence(F.lit(2), F.lit(10)),
-                lambda n: F.struct(
-                    n.alias("n"),
-                    F.when(F.size("warr") >= n,
-                           F.array_join(F.slice("warr", 1, n), " "))
-                    .alias("g"),
-                ),
-            ),
-            lambda s: s["g"].isNotNull(),
-        )).alias("s"))
-        .select("id", "p", F.col("s.n").alias("n"), F.col("s.g").alias("g"))
-    )
-    gc = grams.groupBy("id", "n", "g").agg(F.count("*").alias("c"))
-    # top-1 gram per (doc, n<=4): count desc, gram asc — a bounded
-    # window (one row per (doc, n) survives)
-    top = (
-        gc.where(F.col("n") <= 4)
-        .withColumn("rk", F.row_number().over(
-            Window.partitionBy("id", "n").orderBy(F.desc("c"), F.asc("g"))))
-        .where(F.col("rk") == 1)
-        .select("id", "n",
-                (F.col("c") * (F.length("g") - (F.col("n") - 1)))
-                .cast("long").alias("chars"))
-    )
-    # coverage union per (doc, n>=5): positions of duplicated grams,
-    # counted once
-    dups = gc.where((F.col("n") >= 5) & (F.col("c") >= 2)) \
-             .select("id", "n", "g")
-    cov = (
-        grams.join(dups, ["id", "n", "g"], "left_semi")
-        .select("id", "n",
-                F.explode(F.sequence(
-                    F.col("p"), F.col("p") + F.col("n") - 1)).alias("q"))
-        .distinct()
-    )
-    covc = (
-        cov.join(toks.select("id", F.col("p").alias("q"),
-                             F.length("tok").alias("cl")), ["id", "q"])
-        .groupBy("id", "n").agg(F.sum("cl").alias("chars"))
-    )
-    fr = (
-        top.unionByName(covc)
-        .groupBy("id")
-        .agg(*[F.max(F.when(F.col("n") == k, F.col("chars")))
-               .alias(f"__ch{k}") for k in range(2, 11)])
-    )
-
-    # line/paragraph signals: pure per-row HOFs over the same
-    # lowercased text
-    low = F.lower(F.col(text_col))
-
-    def _segments(sep: str):
-        # strip ALL whitespace, not just spaces (trim() is space-only
-        # in both Spark and DuckDB; a paragraph segment can carry an
-        # interior newline's residue at its edges)
-        return F.filter(
-            F.transform(F.split(low, sep),
-                        lambda x: F.regexp_replace(x, r"^\s+|\s+$", "")),
-            lambda x: x != "")
-
-    def _dup_metrics(srt, occ_name: str, chr_name: str):
-        # srt is SORTED: an occurrence belongs to a >=2-count value iff
-        # it equals an adjacent element — O(n) adjacency instead of the
-        # O(n^2) nested filter (a 10^4-line doc would otherwise cost
-        # 10^8 comparisons inside one projection). Occurrence counting
-        # is order-free, so the sorted multiset gives identical
-        # fractions. F.get is 0-based and NULL out of range.
-        def _is_dup(x, i):
-            return (
-                F.coalesce(F.get(srt, i - 1) == x, F.lit(False))
-                | F.coalesce(F.get(srt, i + 1) == x, F.lit(False))
-            )
-
-        dup_occ = F.filter(srt, _is_dup)
-        total = F.size(srt)
-        tchars = F.aggregate(srt, F.lit(0).cast("long"),
-                             lambda a, x: a + F.length(x))
-        dchars = F.aggregate(dup_occ, F.lit(0).cast("long"),
-                             lambda a, x: a + F.length(x))
-        return [
-            F.round(F.when(total > 0, F.size(dup_occ) / total)
-                    .otherwise(F.lit(0.0)), 4).alias(occ_name),
-            F.round(F.when(tchars > 0, dchars / tchars)
-                    .otherwise(F.lit(0.0)), 4).alias(chr_name),
-        ]
-
-    # materialize the sorted arrays in their own projection so the
-    # per-element F.get lookups reference a computed column, not a
-    # re-evaluated array_sort (Catalyst keeps multi-referenced
-    # non-cheap aliases un-collapsed)
-    segs = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.array_sort(_segments(r"\n")).alias("__lines"),
-            F.array_sort(_segments(r"\n\n")).alias("__paras"),
-        )
-        .select(
-            "id",
-            *_dup_metrics(F.col("__lines"), "dup_line_frac",
-                          "dup_line_char_frac"),
-            *_dup_metrics(F.col("__paras"), "dup_para_frac",
-                          "dup_para_char_frac"),
-        )
-    )
-
-    def _frac(k: int):
-        return F.round(
-            F.coalesce(F.col(f"__ch{k}"), F.lit(0)) / F.col("total_chars"),
-            4)
-
-    out = (
-        base.join(fr, "id", "left").join(segs, "id")
-        .select(
-            F.col("id").alias(id_col),
-            "dup_line_frac", "dup_line_char_frac",
-            "dup_para_frac", "dup_para_char_frac",
-            _frac(2).alias("top_2gram_char_frac"),
-            _frac(3).alias("top_3gram_char_frac"),
-            _frac(4).alias("top_4gram_char_frac"),
-            *[_frac(k).alias(f"dup_{k}gram_char_frac")
-              for k in range(5, 11)],
-        )
-    )
-    limits = {
-        "dup_line_frac": 0.30, "dup_para_frac": 0.30,
-        "dup_line_char_frac": 0.20, "dup_para_char_frac": 0.20,
-        "top_2gram_char_frac": 0.20, "top_3gram_char_frac": 0.18,
-        "top_4gram_char_frac": 0.16,
-        "dup_5gram_char_frac": 0.15, "dup_6gram_char_frac": 0.14,
-        "dup_7gram_char_frac": 0.13, "dup_8gram_char_frac": 0.12,
-        "dup_9gram_char_frac": 0.11, "dup_10gram_char_frac": 0.10,
-    }
-    cond = None
-    for c, t in limits.items():
-        e = F.col(c) > t
-        cond = e if cond is None else (cond | e)
-    return out.withColumn("flagged", cond)
 
 
 def quality_mixture_sample(

@@ -181,8 +181,6 @@ def phrase_search(df: DataFrame, phrase: str, id_col: str = "doc_id",
             F.filter(F.sequence(F.lit(1), F.size(w) - (m - 1)), _match),
         ).otherwise(F.array().cast("array<int>"))
 
-    from drill_spark.ops.hofutil import bind_once
-
     starts = bind_once(
         F.filter(tokens(F.col(text_col)), lambda t: t != ""), _starts)
     # the pushed-down `n_hits > 0` filter re-evaluates the aliased
@@ -201,139 +199,32 @@ def phrase_search(df: DataFrame, phrase: str, id_col: str = "doc_id",
 
 def window_cooccur(df: DataFrame, terms: list[str], window: int = 10,
                    id_col: str = "doc_id",
-                   text_col: str = "text", impl: str = "sql") -> DataFrame:
+                   text_col: str = "text") -> DataFrame:
     """Unordered proximity matching: documents where ALL query terms
     occur together inside at least one ``window``-token span, with the
     count of such spans — the "terms near each other" operator between
     exact phrase match and whole-document AND.
 
-    Per-row HOF like :func:`phrase_search` (each candidate window
-    checks containment of every term — bounded by doc length × window
-    × |terms|, all codegen, zero shuffles).
+    Per-row HOF like :func:`phrase_search`: a codegen substring
+    pre-filter (a superset: a token present implies the substring is
+    present), then one O(occurrences x |terms|) fold over the merged
+    term-position stream that computes the minimum span covering every
+    term (``<= window`` is exactly "n_windows >= 1") and each term's
+    first/last occurrence. A qualifying start ``i`` needs every term in
+    ``[i, i+window-1]``, so the window scan walks only the band
+    ``max(firsts)-window+1 .. min(lasts)`` instead of the whole
+    document. Zero shuffles.
 
     Returns (id_col, n_windows) for documents with >= 1 qualifying
-    window.
-
-    ``impl`` (r14, guide §5): ``"sql"`` (default) assembles the whole
-    per-row expression — pre-filter, merged position stream, fold and
-    narrow-band scan — as ONE parsed SQL string (~1.1k py4j gateway
-    roundtrips and ~0.4s driver wall per invocation collapse to a
-    handful of calls; same defect class as the r13 minhash/simhash
-    rewrites). ``"column"`` keeps the original Column-API builder;
-    ``test_window_cooccur_sql_impl_matches_column`` pins the two
-    bit-equal on fixtures and edge cases.
+    window. The whole per-row expression is one parsed SQL string: the
+    Column-API construction cost ~1.1k py4j gateway roundtrips (~0.4s
+    driver wall) per invocation.
     """
     qs = [t.lower() for t in terms if t]
     if not qs:
         raise ValueError("window_cooccur: terms must be non-empty")
     if window < len(qs):
         raise ValueError("window_cooccur: window must hold all terms")
-    if impl == "sql":
-        return _window_cooccur_sql(df, qs, window, id_col, text_col)
-    if impl != "column":
-        raise ValueError(f"window_cooccur: unknown impl {impl!r}")
-    T = len(qs)
-    # codegen substring pre-filter (superset: a token present implies
-    # the substring is present) keeps everything below off documents
-    # that cannot qualify
-    cand = df
-    for term in qs:
-        cand = cand.where(F.lower(F.col(text_col)).contains(term))
-
-    # r13 positional pre-filter (this row was top-10 in the bench at
-    # 2.78 s: the contains() superset passes most docs for common
-    # terms, and the window scan then costs O(len x window x T) per
-    # candidate). One O(occ x T) fold over the merged term-position
-    # stream computes (a) the MINIMUM span covering one occurrence of
-    # every term — min_span <= window is EXACTLY "n_windows >= 1", so
-    # non-matching docs never reach the scan — and (b) per-term
-    # first/last occurrence bounds: a qualifying start i needs every
-    # term inside [i, i+window-1], hence i >= max(firsts)-window+1 and
-    # i <= min(lasts), so the scan walks only that narrow band instead
-    # of the whole document. Counts are provably identical to the full
-    # scan. All intermediates are lambda-BOUND (bind_once): a plain
-    # aliased token column is exposed to Catalyst inlining the
-    # tokenizer into the per-start slice lambda (the measured O(len^2)
-    # langid failure mode).
-    INF = (1 << 31) - 1
-
-    def _n_windows(w):
-        def _win_ok(i):
-            sl = F.slice(w, i.cast("int"), window)
-            c = None
-            for term in qs:
-                e = F.array_contains(sl, term)
-                c = e if c is None else (c & e)
-            return c
-
-        merged = F.array_sort(F.concat(*[
-            F.filter(
-                F.zip_with(
-                    w, F.sequence(F.lit(1), F.greatest(F.size(w), F.lit(1))),
-                    (lambda t: lambda tok, i: F.when(
-                        tok == t[1],
-                        F.struct(i.alias("pos"), F.lit(t[0]).alias("tid"))
-                    ))((ti, term)),
-                ),
-                lambda x: x.isNotNull(),
-            )
-            for ti, term in enumerate(qs)
-        ]))
-
-        def _step(a, x):
-            nl = F.transform(
-                a["ls"],
-                (lambda tid: lambda v, j: F.when(j == tid, x["pos"])
-                 .otherwise(v))(x["tid"]),
-            )
-            nf = F.transform(
-                a["fs"],
-                (lambda tid: lambda v, j: F.when(
-                    (j == tid) & v.isNull(), x["pos"]).otherwise(v)
-                 )(x["tid"]),
-            )
-            seen_all = ~F.exists(nl, lambda e: e.isNull())
-            best = F.when(
-                seen_all,
-                F.least(a["best"], x["pos"] - F.array_min(nl) + 1),
-            ).otherwise(a["best"])
-            return F.struct(nl.alias("ls"), nf.alias("fs"),
-                            best.alias("best"))
-
-        def _finish(a):
-            s_max = F.greatest(F.size(w) - (window - 1), F.lit(1))
-            lo = F.greatest(F.lit(1),
-                            F.array_max(a["fs"]) - (window - 1))
-            hi = F.least(s_max, F.array_min(a["ls"]))
-            return F.when(
-                (a["best"] <= window) & (lo <= hi),
-                F.size(F.filter(F.sequence(lo, hi), _win_ok)),
-            ).otherwise(F.lit(0))
-
-        nulls = F.array_repeat(F.lit(None).cast("int"), T)
-        return F.aggregate(
-            merged,
-            F.struct(nulls.alias("ls"), nulls.alias("fs"),
-                     F.lit(INF).alias("best")),
-            _step,
-            _finish,
-        )
-
-    toks = F.filter(tokens(F.col(text_col)), lambda t: t != "")
-    st = cand.select(
-        F.col(id_col),
-        bind_once(toks, _n_windows).cast("long").alias("n_windows"),
-    )
-    return st.where(F.col("n_windows") > 0)
-
-
-def _window_cooccur_sql(df: DataFrame, qs: list[str], window: int,
-                        id_col: str, text_col: str) -> DataFrame:
-    """SQL-text builder for :func:`window_cooccur` — term-for-term the
-    Column form's expressions (same CASE/struct/fold shapes, same
-    literal types), assembled as one parsed string. The bind_once
-    defense survives as the literal element_at(transform(array(...)))
-    wrapper, so the tokenizer still evaluates once per row."""
     T = len(qs)
     INF = (1 << 31) - 1
 
@@ -368,6 +259,9 @@ def _window_cooccur_sql(df: DataFrame, qs: list[str], window: int,
     nulls = f"array_repeat(cast(null as int), {T})"
     init = f"struct({nulls} as ls, {nulls} as fs, {INF} as best)"
     toks = f"filter(split(trim({low}), '\\\\s+'), t -> t != '')"
+    # the token array is lambda-bound through element_at(transform(
+    # array(...))) (the hofutil.bind_once defense), so Catalyst cannot
+    # inline the tokenizer into the per-start slice lambda
     nw = (f"cast(element_at(transform(array({toks}), "
           f"w -> aggregate({merged}, {init}, {step}, {finish})), 1) "
           f"as bigint)")
@@ -539,56 +433,17 @@ def bm25_topk_batch(df: DataFrame, queries: DataFrame, k: int = 10,
     )
 
 
-def _hash_token_vec(word_col, dim: int = 4):
-    """Deterministic pseudo-embedding for a token: dim components from
-    md5(word_j) scaled to (-0.5, 0.5), L2-normalized. SQL-expressible
-    on both engines (the oracle replays it), so multi-vector retrieval
-    is hash-checkable end-to-end; a real deployment swaps this for
-    model token embeddings read from a column.
-
-    The raw (pre-norm) vector is bound to a lambda variable via a
-    single-element array wrapper so the md5 components are evaluated
-    ONCE per token — Catalyst does not common-subexpression-eliminate
-    across HOF lambda bodies, and inlining the raw transform into the
-    norm AND the scaled output multiplies the hash work."""
-    if dim > 8:
-        raise ValueError("hash token vectors support dim <= 8 "
-                         "(one md5 yields 8 16-bit components)")
-    # ONE md5 per token; components are disjoint 16-bit slices of it
-    raw = F.transform(
-        F.array(F.md5(word_col)),
-        lambda h: F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda j: F.conv(
-                F.substring(h, j * 4 + 1, 4),
-                16, 10).cast("double") / 65536.0 - 0.5,
-        ),
-    )[0]
-    return F.element_at(
-        F.transform(
-            F.array(raw),
-            lambda r: F.transform(
-                r,
-                lambda x: x / F.sqrt(
-                    F.aggregate(r, F.lit(0.0), lambda a, y: a + y * y)),
-            ),
-        ),
-        1,
-    )
-
-
 def _maxsim_kernel(query_terms: list[str], dim: int, max_tokens: int):
-    """Per-worker ColBERT scorer for the Arrow path: the IDENTICAL
-    arithmetic as the Catalyst HOF chain, operation for operation and
-    in the same order, so scores are bit-equal — tokenization is
-    trim-spaces + ASCII ``\\s+`` split (Spark's trim/split), token
-    vectors are 16-bit md5 slices /65536 - 0.5 L2-normalized with the
-    same sequential fold order, the q×d interaction folds doc tokens
-    left-to-right carrying one running max per query token, and the
-    final round replays Spark's HALF_UP BigDecimal rounding. Word
-    vectors are memoized per worker (docs share vocabulary, so each
-    distinct word hashes once — the Catalyst path re-hashes per
-    occurrence)."""
+    """Per-worker ColBERT scorer behind :func:`maxsim_topk`'s Arrow UDF.
+    Tokenization is trim-spaces + ASCII ``\\s+`` split (Spark's
+    trim/split). A token vector is the first ``dim`` 16-bit slices of
+    the word's md5, each /65536 - 0.5, then L2-normalized with a
+    sequential fold. The q×d interaction folds doc tokens
+    left-to-right carrying one running max per query token. The final
+    round replays Spark's HALF_UP BigDecimal rounding, and every fold
+    order is fixed, so the DuckDB oracle's SQL replay matches bit for
+    bit. Word vectors are memoized per worker: docs share vocabulary,
+    so each distinct word hashes once."""
     import hashlib
     import math
     import re as _re
@@ -640,66 +495,32 @@ def _maxsim_kernel(query_terms: list[str], dim: int, max_tokens: int):
 
 def maxsim_topk(df: DataFrame, query_terms: list[str], k: int = 10,
                 dim: int = 4, max_tokens: int = 32,
-                id_col: str = "doc_id", text_col: str = "text",
-                engine: str = "arrow") -> DataFrame:
+                id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """ColBERT-style late-interaction retrieval: score(q, d) =
     sum over query tokens of the MAX dot product against any document
     token vector (Khattab & Zaharia 2020) — the multi-vector ranking
     that beats single-vector cosine on phrase queries.
 
-    The whole scoring is Catalyst HOFs over nested arrays: document
-    token vectors are ``transform`` over the first ``max_tokens``
-    tokens, the q×d interaction is a single fold over the DOC tokens
-    carrying one running max per query token — so the (large) document
-    vector expression appears exactly ONCE in the plan and each token's
-    md5 components are hashed once (Catalyst inlines rather than CSEs
-    repeated HOF subtrees; the naive sum-over-query-tokens shape
-    re-evaluated the doc vectors |q|+1 times and benched ~10x slower).
-    Per-row cost |q|·max_tokens·dim, bounded regardless of corpus
-    size. No explode, no shuffle for scoring; top-k is TakeOrdered.
-    Returns (id, score, rank), score rounded 6dp with id tiebreak.
-
-    ``engine`` (r13): ``"arrow"`` (default) scores inside an
-    Arrow-batched pandas UDF — the interpreted HOF chain costs
-    ~|q|·max_tokens·dim expression-interpreter calls plus array
-    allocations per row and re-hashes every token occurrence, while
-    the kernel memoizes one vector per distinct word per worker and
-    runs plain float arithmetic (measured 3.7 → ~1s at sf0.1, scores
-    bit-equal — same fold orders, same HALF_UP rounding).
-    ``"catalyst"`` keeps the pure-expression path; a test pins the
-    two engines equal.
+    Token vectors are deterministic md5 pseudo-embeddings (``dim`` <= 8
+    components, L2-normalized; see :func:`_maxsim_kernel`), so the
+    ranking is hash-checkable end to end; a real deployment swaps them
+    for model token embeddings read from a column. Only the first
+    ``max_tokens`` tokens of a document are scored. Scoring runs inside
+    an Arrow-batched pandas UDF: the kernel memoizes one vector per
+    distinct word per worker and runs plain float arithmetic (the
+    equivalent Catalyst HOF chain re-hashed every token occurrence;
+    measured 3.7 s → ~1 s at sf0.1). Per-row cost |q|·max_tokens·dim,
+    bounded regardless of corpus size. No explode, no shuffle for
+    scoring; top-k is TakeOrdered. Documents with no tokens are
+    dropped. Returns (id, score, rank), score rounded 6dp with id
+    tiebreak.
     """
-    if engine == "arrow":
-        @F.pandas_udf("double")
-        def _score(s: pd.Series) -> pd.Series:
-            kern = _maxsim_kernel(list(query_terms), dim, max_tokens)
-            return s.map(kern, na_action=None).astype("float64")
+    @F.pandas_udf("double")
+    def _score(s: pd.Series) -> pd.Series:
+        kern = _maxsim_kernel(list(query_terms), dim, max_tokens)
+        return s.map(kern, na_action=None).astype("float64")
 
-        score = _score(F.col(text_col))
-    elif engine == "catalyst":
-        words = F.slice(
-            F.filter(tokens(F.col(text_col)), lambda t: t != ""),
-            1, max_tokens)
-        dvecs = F.transform(words, lambda w: _hash_token_vec(w, dim))
-        # query vectors are literal expressions — constant-folded at
-        # plan time, so referencing qvecs repeatedly is free
-        qvecs = F.transform(
-            F.array(*[F.lit(t) for t in query_terms]),
-            lambda w: _hash_token_vec(w, dim))
-        dot = lambda qt, dt: F.aggregate(  # noqa: E731
-            F.zip_with(qt, dt, lambda a, b: a * b),
-            F.lit(0.0), lambda s, x: s + x)
-        # fold over doc tokens: state = running max per query token
-        maxes = F.aggregate(
-            dvecs,
-            F.transform(qvecs, lambda _: F.lit(float("-inf"))),
-            lambda acc, dt: F.zip_with(
-                acc, qvecs, lambda m, qt: F.greatest(m, dot(qt, dt))),
-        )
-        score = F.round(
-            F.aggregate(maxes, F.lit(0.0), lambda s, m: s + m), 6)
-    else:
-        raise ValueError(f"maxsim_topk: unknown engine {engine!r}")
+    score = _score(F.col(text_col))
     scored = (
         df.where(F.size(F.filter(tokens(F.col(text_col)),
                                  lambda t: t != "")) > 0)

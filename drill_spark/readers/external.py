@@ -22,8 +22,9 @@ Spark-first mapping:
   (``partition_column``/``num_partitions`` become parallel range
   queries; a single-partition JDBC read is a driver-side bottleneck at
   100 TB). Hive resolves through the session catalog; OpenTSDB and
-  remote Drill speak JSON REST with no jar; Google Sheets gates on
-  OAuth credentials before its connector.
+  remote Drill speak JSON REST with no jar, and so does the http
+  plugin (``readers/http.py``); Google Sheets gates on OAuth
+  credentials before its connector.
 """
 
 from __future__ import annotations
@@ -33,6 +34,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from drill_spark.readers.http import read_http
 
 
 def read_jdbc_table(
@@ -391,6 +394,28 @@ def read_drill_table(
         timeout=float(opts.get("timeout", 600.0)))
 
 
+def read_http_table(
+    spark: SparkSession,
+    base_url: str,
+    table: str,
+    ws_options: dict | None = None,
+    query_options: dict | None = None,
+) -> DataFrame:
+    """Workspace face of the http plugin: the endpoint is the workspace
+    base url followed by the table name (the built-in ``http``/``https``
+    workspaces have an empty base, so their tables are full urls).
+    Options: dataPath (descend into the reply), pageParam + maxPages
+    (pagination); snake_case spellings are accepted too."""
+    opts = {**(ws_options or {}), **(query_options or {})}
+    return read_http(
+        spark,
+        base_url + table,
+        data_path=opts.get("dataPath", opts.get("data_path")),
+        page_param=opts.get("pageParam", opts.get("page_param")),
+        max_pages=int(opts.get("maxPages", opts.get("max_pages", 1))),
+    )
+
+
 # Storage plugin table (Drill's StoragePluginRegistry): workspace kind
 # -> reader. A reader takes (spark, workspace path, table, workspace
 # options, query options); a Connector row is read by _read_connector.
@@ -407,6 +432,8 @@ PLUGINS: dict[str, Connector | Callable[..., DataFrame]] = {
     "googlesheets": read_googlesheets_tab,
     # contrib/storage-drill; path: remote REST base url
     "drill": read_drill_table,
+    # contrib/storage-http; path: base url prefixed to the table name
+    "http": read_http_table,
     # contrib/storage-kafka; path: bootstrap servers; a topic read as a
     # batch table (earliest..latest) with the connector's metadata columns
     "kafka": Connector(

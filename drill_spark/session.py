@@ -294,6 +294,9 @@ class DrillSession:
         if "dfs" not in self.workspaces:
             self.workspaces["dfs"] = Workspace("dfs", "/", "parquet")
             self.workspaces["dfs.tmp"] = Workspace("dfs.tmp", "/tmp", "parquet", writable=True)
+        # REST endpoints as tables: http.`https://host/api`
+        for scheme in ("http", "https"):
+            self.workspaces.setdefault(scheme, Workspace(scheme, "", kind="http"))
 
     # ---------------- workspace / table resolution ----------------
 

@@ -992,17 +992,6 @@ def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | N
     from drill_spark.readers.external import PLUGINS, read_plugin
     from drill_spark.readers.files import read_auto
 
-    if ws_name.rstrip(".") in ("http", "https") or rel_path.startswith(("http://", "https://")):
-        from drill_spark.readers.http import read_http
-
-        opts = options or {}
-        return read_http(
-            session.spark,
-            rel_path,
-            data_path=opts.get("dataPath", opts.get("data_path")),
-            page_param=opts.get("pageParam", opts.get("page_param")),
-            max_pages=int(opts.get("maxPages", opts.get("max_pages", 1))),
-        )
     ws = session.workspaces.get(ws_name.rstrip("."))
     if ws is not None and ws.kind in PLUGINS:
         return read_plugin(session.spark, ws.kind, ws.path, rel_path, ws.options, options)
@@ -1104,8 +1093,7 @@ def rewrite(session, query: str) -> str:
 
     def path_sub(m: re.Match) -> str:
         ws, path = m.group(1).rstrip("."), m.group(2)
-        is_url = ws in ("http", "https") and path.startswith(("http://", "https://"))
-        if ws not in session.workspaces and not os.path.exists(path) and not is_url:
+        if ws not in session.workspaces and not os.path.exists(path):
             return m.group(0)  # not a known workspace — leave untouched
         df = _read_path(session, ws, path)
         view = session._fresh_view("path")
@@ -1250,9 +1238,11 @@ def execute(session, query: str) -> DataFrame:
                     location=ws.path,
                     default_format=ws.default_format,
                     writable=ws.writable,
+                    type=ws.kind,
                 )
             ],
-            "schema_name string, location string, default_format string, writable boolean",
+            "schema_name string, location string, default_format string, writable boolean, "
+            "type string",
         )
 
     m = _CTAS.match(query)
@@ -1804,6 +1794,9 @@ def execute(session, query: str) -> DataFrame:
     if m:
         target = (m.group(1) or "dfs").strip("`")
         ws = session.workspaces.get(target)
+        if ws is not None and ws.kind != "file":
+            raise ValueError(
+                f"SHOW FILES lists file workspaces; {target} is a {ws.kind} workspace")
         root = ws.path if ws else target
         rows = []
         if os.path.isdir(root):

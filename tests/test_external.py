@@ -106,6 +106,19 @@ def test_schemata_reports_plugin_type(spark, tmp_path):
     assert (types["dfs.sch"], types["extsch"]) == ("file", "jdbc")
 
 
+def test_show_files_and_describe_schema_on_plugin_workspace(spark):
+    """A plugin workspace's address is not a directory: SHOW FILES
+    raises naming the kind, and DESCRIBE SCHEMA reports the kind as
+    information_schema.schemata does."""
+    s = DrillSession(spark=spark)
+    s.register_workspace("ext", "jdbc:derby:memory:none", kind="jdbc")
+    with pytest.raises(ValueError, match="jdbc"):
+        s.sql("SHOW FILES IN ext")
+    d = s.sql("DESCRIBE SCHEMA ext").head()
+    assert (d["schema_name"], d["location"], d["type"]) == (
+        "ext", "jdbc:derby:memory:none", "jdbc")
+
+
 def test_mongo_bad_table_name(session):
     session.register_workspace("mg2", "mongodb://localhost:27017", kind="mongo")
     with pytest.raises(ValueError, match="db.collection"):

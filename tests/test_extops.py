@@ -2110,15 +2110,36 @@ def test_phrase_and_window_search_shapes(spark):
         window_cooccur(df, ["a", "b", "c"], window=2)
 
 
-def test_window_cooccur_sql_impl_matches_column(spark):
-    """The r14 SQL-text builder is bit-equal to the Column-API form:
-    fixture documents, planted edges (both-terms/one-term/empty/short
-    docs, windows at the exact boundary), multi-term queries, and a
-    term carrying a quote/backslash (literal escaping)."""
+def _window_cooccur_replay(rows, terms, window):
+    """{id: n_windows} by a full scan of every window start: tokens are
+    the space-trimmed, lowercased text split on ASCII whitespace; a
+    document shorter than the window is one window."""
+    import re
+
+    qs = [t.lower() for t in terms]
+    out = {}
+    for i, text in rows:
+        if text is None:
+            continue
+        w = [t for t in re.split(r"[ \t\n\x0b\f\r]+",
+                                 text.lower().strip(" ")) if t]
+        n = sum(all(q in w[s:s + window] for q in qs)
+                for s in range(max(len(w) - window + 1, 1)))
+        if n:
+            out[i] = n
+    return out
+
+
+def test_window_cooccur_edge_docs_match_replay(spark):
+    """n_windows equals a full-scan Python replay on fixture documents
+    and planted edges: both-terms/one-term/empty/whitespace/NULL/short
+    docs, windows exactly at the boundary and one past it, multi-term
+    queries, and terms carrying a quote or a backslash (literal
+    escaping). Hand-computed counts pin the replay itself."""
     from drill_spark.ops.search import window_cooccur
     from drill_spark.session import load_fixture
 
-    edge = spark.createDataFrame([
+    rows = [
         (1, "alpha beta gamma alpha beta delta"),
         (2, "beta alpha nothing here"),
         (3, "alpha beta"),
@@ -2128,25 +2149,37 @@ def test_window_cooccur_sql_impl_matches_column(spark):
         (7, "alpha x x x x x x x x x delta"),     # one past it
         (8, "delta alpha delta alpha delta"),     # many overlapping
         (9, "it's a quote ' and a back\\slash alpha delta"),
-    ], "doc_id long, text string")
-    docs = load_fixture(spark, "/root/testdata/sf0.001", "documents")
-    cases = [
-        (edge, ["alpha", "delta"], 4),
-        (edge, ["alpha", "delta"], 10),
-        (edge, ["alpha", "beta", "delta"], 6),
-        (edge, ["'", "alpha"], 10),
-        (edge, ["back\\slash", "quote"], 10),
-        (docs, ["vector", "small"], 12),
+        (10, None),
+        (11, "  \t "),
+        (12, "Delta\tALPHA"),                     # case + tab separator
     ]
-    for df, terms, win in cases:
-        a = sorted(map(tuple, window_cooccur(df, terms, window=win,
-                                             impl="sql").collect()))
-        b = sorted(map(tuple, window_cooccur(df, terms, window=win,
-                                             impl="column").collect()))
-        assert a == b, (terms, win, a, b)
-    assert window_cooccur(edge, ["alpha", "delta"], window=10,
-                          impl="sql").schema == window_cooccur(
-        edge, ["alpha", "delta"], window=10, impl="column").schema
+    edge = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = load_fixture(spark, SF_DIR, "documents")
+    doc_rows = [(r.doc_id, r.text)
+                for r in docs.select("doc_id", "text").collect()]
+    cases = [
+        (edge, rows, ["alpha", "delta"], 4),
+        (edge, rows, ["alpha", "delta"], 10),
+        (edge, rows, ["alpha", "beta", "delta"], 6),
+        (edge, rows, ["'", "alpha"], 10),
+        (edge, rows, ["back\\slash", "quote"], 10),
+        (docs, doc_rows, ["vector", "small"], 12),
+    ]
+    got = {}
+    for df, src, terms, win in cases:
+        got[tuple(terms), win] = {
+            r.doc_id: r.n_windows
+            for r in window_cooccur(df, terms, window=win).collect()}
+        assert got[tuple(terms), win] == _window_cooccur_replay(
+            src, terms, win), (terms, win)
+    assert got[("alpha", "delta"), 10] == {1: 1, 6: 1, 8: 1, 9: 1, 12: 1}
+    assert got[("alpha", "delta"), 4] == {1: 1, 8: 2, 9: 1, 12: 1}
+    assert got[("'", "alpha"), 10] == {9: 1}
+    assert got[("back\\slash", "quote"), 10] == {9: 1}
+    assert got[("vector", "small"), 12], "fixture query must match docs"
+    schema = window_cooccur(edge, ["alpha", "delta"], window=10).schema
+    assert [(f.name, f.dataType.simpleString()) for f in schema.fields] == [
+        ("doc_id", "bigint"), ("n_windows", "bigint")]
 
 
 def test_collocations_lift_replay(spark):

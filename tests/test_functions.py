@@ -21,9 +21,21 @@ from drill_spark import functions as dfn
 
 @pytest.fixture(scope="module", autouse=True)
 def _registered(spark):
-    registered = dfn.register_all(spark, strict=True)
+    registered = dfn.register_all(spark)
     assert set(registered) >= set(dfn._SQL_UDFS)  # + pandas-UDF geometry surface
     return registered
+
+
+def test_register_all_raises_on_any_failure(spark, monkeypatch):
+    """A compat function that cannot register is an error, not a skip:
+    the RuntimeError names every failed function."""
+    bad = {"drill_bad_one": ("x INT", "no_such_fn(x)"),
+           "drill_bad_two": ("x INT", "x +")}
+    monkeypatch.setattr(dfn, "_SQL_UDFS", {**dfn._SQL_UDFS, **bad})
+    with pytest.raises(RuntimeError, match="2 compat function") as err:
+        dfn.register_all(spark)
+    assert "drill_bad_one" in str(err.value)
+    assert "drill_bad_two" in str(err.value)
 
 
 def one(spark, expr: str):

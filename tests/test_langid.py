@@ -1,9 +1,10 @@
 """N-gram-profile language identification (ops/langid.py).
 
-The Catalyst expression is pinned against the pure-Python replay
-(`classify_lang_py`) row-by-row — the two share only the profile
-tables, so agreement checks the gram extraction, run-length counting,
-top-K ordering, and out-of-place distance independently.
+The Arrow-UDF kernel is pinned against the pure-Python replay
+(`classify_lang_py`, with distances recomputed here) row-by-row — the
+two share only the profile tables, so agreement checks the gram
+extraction, counting, top-K ordering, and out-of-place distance
+independently.
 """
 
 from __future__ import annotations
@@ -162,24 +163,38 @@ def test_seed_texts_self_classify(lang):
     assert classify_lang_py(SEED_TEXTS[lang]) == lang
 
 
-def test_arrow_engine_matches_catalyst_engine(spark):
-    """r13: the default engine moved to an Arrow-batched kernel (the
-    interpreted-HOF expression measured ~23x more CPU per document);
-    the two engines must stay bit-identical on predictions AND
-    distances, including every edge case."""
-    texts = [t for t, _ in SAMPLES] + EDGE_TEXTS + [None]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    arrow = {
-        r["doc_id"]: (r["pred_lang"], r["lang_distance"])
-        for r in classify_lang(df, keep_distance=True,
-                               engine="arrow").collect()
-    }
-    catalyst = {
-        r["doc_id"]: (r["pred_lang"], r["lang_distance"])
-        for r in classify_lang(df, keep_distance=True,
-                               engine="catalyst").collect()
-    }
-    assert arrow == catalyst
-    assert arrow[len(texts) - 1] == ("und", None)  # NULL text
+def _replay_with_distance(text):
+    """(lang, winning out-of-place distance) from the pure-Python
+    profile code; ('und', None) when the text has no letter grams."""
+    from drill_spark.ops.langid import _doc_profile
+
+    doc = _doc_profile(text) if text is not None else []
+    if not doc:
+        return "und", None
+    profiles = lang_profiles()
+    dist, lang = min(
+        (sum(abs((profiles[lg].index(g) if g in profiles[lg] else TOP_K)
+                 - i) for i, g in enumerate(doc)), lg)
+        for lg in LANGS)
+    assert classify_lang_py(text) == lang
+    return lang, dist
+
+
+def test_predictions_and_distances_match_replay(spark):
+    """Predictions AND distances equal the Python replay on the
+    samples, every edge case, NULL text and the fixture documents;
+    the output columns keep their types."""
+    from .conftest import SF_DIR
+
+    fixture = [r["text"] for r in spark.read.parquet(
+        f"{SF_DIR}/documents.parquet").select("text").collect()]
+    texts = [t for t, _ in SAMPLES] + EDGE_TEXTS + [None] + fixture
+    got = _classified(spark, texts)
+    assert got == {i: _replay_with_distance(t) for i, t in enumerate(texts)}
+    assert got[len(SAMPLES) + len(EDGE_TEXTS)] == ("und", None)  # NULL
+
+    df = spark.createDataFrame([(0, "x")], "doc_id int, text string")
+    assert [(f.name, f.dataType.simpleString()) for f in classify_lang(
+        df, keep_distance=True).schema.fields] == [
+        ("doc_id", "int"), ("text", "string"), ("pred_lang", "string"),
+        ("lang_distance", "bigint")]

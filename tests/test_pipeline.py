@@ -940,15 +940,89 @@ def test_sketch_merges_equal_sketch_of_union(spark):
         sorted(map(tuple, ku.collect()))
 
 
+_WS = r"[ \t\n\x0b\f\r]+"  # Java's \s (ASCII whitespace)
+
+
+def _round4(x):
+    """Spark's round(double, 4): HALF_UP on the double's shortest repr
+    (Python's round() is half-to-even)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+_GOPHER_LIMITS = {
+    "dup_line_frac": 0.30, "dup_para_frac": 0.30,
+    "dup_line_char_frac": 0.20, "dup_para_char_frac": 0.20,
+    "top_2gram_char_frac": 0.20, "top_3gram_char_frac": 0.18,
+    "top_4gram_char_frac": 0.16,
+    "dup_5gram_char_frac": 0.15, "dup_6gram_char_frac": 0.14,
+    "dup_7gram_char_frac": 0.13, "dup_8gram_char_frac": 0.12,
+    "dup_9gram_char_frac": 0.11, "dup_10gram_char_frac": 0.10,
+}
+
+
+def _gopher_replay(text):
+    """Exhaustive Python replay of one gopher_repetition row; None for
+    a document with no tokens (excluded from the table)."""
+    import collections
+    import re
+
+    if text is None:
+        return None
+    low = text.lower()
+    tk = [t for t in re.split(_WS, low) if t]
+    if not tk:
+        return None
+    total = sum(len(t) for t in tk)
+    exp = {}
+    for n in range(2, 11):
+        grams = [" ".join(tk[j:j + n]) for j in range(len(tk) - n + 1)]
+        cnt = collections.Counter(grams)
+        if n <= 4:
+            ch = 0
+            if grams:
+                g, c = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+                ch = c * (len(g) - (n - 1))
+            exp[f"top_{n}gram_char_frac"] = _round4(ch / total)
+        else:
+            covered = set()
+            for j, g in enumerate(grams):
+                if cnt[g] >= 2:
+                    covered.update(range(j, j + n))
+            exp[f"dup_{n}gram_char_frac"] = _round4(
+                sum(len(tk[q]) for q in covered) / total)
+    for sep, occ, chrn in (
+            ("\n", "dup_line_frac", "dup_line_char_frac"),
+            ("\n\n", "dup_para_frac", "dup_para_char_frac")):
+        segs = [re.sub(f"^{_WS}|{_WS}$", "", x) for x in low.split(sep)]
+        segs = [x for x in segs if x]
+        c = collections.Counter(segs)
+        dupsegs = [x for x in segs if c[x] >= 2]
+        exp[occ] = _round4(len(dupsegs) / len(segs)) if segs else 0.0
+        tc = sum(len(x) for x in segs)
+        exp[chrn] = (_round4(sum(len(x) for x in dupsegs) / tc)
+                     if tc else 0.0)
+    exp["flagged"] = any(exp[k] > t for k, t in _GOPHER_LIMITS.items())
+    return exp
+
+
+def _assert_gopher_matches_replay(df, rows):
+    from drill_spark.ops.pipeline import gopher_repetition
+
+    got = {r.doc_id: r.asDict() for r in gopher_repetition(df).collect()}
+    want = {i: _gopher_replay(t) for i, t in rows}
+    assert set(got) == {i for i, e in want.items() if e is not None}
+    for i, row in got.items():
+        for k, v in want[i].items():
+            assert row[k] == v, (i, k, row[k], v)
+    return got
+
+
 def test_gopher_repetition_full_table(spark):
     """Full Gopher Table A1 signals equal an exhaustive Python replay
     on planted fixtures: heavy n-gram repetition, duplicate lines,
     duplicate paragraphs, and a clean doc."""
-    import collections
-    import re
-
-    from drill_spark.ops.pipeline import gopher_repetition
-
     rows = [
         (0, "the cat sat the cat sat the cat sat"),
         (1, "completely unique words in this one longer sentence here"),
@@ -957,44 +1031,7 @@ def test_gopher_repetition_full_table(spark):
         (4, "w1 w2 w3 w4 w5 w6 filler w1 w2 w3 w4 w5 w6"),  # dup 6-gram
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.asDict() for r in gopher_repetition(df).collect()}
-
-    def toks(s):
-        return [t for t in s.lower().strip().split() if t]
-
-    for i, text in rows:
-        tk = toks(text)
-        total = sum(len(t) for t in tk)
-        exp = {}
-        for n in range(2, 11):
-            grams = [" ".join(tk[j:j + n]) for j in range(len(tk) - n + 1)]
-            cnt = collections.Counter(grams)
-            if n <= 4:
-                ch = 0
-                if grams:
-                    g, c = sorted(cnt.items(),
-                                  key=lambda kv: (-kv[1], kv[0]))[0]
-                    ch = c * (len(g) - (n - 1))
-                exp[f"top_{n}gram_char_frac"] = round(ch / total, 4)
-            else:
-                covered = set()
-                for j, g in enumerate(grams):
-                    if cnt[g] >= 2:
-                        covered.update(range(j + 1, j + n + 1))
-                exp[f"dup_{n}gram_char_frac"] = round(
-                    sum(len(tk[q - 1]) for q in covered) / total, 4)
-        for sep, occ, chrn in (
-                ("\n", "dup_line_frac", "dup_line_char_frac"),
-                ("\n\n", "dup_para_frac", "dup_para_char_frac")):
-            segs = [x.strip() for x in re.split(sep, text.lower())
-                    if x.strip()]
-            c = collections.Counter(segs)
-            dupsegs = [s for s in segs if c[s] >= 2]
-            exp[occ] = round(len(dupsegs) / len(segs), 4)
-            tc = sum(len(s) for s in segs)
-            exp[chrn] = round(sum(len(s) for s in dupsegs) / tc, 4)
-        for k, v in exp.items():
-            assert abs(got[i][k] - v) < 1e-9, (i, k, got[i][k], v)
+    got = _assert_gopher_matches_replay(df, rows)
 
     assert got[0]["flagged"] is True          # "the cat sat" x3
     assert got[2]["dup_line_frac"] > 0.3      # 2 of 3 lines duplicated
@@ -1002,36 +1039,60 @@ def test_gopher_repetition_full_table(spark):
     assert got[4]["dup_6gram_char_frac"] > 0.5
 
 
-def test_gopher_repetition_sql_impl_matches_column(spark):
-    """The r14 SQL-text builder is bit-equal to the Column-API form —
-    planted fixtures, the sampled documents fixture, and edge docs
-    (empty text, whitespace-only, single word, interior-whitespace
-    paragraph residue, repeated everything)."""
+def test_gopher_repetition_edge_docs_and_fixture_match_replay(spark):
+    """Edge docs (empty, NULL, whitespace-only, single word,
+    interior-whitespace paragraph residue, repeated everything, a
+    shorter-than-10-token doc) and the sampled documents fixture
+    against the Python replay; hand-computed values pin the replay
+    itself, and the output schema is fixed."""
     from drill_spark.ops.pipeline import gopher_repetition
     from drill_spark.session import load_fixture
 
+    from .conftest import SF_DIR
+
     rows = [
         (0, "the cat sat the cat sat the cat sat"),
-        (1, "completely unique words in this one longer sentence here"),
-        (2, "line one\nline one\nline two"),
-        (3, "para a\n\npara a\n\npara b"),
-        (4, "w1 w2 w3 w4 w5 w6 filler w1 w2 w3 w4 w5 w6"),
         (5, ""),                      # zero tokens: excluded entirely
-        (6, "   \n  \n   "),          # whitespace-only
+        (6, "   \n  \n   "),          # whitespace-only: excluded
         (7, "word"),                  # single token
         (8, "a b\n \t\nx  y\n\na b"),   # residue whitespace at edges
         (9, "dup dup\n\ndup dup\n\ndup dup"),
+        (10, None),                   # NULL text: excluded
+        (11, "\tlead tab"),
+        (12, "one two three four five six seven eight nine ten "
+             "| one two three four five six seven eight nine ten"),
     ]
     edge = spark.createDataFrame(rows, "doc_id long, text string")
-    docs = load_fixture(spark, "/root/testdata/sf0.001", "documents")
-    for df in (edge, docs):
-        a = sorted(map(tuple, gopher_repetition(df, impl="sql").collect()))
-        b = sorted(map(tuple, gopher_repetition(df, impl="column").collect()))
-        assert a == b
-        assert len(a) > 0
-    sql_df = gopher_repetition(edge, impl="sql")
-    col_df = gopher_repetition(edge, impl="column")
-    assert sql_df.schema == col_df.schema
+    got = _assert_gopher_matches_replay(edge, rows)
+    assert set(got) == {0, 7, 8, 9, 11, 12}
+    # hand-computed: "word" has no n-grams and one unique line
+    assert {k: v for k, v in got[7].items() if k != "doc_id"} == {
+        **{k: 0.0 for k in _GOPHER_LIMITS}, "flagged": False}
+    # doc 9: 3 equal paragraphs, 6 "dup" tokens (18 chars); the top
+    # 2-gram "dup dup" occurs 5 times x 6 token chars = 30 of 18
+    assert got[9]["dup_para_frac"] == 1.0
+    assert got[9]["dup_line_char_frac"] == 1.0
+    assert got[9]["top_2gram_char_frac"] == round(5 * 6 / 18, 4)
+    # doc 8: lines "a b" x2, "x  y", paragraphs "a b\n \t\nx  y", "a b"
+    assert got[8]["dup_line_frac"] == 0.6667
+    assert got[8]["dup_para_frac"] == 0.0
+    # doc 12: a repeated 10-gram covers 78 of 79 token chars
+    assert got[12]["dup_10gram_char_frac"] == 0.9873
+
+    docs = load_fixture(spark, SF_DIR, "documents")
+    fixture = [(r.doc_id, r.text) for r in docs.select("doc_id", "text")
+               .collect()]
+    assert len(_assert_gopher_matches_replay(docs, fixture)) > 0
+
+    assert [(f.name, f.dataType.simpleString())
+            for f in gopher_repetition(edge).schema.fields] == [
+        ("doc_id", "bigint"),
+        ("dup_line_frac", "double"), ("dup_line_char_frac", "double"),
+        ("dup_para_frac", "double"), ("dup_para_char_frac", "double"),
+        ("top_2gram_char_frac", "double"), ("top_3gram_char_frac", "double"),
+        ("top_4gram_char_frac", "double"),
+        *[(f"dup_{n}gram_char_frac", "double") for n in range(5, 11)],
+        ("flagged", "boolean")]
 
 
 def test_gopher_repetition_many_line_doc(spark):

@@ -273,3 +273,26 @@ def test_no_rdd_api_in_package():
             if re.search(r"sparkContext\.parallelize", code) and not in_readers:
                 offenders.append(f"{os.path.basename(path)}:{i}")
     assert offenders == [], offenders
+
+
+def test_ops_have_one_implementation_per_operator():
+    """Each operator has one implementation: no public function in a
+    drill_spark.ops module takes an ``impl`` or ``engine`` selector (a
+    second implementation stays only where it wins a measured workload,
+    and then it is the only one)."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import drill_spark.ops as ops
+
+    offenders = []
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"drill_spark.ops.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            bad = {"impl", "engine"} & set(inspect.signature(fn).parameters)
+            if bad:
+                offenders.append(f"{mod.__name__}.{name}: {sorted(bad)}")
+    assert offenders == [], offenders

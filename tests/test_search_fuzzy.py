@@ -572,12 +572,51 @@ def test_maxsim_prefers_docs_containing_query_tokens(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_maxsim_arrow_engine_matches_catalyst(spark):
-    """r13: maxsim scoring moved to an Arrow-batched kernel by default
-    (the interpreted HOF chain re-hashed every token occurrence); the
-    two engines must produce bit-equal scores and identical ranking,
-    including edge docs (empty, whitespace, longer than max_tokens)."""
+def _maxsim_replay(rows, q, k=10, dim=4, max_tokens=32):
+    """Top-k (id, score, rank) by an md5 replay of the ColBERT score:
+    token vector = md5 16-bit slices /65536 - 0.5, L2-normalized;
+    score = sum over query tokens of the max dot over the first
+    max_tokens doc tokens, rounded HALF_UP to 6 dp."""
+    import hashlib
+    import math
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def vec(w):
+        h = hashlib.md5(w.encode()).hexdigest()
+        raw = [int(h[4 * j:4 * j + 4], 16) / 65536.0 - 0.5
+               for j in range(dim)]
+        n = math.sqrt(sum(x * x for x in raw))
+        return [x / n for x in raw]
+
+    scored = []
+    for i, text in rows:
+        toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+",
+                                    (text or "").lower().strip(" ")) if t]
+        if not toks:
+            continue
+        s = sum(max(sum(a * b for a, b in zip(vec(t), vec(w)))
+                    for w in toks[:max_tokens]) for t in q)
+        scored.append((i, float(Decimal(s).quantize(
+            Decimal("0.000001"), ROUND_HALF_UP))))
+    top = sorted(scored, key=lambda r: (-r[1], r[0]))[:k]
+    return [(i, sc, rk) for rk, (i, sc) in enumerate(top, 1)]
+
+
+def _assert_maxsim_matches_replay(got, want):
+    assert [(i, rk) for i, _, rk in got] == [(i, rk) for i, _, rk in want]
+    for (i, a, _), (_, b, _) in zip(got, want):
+        assert abs(a - b) < 1e-9, (i, a, b)
+
+
+def test_maxsim_edge_docs_and_fixture_match_replay(spark):
+    """Scores and ranking equal an md5 replay on edge docs (empty,
+    whitespace, NULL, single token, longer than max_tokens) and on the
+    fixture documents; the output schema is fixed."""
     from drill_spark.ops.search import maxsim_topk
+    from drill_spark.session import load_fixture
+
+    from .conftest import SF_DIR
 
     rows = [
         (1, "neural retrieval with late interaction"),
@@ -587,18 +626,32 @@ def test_maxsim_arrow_engine_matches_catalyst(spark):
         (5, "   "),
         (6, " ".join(f"w{i}" for i in range(50)) + " neural"),
         (7, None),
+        (8, "Interaction"),
+        (9, " ".join(f"v{i}" for i in range(31)) + " retrieval"),  # 32nd
+        (10, " ".join(f"v{i}" for i in range(32)) + " retrieval"),  # 33rd
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     q = ["neural", "retrieval", "interaction"]
-    arrow = [tuple(r) for r in maxsim_topk(df, q, k=10).collect()]
-    cat = [tuple(r) for r in
-           maxsim_topk(df, q, k=10, engine="catalyst").collect()]
-    assert arrow == cat
+    got = [tuple(r) for r in maxsim_topk(df, q, k=10).collect()]
+    _assert_maxsim_matches_replay(got, _maxsim_replay(rows, q))
+    assert {t[0] for t in got} == {1, 2, 3, 6, 8, 9, 10}
+    # doc 1 holds every query token: each max dot is 1, score 3.0
+    assert got[0][:2] == (1, 3.0)
     # doc 6 is longer than max_tokens=32: "neural" sits past the cap,
     # so it must NOT get an exact-match (=1.0) contribution for that
     # term — an all-exact triple scores 3.0, truncated must be below
-    by_id = {t[0]: t[1] for t in arrow}
+    by_id = {t[0]: t[1] for t in got}
     assert by_id[6] < 2.9999
+
+    docs = load_fixture(spark, SF_DIR, "documents")
+    fq = ["query", "join", "fast"]
+    _assert_maxsim_matches_replay(
+        [tuple(r) for r in maxsim_topk(docs, fq, k=10).collect()],
+        _maxsim_replay([(r.doc_id, r.text) for r in docs.collect()], fq))
+
+    assert [(f.name, f.dataType.simpleString())
+            for f in maxsim_topk(df, q).schema.fields] == [
+        ("doc_id", "bigint"), ("score", "double"), ("rank", "int")]
 
 
 def test_funnel_order_and_window_semantics(spark):

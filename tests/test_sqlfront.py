@@ -391,7 +391,7 @@ def test_show_files_detail_and_describe_schema(dsession):
     assert f["modificationTime"] is not None and f["permissions"]
     d = dsession.sql("DESCRIBE SCHEMA dfs.data").head()
     assert d["schema_name"] == "dfs.data" and d["writable"] is True
-    assert d["default_format"] == "json"
+    assert d["default_format"] == "json" and d["type"] == "file"
     with pytest.raises(ValueError):
         dsession.sql("DESCRIBE SCHEMA nope.nothere")
 
