@@ -910,6 +910,12 @@ def _register_geometry_udfs(spark: SparkSession) -> list[str]:
         "st_astext_geom": ("string", wkt_in(geo.to_wkt)),
         "st_asjson": ("string", wkt_in(geo.as_json)),
         "st_asgeojson": ("string", wkt_in(geo.as_geojson)),
+        # These two replace Spark 4.1.2's built-ins of the same name
+        # (the "replaced a previously registered function" warnings):
+        # the built-ins take and return the GEOMETRY/GEOGRAPHY type,
+        # which is behind a disabled feature flag
+        # (UNSUPPORTED_FEATURE.GEOSPATIAL_DISABLED), while Drill's
+        # functions and every other st_* here speak WKT strings.
         "st_asbinary": ("binary", wkt_in(geo.to_wkb)),
         "st_geomfromwkb": ("string", _wkb_decode_udf(pd, geo)),
         "st_intersects": ("boolean", pair(geo.intersects)),

@@ -472,12 +472,12 @@ def incremental_dedup(
       regime) the Bloom sketch prefilters map-side and at fpp=1e-3
       only ~0.1% of genuinely-new digests (plus true dupes) reach the
       exact anti join against the store scan.
-    - replay safety: the store commit carries a Delta ``txn`` action
-      (appId drill_spark.incremental_dedup, version=batch_id); re-running
-      an already-committed batch_id returns its survivors WITHOUT
+    - replay safety: the store commit carries a per-batch Delta
+      ``txn`` action (``readers/delta.BatchLedger``); re-running an
+      already-committed batch_id returns its survivors WITHOUT
       appending again (exactly-once store growth, PROTOCOL.md
-      "Transaction Identifiers" — same mechanism as the streaming
-      sinks in streaming/events.py).
+      "Transaction Identifiers"), and an id at or below the newest
+      batch that was never committed raises.
 
     ``batch_id`` defaults to (last committed txn version + 1). The
     store rows are (h, batch_id) — recording which batch INTRODUCED a
@@ -485,11 +485,8 @@ def incremental_dedup(
     (a semi join on store.batch_id == this batch) instead of an empty
     set after its digests already landed.
     """
-    import os
+    from drill_spark.readers.delta import BatchLedger
 
-    from drill_spark.readers.delta import load_snapshot, read_delta, write_delta
-
-    spark = df.sparkSession
     digested = df.withColumn(
         "__h", F.md5(normalize_text(F.col(text_col)))
     )
@@ -499,27 +496,20 @@ def incremental_dedup(
             Window.partitionBy("__h").orderBy(F.col(id_col))),
     ).where(F.col("__rn") == 1).drop("__rn")
 
-    exists = os.path.isdir(os.path.join(store_path, "_delta_log"))
-    last_txn = -1
-    store = None
-    if exists:
-        snap = load_snapshot(spark, store_path)
-        last_txn = snap.txns.get(txn_app_id, -1)
-        store = read_delta(spark, store_path)
-    if batch_id is None:
-        batch_id = last_txn + 1
-
-    if exists and batch_id <= last_txn:
+    ledger = BatchLedger(df.sparkSession, store_path, txn_app_id, batch_id,
+                         "incremental_dedup")
+    store, batch_id = ledger.store, ledger.batch_id
+    if ledger.replay:
         # replayed batch: its digests are already committed; the rows
         # the original run returned are exactly those whose digest this
         # batch introduced
-        mine = store.where(F.col("batch_id") == int(batch_id)).select("h")
+        mine = store.where(F.col("batch_id") == batch_id).select("h")
         return (
             within.join(mine, within["__h"] == mine["h"], "left_semi")
             .drop("__h")
         )
 
-    if exists:
+    if store is not None:
         from drill_spark.ops.bloom import bloom_anti_join
 
         # store digests are unique by construction, so the filter sizes
@@ -536,14 +526,8 @@ def incremental_dedup(
     # returned DataFrame don't each recompute the anti join
     survivors = survivors.localCheckpoint(eager=False)
 
-    new_digests = survivors.select(
-        F.col("__h").alias("h"), F.lit(int(batch_id)).alias("batch_id"))
-    write_delta(
-        new_digests,
-        store_path,
-        mode="append" if exists else "error",
-        txn=(txn_app_id, int(batch_id)),
-    )
+    ledger.commit(survivors.select(
+        F.col("__h").alias("h"), F.lit(batch_id).alias("batch_id")))
     return survivors.drop("__h")
 
 
@@ -588,17 +572,14 @@ def incremental_near_dedup(
       can't explode the verify; compact/OPTIMIZE the store when
       buckets age past usefulness). Verify = one zip_with equality
       count in codegen.
-    - replay: the store commit carries a Delta txn (appId
-      ``drill_spark.incremental_near_dedup``); re-running a committed
-      batch_id returns its original survivors without re-appending.
+    - replay: the store commit carries a per-batch Delta txn
+      (``readers/delta.BatchLedger``); re-running a committed batch_id
+      returns its original survivors without re-appending.
 
     Returns the surviving rows of ``df`` (original columns).
     """
-    import os
+    from drill_spark.readers.delta import BatchLedger
 
-    from drill_spark.readers.delta import load_snapshot, read_delta, write_delta
-
-    spark = df.sparkSession
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
     banded = sig.select(
@@ -636,23 +617,16 @@ def incremental_near_dedup(
         F.col("id_b").alias(id_col)).distinct()
     batch_kept = df.join(dropped_within, id_col, "left_anti")
 
-    exists = os.path.isdir(os.path.join(store_path, "_delta_log"))
-    last_txn = -1
-    store = None
-    if exists:
-        snap = load_snapshot(spark, store_path)
-        last_txn = snap.txns.get(txn_app_id, -1)
-        store = read_delta(spark, store_path)
-    if batch_id is None:
-        batch_id = last_txn + 1
-
-    if exists and batch_id <= last_txn:
+    ledger = BatchLedger(df.sparkSession, store_path, txn_app_id, batch_id,
+                         "incremental_near_dedup")
+    store, batch_id = ledger.store, ledger.batch_id
+    if ledger.replay:
         mine = store.where(
-            F.col("batch_id") == int(batch_id)).select(id_col).distinct()
+            F.col("batch_id") == batch_id).select(id_col).distinct()
         return df.join(mine, id_col, "left_semi")
 
     survivors = batch_kept
-    if exists:
+    if store is not None:
         cand = (
             banded.join(batch_kept.select(id_col), id_col, "left_semi")
             .select(F.col(id_col), F.col("sig").alias("sig_new"),
@@ -681,15 +655,10 @@ def incremental_near_dedup(
         .select(
             "band_idx", "band_hash", F.col(id_col),
             F.concat_ws(",", F.col("sig")).alias("sig"),
-            F.lit(int(batch_id)).alias("batch_id"),
+            F.lit(batch_id).alias("batch_id"),
         )
     )
-    write_delta(
-        new_rows,
-        store_path,
-        mode="append" if exists else "error",
-        txn=(txn_app_id, int(batch_id)),
-    )
+    ledger.commit(new_rows)
     return survivors
 
 

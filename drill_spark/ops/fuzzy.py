@@ -389,12 +389,11 @@ def incremental_setsim(
 
     Returns the surviving rows of ``df`` (original columns).
     """
-    import os
     import warnings
 
     from pyspark.sql import Window
 
-    from drill_spark.readers.delta import load_snapshot, read_delta, write_delta
+    from drill_spark.readers.delta import BatchLedger, read_delta
 
     spark = df.sparkSession
     t = F.lit(float(threshold))
@@ -414,44 +413,16 @@ def incremental_setsim(
     dropped = within_pairs.select(F.col("id_b").alias("id")).distinct()
     batch_kept = sets.select("id").join(dropped, "id", "left_anti")
 
-    exists = os.path.isdir(os.path.join(store_path, "_delta_log"))
-    last_txn = -1
-    committed: set[int] = set()
-    legacy_last = -1
-    store = None
-    if exists:
-        snap = load_snapshot(spark, store_path)
-        prefix = f"{txn_app_id}#batch"
-        committed = {int(k[len(prefix):]) for k in snap.txns
-                     if k.startswith(prefix)}
-        # stores written before per-batch txn stamping carry only the
-        # single latest-version key
-        legacy_last = snap.txns.get(txn_app_id, -1)
-        last_txn = max(max(committed, default=-1), legacy_last)
-        store = read_delta(spark, store_path)
-    if batch_id is None:
-        batch_id = last_txn + 1
-
-    # a batch at or below the legacy single-txn high-water mark is a
-    # replay even in a MIXED store (legacy key + per-batch keys): such
-    # batches were committed before per-batch stamping existed, so the
-    # absence of their per-batch key is expected, not a numbering gap
-    is_replay = batch_id in committed or (
-        exists and batch_id <= legacy_last)
-    if is_replay:
-        mine = (store.where(F.col("batch_id") == int(batch_id))
+    ledger = BatchLedger(spark, store_path, txn_app_id, batch_id,
+                         "incremental_setsim")
+    store, batch_id = ledger.store, ledger.batch_id
+    if ledger.replay:
+        mine = (store.where(F.col("batch_id") == batch_id)
                 .select(F.col("doc_id").alias(id_col)).distinct())
         return df.join(mine, id_col, "left_semi")
-    if exists and batch_id <= last_txn:
-        raise ValueError(
-            f"incremental_setsim: batch_id {batch_id} is at or below the "
-            f"store's high-water mark ({last_txn}) but was never "
-            f"committed — a skipped-ahead numbering would silently drop "
-            f"this batch as a phantom replay; batch ids must be assigned "
-            f"monotonically (pass batch_id=None to auto-assign)")
 
     survivors = batch_kept
-    if exists:
+    if store is not None:
         olds = store.select("tok", F.col("doc_id").alias("did"),
                             F.col("sz").alias("nd"))
         if max_postings_per_token is not None:
@@ -544,13 +515,11 @@ def incremental_setsim(
     new_rows = (
         sets.join(survivors, "id", "left_semi")
         .select(F.explode("ts").alias("tok"), F.col("id").alias("doc_id"),
-                F.col("sz"), F.lit(int(batch_id)).alias("batch_id"))
+                F.col("sz"), F.lit(batch_id).alias("batch_id"))
     )
-    write_delta(new_rows, store_path,
-                mode="append" if exists else "error",
-                txn=(f"{txn_app_id}#batch{int(batch_id)}", int(batch_id)))
+    ledger.commit(new_rows)
     mine = (read_delta(spark, store_path)
-            .where(F.col("batch_id") == int(batch_id))
+            .where(F.col("batch_id") == batch_id)
             .select(F.col("doc_id").alias(id_col)).distinct())
     return df.join(mine, id_col, "left_semi")
 

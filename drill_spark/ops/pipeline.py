@@ -912,12 +912,9 @@ def incremental_curation_audit(
     each digest, so the ledger can say which ingest run displaced the
     document).
     """
-    import os
-
     from drill_spark.ops.dedup import normalize_text
-    from drill_spark.readers.delta import load_snapshot, read_delta, write_delta
+    from drill_spark.readers.delta import BatchLedger
 
-    spark = df.sparkSession
     words = _words(text_col)
     n_words = F.size(words)
     quality = (
@@ -936,26 +933,9 @@ def incremental_curation_audit(
         F.md5(normalize_text(F.col(text_col))).alias("__h"),
     )
 
-    exists = os.path.isdir(os.path.join(store_path, "_delta_log"))
-    committed: set[int] = set()
-    last_txn = -1
-    store = None
-    if exists:
-        snap = load_snapshot(spark, store_path)
-        prefix = f"{txn_app_id}#batch"
-        committed = {int(k[len(prefix):]) for k in snap.txns
-                     if k.startswith(prefix)}
-        last_txn = max(committed, default=-1)
-        store = read_delta(spark, store_path)
-    if batch_id is None:
-        batch_id = last_txn + 1
-    is_replay = batch_id in committed
-    if exists and not is_replay and batch_id <= last_txn:
-        raise ValueError(
-            f"incremental_curation_audit: batch_id {batch_id} is at or "
-            f"below the store's high-water mark ({last_txn}) but was "
-            f"never committed — batch ids must be assigned monotonically "
-            f"(pass batch_id=None to auto-assign)")
+    ledger = BatchLedger(df.sparkSession, store_path, txn_app_id, batch_id,
+                         "incremental_curation_audit")
+    store, batch_id = ledger.store, ledger.batch_id
 
     # within-batch canonical id as a min-window over the digest
     # partition (r13): the window's hashpartitioning(__h) exchange is
@@ -967,8 +947,8 @@ def incremental_curation_audit(
         "__canon",
         F.min(F.when(F.col("quality_pass"), F.col(id_col)))
         .over(Window.partitionBy("__h")))
-    if exists:
-        prior = (store.where(F.col("batch_id") < int(batch_id))
+    if store is not None:
+        prior = (store.where(F.col("batch_id") < batch_id)
                  .groupBy("h").agg(F.min("batch_id").alias("dup_batch"))
                  .withColumnRenamed("h", "__h"))
         led = led.join(prior, "__h", "left")
@@ -1004,18 +984,15 @@ def incremental_curation_audit(
         stage.alias("stage_dropped"),
     )
 
-    if not is_replay:
+    if not ledger.replay:
         kept_h = (led.where(
             F.col("quality_pass")
             & (F.col(id_col) == F.col("__canon"))
             & F.col("dup_batch").isNull()
             & F.col("__dirty").isNull())
             .select(F.col("__h").alias("h")).distinct()
-            .withColumn("batch_id", F.lit(int(batch_id))))
-        write_delta(kept_h, store_path,
-                    mode="append" if exists else "error",
-                    txn=(f"{txn_app_id}#batch{int(batch_id)}",
-                         int(batch_id)))
+            .withColumn("batch_id", F.lit(batch_id)))
+        ledger.commit(kept_h)
     return out
 
 

@@ -388,35 +388,14 @@ def incremental_substr_dedup(
     BEFORE this batch (the batch's own digests are excluded by
     ``batch_id < N``), and appends nothing — idempotent end to end.
     """
-    import os
-
-    from drill_spark.readers.delta import load_snapshot, read_delta, write_delta
+    from drill_spark.readers.delta import BatchLedger
 
     L = int(min_tokens)
     if L < 1:
         raise ValueError(f"incremental_substr_dedup: min_tokens >= 1, got {L}")
-    spark = df.sparkSession
-
-    exists = os.path.isdir(os.path.join(store_path, "_delta_log"))
-    committed: set[int] = set()
-    last_txn = -1
-    store = None
-    if exists:
-        snap = load_snapshot(spark, store_path)
-        prefix = f"{txn_app_id}#batch"
-        committed = {int(k[len(prefix):]) for k in snap.txns
-                     if k.startswith(prefix)}
-        last_txn = max(committed, default=-1)
-        store = read_delta(spark, store_path)
-    if batch_id is None:
-        batch_id = last_txn + 1
-    is_replay = batch_id in committed
-    if exists and not is_replay and batch_id <= last_txn:
-        raise ValueError(
-            f"incremental_substr_dedup: batch_id {batch_id} is at or below "
-            f"the store's high-water mark ({last_txn}) but was never "
-            f"committed — batch ids must be assigned monotonically "
-            f"(pass batch_id=None to auto-assign)")
+    ledger = BatchLedger(df.sparkSession, store_path, txn_app_id, batch_id,
+                         "incremental_substr_dedup")
+    store, batch_id = ledger.store, ledger.batch_id
 
     toks = _token_positions(df, id_col, text_col)
     spans = _window_spans(toks, L).withColumn("h", F.md5("span"))
@@ -425,8 +404,8 @@ def incremental_substr_dedup(
     # detect="digest" keeps span strings out of the exchanges here too
     # — the store side already keys on md5 either way)
     removed = _removed_windows(spans.drop("h"), detect=detect)
-    if exists:
-        olds = (store.where(F.col("batch_id") < int(batch_id))
+    if store is not None:
+        olds = (store.where(F.col("batch_id") < batch_id)
                 .select("h").distinct())
         hit = (spans.join(olds, "h", "left_semi")
                .select("id", "p"))
@@ -439,12 +418,9 @@ def incremental_substr_dedup(
     )
     out = _reconstruct(toks, covered, id_col)
 
-    if not is_replay:
-        new_rows = (spans.select("h").distinct()
-                    .withColumn("batch_id", F.lit(int(batch_id))))
-        write_delta(new_rows, store_path,
-                    mode="append" if exists else "error",
-                    txn=(f"{txn_app_id}#batch{int(batch_id)}", int(batch_id)))
+    if not ledger.replay:
+        ledger.commit(spans.select("h").distinct()
+                      .withColumn("batch_id", F.lit(batch_id)))
     return out
 
 

@@ -683,6 +683,50 @@ def write_delta(df: DataFrame, path: str, partition_by: list[str] | None = None,
     _maybe_checkpoint(df.sparkSession, path, version)
 
 
+class BatchLedger:
+    """Exactly-once batch bookkeeping for an incremental operator's
+    Delta store. Each commit carries the txn key ``<app_id>#batch<N>``,
+    so batch N replays only if N itself was committed; comparing N
+    with the newest batch would read a skipped id as a replay and
+    return an empty result. A store written before per-batch keys has
+    only the ``app_id`` key: every id at or below its version replays.
+    An id at or below the high-water mark that was never committed
+    raises.
+
+    ``store`` is the store's rows (None before the first commit),
+    ``batch_id`` the resolved id (default: high-water mark + 1) and
+    ``replay`` whether that batch is already committed."""
+
+    def __init__(self, spark: SparkSession, path: str, app_id: str,
+                 batch_id: int | None, op: str):
+        self.path, self.store = path, None
+        committed: set[int] = set()
+        legacy = -1
+        if os.path.isdir(os.path.join(path, "_delta_log")):
+            txns = load_snapshot(spark, path).txns
+            prefix = f"{app_id}#batch"
+            committed = {int(k[len(prefix):]) for k in txns
+                         if k.startswith(prefix)}
+            legacy = txns.get(app_id, -1)
+            self.store = read_delta(spark, path)
+        last = max(max(committed, default=-1), legacy)
+        self.batch_id = last + 1 if batch_id is None else int(batch_id)
+        self.replay = self.batch_id in committed or 0 <= self.batch_id <= legacy
+        if not self.replay and self.batch_id <= last:
+            raise ValueError(
+                f"{op}: batch_id {self.batch_id} is at or below the store's "
+                f"high-water mark ({last}) but was never committed; batch "
+                f"ids must be assigned monotonically (pass batch_id=None "
+                f"to auto-assign)")
+        self._txn = (f"{app_id}#batch{self.batch_id}", self.batch_id)
+
+    def commit(self, rows: DataFrame) -> None:
+        """Append this batch's store rows under its txn key."""
+        write_delta(rows, self.path,
+                    mode="error" if self.store is None else "append",
+                    txn=self._txn)
+
+
 def _commit_timestamps(path: str) -> list[tuple[int, int]]:
     """(version, commit timestamp ms) per commit — from the commitInfo
     action, falling back to the file mtime."""

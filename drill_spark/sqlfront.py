@@ -15,6 +15,8 @@ Rewrites performed:
   Spark's reader inference).
 - ``table(<ws>.`p`(<k> => '<v>', ...))`` table functions → reader options
   (TestSelectWithOption.java semantics).
+- ``table(pipeline.`<name>`(<k> => '<v>', ...))`` → an ops/ operator,
+  its options bound through the ``PIPELINE`` table.
 - ``ALTER SESSION|SYSTEM SET `opt` = val`` → DrillSession.set_option.
 - ``SHOW FILES [IN <ws>]`` / ``SHOW FILES FROM <path>`` → a DataFrame of
   the directory listing (store/ischema analog).
@@ -45,6 +47,9 @@ from __future__ import annotations
 
 import os
 import re
+from dataclasses import dataclass
+from importlib import import_module
+from typing import Callable
 
 from pyspark.sql import DataFrame, Row
 
@@ -367,22 +372,6 @@ def _parse_incr_mv(select: str):
     }
 
 
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
-
 _SUFFIX_FORMAT = {
     ".parquet": "parquet",
     ".json": "json",
@@ -477,515 +466,347 @@ def _resolve_input(session, ref: str) -> DataFrame:
     return session.spark.table(ref)
 
 
-def _pipeline_table(session, op: str, opts: dict[str, str]) -> DataFrame:
-    """SQL face for the training-data-pipeline operators:
-    ``TABLE(pipeline.`<op>`(input => 'documents', ...))`` runs the
-    corresponding ops/ builder and substitutes its result, the same
-    rewrite-time mechanism format table functions use. Every option
-    arrives as a string (Drill table-fn convention); numerics are cast
-    here. Inputs name a registered view, a `ws.path`, or a plain path.
-    """
+# -- pipeline table functions ----------------------------------------------
+#
+# ``TABLE(pipeline.`<name>`(input => 'documents', k => '5'))`` runs an
+# ops/ builder and substitutes its result, the same rewrite-time
+# mechanism format table functions use. Like a Drill table function,
+# each name binds its named options against one declared signature: a
+# ``PIPELINE`` row. Every option arrives as a string (Drill's table-fn
+# convention) and its converter casts it; an option the caller leaves
+# out is not passed, so the operator's own default applies.
+
+_REQ = object()  # option default: the caller must set the option
+
+
+def _commas(v: str) -> list[str]:
+    return v.split(",")
+
+
+def _names(v: str) -> tuple[str, ...]:
+    return tuple(x for x in v.split(",") if x)
+
+
+def _ints(v: str) -> list[int]:
+    return [int(x) for x in v.split(",")]
+
+
+def _flag(v: str) -> bool:
+    flag = {"true": True, "1": True, "yes": True,
+            "false": False, "0": False, "no": False}.get(v.lower())
+    if flag is None:
+        raise ValueError(f"expected true or false, got {v!r}")
+    return flag
+
+
+def _expr(v: str):
     from pyspark.sql import functions as F
 
-    o = dict(opts)
+    return F.expr(v)
+
+
+def _weights(v: str) -> dict[str, float]:
+    weights = {}
+    for kv in v.split(","):
+        src_name, _, w = kv.rpartition(":")
+        if not src_name:
+            raise ValueError(f"weights entries are '<source>:<weight>', got {kv!r}")
+        weights[src_name] = float(w)
+    return weights
+
+
+@dataclass(frozen=True)
+class Op:
+    """One pipeline table function. ``fn`` is an operator named
+    ``"<module>.<function>"`` under ``drill_spark.ops`` (imported on
+    first use) or a function ``fn(session, **kwargs)`` that composes
+    operator calls. ``tables`` maps each table option to the parameter
+    that receives the resolved table; ``options`` maps every other
+    option to ``(parameter, converter, default)``, where a default of
+    None passes nothing and ``_REQ`` makes the option required."""
+
+    fn: str | Callable[..., DataFrame]
+    tables: dict[str, str]
+    options: dict[str, tuple[str, Callable, object]]
+
+
+def _op(fn, tables: dict[str, str] | None = None, **options) -> Op:
+    """A row. Each option is ``"param"`` (a string, optional) or
+    ``(param, converter[, default])``."""
+    spec = {key: (o, str, None) if isinstance(o, str) else (*o, None)[:3]
+            for key, o in options.items()}
+    return Op(fn, tables or {"input": "df"}, spec)
+
+
+# options whose operator parameter has no default
+_ID = ("id_col", str, "doc_id")
+_TEXT = ("text_col", str, "text")
+_TS = ("ts_col", str, "ts")
+_KEY = ("key_col", str, "user_id")
+_SOURCE = ("source_col", str, "source")
+_BUDGET = ("token_budget", int, "1000000")
+
+
+def _vector_topk(session, index: str, base: str | None = None, **kw) -> DataFrame:
+    from drill_spark.ops.vecindex import index_topk
+
+    return index_topk(session.spark, session.vector_indexes.get(index, index),
+                      base=_resolve_input(session, base) if base else None, **kw)
+
+
+def _robots_filter(session, urls, rules, url_col="url", rules_are_text=False,
+                   text_col="robots", domain_col="domain", agent="*") -> DataFrame:
+    from drill_spark.ops.crawlpolicy import parse_robots, robots_filter
+
+    if rules_are_text:
+        rules = parse_robots(rules, text_col, domain_col, agent=agent)
+    return robots_filter(urls, rules, url_col=url_col)
+
+
+def _crossmodal_topk(session, images, captions, id_col="doc_id",
+                     payload_col="payload", text_col="text", k=3) -> DataFrame:
+    from drill_spark.ops.crossmodal import crossmodal_topk, embed_captions, embed_images
+
+    return crossmodal_topk(
+        embed_images(images, id_col=id_col, payload_col=payload_col),
+        embed_captions(captions, id_col=id_col, text_col=text_col),
+        id_col=id_col, k=k)
+
+
+def _cms_estimate(session, df, probes, col, **size) -> DataFrame:
+    from drill_spark.ops.sketch import cms_build, cms_estimate
+
+    return cms_estimate(cms_build(df, col, **size), probes, col, **size)
+
+
+def _mixture_build(session, tokenizer: str = "", **kw) -> DataFrame:
+    from drill_spark.ops.pipeline import build_mixture
+
+    if tokenizer.lower() in ("bpe", "fixed_bpe"):
+        from drill_spark.ops.bpe import FIXED_MERGES_V1, bpe_count_column
+
+        kw["tokens"] = bpe_count_column(kw["text_col"], FIXED_MERGES_V1)
+    return build_mixture(**kw)
+
+
+PIPELINE: dict[str, Op] = {
+    # search and retrieval
+    "bm25": _op("search.bm25_topk", query=("query_terms", str.split, _REQ),
+                k=("k", int), id="id_col", text="text_col"),
+    "bm25_batch": _op("search.bm25_topk_batch", {"input": "df", "queries": "queries"},
+                      k=("k", int), id="id_col", text="text_col"),
+    "tfidf_keywords": _op("search.tfidf_keywords", top_n=("top_n", int),
+                          id="id_col", text="text_col"),
+    "hybrid_search": _op("search.hybrid_topk", {"docs": "docs", "vecs": "vecs"},
+                         query=("query_terms", str.split, _REQ),
+                         vec_id=("query_vec_id", int, _REQ),
+                         k=("k", int), pool=("pool", int)),
+    "maxsim": _op("search.maxsim_topk", query=("query_terms", str.split, _REQ),
+                  k=("k", int), id="id_col", text="text_col"),
+    "vector_topk": _op(_vector_topk, {"input": "queries"},
+                       index=("index", str, _REQ), base="base", k=("k", int),
+                       nprobe=("nprobe", int), rerank=("rerank", int)),
+    "crossmodal_topk": _op(_crossmodal_topk, {"images": "images", "captions": "captions"},
+                           id="id_col", payload="payload_col", text="text_col",
+                           k=("k", int)),
+    "crossmodal_align": _op("crossmodal.alignment_filter",
+                            {"images": "images", "captions": "captions"},
+                            id="id_col", threshold=("threshold", float)),
+    "triplet_mine": _op("similarity.triplet_mine", ids=("query_ids", _ints, "0"),
+                        id="id_col", vec="vec_col", label="label_col"),
+    # joins
+    "fuzzy_join": _op("fuzzy.fuzzy_join", {"left": "left", "right": "right"},
+                      left_id=("left_id", str, _REQ), left_col=("left_col", str, _REQ),
+                      right_id=("right_id", str, _REQ),
+                      right_col=("right_col", str, _REQ),
+                      max_dist=("max_dist", int), max_df=("max_df", int)),
+    "setsim_join": _op("fuzzy.setsim_join", id="id_col", text="text_col",
+                       threshold=("threshold", float), ngram=("ngram", int)),
+    "setsim_tables": _op("fuzzy.setsim_join_tables", {"left": "left", "right": "right"},
+                         left_id="left_id", left_text="left_text",
+                         right_id="right_id", right_text="right_text",
+                         threshold=("threshold", float), ngram=("ngram", int)),
+    "containment_join": _op("fuzzy.containment_join", {"probe": "probe", "corpus": "corpus"},
+                            probe_id="probe_id", probe_text="probe_text",
+                            id="corpus_id", text="corpus_text",
+                            threshold=("threshold", float), ngram=("ngram", int)),
+    "skew_join": _op("scale.auto_skew_join", {"hot": "hot", "small": "small"},
+                     on=("on", _commas, _REQ), how="how",
+                     threshold=("skew_threshold", float), salt=("salt", int)),
+    # dedup
+    "dedup_exact": _op("dedup.exact_dedup", id=_ID, text=_TEXT),
+    "line_dedup": _op("text.line_dedup", id="id_col", text="text_col",
+                      max_copies=("max_copies", int), min_chars=("min_chars", int)),
+    "snapshot_diff": _op("dedup.snapshot_diff", {"old": "old", "new": "new"},
+                         id=_ID, text=_TEXT),
+    "substr_dedup": _op("substr.substr_dedup", id="id_col", text="text_col",
+                        min_tokens=("min_tokens", int), score="score_col",
+                        detect="detect"),
+    "substr_spans": _op("substr.substr_duplicate_spans", id="id_col", text="text_col",
+                        min_tokens=("min_tokens", int), detect="detect"),
+    "substr_decontaminate": _op("substr.substr_decontaminate",
+                                {"corpus": "corpus", "benchmark": "benchmark"},
+                                id="id_col", text="text_col", bench_id="bench_id",
+                                bench_text="bench_text",
+                                min_tokens=("min_tokens", int)),
+    "substr_contam_report": _op("substr.substr_contamination_report",
+                                {"benchmark": "probe", "corpus": "corpus"},
+                                bench_id="probe_id", bench_text="probe_text",
+                                id="corpus_id", text="corpus_text",
+                                min_tokens=("min_tokens", int)),
+    # text quality and filters
+    "c4_clean": _op("text.c4_clean", id="id_col", text="text_col",
+                    min_words=("min_words_per_line", int),
+                    min_sentences=("min_sentences", int),
+                    badwords=("badwords", _names)),
+    "gopher_quality": _op("text.gopher_quality", id="id_col", text="text_col"),
+    "gopher_repetition": _op("pipeline.gopher_repetition", id="id_col", text="text_col"),
+    "script_profile": _op("text.script_profile", id="id_col", text="text_col"),
+    "readability": _op("text.readability", id="id_col", text="text_col"),
+    "encoding_qa": _op("text.encoding_qa", id="id_col", text="text_col"),
+    "normalize_unicode": _op("text.normalize_unicode", id="id_col", text="text_col",
+                             form="form"),
+    "html_extract": _op("text.html_extract", html="html_col"),
+    "domain_stats": _op("text.domain_stats", text="text_col", url="url_col",
+                        blocklist=("blocklist", _names)),
+    "robots_filter": _op(_robots_filter, {"input": "urls", "rules": "rules"},
+                         url="url_col", rules_are_text=("rules_are_text", _flag),
+                         robots="text_col", domain="domain_col", agent="agent"),
+    "luhn_scan": _op("pipeline.luhn_scan", id=_ID, text=_TEXT),
+    "classify_lang": _op("langid.classify_lang", text="text_col", out="out_col",
+                         distance=("keep_distance", _flag)),
+    "corpus_report": _op("text.corpus_report", id="id_col", text="text_col",
+                         strata="strata_col", lang="lang_col"),
+    "source_diversity": _op("text.source_diversity", group="group_col",
+                            text="text_col", n=("n", int)),
+    "token_fertility": _op("bpe.token_fertility", group=("group_col", str, _REQ),
+                           text="text_col"),
+    # mixtures, sampling and sharding
+    "dsir": _op("pipeline.dsir_weights", {"raw": "corpus", "target": "target"},
+                id=_ID, text=_TEXT),
+    "mixture_build": _op(_mixture_build, source=_SOURCE, id=_ID, text=_TEXT,
+                         weights=("weights", _weights, _REQ), budget=_BUDGET,
+                         tokenizer="tokenizer"),
+    "curation_audit": _op("pipeline.curation_audit",
+                          {"corpus": "df", "benchmark": "benchmark"},
+                          id=_ID, text=_TEXT, source=_SOURCE,
+                          weights=("weights", _weights, _REQ), budget=_BUDGET,
+                          min_words=("min_words", int),
+                          max_word_len=("max_word_len", float)),
+    "group_split": _op("pipeline.group_split", group=("group_expr", _expr, _REQ),
+                       id=_ID),
+    "pack_bins": _op("pipeline.pack_bins", {"input": "chunks"}, ids=("id_cols", _names),
+                     tokens="tokens_col", capacity=("capacity", int),
+                     shards=("n_shards", int)),
+    "chunk_tokens": _op("pipeline.chunk_tokens", id=_ID, text=_TEXT,
+                        max_tokens=("max_tokens", int), stride=("stride", int)),
+    "fixed_k_sample": _op("pipeline.fixed_k_sample", strata=("strata_col", str, "lang"),
+                          id=_ID, k=("k", int, "10")),
+    "temperature_sample": _op("pipeline.temperature_sample",
+                              strata=("strata_col", str, "lang"), id=_ID,
+                              alpha=("alpha", float), budget=("budget_frac", float)),
+    "weighted_sample": _op("pipeline.weighted_sample", id=_ID,
+                           weight=("weight_col", str, "n_chars"), k=("k", int, "100")),
+    "stratified_weighted_sample": _op("pipeline.stratified_weighted_sample", id=_ID,
+                                      weight=("weight_col", str, _REQ),
+                                      k=("k", int, "10"),
+                                      strata=("strata_col", str, _REQ)),
+    "training_shards": _op("pipeline.training_shards", id=_ID, shards=("n_shards", int)),
+    "epoch_shuffle": _op("pipeline.epoch_shuffle", id=_ID, epoch=("epoch", int),
+                         shards=("n_shards", int)),
+    # chat data
+    "chat_validate": _op("chat.validate_conversations", id="id_col", turns="conv_col"),
+    "chat_render": _op("chat.render_chat", id="id_col", turns="conv_col"),
+    "preference_pairs": _op("chat.preference_pairs", prompt="prompt_col",
+                            response="response_col", score="score_col"),
+    # events and time series
+    "gap_fill": _op("temporal.gap_fill_locf", ts=_TS, key=_KEY,
+                    val=("val_col", str, "value"), unit="unit"),
+    "sessionize": _op("temporal.sessionize", ts=_TS, key=_KEY,
+                      gap_seconds=("gap_seconds", float), order="order_col"),
+    "funnel": _op("temporal.funnel", ts=_TS, key=_KEY,
+                  type=("type_col", str, "event_type"), steps=("steps", _commas, _REQ),
+                  within_seconds=("within_seconds", float)),
+    "retention": _op("temporal.retention", ts=_TS, key=_KEY, unit="unit"),
+    "pagerank": _op("graph.pagerank", {"input": "edges"}, src="src", dst="dst",
+                    damping=("damping", float), iterations=("iterations", int)),
+    # sketches and skew
+    "heavy_hitters": _op("sketch.heavy_hitters", col=("col", str, "value"),
+                         k=("k", int)),
+    "kmv_distinct": _op("sketch.kmv_distinct", seg=("seg_col", str, _REQ),
+                        item=("item_col", str, _REQ), k=("k", int)),
+    "kmv_overlap": _op("sketch.kmv_overlap", seg=("seg_col", str, _REQ),
+                       item=("item_col", str, _REQ), a=("seg_a", str, _REQ),
+                       b=("seg_b", str, _REQ), k=("k", int)),
+    "rolling_distinct": _op("sketch.kmv_rolling_distinct", ts=("time_col", str, "ts"),
+                            item=("item_col", str, _REQ), k=("k", int),
+                            days=("n_days", int)),
+    "rolling_quantiles": _op("sketch.rolling_quantiles", ts=("time_col", str, "ts"),
+                             val=("val_col", str, _REQ), lo=("lo", float, "0"),
+                             hi=("hi", float, _REQ), bins=("n_bins", int),
+                             days=("n_days", int)),
+    "cms_estimate": _op(_cms_estimate, {"input": "df", "probes": "probes"},
+                        col=("col", str, _REQ), width=("width", int),
+                        depth=("depth", int)),
+    "skew_profile": _op("scale.skew_profile", key=("key_col", str, _REQ),
+                        top=("top", int)),
+    "mad_outliers": _op("scale.mad_outliers", key=_KEY, val=("val_col", str, "value"),
+                        k=("k", float)),
+    "topk_per_key": _op("scale.salted_topk", keys=("key_cols", _commas, _REQ),
+                        order=("order_col", str, _REQ), k=("k", int, "10"),
+                        ascending=("ascending", _flag), salt=("salt", int)),
+    # model-quality metrics
+    "quality_auc": _op("mlmetrics.binary_auc", label=("label_col", str, _REQ),
+                       score=("score_col", str, _REQ),
+                       decimals=("score_decimals", int)),
+    "calibration_bins": _op("mlmetrics.calibration_bins",
+                            label=("label_col", str, _REQ),
+                            score=("score_col", str, _REQ), bins=("n_bins", int),
+                            decimals=("score_decimals", int)),
+    "brier_score": _op("mlmetrics.brier_score", label=("label_col", str, _REQ),
+                       score=("score_col", str, _REQ),
+                       decimals=("score_decimals", int)),
+}
+
+
+def _pipeline_table(session, op: str, opts: dict[str, str]) -> DataFrame:
+    """Bind ``opts`` against the ``PIPELINE`` row for ``op`` and run it.
+    Unknown functions, unknown options and values their converter
+    rejects raise ValueError; tables name a registered view, a
+    `ws.path` or a plain path."""
     name = op.strip("`").lower()
+    row = PIPELINE.get(name)
+    if row is None:
+        raise ValueError(f"unknown pipeline table function `{name}`; "
+                         f"available: {', '.join(sorted(PIPELINE))}")
+    unknown = sorted(set(opts) - set(row.tables) - set(row.options))
+    if unknown:
+        raise ValueError(
+            f"pipeline.{name}: unknown option(s) {', '.join(unknown)}; "
+            f"accepted: {', '.join(sorted([*row.tables, *row.options]))}")
 
-    def inp(key="input"):
-        return _resolve_input(session, req(key))
-
-    def req(key):
-        v = o.get(key)
-        if not v:
+    def given(key, default=_REQ):
+        v = opts.get(key, default)
+        if v is _REQ or (default is _REQ and not v):
             raise ValueError(f"pipeline.{name}: missing option `{key}`")
         return v
 
-    if name == "bm25":
-        from drill_spark.ops.search import bm25_topk
-
-        return bm25_topk(inp(), req("query").split(), k=int(o.get("k", "10")),
-                         id_col=o.get("id", "doc_id"),
-                         text_col=o.get("text", "text"))
-    if name == "bm25_batch":
-        from drill_spark.ops.search import bm25_topk_batch
-
-        return bm25_topk_batch(inp(), inp("queries"),
-                               k=int(o.get("k", "10")),
-                               id_col=o.get("id", "doc_id"),
-                               text_col=o.get("text", "text"))
-    if name == "tfidf_keywords":
-        from drill_spark.ops.search import tfidf_keywords
-
-        return tfidf_keywords(inp(), top_n=int(o.get("top_n", "3")),
-                              id_col=o.get("id", "doc_id"),
-                              text_col=o.get("text", "text"))
-    if name == "hybrid_search":
-        from drill_spark.ops.search import hybrid_topk
-
-        return hybrid_topk(inp("docs"), inp("vecs"), req("query").split(),
-                           query_vec_id=int(req("vec_id")),
-                           k=int(o.get("k", "10")),
-                           pool=int(o.get("pool", "50")))
-    if name == "fuzzy_join":
-        from drill_spark.ops.fuzzy import fuzzy_join
-
-        max_df = o.get("max_df")
-        return fuzzy_join(inp("left"), inp("right"),
-                          req("left_id"), req("left_col"),
-                          req("right_id"), req("right_col"),
-                          max_dist=int(o.get("max_dist", "2")),
-                          max_df=int(max_df) if max_df else None)
-    if name == "dedup_exact":
-        from drill_spark.ops.dedup import exact_dedup
-
-        return exact_dedup(inp(), o.get("id", "doc_id"),
-                           o.get("text", "text"))
-    if name == "line_dedup":
-        from drill_spark.ops.text import line_dedup
-
-        return line_dedup(inp(), id_col=o.get("id", "doc_id"),
-                          text_col=o.get("text", "text"),
-                          max_copies=int(o.get("max_copies", "1")),
-                          min_chars=int(o.get("min_chars", "8")))
-    if name == "group_split":
-        from drill_spark.ops.pipeline import group_split
-
-        return group_split(inp(), F.expr(req("group")),
-                           o.get("id", "doc_id"))
-    if name == "gap_fill":
-        from drill_spark.ops.temporal import gap_fill_locf
-
-        return gap_fill_locf(inp(), o.get("ts", "ts"),
-                             o.get("key", "user_id"),
-                             o.get("val", "value"),
-                             unit=o.get("unit", "hour"))
-    if name == "corpus_report":
-        from drill_spark.ops.text import corpus_report
-
-        return corpus_report(inp(), id_col=o.get("id", "doc_id"),
-                             text_col=o.get("text", "text"),
-                             strata_col=o.get("strata", "source"),
-                             lang_col=o.get("lang", "lang"))
-    if name == "triplet_mine":
-        from drill_spark.ops.similarity import triplet_mine
-
-        ids = [int(x) for x in o.get("ids", "0").split(",")]
-        return triplet_mine(inp(), query_ids=ids,
-                            id_col=o.get("id", "vec_id"),
-                            vec_col=o.get("vec", "embedding"),
-                            label_col=o.get("label", "label"))
-    if name == "c4_clean":
-        from drill_spark.ops.text import c4_clean
-
-        bad = tuple(x for x in o.get("badwords", "").split(",") if x)
-        return c4_clean(inp(), id_col=o.get("id", "doc_id"),
-                        text_col=o.get("text", "text"),
-                        min_words_per_line=int(o.get("min_words", "5")),
-                        min_sentences=int(o.get("min_sentences", "3")),
-                        badwords=bad)
-    if name == "html_extract":
-        from drill_spark.ops.text import html_extract
-
-        return html_extract(inp(), html_col=o.get("html", "html"))
-    if name == "heavy_hitters":
-        from drill_spark.ops.sketch import heavy_hitters
-
-        return heavy_hitters(inp(), o.get("col", "value"),
-                             k=int(o.get("k", "50")))
-    if name == "robots_filter":
-        from drill_spark.ops.crawlpolicy import parse_robots, robots_filter
-
-        rules_in = _resolve_input(session, req("rules"))
-        if o.get("rules_are_text", "").lower() in ("1", "true", "yes"):
-            rules_in = parse_robots(
-                rules_in, o.get("robots", "robots"),
-                o.get("domain", "domain"), agent=o.get("agent", "*"))
-        return robots_filter(inp(), rules_in, url_col=o.get("url", "url"))
-    if name == "pagerank":
-        from drill_spark.ops.graph import pagerank
-
-        return pagerank(inp(), src=o.get("src", "src"),
-                        dst=o.get("dst", "dst"),
-                        damping=float(o.get("damping", "0.85")),
-                        iterations=int(o.get("iterations", "10")))
-    if name == "vector_topk":
-        from drill_spark.ops.vecindex import index_topk
-
-        idx = req("index")
-        path = session.vector_indexes.get(idx, idx)
-        base = (_resolve_input(session, o["base"])
-                if o.get("base") else None)
-        return index_topk(
-            session.spark, path, inp(), k=int(o.get("k", "10")),
-            nprobe=int(o.get("nprobe", "3")),
-            rerank=int(o["rerank"]) if o.get("rerank") else None,
-            base=base)
-    if name == "gopher_quality":
-        from drill_spark.ops.text import gopher_quality
-
-        return gopher_quality(inp(), id_col=o.get("id", "doc_id"),
-                              text_col=o.get("text", "text"))
-    if name == "script_profile":
-        from drill_spark.ops.text import script_profile
-
-        return script_profile(inp(), id_col=o.get("id", "doc_id"),
-                              text_col=o.get("text", "text"))
-    if name == "domain_stats":
-        from drill_spark.ops.text import domain_stats
-
-        block = tuple(x for x in o.get("blocklist", "").split(",") if x)
-        return domain_stats(inp(), text_col=o.get("text", "text"),
-                            url_col=o.get("url", "url"),
-                            blocklist=block)
-    if name == "dsir":
-        from drill_spark.ops.pipeline import dsir_weights
-
-        return dsir_weights(inp("raw"), inp("target"),
-                            o.get("id", "doc_id"), o.get("text", "text"))
-    if name == "pack_bins":
-        from drill_spark.ops.pipeline import pack_bins
-
-        ids = tuple(o.get("ids", "doc_id,chunk_id").split(","))
-        return pack_bins(inp(), id_cols=ids,
-                         tokens_col=o.get("tokens", "n_tokens"),
-                         capacity=int(o.get("capacity", "2048")),
-                         n_shards=int(o.get("shards", "64")))
-    if name == "fixed_k_sample":
-        from drill_spark.ops.pipeline import fixed_k_sample
-
-        return fixed_k_sample(inp(), o.get("strata", "lang"),
-                              o.get("id", "doc_id"), int(o.get("k", "10")))
-    if name == "skew_profile":
-        from drill_spark.ops.scale import skew_profile
-
-        return skew_profile(inp(), req("key"), top=int(o.get("top", "5")))
-    if name == "chat_validate":
-        from drill_spark.ops.chat import validate_conversations
-
-        return validate_conversations(inp(), id_col=o.get("id", "conv_id"),
-                                      conv_col=o.get("turns", "turns"))
-    if name == "chat_render":
-        from drill_spark.ops.chat import render_chat
-
-        return render_chat(inp(), id_col=o.get("id", "conv_id"),
-                           conv_col=o.get("turns", "turns"))
-    if name == "preference_pairs":
-        from drill_spark.ops.chat import preference_pairs
-
-        return preference_pairs(inp(), prompt_col=o.get("prompt", "prompt_id"),
-                                response_col=o.get("response", "response"),
-                                score_col=o.get("score", "score"))
-    if name == "sessionize":
-        from drill_spark.ops.temporal import sessionize
-
-        return sessionize(inp(), o.get("ts", "ts"), o.get("key", "user_id"),
-                          gap_seconds=float(o.get("gap_seconds", "1800")),
-                          order_col=o.get("order"))
-    if name == "funnel":
-        from drill_spark.ops.temporal import funnel
-
-        within = o.get("within_seconds")
-        return funnel(inp(), o.get("ts", "ts"), o.get("key", "user_id"),
-                      o.get("type", "event_type"), req("steps").split(","),
-                      within_seconds=float(within) if within else None)
-    if name == "retention":
-        from drill_spark.ops.temporal import retention
-
-        return retention(inp(), o.get("ts", "ts"), o.get("key", "user_id"),
-                         unit=o.get("unit", "week"))
-    if name == "temperature_sample":
-        from drill_spark.ops.pipeline import temperature_sample
-
-        return temperature_sample(inp(), o.get("strata", "lang"),
-                                  o.get("id", "doc_id"),
-                                  alpha=float(o.get("alpha", "0.5")),
-                                  budget_frac=float(o.get("budget", "0.5")))
-    if name == "weighted_sample":
-        from drill_spark.ops.pipeline import weighted_sample
-
-        return weighted_sample(inp(), o.get("id", "doc_id"),
-                               o.get("weight", "n_chars"),
-                               int(o.get("k", "100")))
-    if name == "luhn_scan":
-        from drill_spark.ops.pipeline import luhn_scan
-
-        return luhn_scan(inp(), o.get("id", "doc_id"),
-                         o.get("text", "text"))
-    if name == "normalize_unicode":
-        from drill_spark.ops.text import normalize_unicode
-
-        return normalize_unicode(inp(), id_col=o.get("id", "doc_id"),
-                                 text_col=o.get("text", "text"),
-                                 form=o.get("form", "NFC"))
-    if name == "maxsim":
-        from drill_spark.ops.search import maxsim_topk
-
-        return maxsim_topk(inp(), req("query").split(),
-                           k=int(o.get("k", "10")),
-                           id_col=o.get("id", "doc_id"),
-                           text_col=o.get("text", "text"))
-    if name == "mad_outliers":
-        from drill_spark.ops.scale import mad_outliers
-
-        return mad_outliers(inp(), o.get("key", "user_id"),
-                            o.get("val", "value"),
-                            k=float(o.get("k", "3.0")))
-    if name == "training_shards":
-        from drill_spark.ops.pipeline import training_shards
-
-        return training_shards(inp(), o.get("id", "doc_id"),
-                               n_shards=int(o.get("shards", "1024")))
-    if name == "crossmodal_topk":
-        from drill_spark.ops.crossmodal import (
-            crossmodal_topk, embed_captions, embed_images)
-
-        return crossmodal_topk(
-            embed_images(inp("images"), id_col=o.get("id", "doc_id"),
-                         payload_col=o.get("payload", "payload")),
-            embed_captions(inp("captions"), id_col=o.get("id", "doc_id"),
-                           text_col=o.get("text", "text")),
-            id_col=o.get("id", "doc_id"), k=int(o.get("k", "3")))
-    if name == "crossmodal_align":
-        from drill_spark.ops.crossmodal import alignment_filter
-
-        return alignment_filter(
-            inp("images"), inp("captions"),
-            id_col=o.get("id", "doc_id"),
-            threshold=float(o.get("threshold", "0.28")))
-    def _weights(face: str):
-        weights = {}
-        for kv in req("weights").split(","):
-            src_name, _, w = kv.rpartition(":")
-            if not src_name:
-                raise ValueError(
-                    f"pipeline.{face}: weights entries are "
-                    f"'<source>:<weight>', got {kv!r}")
-            weights[src_name] = float(w)
-        return weights
-
-    if name == "mixture_build":
-        from drill_spark.ops.pipeline import build_mixture
-
-        tokens = None
-        if o.get("tokenizer", "").lower() in ("bpe", "fixed_bpe"):
-            from drill_spark.ops.bpe import FIXED_MERGES_V1, bpe_count_column
-
-            tokens = bpe_count_column(o.get("text", "text"),
-                                      FIXED_MERGES_V1)
-        return build_mixture(inp(), o.get("source", "source"),
-                             o.get("id", "doc_id"), o.get("text", "text"),
-                             _weights("mixture_build"),
-                             token_budget=int(o.get("budget", "1000000")),
-                             tokens=tokens)
-    if name == "curation_audit":
-        from drill_spark.ops.pipeline import curation_audit
-
-        return curation_audit(
-            inp("corpus"), inp("benchmark"),
-            o.get("id", "doc_id"), o.get("text", "text"),
-            o.get("source", "source"), _weights("curation_audit"),
-            token_budget=int(o.get("budget", "1000000")),
-            min_words=int(o.get("min_words", "5")),
-            max_word_len=float(o.get("max_word_len", "20.0")))
-    if name == "quality_auc":
-        from drill_spark.ops.mlmetrics import binary_auc
-
-        return binary_auc(inp(), req("label"), req("score"),
-                          score_decimals=int(o.get("decimals", "6")))
-    if name == "calibration_bins":
-        from drill_spark.ops.mlmetrics import calibration_bins
-
-        return calibration_bins(inp(), req("label"), req("score"),
-                                n_bins=int(o.get("bins", "10")),
-                                score_decimals=int(o.get("decimals", "6")))
-    if name == "brier_score":
-        from drill_spark.ops.mlmetrics import brier_score
-
-        return brier_score(inp(), req("label"), req("score"),
-                           score_decimals=int(o.get("decimals", "6")))
-    if name == "stratified_weighted_sample":
-        from drill_spark.ops.pipeline import stratified_weighted_sample
-
-        return stratified_weighted_sample(
-            inp(), o.get("id", "doc_id"), req("weight"),
-            k=int(o.get("k", "10")), strata_col=req("strata"))
-    if name == "epoch_shuffle":
-        from drill_spark.ops.pipeline import epoch_shuffle
-
-        ep = o.get("epoch")
-        return epoch_shuffle(inp(), o.get("id", "doc_id"),
-                             epoch=int(ep) if ep else None,
-                             n_shards=int(o.get("shards", "1024")))
-    if name == "kmv_distinct":
-        from drill_spark.ops.sketch import kmv_distinct
-
-        return kmv_distinct(inp(), req("seg"), req("item"),
-                            k=int(o.get("k", "64")))
-    if name == "kmv_overlap":
-        from drill_spark.ops.sketch import kmv_overlap
-
-        return kmv_overlap(inp(), req("seg"), req("item"),
-                           req("a"), req("b"), k=int(o.get("k", "64")))
-    if name == "rolling_distinct":
-        from drill_spark.ops.sketch import kmv_rolling_distinct
-
-        return kmv_rolling_distinct(inp(), o.get("ts", "ts"), req("item"),
-                                    k=int(o.get("k", "64")),
-                                    n_days=int(o.get("days", "7")))
-    if name == "snapshot_diff":
-        from drill_spark.ops.dedup import snapshot_diff
-
-        return snapshot_diff(inp("old"), inp("new"),
-                             o.get("id", "doc_id"), o.get("text", "text"))
-    if name == "cms_estimate":
-        from drill_spark.ops.sketch import cms_build, cms_estimate
-
-        w, d = int(o.get("width", "1024")), int(o.get("depth", "4"))
-        c = req("col")
-        sk = cms_build(inp(), c, width=w, depth=d)
-        return cms_estimate(sk, _resolve_input(session, req("probes")),
-                            c, width=w, depth=d)
-    if name == "rolling_quantiles":
-        from drill_spark.ops.sketch import rolling_quantiles
-
-        return rolling_quantiles(
-            inp(), o.get("ts", "ts"), req("val"),
-            lo=float(o.get("lo", "0")), hi=float(req("hi")),
-            n_bins=int(o.get("bins", "128")),
-            n_days=int(o.get("days", "7")))
-    if name == "skew_join":
-        from drill_spark.ops.scale import auto_skew_join
-
-        return auto_skew_join(
-            inp("hot"), inp("small"), req("on").split(","),
-            how=o.get("how", "inner"),
-            skew_threshold=float(o.get("threshold", "4.0")),
-            salt=int(o.get("salt", "16")))
-    if name == "setsim_join":
-        from drill_spark.ops.fuzzy import setsim_join
-
-        ng = o.get("ngram")
-        return setsim_join(
-            inp(), o.get("id", "doc_id"), o.get("text", "text"),
-            threshold=float(o.get("threshold", "0.7")),
-            ngram=int(ng) if ng else None)
-    if name == "setsim_tables":
-        from drill_spark.ops.fuzzy import setsim_join_tables
-
-        ng = o.get("ngram")
-        return setsim_join_tables(
-            inp("left"), inp("right"),
-            o.get("left_id", "id_a"), o.get("left_text", "text_a"),
-            o.get("right_id", "id_b"), o.get("right_text", "text_b"),
-            threshold=float(o.get("threshold", "0.7")),
-            ngram=int(ng) if ng else None)
-    if name == "containment_join":
-        from drill_spark.ops.fuzzy import containment_join
-
-        ng = o.get("ngram")
-        return containment_join(
-            inp("probe"), inp("corpus"),
-            o.get("probe_id", "qid"), o.get("probe_text", "qtext"),
-            o.get("id", "doc_id"), o.get("text", "text"),
-            threshold=float(o.get("threshold", "0.8")),
-            ngram=int(ng) if ng else None)
-    if name == "gopher_repetition":
-        from drill_spark.ops.pipeline import gopher_repetition
-
-        return gopher_repetition(
-            inp(), o.get("id", "doc_id"), o.get("text", "text"))
-    if name == "substr_dedup":
-        from drill_spark.ops.substr import substr_dedup
-
-        return substr_dedup(
-            inp(), o.get("id", "doc_id"), o.get("text", "text"),
-            min_tokens=int(o.get("min_tokens", "8")),
-            score_col=o.get("score"),
-            detect=o.get("detect", "exact"))
-    if name == "substr_spans":
-        from drill_spark.ops.substr import substr_duplicate_spans
-
-        return substr_duplicate_spans(
-            inp(), o.get("id", "doc_id"), o.get("text", "text"),
-            min_tokens=int(o.get("min_tokens", "8")),
-            detect=o.get("detect", "exact"))
-    if name == "substr_decontaminate":
-        from drill_spark.ops.substr import substr_decontaminate
-
-        return substr_decontaminate(
-            inp("corpus"), inp("benchmark"),
-            o.get("id", "doc_id"), o.get("text", "text"),
-            o.get("bench_id", "bench_id"), o.get("bench_text", "text"),
-            min_tokens=int(o.get("min_tokens", "8")))
-    if name == "substr_contam_report":
-        from drill_spark.ops.substr import substr_contamination_report
-
-        return substr_contamination_report(
-            inp("benchmark"), inp("corpus"),
-            o.get("bench_id", "bench_id"), o.get("bench_text", "text"),
-            o.get("id", "doc_id"), o.get("text", "text"),
-            min_tokens=int(o.get("min_tokens", "8")))
-    if name == "chunk_tokens":
-        from drill_spark.ops.pipeline import chunk_tokens
-
-        st = o.get("stride")
-        return chunk_tokens(
-            inp(), o.get("id", "doc_id"), o.get("text", "text"),
-            max_tokens=int(o.get("max_tokens", "32")),
-            stride=int(st) if st else None)
-    if name == "topk_per_key":
-        from drill_spark.ops.scale import salted_topk
-
-        return salted_topk(
-            inp(), req("keys").split(","), req("order"),
-            k=int(o.get("k", "10")),
-            ascending=o.get("ascending", "false").lower() == "true",
-            salt=int(o.get("salt", "16")))
-    if name == "classify_lang":
-        from drill_spark.ops.langid import classify_lang
-
-        return classify_lang(
-            inp(), o.get("text", "text"),
-            out_col=o.get("out", "pred_lang"),
-            keep_distance=o.get("distance", "false").lower() == "true")
-    if name == "token_fertility":
-        from drill_spark.ops.bpe import token_fertility
-
-        return token_fertility(inp(), req("group"),
-                               text_col=o.get("text", "text"))
-    if name == "source_diversity":
-        from drill_spark.ops.text import source_diversity
-
-        return source_diversity(inp(), o.get("group", "source"),
-                                text_col=o.get("text", "text"),
-                                n=int(o.get("n", "3")))
-    if name == "readability":
-        from drill_spark.ops.text import readability
-
-        return readability(inp(), o.get("id", "doc_id"),
-                           o.get("text", "text"))
-    if name == "encoding_qa":
-        from drill_spark.ops.text import encoding_qa
-
-        return encoding_qa(inp(), o.get("id", "doc_id"),
-                           o.get("text", "text"))
-    raise ValueError(
-        f"unknown pipeline table function `{name}` — available: bm25, bm25_batch, "
-        "tfidf_keywords, hybrid_search, fuzzy_join, dedup_exact, "
-        "line_dedup, group_split, gap_fill, triplet_mine, corpus_report, "
-        "c4_clean, gopher_quality, script_profile, domain_stats, dsir, "
-        "pack_bins, fixed_k_sample, skew_profile, chat_validate, "
-        "chat_render, preference_pairs, sessionize, funnel, retention, "
-        "temperature_sample, weighted_sample, luhn_scan, "
-        "normalize_unicode, maxsim, mad_outliers, training_shards, "
-        "crossmodal_topk, crossmodal_align, mixture_build, epoch_shuffle, "
-        "kmv_distinct, kmv_overlap, rolling_distinct, snapshot_diff, "
-        "rolling_quantiles, cms_estimate, skew_join, topk_per_key, "
-        "setsim_join, containment_join, setsim_tables, substr_dedup, "
-        "substr_spans, substr_decontaminate, substr_contam_report, "
-        "chunk_tokens, gopher_repetition, curation_audit, quality_auc, "
-        "calibration_bins, brier_score, stratified_weighted_sample, "
-        "classify_lang, token_fertility, source_diversity, readability, "
-        "encoding_qa")
+    kwargs = {}
+    for key, (param, conv, default) in row.options.items():
+        v = given(key, default)
+        if v is None:
+            continue
+        try:
+            kwargs[param] = conv(v)
+        except ValueError as e:
+            raise ValueError(
+                f"pipeline.{name}: bad value for option `{key}` => {v!r}: {e}") from e
+    for key, param in row.tables.items():
+        kwargs[param] = _resolve_input(session, given(key))
+    if callable(row.fn):
+        return row.fn(session, **kwargs)
+    module, _, fn = row.fn.rpartition(".")
+    return getattr(import_module(f"drill_spark.ops.{module}"), fn)(**kwargs)
 
 
 def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | None = None) -> DataFrame:

@@ -377,8 +377,9 @@ def stream_incremental_dedup(
 
     Exactly-once end to end with the streaming epoch as the single
     batch identity, stamped into BOTH Delta logs: incremental_dedup's
-    store commit carries txn(drill_spark.incremental_dedup, epoch) —
-    a replayed epoch returns its ORIGINAL survivors without growing
+    store commit carries the per-batch txn ``<app_id>.store#batch<N>``
+    (N = the epoch plus a streaming offset; ``readers/delta.BatchLedger``)
+    — a replayed epoch returns its ORIGINAL survivors without growing
     the store — and the output append carries txn(app_id, epoch) via
     commit_batch_idempotent, so at-least-once foreachBatch delivery
     still writes each survivor set once.
@@ -429,7 +430,7 @@ def stream_incremental_near_dedup(
     Jaccard estimator) via the persistent band/signature store; prior
     batches' text is never rescanned. Survivors land in ``out_path``
     exactly-once: the streaming epoch stamps both the store commit
-    (txn drill_spark.incremental_near_dedup) and the output append
+    (per-batch txn ``<app_id>.store#batch<N>``) and the output append
     (txn ``app_id``), so at-least-once foreachBatch delivery still
     writes each survivor set once — the same two-log contract as the
     exact-dup twin, making backfill and ingest share ONE near-dedup

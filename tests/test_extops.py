@@ -1908,6 +1908,34 @@ def test_incremental_dedup_batches_and_replay(spark, tmp_path):
     assert read_delta(spark, store).count() == 4
 
 
+@pytest.mark.parametrize("op", ["incremental_dedup", "incremental_near_dedup"])
+def test_incremental_dedup_skipped_batch_raises(spark, tmp_path, op):
+    """Batches 0 and 2 committed, then batch 1 submitted: it was never
+    committed, so it must raise instead of replaying as the store's
+    (empty) batch-1 rows and dropping every document; committed ids
+    still replay and the store does not grow."""
+    from drill_spark.ops import dedup
+    from drill_spark.readers.delta import read_delta
+
+    run = getattr(dedup, op)
+    store = str(tmp_path / "store")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+    b0 = batch([(1, "alpha beta gamma delta epsilon zeta eta theta")])
+    b2 = batch([(2, "one two three four five six seven eight nine")])
+    b1 = batch([(3, "red green blue cyan magenta yellow black white")])
+    assert [r.doc_id for r in run(b0, store, batch_id=0).collect()] == [1]
+    assert [r.doc_id for r in run(b2, store, batch_id=2).collect()] == [2]
+    n_rows = read_delta(spark, store).count()
+
+    with pytest.raises(ValueError, match="never committed"):
+        run(b1, store, batch_id=1)
+    assert [r.doc_id for r in run(b2, store, batch_id=2).collect()] == [2]
+    assert read_delta(spark, store).count() == n_rows
+
+
 def test_remove_dup_spans_merging_and_passthrough(spark):
     """Apply-side of exact-substring dedup: overlapping spans on one
     doc merge via cursor clamping (each char removed once), docs with

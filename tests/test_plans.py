@@ -296,3 +296,32 @@ def test_ops_have_one_implementation_per_operator():
             if bad:
                 offenders.append(f"{mod.__name__}.{name}: {sorted(bad)}")
     assert offenders == [], offenders
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second top-level ``def``/``class`` of the same name silently
+    shadows the first for every caller (no linter runs here), so each
+    module under drill_spark/ defines each top-level name once."""
+    import ast
+
+    import drill_spark
+
+    root = os.path.dirname(drill_spark.__file__)
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            seen: dict[str, int] = {}
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef)):
+                    if node.name in seen:
+                        offenders.append(
+                            f"{os.path.relpath(path, root)}:{node.lineno} "
+                            f"{node.name} (first at {seen[node.name]})")
+                    seen.setdefault(node.name, node.lineno)
+    assert offenders == [], offenders

@@ -20,6 +20,7 @@ import os
 import pytest
 
 from drill_spark.session import DrillSession
+from drill_spark.sqlfront import PIPELINE
 
 
 @pytest.fixture(scope="module")
@@ -595,6 +596,39 @@ def test_sql_update_where_inside_string_literal(session, tmp_path):
     assert out.rows_updated == 1
     notes = {r.k: r.note for r in session.sql("select * from dfs.updq.`q`").collect()}
     assert notes[2] == "keep WHERE clause" and notes[1] == "x"
+
+
+def test_sql_update_comma_inside_string_literal(session, tmp_path):
+    """The SET split is quote-aware: a comma inside a string literal
+    stays part of its value."""
+    from drill_spark.readers.delta import write_delta
+
+    spark = session.spark
+    session.register_workspace("dfs.updc", str(tmp_path), "parquet", writable=True)
+    write_delta(spark.range(3).selectExpr("id as k", "'x' as s", "0 as n"),
+                str(tmp_path / "c"))
+    out = session.sql(
+        "UPDATE dfs.updc.`c` SET s = 'a,b', n = 7 WHERE k = 1").collect()[0]
+    assert out.rows_updated == 1
+    got = {r.k: (r.s, r.n) for r in session.sql("select * from dfs.updc.`c`").collect()}
+    assert got == {0: ("x", 0), 1: ("a,b", 7), 2: ("x", 0)}
+
+
+def test_sql_merge_insert_comma_inside_string_literal(session, tmp_path):
+    """MERGE ... INSERT VALUES counts its values with the quote-aware
+    split: 'a,b' is one value, not two."""
+    from drill_spark.readers.delta import write_delta
+
+    spark = session.spark
+    session.register_workspace("dfs.mrgc", str(tmp_path), "parquet", writable=True)
+    write_delta(spark.range(2).selectExpr("id as k", "'x' as s"), str(tmp_path / "t"))
+    spark.createDataFrame([(1,), (5,)], "k long").createOrReplaceTempView("mrgc_src")
+    out = session.sql(
+        "MERGE INTO dfs.mrgc.`t` USING mrgc_src AS src ON t.k = src.k "
+        "WHEN NOT MATCHED THEN INSERT (k, s) VALUES (src.k, 'a,b')").collect()[0]
+    assert out.inserted == 1
+    got = {r.k: r.s for r in session.sql("select * from dfs.mrgc.`t`").collect()}
+    assert got == {0: "x", 1: "x", 5: "a,b"}
 
 
 def test_sql_restore_table(session, tmp_path):
@@ -1721,3 +1755,93 @@ def test_views_over_path_tables_outlive_rewrite_views(dsession):
         dsession.sql("DROP TEMPORARY FUNCTION IF EXISTS seniors_f")
         for v in ("seniors_v", "seniors_t", "seniors_c"):
             dsession.spark.catalog.dropTempView(v)
+
+
+def _bind_pipeline(monkeypatch, name, opts):
+    """Run ``sqlfront._pipeline_table`` with tables and operators
+    stubbed; return each operator call as (name, bound arguments)."""
+    import importlib
+    import inspect
+    from types import SimpleNamespace
+
+    from pyspark.sql import functions as F
+
+    from drill_spark import sqlfront
+    from drill_spark.ops.bpe import FIXED_MERGES_V1
+
+    from .pipeline_bindings import EXPECTED
+
+    calls, real = [], {}
+    exp = EXPECTED.get(name, {})
+    for qual in {q for case in ("required", "all") for q, _ in exp.get(case, [])}:
+        mod_name, fn = qual.split(".")
+        mod = importlib.import_module(f"drill_spark.ops.{mod_name}")
+        real[qual] = getattr(mod, fn)
+        monkeypatch.setattr(
+            mod, fn,
+            lambda *a, _q=qual, **kw: calls.append((_q, a, kw)) or ("result", _q))
+    monkeypatch.setattr(sqlfront, "_resolve_input", lambda session, ref: ("table", ref))
+    monkeypatch.setattr(F, "expr", lambda sql: ("expr", sql))
+    session = SimpleNamespace(spark="SPARK", vector_indexes={"idx1": "/indexes/idx1"})
+    sqlfront._pipeline_table(session, name, opts)
+    got = []
+    for qual, args, kwargs in calls:
+        bound = inspect.signature(real[qual]).bind(*args, **kwargs)
+        bound.apply_defaults()
+        got.append((qual, {k: "FIXED_MERGES_V1" if v is FIXED_MERGES_V1 else v
+                           for k, v in bound.arguments.items()}))
+    return got
+
+
+@pytest.mark.parametrize("case", ["required", "all"])
+@pytest.mark.parametrize("name", sorted(PIPELINE))
+def test_pipeline_binding(monkeypatch, name, case):
+    """Every PIPELINE row calls its operator(s) with the same arguments
+    the replaced if-chain did: required options only (row and operator
+    defaults fill the rest) and every option set."""
+    from .pipeline_bindings import EXPECTED
+
+    exp = EXPECTED[name]
+    opts = (exp["options"] if case == "all"
+            else {k: exp["options"][k] for k in exp["need"]})
+    assert _bind_pipeline(monkeypatch, name, opts) == exp[case]
+
+
+def test_pipeline_binding_errors(monkeypatch, session):
+    """Unknown options, values their converter rejects, missing
+    required options and unknown functions raise ValueErrors that name
+    what was wrong."""
+    from drill_spark import sqlfront
+
+    from .pipeline_bindings import EXPECTED
+
+    assert sorted(PIPELINE) == sorted(EXPECTED) and len(PIPELINE) == 68
+    # each row accepts exactly the options the if-chain read, and
+    # requires exactly the ones it required
+    for name, row in PIPELINE.items():
+        assert sorted([*row.tables, *row.options]) == sorted(EXPECTED[name]["options"]), name
+        need = [*row.tables, *(k for k, o in row.options.items() if o[2] is sqlfront._REQ)]
+        assert sorted(need) == EXPECTED[name]["need"], name
+    ok = {"input": "docs", "query": "red fox"}
+    with pytest.raises(ValueError, match=r"pipeline\.bm25: unknown option\(s\) kk; "
+                                         r"accepted: id, input, k, query, text"):
+        _bind_pipeline(monkeypatch, "bm25", {**ok, "kk": "5"})
+    with pytest.raises(ValueError, match=r"pipeline\.bm25: bad value for option `k`"):
+        _bind_pipeline(monkeypatch, "bm25", {**ok, "k": "five"})
+    with pytest.raises(ValueError, match=r"pipeline\.pagerank: bad value for option `damping`"):
+        _bind_pipeline(monkeypatch, "pagerank", {"input": "e", "damping": "high"})
+    with pytest.raises(ValueError, match=r"option `ascending`.*expected true or false"):
+        _bind_pipeline(monkeypatch, "topk_per_key",
+                       {"input": "t", "keys": "a", "order": "b", "ascending": "up"})
+    with pytest.raises(ValueError, match=r"option `weights`.*'<source>:<weight>'"):
+        _bind_pipeline(monkeypatch, "mixture_build", {"input": "t", "weights": "web"})
+    with pytest.raises(ValueError, match=r"pipeline\.bm25: missing option `query`"):
+        _bind_pipeline(monkeypatch, "bm25", {"input": "docs", "query": ""})
+    with pytest.raises(ValueError, match="unknown pipeline table function `bm26`") as e:
+        _bind_pipeline(monkeypatch, "bm26", {})
+    assert str(e.value).endswith("available: " + ", ".join(sorted(PIPELINE)))
+    # through SQL, before any table is read
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match=r"unknown option\(s\) kk"):
+        session.sql("select * from table(pipeline.`bm25`("
+                    "input => 'no_such_view', query => 'x', kk => '5'))")
