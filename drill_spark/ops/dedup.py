@@ -9,10 +9,14 @@ Scale design (100 TB corpus, 1000 executors):
 - exact_dedup: one hash-shuffle on the digest; map-side partial agg
   collapses duplicates before the exchange.
 - minhash_lsh_*: per-doc signature is ONE pass (explode shingles ->
-  groupBy doc, n min-aggs); banding turns O(n^2) similarity into a
-  shuffle keyed by (band_idx, band_hash); bucket join only compares
-  docs sharing a band. Hot buckets (boilerplate shingles) are capped
-  via max_bucket_size to bound worst-case skew.
+  groupBy doc, n min-aggs); banding turns O(n^2) similarity into ONE
+  aggregation keyed by (band_idx, band_hash) that keeps each bucket's
+  row count and sorted id list; pairs come from inside each list, so
+  only docs sharing a band are compared. Hot buckets (boilerplate
+  shingles) are capped via max_bucket_size to bound worst-case skew.
+- minhash_near_dupes verify: one row per doc holding its distinct word
+  set as an array; each candidate joins the two arrays and scores
+  size(array_intersect) — no per-word rows, no per-pair aggregation.
 - jaccard_pairs (exact): token-inverted-index join; quadratic in the
   per-token posting list, so at scale it is the *verify* stage applied
   to LSH candidates, not a standalone all-pairs scan. Provided
@@ -80,13 +84,12 @@ def minhash_signatures(
     """Per-doc minhash signature: array<bigint> of length num_hashes.
 
     h_i(doc) = min over shingles of xxhash64(shingle, i). One explode +
-    one groupBy(doc) with num_hashes min-aggregates = single shuffle.
+    one groupBy(doc) with num_hashes min-aggregates = single shuffle
+    (a repeated shingle needs no distinct: min ignores repeats).
     """
-    sh = (
-        df.select(F.col(id_col), F.explode(shingles(F.col(text_col), shingle_k)).alias("sh"))
-        .where(F.col("sh") != "")
-        .distinct()
-    )
+    sh = df.select(
+        F.col(id_col), F.explode(shingles(F.col(text_col), shingle_k)).alias("sh")
+    ).where(F.col("sh") != "")
     # One SQL string instead of num_hashes py4j-built aggregate columns:
     # the expression tree the JVM plans is identical (array of
     # min(xxhash64(sh, i)) partial aggregates — integer literals both
@@ -109,8 +112,10 @@ def minhash_lsh_candidates(
     """Candidate near-dup pairs via LSH banding: docs sharing any band
     hash. Returns (id_a, id_b) distinct, id_a < id_b.
 
-    max_bucket_size drops degenerate buckets (boilerplate) — the skew
-    guard that keeps the bucket self-join bounded at scale.
+    One aggregation per (band_idx, band_hash) bucket collects its sorted
+    ids; each id pairs with the ids after it. max_bucket_size drops
+    degenerate buckets (boilerplate) — the skew guard that bounds the
+    pairs a bucket emits at scale.
     """
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
@@ -123,15 +128,16 @@ def minhash_lsh_candidates(
             )
         ).alias("band_idx", "band_hash"),
     )
-    sized = banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band_idx", "band_hash"))
-    ).where(F.col("bucket_n") <= max_bucket_size)
-    a = sized.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    b = sized.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
+    # the cap counts rows, NULL ids included: collect_list skips them, so
+    # size(ids) would not
+    buckets = (
+        banded.groupBy("band_idx", "band_hash")
+        .agg(F.count("*").alias("n"), F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .where(F.col("n") <= max_bucket_size)
+    )
     return (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        buckets.select("ids", F.posexplode("ids").alias("p", "id_a"))
+        .select("id_a", F.explode(F.slice("ids", F.col("p") + 2, F.size("ids"))).alias("id_b"))
         .distinct()
     )
 
@@ -181,33 +187,34 @@ def minhash_near_dupes(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8, **lsh_kwargs
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact-jaccard verify.
+    Returns (id_a, id_b, jaccard) with jaccard, the word-set Jaccard
+    rounded to 4, at least ``threshold``.
 
     The scale path: candidate generation is linear-ish (banding), the
-    quadratic verify only touches candidate pairs.
+    quadratic verify only touches candidate pairs. The verify joins each
+    candidate to both documents' word-set arrays (one row per id, built
+    by one aggregation) and computes |a & b| / (|a| + |b| - |a & b|)
+    with array_intersect — 7 shuffles for the whole pipeline.
     """
     cands = minhash_lsh_candidates(df, id_col, text_col, **lsh_kwargs)
-    tok = (
-        df.select(F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("w"))
-        .where(F.col("w") != "")
-        .distinct()
+    # one row per id: its distinct non-empty words (rows sharing an id
+    # merge their sets; an id without words cannot pair)
+    words = (
+        df.select(F.col(id_col).alias("doc_id"),
+                  F.array_remove(tokens(F.col(text_col)), "").alias("w"))
+        .groupBy("doc_id")
+        .agg(F.array_distinct(F.flatten(F.collect_list("w"))).alias("w"))
+        .where(F.size("w") > 0)
     )
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    # equi-join on (id_b, w): shared-token counting stays hash-join-able;
-    # never a per-pair token cross product
-    inter = (
-        cands.join(tok.select(F.col("doc_id").alias("id_a"), "w"), "id_a")
-        .join(tok.select(F.col("doc_id").alias("id_b"), "w"), ["id_b", "w"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
+    wa = words.select(F.col("doc_id").alias("id_a"), F.col("w").alias("wa"))
+    wb = words.select(F.col("doc_id").alias("id_b"), F.col("w").alias("wb"))
+    inter = F.size(F.array_intersect("wa", "wb"))
+    jaccard = F.round(inter / (F.size("wa") + F.size("wb") - inter), 4)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4))
+        cands.join(wa, "id_a")
+        .join(wb, "id_b")
+        .select("id_a", "id_b", jaccard.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 

@@ -579,10 +579,19 @@ def _cms_estimate(session, df, probes, col, **size) -> DataFrame:
     return cms_estimate(cms_build(df, col, **size), probes, col, **size)
 
 
-def _mixture_build(session, tokenizer: str = "", **kw) -> DataFrame:
+_TOKENIZERS = ("whitespace", "bpe", "fixed_bpe")
+
+
+def _tokenizer(v: str) -> str:
+    if v.lower() not in _TOKENIZERS:
+        raise ValueError(f"expected one of {', '.join(_TOKENIZERS)}, got {v!r}")
+    return v.lower()
+
+
+def _mixture_build(session, tokenizer: str = "whitespace", **kw) -> DataFrame:
     from drill_spark.ops.pipeline import build_mixture
 
-    if tokenizer.lower() in ("bpe", "fixed_bpe"):
+    if tokenizer != "whitespace":
         from drill_spark.ops.bpe import FIXED_MERGES_V1, bpe_count_column
 
         kw["tokens"] = bpe_count_column(kw["text_col"], FIXED_MERGES_V1)
@@ -686,7 +695,7 @@ PIPELINE: dict[str, Op] = {
                 id=_ID, text=_TEXT),
     "mixture_build": _op(_mixture_build, source=_SOURCE, id=_ID, text=_TEXT,
                          weights=("weights", _weights, _REQ), budget=_BUDGET,
-                         tokenizer="tokenizer"),
+                         tokenizer=("tokenizer", _tokenizer)),
     "curation_audit": _op("pipeline.curation_audit",
                           {"corpus": "df", "benchmark": "benchmark"},
                           id=_ID, text=_TEXT, source=_SOURCE,
@@ -841,17 +850,23 @@ def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | N
     return read_auto(session.spark, path, fmt, opts, session)
 
 
-_TF_OPT = re.compile(r"`?(\w+)`?\s*=>\s*(?:'([^']*)'|\"([^\"]*)\"|([^,)\s]+))")
+_TF_OPT = re.compile(
+    r"`?(\w+)`?\s*=>\s*(?:'((?:[^']|'')*)'|\"((?:[^\"]|\"\")*)\"|([^,)\s]+))")
 
 
 def _parse_tf_options(raw: str) -> dict[str, str]:
     """k => 'v' pairs; quoted values may contain commas (e.g. a provided
-    schema DDL string)."""
+    schema DDL string) and their own quote doubled (SQL escaping:
+    'it''s' is it's, "a""b" is a"b)."""
     opts: dict[str, str] = {}
     for m in _TF_OPT.finditer(raw):
-        k = m.group(1)
-        v = next(g for g in m.groups()[1:] if g is not None)
-        opts[k] = v
+        single, double, bare = m.group(2, 3, 4)
+        if single is not None:
+            opts[m.group(1)] = single.replace("''", "'")
+        elif double is not None:
+            opts[m.group(1)] = double.replace('""', '"')
+        else:
+            opts[m.group(1)] = bare
     return opts
 
 

@@ -34,6 +34,106 @@ def test_minhash_recall(spark):
         assert recall >= 0.7, f"LSH recall too low: {recall:.2f} ({len(approx)}/{len(exact)})"
 
 
+def _words(text):
+    """Python replay of the verify's word set: lower, trim spaces, split
+    on Java's whitespace class, drop empty tokens."""
+    import re
+
+    return set(re.split(r"[ \t\n\x0b\f\r]+", text.lower().strip(" "))) - {""}
+
+
+def _jaccard_half_up(a, b):
+    """Exact word-set Jaccard rounded HALF_UP to 4 places."""
+    from decimal import ROUND_HALF_UP, Decimal
+    from fractions import Fraction
+
+    j = Fraction(len(a & b), len(a | b))
+    return float((Decimal(j.numerator) / Decimal(j.denominator)).quantize(
+        Decimal("0.0001"), rounding=ROUND_HALF_UP))
+
+
+# (doc_id, text): equal word sets written differently, one id on two
+# rows, a NULL id, a NULL text, texts without words (one of them yields a
+# non-empty 3-shingle), and a pair whose Jaccard 17/32 = 0.53125 rounds
+# differently HALF_UP and HALF_EVEN
+_MID_COMMON = " ".join(f"y{i}" for i in range(17))
+_NEAR_DUP_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "The  quick brown fox\tjumps over the lazy dog "),
+    (3, "the quick brown fox jumps over the lazy cat"),
+    (None, "the quick brown fox jumps over the lazy dog"),
+    (4, None),
+    (5, "    "),
+    (6, "\t \n"),
+    (7, "\n\t"),
+    (8, "alpha beta gamma delta"),
+    (8, "epsilon zeta"),
+    (9, "zeta epsilon delta gamma beta alpha"),
+    (10, _MID_COMMON + " " + " ".join(f"ya{i}" for i in range(8))),
+    (11, _MID_COMMON + " " + " ".join(f"yb{i}" for i in range(7))),
+    (12, "dog lazy the over jumps fox brown quick"),
+]
+
+
+@pytest.mark.parametrize("shingle_k", [1, 3])
+def test_minhash_verify_is_lossless(spark, shingle_k):
+    """The verify drops no candidate that reaches the threshold and
+    scores every pair with the exact word-set Jaccard (HALF_UP, 4
+    places); expected values are replayed in Python."""
+    from drill_spark.ops.dedup import minhash_lsh_candidates, minhash_near_dupes
+
+    df = spark.createDataFrame(_NEAR_DUP_DOCS, "doc_id long, text string")
+    words: dict = {}
+    for i, text in _NEAR_DUP_DOCS:
+        if i is not None and text is not None:
+            words.setdefault(i, set()).update(_words(text))
+    cands = {(r.id_a, r.id_b) for r in
+             minhash_lsh_candidates(df, "doc_id", "text", shingle_k=shingle_k).collect()}
+    # the cases above reach the verify: equal word sets (and, at k=3,
+    # equal 3-shingles), merged rows of id 8, the wordless 3-shingle and
+    # the midpoint pair (its word names are picked so that it is a
+    # candidate at both k)
+    assert {(1, 2), (10, 11)} <= cands
+    assert ((8, 9) in cands) == (shingle_k == 1)
+    assert ((6, 7) in cands) == (shingle_k == 3)
+    for threshold in (0.5, 0.8, 1.0):
+        rows = minhash_near_dupes(df, "doc_id", "text", threshold,
+                                  shingle_k=shingle_k).collect()
+        got = {(r.id_a, r.id_b): r.jaccard for r in rows}
+        assert len(got) == len(rows), "a pair is emitted twice"
+        assert set(got) <= cands
+        for (a, b), j in got.items():
+            assert a < b and j == _jaccard_half_up(words[a], words[b]), (a, b, j)
+        want = {(a, b) for a, b in cands if words.get(a) and words.get(b)
+                and _jaccard_half_up(words[a], words[b]) >= threshold}
+        assert set(got) == want, (threshold, set(got) ^ want)
+    assert _jaccard_half_up(words[10], words[11]) == 0.5313
+
+
+def test_minhash_bucket_cap_counts_rows(spark):
+    """``max_bucket_size`` caps a bucket on its row count: identical
+    texts share every band bucket, so exactly the cap keeps all pairs,
+    one more document drops them all, and so does a NULL-id row (it
+    counts toward the bucket though it pairs with nothing). Rows that
+    share an id are one document."""
+    from drill_spark.ops.dedup import minhash_near_dupes
+
+    text = "one two three four five six"
+    cap = 4
+
+    def pairs(rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        return {(r.id_a, r.id_b, r.jaccard) for r in
+                minhash_near_dupes(df, "doc_id", "text", 0.5, max_bucket_size=cap).collect()}
+
+    docs = [(i, text) for i in range(1, cap + 1)]
+    every = {(a, b, 1.0) for a in range(1, cap + 1) for b in range(a + 1, cap + 1)}
+    assert pairs(docs) == every
+    assert pairs(docs + [(1, text.upper())]) == every
+    assert pairs(docs + [(cap + 1, text)]) == set()
+    assert pairs(docs + [(None, text)]) == set()
+
+
 def test_simhash_shape(spark):
     from drill_spark.ops.dedup import simhash
 

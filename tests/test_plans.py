@@ -208,6 +208,22 @@ def test_multimodal_dedup_plans_no_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in phys, name
 
 
+def test_minhash_near_dupes_shuffle_count(spark):
+    """MinHash near-dup detection plans at most 7 shuffle exchanges: one
+    signature aggregation, one bucket aggregation, the candidate
+    distinct, the per-document word-set aggregation and the verify's
+    joins. Each exchange is a stage boundary, and at corpus scale each
+    is a job of its own; a per-word verify plans 17."""
+    from drill_spark.ops.dedup import minhash_near_dupes
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, None)], "doc_id long, text string")
+    pairs = minhash_near_dupes(df, "doc_id", "text", 0.5)
+    rep = plans.explain_report(pairs)
+    assert rep["shuffles"] <= 7, plans.explain_str(pairs)
+    assert rep["python_eval"] is False
+
+
 def test_search_and_fuzzy_plan_invariants(spark):
     """r8 retrieval/resolution operators: BM25 top-k must be a
     TakeOrderedAndProject (never a global sort), its df/corpus sides

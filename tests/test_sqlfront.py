@@ -22,6 +22,8 @@ import pytest
 from drill_spark.session import DrillSession
 from drill_spark.sqlfront import PIPELINE
 
+from .conftest import SF_DIR
+
 
 @pytest.fixture(scope="module")
 def dsession(spark, tmp_path_factory):
@@ -57,6 +59,37 @@ def test_table_function_options(dsession):
     )
     assert df.columns == ["a", "b"]
     assert df.count() == 2
+
+
+def test_table_function_options_unescape_doubled_quotes(dsession):
+    """A quote doubled inside a quoted option value is one quote of the
+    value (SQL escaping), for reader and pipeline options alike."""
+    from pyspark.sql import functions as F
+
+    from drill_spark.ops.pipeline import group_split
+    from drill_spark.sqlfront import _parse_tf_options
+
+    assert _parse_tf_options("query => 'it''s here', k => '3'") == {
+        "query": "it's here", "k": "3"}
+    assert _parse_tf_options("a => 'x''''y', b => \"say \"\"hi\"\"\", c => ''") == {
+        "a": "x''y", "b": 'say "hi"', "c": ""}
+
+    root = dsession.workspaces["dfs.data"].path
+    with open(os.path.join(root, "quotes.txt"), "w") as f:
+        f.write("a'b\n1'it,s\n2'y\n")
+    df = dsession.sql(
+        "select * from table(dfs.data.`quotes.txt`(type => 'text', "
+        "fieldDelimiter => '''', extractHeader => 'true'))")
+    assert df.columns == ["a", "b"]
+    assert sorted((r["a"], r["b"]) for r in df.collect()) == [("1", "it,s"), ("2", "y")]
+
+    dsession.register_fixture_tables(SF_DIR)
+    got = dsession.sql(
+        "select doc_id, split from table(pipeline.`group_split`("
+        "input => 'documents', group => 'concat(source, ''|'', lang)'))")
+    want = group_split(dsession.spark.table("documents"),
+                       F.expr("concat(source, '|', lang)"), "doc_id")
+    assert sorted(got.collect()) == sorted(want.select("doc_id", "split").collect())
 
 
 def test_table_function_log_format(dsession, tmp_path_factory):
@@ -1845,3 +1878,29 @@ def test_pipeline_binding_errors(monkeypatch, session):
     with pytest.raises(ValueError, match=r"unknown option\(s\) kk"):
         session.sql("select * from table(pipeline.`bm25`("
                     "input => 'no_such_view', query => 'x', kk => '5'))")
+
+
+def test_mixture_build_rejects_unknown_tokenizer(monkeypatch, session):
+    """`tokenizer` is whitespace (the default), bpe or fixed_bpe in any
+    case; any other value is an error instead of a silent whitespace
+    budget."""
+    need = {"input": "t", "weights": "web:1"}
+
+    def tokens(opts):
+        try:
+            calls = dict(_bind_pipeline(monkeypatch, "mixture_build", {**need, **opts}))
+        finally:
+            monkeypatch.undo()
+        return calls["pipeline.build_mixture"]["tokens"]
+
+    assert tokens({}) is None
+    assert tokens({"tokenizer": "Whitespace"}) is None
+    assert tokens({"tokenizer": "BPE"}) is not None
+    assert tokens({"tokenizer": "fixed_bpe"}) is not None
+    for bad in ("bpee", "sentencepiece", ""):
+        with pytest.raises(ValueError, match=r"option `tokenizer`.*expected one of "
+                                             r"whitespace, bpe, fixed_bpe"):
+            tokens({"tokenizer": bad})
+    with pytest.raises(ValueError, match="option `tokenizer`"):
+        session.sql("select * from table(pipeline.`mixture_build`("
+                    "input => 'no_such_view', weights => 'web:1', tokenizer => 'bpee'))")
