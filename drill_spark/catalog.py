@@ -25,10 +25,10 @@ def resolve_table(session, name: str) -> DataFrame:
     except Exception:
         pass
     if os.path.exists(name):
-        from drill_spark.readers.files import read_auto
-        from drill_spark.sqlfront import _infer_format
+        from drill_spark.readers import files, formats
 
-        return read_auto(spark, name, _infer_format(name, "parquet"), {}, session)
+        return files.read_auto(spark, name, formats.infer_format(name, "parquet"),
+                               {}, session)
     raise ValueError(f"table not found: {name}")
 
 

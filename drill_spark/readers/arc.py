@@ -35,6 +35,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drill_spark.readers.formats import list_files, scan_files
 from drill_spark.readers.warc import _CRLF2, _iter_gz_members
 
 ARC_SCHEMA = (
@@ -120,21 +121,6 @@ def _arc_records(buf: bytes, offset: int, path: str) -> list[dict]:
     return rows
 
 
-def _list_arc_files(path) -> list[str]:
-    if isinstance(path, (list, tuple)):
-        return list(path)
-    if os.path.isfile(path):
-        return [path]
-    out = []
-    for root, _, names in os.walk(path):
-        for n in sorted(names):
-            if n.endswith((".arc", ".arc.gz")):
-                out.append(os.path.join(root, n))
-    if not out:
-        raise FileNotFoundError(f"no .arc files under {path}")
-    return out
-
-
 def read_arc(
     spark: SparkSession, path, split_bytes: int = 32 << 20
 ) -> DataFrame:
@@ -144,7 +130,7 @@ def read_arc(
     docstring)."""
     import pandas as pd
 
-    files = _list_arc_files(path)
+    files = list_files(path, "arc")
     sizes = {f: os.path.getsize(f) for f in files}
     # scale-adaptive split size, same contract as readers/warc.py:
     # split_bytes caps task granularity; small inputs split finer so
@@ -183,10 +169,7 @@ def read_arc(
                         rows = []
                 yield pd.DataFrame.from_records(rows, columns=cols)
 
-    sdf = spark.createDataFrame(
-        splits, "path string, start long, end long"
-    ).repartition(min(len(splits), spark.sparkContext.defaultParallelism))
-    return sdf.mapInPandas(decode_partition, ARC_SCHEMA)
+    return scan_files(spark, splits, decode_partition, ARC_SCHEMA)
 
 
 def write_arc(

@@ -43,6 +43,8 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from drill_spark.readers.formats import list_files, scan_files
+
 MAGIC = b"Obj\x01"
 
 _PRIMITIVES = {"null", "boolean", "int", "long", "float", "double", "bytes", "string"}
@@ -490,18 +492,6 @@ def spark_to_avro_schema(st: T.StructType, name: str = "topLevelRecord") -> dict
 
 # ---------------------------------------------------------------- spark IO
 
-def _list_avro_files(path: str) -> list[str]:
-    import glob as _glob
-
-    if os.path.isdir(path):
-        found = sorted(_glob.glob(os.path.join(path, "**", "*.avro"), recursive=True))
-    else:
-        found = sorted(_glob.glob(path)) if any(c in path for c in "*?[") else [path]
-    if not found:
-        raise FileNotFoundError(f"no avro files at {path}")
-    return found
-
-
 def read_avro(
     spark: SparkSession, path: str, split_bytes: int = 32 << 20
 ) -> DataFrame:
@@ -515,7 +505,7 @@ def read_avro(
     (AvroBatchReader.java)."""
     import pandas as pd
 
-    files = _list_avro_files(path)
+    files = list_files(path, "avro")
     avro_schema, spark_schema = read_avro_schema(files[0])
     names = [f.name for f in spark_schema.fields]
 
@@ -534,10 +524,7 @@ def read_avro(
                     records = [{"value": rec} for rec in records]
                 yield pd.DataFrame.from_records(records, columns=names)
 
-    sdf = spark.createDataFrame(splits, "path string, start long, end long").repartition(
-        min(len(splits), spark.sparkContext.defaultParallelism)
-    )
-    return sdf.mapInPandas(decode_partition, spark_schema)
+    return scan_files(spark, splits, decode_partition, spark_schema)
 
 
 def write_avro(df: DataFrame, out_dir: str) -> list[str]:

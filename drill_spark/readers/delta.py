@@ -683,6 +683,11 @@ def write_delta(df: DataFrame, path: str, partition_by: list[str] | None = None,
     _maybe_checkpoint(df.sparkSession, path, version)
 
 
+def append_delta(df: DataFrame, path: str) -> None:
+    """INSERT INTO a Delta table: one append commit."""
+    write_delta(df, path, mode="append")
+
+
 class BatchLedger:
     """Exactly-once batch bookkeeping for an incremental operator's
     Delta store. Each commit carries the txn key ``<app_id>#batch<N>``,

@@ -42,9 +42,7 @@ dateTime→timestamp, time→string (Drill TIME; rendered like
 
 from __future__ import annotations
 
-import glob as _glob
 import gzip
-import os
 import re
 import struct
 from dataclasses import dataclass, field
@@ -55,6 +53,8 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from drill_spark.readers.formats import list_files, scan_files
 
 _XS = "{http://www.w3.org/2001/XMLSchema}"
 _DFDL_NS = "http://www.ogf.org/dfdl/dfdl-1.0/"
@@ -668,16 +668,7 @@ def read_dfdl(
     root = schema.root_element(root_name)
     out_schema = spark_schema(root)
 
-    if os.path.isdir(path):
-        files = sorted(
-            p for p in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(p))
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no DFDL data files at {path}")
+    files = list_files(path, "daffodil")
 
     names = [f.name for f in out_schema.fields]
 
@@ -692,9 +683,7 @@ def read_dfdl(
                     dtype=object,
                 ) if rows else pd.DataFrame({n: [] for n in names})
 
-    paths_df = spark.createDataFrame([(p,) for p in files], "path string")
-    return paths_df.repartition(min(len(files), 32)).mapInPandas(
-        decode, schema=out_schema)
+    return scan_files(spark, files, decode, out_schema)
 
 
 # ------------------------------------------------------------- writer

@@ -31,12 +31,13 @@ reference's one-ShpBatchReader-per-file granularity.
 from __future__ import annotations
 
 import datetime
-import glob as _glob
 import os
 import re
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.formats import list_files, scan_files
 
 _SRID_RE = re.compile(r"AUTHORITY\[\"\w+\"\s*,\s*\"*(\d+)\"*\]\]$")
 
@@ -197,14 +198,7 @@ def read_shp(spark: SparkSession, path: str) -> DataFrame:
     dbf attributes)."""
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.shp"), recursive=True))
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no shapefiles at {path}")
+    files = list_files(path, "shp")
 
     # attribute schema is fixed by the first file's dbf header (driver
     # reads 32 bytes + descriptors, not the data)
@@ -243,10 +237,7 @@ def read_shp(spark: SparkSession, path: str) -> DataFrame:
                     rows.append(row)
                 yield pd.DataFrame.from_records(rows, columns=cols)
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    return paths.mapInPandas(decode_partition, schema)
+    return scan_files(spark, files, decode_partition, schema)
 
 
 # ----------------------------------------------------------------- write

@@ -18,6 +18,15 @@ columns, and dirN columns derived from the path relative to the table
 root. dirN values ride on real file paths, so filters on them prune at
 the file-listing level when the layout is `root/val1/val2/...` —
 matching Drill's PruneScanRule behavior (planner/logical/partition/).
+
+``read_auto`` is the one read entry for every file format: it looks the
+format up in ``readers/formats.py::FORMATS`` (one row per format: names
+and aliases, suffixes, reader, accepted table-function options with
+their converters, writers and table-format DML), binds the options
+through the row and calls the row's reader. This module holds the
+Spark data-source readers those rows name (``read_json``, ``read_csv``,
+``read_xml``, ``read_spark`` with the parquet metadata cache) and the
+small native ones (LTSV, SequenceFile, Excel).
 """
 
 from __future__ import annotations
@@ -30,6 +39,8 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from drill_spark.readers import formats
 
 # entries a session's SchemaStore keeps before evicting the least
 # recently used one
@@ -152,144 +163,37 @@ def read_auto(
     options: dict[str, str] | None = None,
     session=None,
 ) -> DataFrame:
-    options = dict(options or {})
-    options.pop("type", None)
-    # provided schema (Drill: CREATE SCHEMA / table-function schema
-    # property, planner/sql/handlers/SchemaHandler.java,
-    # TestSchemaWithTableFunction.java): skip inference, use the DDL
-    schema = options.pop("schema", None)
-    store = getattr(session, "schema_store", None)
-    fmt = fmt.lower()
-    if fmt in ("log", "httpd", "syslog"):
-        from drill_spark.readers import logs
+    """Read ``path`` as format ``fmt`` (a name or alias) through its
+    ``formats.FORMATS`` row: the row binds the table-function
+    ``options`` to reader arguments, raising ValueError on one a native
+    reader does not accept, and names the reader. A provided ``schema``
+    option (Drill: CREATE SCHEMA / table-function schema property,
+    SchemaHandler.java) skips inference on the readers that take it."""
+    from drill_spark.session import _truthy
 
-        if fmt == "httpd":
-            return logs.read_httpd_log(spark, path)
-        if fmt == "syslog":
-            return logs.read_syslog(spark, path)
-        regex = options.pop("regex")
-        fields = [
-            (n.strip(), t.strip())
-            for n, _, t in (f.strip().partition(" ") for f in (schema or "").split(","))
-        ]
-        return logs.read_log(spark, path, regex, fields)
-    if fmt == "json":
-        return read_json(spark, path, schema=schema, store=store,
-                         **_json_kwargs(options, session))
-    if fmt in ("csv", "text", "tsv", "psv"):
-        delim = {"tsv": "\t", "psv": "|"}.get(fmt)
-        if delim and "delimiter" not in options:
-            options["delimiter"] = delim
-        return read_csv(spark, path, schema=schema, store=store,
-                        **_csv_kwargs(options, session))
-    if fmt == "xml":
-        return read_xml(spark, path, schema=schema, options=options, store=store)
-    if fmt == "ltsv":
-        return read_ltsv(spark, path, schema=schema)
-    if fmt in ("excel", "xlsx"):
-        return read_excel(spark, path, **options)
-    if fmt == "sequencefile":
-        return read_sequencefile(spark, path)
-    if fmt == "avro":
-        # self-contained OCF decoder (spark-avro jar not bundled); see
-        # drill_spark/readers/avro.py for the scale story
-        from drill_spark.readers.avro import read_avro
+    row = formats.row(fmt)
+    kwargs = row.bind(options)
+    if row.store:
+        kwargs["store"] = getattr(session, "schema_store", None)
+    for param, option in row.session_flags.items():
+        if session is not None and _truthy(session.get_option(option, "false")):
+            kwargs[param] = True
+    return formats.load(row.read)(spark, path, **kwargs)
 
-        return read_avro(spark, path)
-    if fmt in ("warc", "wet", "wat"):
-        # split-aware Common Crawl web-archive scan; `.wet` resolves to
-        # the conversion-record text view, `.wat` to the metadata-JSON
-        # view (readers/warc.py scale story)
-        from drill_spark.readers.warc import read_warc, read_wat, read_wet
 
-        reader = {"wet": read_wet, "wat": read_wat}.get(fmt, read_warc)
-        split = options.get("splitBytes", options.get("split_bytes"))
-        return reader(spark, path, **({"split_bytes": int(split)} if split else {}))
-    if fmt == "arc":
-        from drill_spark.readers.arc import read_arc
-
-        split = options.get("splitBytes", options.get("split_bytes"))
-        return read_arc(spark, path,
-                        **({"split_bytes": int(split)} if split else {}))
-    if fmt == "pcap":
-        from drill_spark.readers.pcap import read_pcap
-
-        return read_pcap(spark, path)
-    if fmt == "pcapng":
-        from drill_spark.readers.pcapng import read_pcapng
-
-        return read_pcapng(spark, path, stat=_truthy(options.get("stat", "false")))
-    if fmt in ("delta", "deltalake"):
-        # self-contained transaction-log reader (delta-spark jar not
-        # bundled); see drill_spark/readers/delta.py for the scale story
-        from drill_spark.readers.delta import read_delta
-
-        return read_delta(spark, path, options)
-    if fmt == "iceberg":
-        from drill_spark.readers.iceberg import read_iceberg
-
-        return read_iceberg(spark, path, options)
-    if fmt == "paimon":
-        from drill_spark.readers.paimon import read_paimon
-
-        return read_paimon(spark, path, options)
-    if fmt in ("shp", "esri", "shapefile"):
-        from drill_spark.readers.esri import read_shp
-
-        return read_shp(spark, path)
-    if fmt == "image":
-        from drill_spark.readers.image import read_images
-
-        return read_images(spark, path)
-    if fmt in ("spss", "sav"):
-        from drill_spark.readers.spss import read_sav
-
-        return read_sav(spark, path)
-    if fmt in ("sas", "sas7bdat"):
-        from drill_spark.readers.sas import read_sas
-
-        return read_sas(spark, path)
-    if fmt in ("msaccess", "access", "mdb", "accdb"):
-        from drill_spark.readers.msaccess import read_access
-
-        return read_access(
-            spark, path, table_name=options.get("tableName", options.get("table_name"))
-        )
-    if fmt == "pdf":
-        from drill_spark.readers.pdf import read_pdf
-
-        return read_pdf(
-            spark,
-            path,
-            combine_pages=_truthy(options.get("combinePages", "false")),
-            extract_headers=_truthy(options.get("extractHeaders", "true")),
-            default_table_index=int(options.get("defaultTableIndex", 0) or 0),
-            algorithm=options.get("extractionAlgorithm", "basic"),
-            password=options.get("password", ""),
-        )
-    if fmt in ("hdf5", "h5"):
-        from drill_spark.readers.hdf5 import read_hdf5
-
-        return read_hdf5(spark, path, options)
-    if fmt in ("daffodil", "dfdl"):
-        from drill_spark.readers.dfdl import read_dfdl
-
-        uri = options.get("schemaURI", options.get("schema_uri"))
-        if not uri:
-            raise ValueError(
-                "the daffodil format requires a schemaURI table-function "
-                "option pointing at the .dfdl.xsd (DaffodilFormatConfig)"
-            )
-        return read_dfdl(
-            spark,
-            path,
-            uri,
-            root_name=options.get("rootName", options.get("root_name")),
-            root_namespace=options.get("rootNamespace"),
-            validation_mode=_truthy(options.get("validationMode", "false")),
-        )
-    predicate = options.pop("predicate", None) if fmt == "parquet" else None
-    reader = spark.read.options(**options)
+def read_spark(
+    spark: SparkSession,
+    path: str,
+    fmt: str,
+    schema: str | None = None,
+    predicate: str | None = None,
+    options: dict | None = None,
+) -> DataFrame:
+    """A Spark data source read. On a parquet directory whose
+    REFRESH TABLE METADATA cache is fresh, the scan takes the cached
+    file list, pruned by ``predicate``; the predicate also filters the
+    rows."""
+    reader = spark.read.options(**(options or {}))
     if schema:
         reader = reader.schema(schema)
     if fmt == "parquet" and os.path.isdir(path):
@@ -342,13 +246,10 @@ def write_parquet_metadata_cache(path: str) -> dict:
     # the existing file later does not touch the dir again)
     cp = os.path.join(path, METADATA_CACHE_FILE)
     open(cp, "a").close()
-    files, dirs = [], {}
-    for root, _subdirs, names in os.walk(path):
-        dirs[os.path.relpath(root, path)] = os.path.getmtime(root)
-        for n in names:
-            if n.endswith(".parquet") and not n.startswith((".", "_")):
-                files.append(os.path.relpath(os.path.join(root, n), path))
-    files.sort()
+    dirs = {os.path.relpath(root, path): os.path.getmtime(root)
+            for root, _subdirs, _names in os.walk(path)}
+    files = [os.path.relpath(f, path) for f in formats.list_files(path, "parquet")
+             if not os.path.basename(f).startswith("_")]
     rows = {}
     stats = {}
     for rel in files:
@@ -432,26 +333,6 @@ def load_parquet_metadata_cache(path: str):
         return cache if cache.get("files") else None
     except Exception:
         return None
-
-
-def _truthy(v) -> bool:
-    return str(v).lower() in ("1", "true", "yes", "on")
-
-
-def _json_kwargs(options: dict[str, str], session) -> dict:
-    all_text = _truthy(options.pop("all_text_mode", options.pop("allTextMode", "false")))
-    if session is not None and _truthy(session.get_option("store.json.all_text_mode", "false")):
-        all_text = True
-    union = _truthy(options.pop("union_type", options.pop("unionType", "false")))
-    if session is not None and _truthy(session.get_option("exec.enable_union_type", "false")):
-        union = True
-    return {"all_text_mode": all_text, "union_mode": union, "options": options}
-
-
-def _csv_kwargs(options: dict[str, str], session) -> dict:
-    header = _truthy(options.pop("extractHeader", options.pop("header", "false")))
-    delimiter = options.pop("delimiter", options.pop("fieldDelimiter", ","))
-    return {"header": header, "delimiter": delimiter, "options": options}
 
 
 def read_json(
@@ -841,24 +722,10 @@ def read_parquet_drift(spark: SparkSession, root: str) -> DataFrame:
     Scale: the union has one branch per DISTINCT schema (typically
     2-3 for drifted tables), never per file.
     """
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
-    matches = [root] if os.path.isdir(root) else sorted(_glob.glob(root))
-    files: list[str] = []
-    for m in matches:
-        if os.path.isdir(m):
-            files += _glob.glob(os.path.join(m, "**", "*.parquet"), recursive=True)
-        elif m.endswith(".parquet"):
-            files.append(m)
-    files = sorted(set(files))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {root}")
     groups: dict[str, list[str]] = {}
-    for f in files:
+    for f in formats.list_files(root, "parquet"):
         groups.setdefault(str(pq.read_schema(f)), []).append(f)
     dfs = [spark.read.parquet(*fs) for fs in groups.values()]
     merged = merge_drifted_schemas([d.schema for d in dfs])

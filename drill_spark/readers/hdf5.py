@@ -46,12 +46,13 @@ as in the reference's one-reader-per-file)."""
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.formats import list_files, scan_files
 
 SIGNATURE = b"\x89HDF\r\n\x1a\n"
 
@@ -1061,17 +1062,7 @@ def read_hdf5(spark: SparkSession, path: str,
     opts = options or {}
     default_path = opts.get("defaultPath", opts.get("default_path"))
 
-    if os.path.isdir(path):
-        files = sorted(
-            _glob.glob(os.path.join(path, "**", "*.h5"), recursive=True)
-            + _glob.glob(os.path.join(path, "**", "*.hdf5"), recursive=True)
-        )
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no hdf5 files at {path}")
+    files = list_files(path, "hdf5")
 
     if default_path:
         with open(files[0], "rb") as f:
@@ -1135,10 +1126,7 @@ def read_hdf5(spark: SparkSession, path: str,
                         recs = v if len(dims) == 2 else [[x] for x in v]
                         yield pd.DataFrame.from_records(recs, columns=cols)
 
-        src = spark.createDataFrame([(f,) for f in files], "path string")
-        return src.repartition(
-            min(len(files), spark.sparkContext.defaultParallelism)
-        ).mapInPandas(project, schema)
+        return scan_files(spark, files, project, schema)
 
     meta_cols = [
         "path", "data_type", "file_name", "data_size", "element_count",
@@ -1153,7 +1141,4 @@ def read_hdf5(spark: SparkSession, path: str,
                     _rows_for_file(fpath), columns=meta_cols
                 )
 
-    src = spark.createDataFrame([(f,) for f in files], "path string")
-    return src.repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    ).mapInPandas(listing, HDF5_SCHEMA)
+    return scan_files(spark, files, listing, HDF5_SCHEMA)

@@ -957,6 +957,18 @@ _DELETE_ENTRY_SCHEMA = {
 }
 
 
+def describe_history(spark: SparkSession, path: str) -> DataFrame:
+    """DESCRIBE HISTORY: one row per snapshot (id, commit time,
+    operation) from the table metadata."""
+    snaps = _table_metadata(path).get("snapshots") or []
+    return spark.createDataFrame(
+        [(int(s["snapshot-id"]), int(s.get("timestamp-ms", 0)),
+          (s.get("summary") or {}).get("operation"))
+         for s in snaps],
+        "version long, timestamp_ms long, operation string",
+    )
+
+
 def append_delete_files(
     path: str,
     position_deletes: list[tuple[str, int]] | None = None,

@@ -29,11 +29,12 @@ scan cost is file-count bound, not byte bound.
 from __future__ import annotations
 
 import datetime
-import glob as _glob
 import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.formats import list_files, scan_files
 
 IMAGE_SCHEMA = (
     "file_name string, file_size bigint, file_date_time timestamp, "
@@ -41,8 +42,6 @@ IMAGE_SCHEMA = (
     "dpi_width double, dpi_height double, color_mode string, "
     "bits_per_pixel int, has_alpha boolean, exif map<string,string>"
 )
-
-_SUFFIXES = (".png", ".jpg", ".jpeg", ".gif", ".bmp")
 
 # common EXIF tag names (the public EXIF 2.3 tag dictionary)
 _TAGS_IFD0 = {
@@ -244,18 +243,7 @@ def read_images(spark: SparkSession, path: str) -> DataFrame:
     """Distributed image-metadata read: one row per image file."""
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(
-            f
-            for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if f.lower().endswith(_SUFFIXES)
-        )
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no image files at {path}")
+    files = list_files(path, "image")
 
     cols = [
         "file_name", "file_size", "file_date_time", "format", "pixel_width",
@@ -279,7 +267,4 @@ def read_images(spark: SparkSession, path: str) -> DataFrame:
                 rows.append(row)
             yield pd.DataFrame.from_records(rows, columns=cols)
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    return paths.mapInPandas(probe_partition, IMAGE_SCHEMA)
+    return scan_files(spark, files, probe_partition, IMAGE_SCHEMA)

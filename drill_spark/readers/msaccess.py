@@ -43,6 +43,8 @@ from __future__ import annotations
 import datetime
 import struct
 
+from drill_spark.readers.formats import list_files, scan_files
+
 _EPOCH = datetime.datetime(1899, 12, 30)
 
 # byte widths of the fixed-size jet types (used to spot CALCULATED
@@ -472,22 +474,9 @@ def read_access(spark, path: str, table_name: str | None = None):
     columns) when no table is named — the reference reader's two
     modes. One file per task via mapInPandas; schema probed from the
     first file on the driver."""
-    import glob as _glob
-    import os
-
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(
-            f for f in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if f.lower().endswith((".mdb", ".accdb"))
-        )
-    elif any(ch in path for ch in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no access databases at {path}")
+    files = list_files(path, "msaccess")
 
     if table_name is None:
         schema = ("table string, created_date timestamp_ntz, "
@@ -504,8 +493,7 @@ def read_access(spark, path: str, table_name: str | None = None):
                     rows, columns=["table", "created_date", "updated_date",
                                    "row_count", "col_count", "columns"])
 
-        paths = spark.createDataFrame([(p,) for p in files], "path string")
-        return paths.repartition(min(len(files), 32)).mapInPandas(scan_meta, schema)
+        return scan_files(spark, files, scan_meta, schema)
 
     with open(files[0], "rb") as fh:
         cols, _ = read_access_table(fh.read(), table_name)
@@ -523,8 +511,7 @@ def read_access(spark, path: str, table_name: str | None = None):
                 rows.extend(file_rows)
             yield pd.DataFrame.from_records(rows, columns=names)
 
-    paths = spark.createDataFrame([(p,) for p in files], "path string")
-    return paths.repartition(min(len(files), 32)).mapInPandas(scan_rows, schema)
+    return scan_files(spark, files, scan_rows, schema)
 
 
 def list_access_tables(data: bytes) -> list[dict]:

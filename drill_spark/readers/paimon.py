@@ -410,3 +410,44 @@ def write_paimon(df: DataFrame, path: str, mode: str = "error",
         json.dump(snap, f)
     with open(os.path.join(path, "snapshot", "LATEST"), "w") as f:
         f.write(str(new_id))
+
+
+def _pk_dml(spark: SparkSession, path: str, condition: str,
+            assignments: dict[str, str] | None) -> int:
+    """DELETE / UPDATE on a Paimon primary-key table, expressed the
+    LSM-native way: matched rows become a new commit of delete markers
+    (row kind D) or updated copies (row kind I), and the reader's
+    max-sequence merge applies them — no file is rewritten, which is
+    exactly how PK tables absorb churn at scale."""
+    schema = _load_schema(path, load_snapshot(path).get("schemaId", 0))
+    pk = schema.get("primaryKeys") or []
+    if not pk:
+        raise NotImplementedError(
+            "DELETE/UPDATE on paimon needs a primary-key table "
+            "(append tables are immutable — rewrite via CTAS)"
+        )
+    matched = read_paimon(spark, path).where(condition)
+    if assignments:
+        bad = [c for c in assignments if c in pk]
+        if bad:
+            raise ValueError(f"cannot UPDATE primary key column(s): {bad}")
+        for col, expr in assignments.items():
+            matched = matched.withColumn(col, F.expr(expr))
+        out = matched.withColumn("__op", F.lit("I"))
+    else:
+        out = matched.withColumn("__op", F.lit("D"))
+    n = out.count()
+    if n:
+        write_paimon(out, path, mode="append", primary_keys=pk, row_kind_col="__op")
+    return n
+
+
+def delete_where(spark: SparkSession, path: str, condition: str) -> int:
+    """DELETE FROM a primary-key table; returns the rows deleted."""
+    return _pk_dml(spark, path, condition, None)
+
+
+def update_where(spark: SparkSession, path: str, condition: str,
+                 assignments: dict[str, str]) -> int:
+    """UPDATE a primary-key table; returns the rows updated."""
+    return _pk_dml(spark, path, condition, assignments)

@@ -21,10 +21,11 @@ Column set mirrors the reference's PcapBatchReader columns
 from __future__ import annotations
 
 import datetime
-import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.formats import list_files, scan_files
 
 PCAP_SCHEMA = (
     "type string, `timestamp` timestamp_ntz, network int, "
@@ -134,20 +135,9 @@ def decode_pcap(data: bytes) -> list[dict]:
 
 def read_pcap(spark: SparkSession, path: str) -> DataFrame:
     """Distributed pcap read: mapInPandas over the capture-file list."""
-    import glob as _glob
-
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(
-            _glob.glob(os.path.join(path, "**", "*.pcap"), recursive=True)
-        )
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no pcap files at {path}")
+    files = list_files(path, "pcap")
 
     cols = [
         "type", "timestamp", "network", "src_ip", "dst_ip", "src_port",
@@ -162,7 +152,4 @@ def read_pcap(spark: SparkSession, path: str) -> DataFrame:
                     rows = decode_pcap(f.read())
                 yield pd.DataFrame.from_records(rows, columns=cols)
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    return paths.mapInPandas(decode_partition, PCAP_SCHEMA)
+    return scan_files(spark, files, decode_partition, PCAP_SCHEMA)

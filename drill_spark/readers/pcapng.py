@@ -30,11 +30,11 @@ Spark-first shape (same as readers/pcap.py): driver lists files,
 from __future__ import annotations
 
 import datetime
-import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drill_spark.readers.formats import list_files, scan_files
 from drill_spark.readers.pcap import parse_ethernet
 
 PCAPNG_SCHEMA = (
@@ -191,18 +191,9 @@ def read_pcapng(spark: SparkSession, path: str, stat: bool = False) -> DataFrame
     """Distributed pcapng read: mapInPandas over the capture-file list.
     ``stat=True`` returns one metadata row per file (the reference's
     ``stat`` format-config option)."""
-    import glob as _glob
-
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.pcapng"), recursive=True))
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no pcapng files at {path}")
+    files = list_files(path, "pcapng")
 
     schema = STAT_SCHEMA if stat else PCAPNG_SCHEMA
     cols = [s.strip().split()[0].strip("`") for s in schema.split(",")]
@@ -218,7 +209,4 @@ def read_pcapng(spark: SparkSession, path: str, stat: bool = False) -> DataFrame
                         r["path"] = fpath
                 yield pd.DataFrame.from_records(rows, columns=cols)
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    return paths.mapInPandas(decode_partition, schema)
+    return scan_files(spark, files, decode_partition, schema)

@@ -22,14 +22,13 @@ driver only lists file names and probes ONE file for the schema.
 from __future__ import annotations
 
 import datetime
-import glob as _glob
-import os
 import re
 import unicodedata
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from drill_spark.readers.formats import list_files, scan_files
 from drill_spark.readers.pdf_core import (
     PdfDocument,
     parse_pdf_date,
@@ -203,14 +202,7 @@ def read_pdf(
     every file's rows are then extracted on executors."""
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.pdf"), recursive=True))
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no pdf files at {path}")
+    files = list_files(path, "pdf")
 
     with open(files[0], "rb") as f:
         head_names, _, _ = _rows_for_file(
@@ -242,9 +234,7 @@ def read_pdf(
                     ]
                 yield pd.DataFrame.from_records(out, columns=[f.name for f in fields])
 
-    paths_df = spark.createDataFrame([(p,) for p in files], "path string")
-    n_parts = min(len(files), max(spark.sparkContext.defaultParallelism, 1))
-    return paths_df.repartition(n_parts).mapInPandas(scan, schema)
+    return scan_files(spark, files, scan, schema)
 
 
 def write_pdf_table(path: str, header: list[str], rows: list[list],

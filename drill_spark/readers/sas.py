@@ -38,11 +38,11 @@ as many files, which is the useful axis of parallelism).
 from __future__ import annotations
 
 import datetime
-import glob as _glob
-import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.formats import list_files, scan_files
 
 _SAS_EPOCH = datetime.datetime(1960, 1, 1)
 
@@ -432,14 +432,7 @@ def read_sas(spark: SparkSession, path: str) -> DataFrame:
     (typed data columns + implicit metadata columns)."""
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.sas7bdat"), recursive=True))
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no .sas7bdat files at {path}")
+    files = list_files(path, "sas")
 
     with open(files[0], "rb") as fh:
         f0 = SasFile(fh.read())
@@ -474,7 +467,4 @@ def read_sas(spark: SparkSession, path: str) -> DataFrame:
                     r.update(meta)
                 yield pd.DataFrame.from_records(rows, columns=data_cols + meta_names)
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    return paths.mapInPandas(decode_partition, schema)
+    return scan_files(spark, files, decode_partition, schema)

@@ -31,11 +31,11 @@ SPSS files are survey-scale, so file-parallelism matches reality.
 
 from __future__ import annotations
 
-import glob as _glob
-import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.readers.formats import list_files, scan_files
 
 _SYSMIS = -1.7976931348623157e308
 
@@ -269,14 +269,7 @@ def read_sav(spark: SparkSession, path: str) -> DataFrame:
     columns, strings as-is)."""
     import pandas as pd
 
-    if os.path.isdir(path):
-        files = sorted(_glob.glob(os.path.join(path, "**", "*.sav"), recursive=True))
-    elif any(c in path for c in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        files = [path]
-    if not files:
-        raise FileNotFoundError(f"no .sav files at {path}")
+    files = list_files(path, "spss")
 
     with open(files[0], "rb") as f:
         head = f.read()
@@ -295,7 +288,4 @@ def read_sav(spark: SparkSession, path: str) -> DataFrame:
                     _, rows = decode_sav(f.read())
                 yield pd.DataFrame.from_records(rows, columns=cols)
 
-    paths = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-    return paths.mapInPandas(decode_partition, schema)
+    return scan_files(spark, files, decode_partition, schema)

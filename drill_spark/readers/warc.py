@@ -47,6 +47,8 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drill_spark.readers.formats import list_files, scan_files
+
 _GZ_MAGIC = b"\x1f\x8b\x08"
 _CRLF2 = b"\r\n\r\n"
 
@@ -297,22 +299,6 @@ def _iter_plain_records(path: str, start: int, end: int):
 
 # ---------------------------------------------------------------- read
 
-def _list_warc_files(path) -> list[str]:
-    if isinstance(path, (list, tuple)):  # explicit file list (streaming
-        return list(path)                # ingest hands over new arrivals)
-    if os.path.isfile(path):
-        return [path]
-    out = []
-    for root, _, names in os.walk(path):
-        for n in sorted(names):
-            if n.endswith((".warc", ".warc.gz", ".wet", ".wet.gz",
-                           ".wat", ".wat.gz")):
-                out.append(os.path.join(root, n))
-    if not out:
-        raise FileNotFoundError(f"no .warc/.wet files under {path}")
-    return out
-
-
 def read_warc(
     spark: SparkSession, path: str, split_bytes: int = 32 << 20,
     with_payload: bool = True,
@@ -325,7 +311,7 @@ def read_warc(
     inventory scan never moves body bytes through Arrow."""
     import pandas as pd
 
-    files = _list_warc_files(path)
+    files = list_files(path, "warc", "wet", "wat")
     sizes = {f: os.path.getsize(f) for f in files}
     # split_bytes is the CEILING (task granularity at corpus scale); a
     # small input splits finer — one split per core when the bytes
@@ -373,10 +359,7 @@ def read_warc(
                         rows = []
                 yield pd.DataFrame.from_records(rows, columns=cols)
 
-    sdf = spark.createDataFrame(
-        splits, "path string, start long, end long"
-    ).repartition(min(len(splits), spark.sparkContext.defaultParallelism))
-    return sdf.mapInPandas(decode_partition, schema_str)
+    return scan_files(spark, splits, decode_partition, schema_str)
 
 
 def read_wat(spark: SparkSession, path: str, **kw) -> DataFrame:
@@ -543,6 +526,16 @@ def write_warc(
     _ = cols  # schema captured for closure clarity
     manifest = df.mapInPandas(write_partition, "file string, rows long").collect()
     return [r["file"] for r in manifest]
+
+
+def write_wet(df: DataFrame, out_dir: str) -> list[str]:
+    """CTAS into a WET table: ``conversion`` records."""
+    return write_warc(df, out_dir, record_type="conversion")
+
+
+def write_wat(df: DataFrame, out_dir: str) -> list[str]:
+    """CTAS into a WAT table: ``metadata`` records."""
+    return write_warc(df, out_dir, record_type="metadata")
 
 
 def generate_wat(

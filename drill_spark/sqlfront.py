@@ -10,9 +10,11 @@ delegates everything else untouched — **no Catalyst fork**.
 
 Rewrites performed:
 - ``<workspace>.`<path>``` table refs  → read the file(s), register a
-  temp view, substitute the view name. Format chosen by file suffix or
-  the workspace default (schema-on-read: ScanBatch.java:73 analog is
-  Spark's reader inference).
+  temp view, substitute the view name. Format chosen by
+  ``readers/formats.py::infer_format`` (table-format directory, file
+  suffix) or the workspace default, read through its ``FORMATS`` row
+  (schema-on-read: ScanBatch.java:73 analog is Spark's reader
+  inference).
 - ``table(<ws>.`p`(<k> => '<v>', ...))`` table functions → reader options
   (TestSelectWithOption.java semantics).
 - ``table(pipeline.`<name>`(<k> => '<v>', ...))`` → an ops/ operator,
@@ -47,11 +49,15 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 from dataclasses import dataclass
 from importlib import import_module
 from typing import Callable
 
 from pyspark.sql import DataFrame, Row
+
+from drill_spark.readers import files, formats
+from drill_spark.readers.formats import flag
 
 # ws.`/path` or ws.sub.`/path`  (workspace part without backticks)
 _PATH_TABLE = re.compile(r"(?<![\w`])((?:\w+\.)+)`([^`]+)`")
@@ -163,40 +169,6 @@ def _split_where(tail: str) -> tuple[str, str]:
                 return tail[:i].rstrip(), tail[i + 5:].strip()
         i += 1
     raise ValueError("UPDATE requires a WHERE clause")
-
-
-def _paimon_pk_dml(spark, path: str, condition: str,
-                   assignments: dict[str, str] | None) -> int:
-    """DELETE / UPDATE on a Paimon primary-key table, expressed the
-    LSM-native way: matched rows become a new commit of delete markers
-    (row kind D) or updated copies (row kind I), and the reader's
-    max-sequence merge applies them — no file is rewritten, which is
-    exactly how PK tables absorb churn at scale."""
-    from pyspark.sql import functions as F
-
-    from drill_spark.readers.paimon import _load_schema, load_snapshot, read_paimon, write_paimon
-
-    schema = _load_schema(path, load_snapshot(path).get("schemaId", 0))
-    pk = schema.get("primaryKeys") or []
-    if not pk:
-        raise NotImplementedError(
-            "DELETE/UPDATE on paimon needs a primary-key table "
-            "(append tables are immutable — rewrite via CTAS)"
-        )
-    matched = read_paimon(spark, path).where(condition)
-    if assignments:
-        bad = [c for c in assignments if c in pk]
-        if bad:
-            raise ValueError(f"cannot UPDATE primary key column(s): {bad}")
-        for col, expr in assignments.items():
-            matched = matched.withColumn(col, F.expr(expr))
-        out = matched.withColumn("__op", F.lit("I"))
-    else:
-        out = matched.withColumn("__op", F.lit("D"))
-    n = out.count()
-    if n:
-        write_paimon(out, path, mode="append", primary_keys=pk, row_kind_col="__op")
-    return n
 
 
 def _split_top_level(clause: str) -> list[str]:
@@ -372,78 +344,6 @@ def _parse_incr_mv(select: str):
     }
 
 
-_SUFFIX_FORMAT = {
-    ".parquet": "parquet",
-    ".json": "json",
-    ".csv": "csv",
-    ".tsv": "csv",
-    ".psv": "csv",
-    ".avro": "avro",
-    ".pcap": "pcap",
-    ".pcapng": "pcapng",
-    ".xlsx": "excel",
-    ".orc": "orc",
-    ".xml": "xml",
-    ".ltsv": "ltsv",
-    ".shp": "shp",
-    ".png": "image",
-    ".jpg": "image",
-    ".jpeg": "image",
-    ".gif": "image",
-    ".bmp": "image",
-    ".sav": "spss",
-    ".sas7bdat": "sas",
-    ".h5": "hdf5",
-    ".hdf5": "hdf5",
-    ".pdf": "pdf",
-    ".mdb": "msaccess",
-    ".accdb": "msaccess",
-    ".warc": "warc",
-    ".warc.gz": "warc",
-    ".wet": "wet",
-    ".wet.gz": "wet",
-    ".wat": "wat",
-    ".wat.gz": "wat",
-    ".arc": "arc",
-    ".arc.gz": "arc",
-}
-
-
-def _infer_format(path: str, default: str, _depth: int = 3) -> str:
-    for suf, fmt in _SUFFIX_FORMAT.items():
-        if path.rstrip("/").endswith(suf):
-            return fmt
-    # directory: sniff for a recognizable file, descending into
-    # partition subdirectories (Hive `k=v` layouts put data 1+ level down)
-    if _depth and os.path.isdir(path):
-        entries = sorted(os.listdir(path))
-        # table-format markers first (DeltaFormatMatcher.java /
-        # IcebergFormatMatcher.java detect directories, not suffixes)
-        if "_delta_log" in entries:
-            return "delta"
-        if "snapshot" in entries and any(
-            f.startswith("snapshot-") or f == "LATEST"
-            for f in os.listdir(os.path.join(path, "snapshot"))
-        ):
-            return "paimon"
-        if "metadata" in entries and any(
-            f.endswith(".metadata.json")
-            for f in os.listdir(os.path.join(path, "metadata"))
-        ):
-            return "iceberg"
-        for f in entries:
-            for suf, fmt in _SUFFIX_FORMAT.items():
-                if f.endswith(suf):
-                    return fmt
-        for f in entries:
-            sub = os.path.join(path, f)
-            if os.path.isdir(sub):
-                found = _infer_format(sub, "", _depth - 1)
-                if found:
-                    return found
-    return default
-
-
 def _resolve_input(session, ref: str) -> DataFrame:
     """Resolve a pipeline table-function input: a registered table/view
     name first, then a Drill-style `ws.relpath`, then a bare
@@ -459,10 +359,8 @@ def _resolve_input(session, ref: str) -> DataFrame:
         if ws in session.workspaces:
             return _read_path(session, ws, rest.strip("`"))
     if os.path.exists(ref):
-        from drill_spark.readers.files import read_auto
-
-        return read_auto(session.spark, ref, _infer_format(ref, "parquet"),
-                         {}, session)
+        return files.read_auto(session.spark, ref,
+                               formats.infer_format(ref, "parquet"), {}, session)
     return session.spark.table(ref)
 
 
@@ -489,14 +387,6 @@ def _names(v: str) -> tuple[str, ...]:
 
 def _ints(v: str) -> list[int]:
     return [int(x) for x in v.split(",")]
-
-
-def _flag(v: str) -> bool:
-    flag = {"true": True, "1": True, "yes": True,
-            "false": False, "0": False, "no": False}.get(v.lower())
-    if flag is None:
-        raise ValueError(f"expected true or false, got {v!r}")
-    return flag
 
 
 def _expr(v: str):
@@ -679,11 +569,11 @@ PIPELINE: dict[str, Op] = {
     "domain_stats": _op("text.domain_stats", text="text_col", url="url_col",
                         blocklist=("blocklist", _names)),
     "robots_filter": _op(_robots_filter, {"input": "urls", "rules": "rules"},
-                         url="url_col", rules_are_text=("rules_are_text", _flag),
+                         url="url_col", rules_are_text=("rules_are_text", flag),
                          robots="text_col", domain="domain_col", agent="agent"),
     "luhn_scan": _op("pipeline.luhn_scan", id=_ID, text=_TEXT),
     "classify_lang": _op("langid.classify_lang", text="text_col", out="out_col",
-                         distance=("keep_distance", _flag)),
+                         distance=("keep_distance", flag)),
     "corpus_report": _op("text.corpus_report", id="id_col", text="text_col",
                          strata="strata_col", lang="lang_col"),
     "source_diversity": _op("text.source_diversity", group="group_col",
@@ -763,7 +653,7 @@ PIPELINE: dict[str, Op] = {
                         k=("k", float)),
     "topk_per_key": _op("scale.salted_topk", keys=("key_cols", _commas, _REQ),
                         order=("order_col", str, _REQ), k=("k", int, "10"),
-                        ascending=("ascending", _flag), salt=("salt", int)),
+                        ascending=("ascending", flag), salt=("salt", int)),
     # model-quality metrics
     "quality_auc": _op("mlmetrics.binary_auc", label=("label_col", str, _REQ),
                        score=("score_col", str, _REQ),
@@ -820,7 +710,6 @@ def _pipeline_table(session, op: str, opts: dict[str, str]) -> DataFrame:
 
 def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | None = None) -> DataFrame:
     from drill_spark.readers.external import PLUGINS, read_plugin
-    from drill_spark.readers.files import read_auto
 
     ws = session.workspaces.get(ws_name.rstrip("."))
     if ws is not None and ws.kind in PLUGINS:
@@ -837,7 +726,7 @@ def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | N
         with open(vp) as f:
             view = _json.load(f)
         return session.spark.sql(rewrite(session, view["sql"]))
-    fmt = (options or {}).get("type", _infer_format(path, default_fmt))
+    fmt = (options or {}).get("type") or formats.infer_format(path, default_fmt)
     opts = dict(options or {})
     sf = os.path.join(path, SCHEMA_FILE)
     if "schema" not in opts and os.path.isdir(path) and os.path.exists(sf):
@@ -847,7 +736,7 @@ def _read_path(session, ws_name: str, rel_path: str, options: dict[str, str] | N
 
         with open(sf) as f:
             opts["schema"] = _json.load(f)["ddl"]
-    return read_auto(session.spark, path, fmt, opts, session)
+    return files.read_auto(session.spark, path, fmt, opts, session)
 
 
 _TF_OPT = re.compile(
@@ -989,45 +878,11 @@ def _drill_cols_to_spark_ddl(cols: str) -> str:
     return ", ".join(out)
 
 
-def _write_custom(df: DataFrame, path: str, fmt: str, part_cols: list[str], mode: str) -> None:
-    """CTAS into a format backed by our native writers (avro OCF,
-    delta transaction log, iceberg metadata tree, paimon snapshots)."""
-    import shutil
-
-    if os.path.exists(path):
-        if mode != "overwrite":
-            raise ValueError(f"table already exists: {path}")
-        shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
-    if fmt == "avro":
-        from drill_spark.readers.avro import write_avro
-
-        if part_cols:
-            raise NotImplementedError("PARTITION BY is not supported for avro CTAS")
-        write_avro(df, path)
-    elif fmt in ("delta", "deltalake"):
-        from drill_spark.readers.delta import write_delta
-
-        write_delta(df, path, partition_by=part_cols or None)
-    elif fmt == "paimon":
-        from drill_spark.readers.paimon import write_paimon
-
-        if part_cols:
-            raise NotImplementedError("PARTITION BY is not supported for paimon CTAS")
-        write_paimon(df, path)
-    elif fmt in ("warc", "wet", "wat"):
-        from drill_spark.readers.warc import write_warc
-
-        if part_cols:
-            raise NotImplementedError(
-                "PARTITION BY is not supported for warc CTAS")
-        write_warc(df, path, record_type={
-            "wet": "conversion", "wat": "metadata"}.get(fmt, "response"))
-    else:
-        from drill_spark.readers.iceberg import write_iceberg
-
-        if part_cols:
-            raise NotImplementedError("PARTITION BY is not supported for iceberg CTAS")
-        write_iceberg(df, path)
+def _table_fn(path: str, op: str):
+    """The ``op`` function (a ``formats.Format`` field) of the table
+    format at ``path``, or None when its row has none."""
+    ref = getattr(formats.row(formats.infer_format(path, "")), op)
+    return formats.load(ref) if ref else None
 
 
 def _writable_path(session, ws_name: str, rel_path: str) -> tuple[str, str]:
@@ -1041,7 +896,7 @@ def _writable_path(session, ws_name: str, rel_path: str) -> tuple[str, str]:
     # `store.format` session option overrides the workspace default
     # (ExecConstants OUTPUT_FORMAT_OPTION — Drill's CTAS output format)
     default_fmt = session.get_option("store.format", ws.default_format)
-    fmt = _infer_format(path, default_fmt)
+    fmt = formats.infer_format(path, default_fmt)
     return path, fmt
 
 
@@ -1094,12 +949,20 @@ def execute(session, query: str) -> DataFrame:
         df = spark.sql(rewrite(session, select))
         mode = "overwrite" if re.match(r"\s*CREATE\s+OR\s+REPLACE", query, re.IGNORECASE) else "errorifexists"
         cols = [c.strip().strip("`") for c in (part_cols or "").split(",") if c.strip()]
-        if fmt in ("avro", "delta", "deltalake", "iceberg", "paimon",
-                   "warc", "wet", "wat"):
+        row = formats.row(fmt)
+        if row.write:
             # formats written by our native writers, not a JVM datasource
-            _write_custom(df, path, fmt, cols, mode)
+            if cols and not row.partitions:
+                raise NotImplementedError(
+                    f"PARTITION BY is not supported for {row.name} CTAS")
+            if os.path.exists(path):
+                if mode != "overwrite":
+                    raise ValueError(f"table already exists: {path}")
+                shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+            formats.load(row.write)(df, path, **({"partition_by": cols} if cols else {}))
         else:
-            writer = df.write.format(fmt).mode(mode)
+            writer = df.write.format(row.spark or row.name).options(
+                **row.spark_options).mode(mode)
             if cols:
                 # CTAS PARTITION BY (CreateTableHandler.java) -> Hive-layout
                 # directories; filters on partition columns prune at listing
@@ -1115,21 +978,15 @@ def execute(session, query: str) -> DataFrame:
 
     m = _INSERT_PATH.match(query)
     if m:
-        import glob as _glob
-
         ws_name, rel_path, select = m.group(1).rstrip("."), m.group(2), m.group(3)
         path, fmt = _writable_path(session, ws_name, rel_path)
         df = spark.sql(rewrite(session, select))
-        if fmt in ("delta", "deltalake") or os.path.isdir(os.path.join(path, "_delta_log")):
-            from drill_spark.readers.delta import write_delta
-
-            write_delta(df, path, mode="append")
-        elif _glob.glob(os.path.join(_glob.escape(path), "metadata", "*.metadata.json")):
-            from drill_spark.readers.iceberg import append_iceberg
-
-            append_iceberg(df, path)
+        row = formats.row(fmt)
+        if row.insert:
+            formats.load(row.insert)(df, path)
         else:
-            df.write.format(fmt).mode("append").save(path)
+            df.write.format(row.spark or row.name).options(
+                **row.spark_options).mode("append").save(path)
         spark.catalog.refreshByPath(path)
         return _ok(spark, f"appended to {ws_name}.`{rel_path}`")
 
@@ -1165,21 +1022,10 @@ def execute(session, query: str) -> DataFrame:
         ws = session.workspaces.get(ws_name)
         root = ws.path if ws else "/"
         path = rel_path if os.path.isabs(rel_path) else os.path.join(root, rel_path)
-        if os.path.isdir(os.path.join(path, "_delta_log")):
-            from drill_spark.readers.delta import describe_history
-
-            return describe_history(spark, path)
-        if os.path.isdir(os.path.join(path, "metadata")):
-            from drill_spark.readers.iceberg import _table_metadata
-
-            snaps = _table_metadata(path).get("snapshots") or []
-            return spark.createDataFrame(
-                [(int(s["snapshot-id"]), int(s.get("timestamp-ms", 0)),
-                  (s.get("summary") or {}).get("operation"))
-                 for s in snaps],
-                "version long, timestamp_ms long, operation string",
-            )
-        raise ValueError(f"DESCRIBE HISTORY needs a delta or iceberg table: {path}")
+        describe_history = _table_fn(path, "history")
+        if describe_history is None:
+            raise ValueError(f"DESCRIBE HISTORY needs a delta or iceberg table: {path}")
+        return describe_history(spark, path)
 
     m = _RESTORE_PATH.match(query)
     if m:
@@ -1196,17 +1042,12 @@ def execute(session, query: str) -> DataFrame:
 
     m = _MERGE_PATH.match(query)
     if m:
-        import glob as _glob
-
         ws_name, rel_path, src_text, on_cond, set_clause, del_kw, ins_cols, ins_vals = (
             m.group(1).rstrip("."), m.group(2), m.group(3).strip(), m.group(4),
             m.group(5), m.group(6), m.group(7), m.group(8))
         path, _ = _writable_path(session, ws_name, rel_path)
-        if os.path.isdir(os.path.join(path, "_delta_log")):
-            from drill_spark.readers.delta import merge_into
-        elif _glob.glob(os.path.join(_glob.escape(path), "metadata", "*.metadata.json")):
-            from drill_spark.readers.iceberg import merge_into
-        else:
+        merge_into = _table_fn(path, "merge")
+        if merge_into is None:
             raise NotImplementedError("MERGE needs a delta or iceberg table")
 
         if src_text.startswith("(") and src_text.endswith(")"):
@@ -1231,26 +1072,16 @@ def execute(session, query: str) -> DataFrame:
 
     m = _UPDATE_PATH.match(query)
     if m:
-        import glob as _glob
-
         ws_name, rel_path = m.group(1).rstrip("."), m.group(2)
         set_clause, cond = _split_where(m.group(3))
         path, _ = _writable_path(session, ws_name, rel_path)
-        if os.path.isdir(os.path.join(path, "_delta_log")):
-            from drill_spark.readers.delta import update_where
-
-            n = update_where(spark, path, cond, _split_set_clause(set_clause))
-        elif _glob.glob(os.path.join(_glob.escape(path), "metadata", "*.metadata.json")):
-            from drill_spark.readers.iceberg import update_where
-
-            n = update_where(spark, path, cond, _split_set_clause(set_clause))
-        elif os.path.isdir(os.path.join(path, "snapshot")):
-            n = _paimon_pk_dml(spark, path, cond, _split_set_clause(set_clause))
-        else:
+        update_where = _table_fn(path, "update")
+        if update_where is None:
             raise NotImplementedError(
                 "UPDATE needs a delta, iceberg or paimon-PK table "
                 "(plain parquet: rewrite via CTAS)"
             )
+        n = update_where(spark, path, cond, _split_set_clause(set_clause))
         spark.catalog.refreshByPath(path)
         return spark.createDataFrame(
             [Row(ok=True, summary=f"updated {n} rows in {ws_name}.`{rel_path}`",
@@ -1259,25 +1090,15 @@ def execute(session, query: str) -> DataFrame:
 
     m = _DELETE_PATH.match(query)
     if m:
-        import glob as _glob
-
         ws_name, rel_path, cond = m.group(1).rstrip("."), m.group(2), m.group(3)
         path, _ = _writable_path(session, ws_name, rel_path)
-        if os.path.isdir(os.path.join(path, "_delta_log")):
-            from drill_spark.readers.delta import delete_where
-
-            n = delete_where(spark, path, cond)
-        elif _glob.glob(os.path.join(_glob.escape(path), "metadata", "*.metadata.json")):
-            from drill_spark.readers.iceberg import delete_where
-
-            n = delete_where(spark, path, cond)
-        elif os.path.isdir(os.path.join(path, "snapshot")):
-            n = _paimon_pk_dml(spark, path, cond, None)
-        else:
+        delete_where = _table_fn(path, "delete")
+        if delete_where is None:
             raise NotImplementedError(
                 "DELETE needs a delta, iceberg or paimon-PK table (plain parquet "
                 "files are immutable — rewrite via CTAS instead)"
             )
+        n = delete_where(spark, path, cond)
         spark.catalog.refreshByPath(path)
         return spark.createDataFrame(
             [Row(ok=True, summary=f"deleted {n} rows from {ws_name}.`{rel_path}`",
@@ -1292,8 +1113,6 @@ def execute(session, query: str) -> DataFrame:
             if if_exists:
                 return _ok(spark, f"table {rel_path} did not exist")
             raise ValueError(f"table not found: {ws_name}.`{rel_path}`")
-        import shutil
-
         shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
         return _ok(spark, f"dropped table {ws_name}.`{rel_path}`")
 
@@ -1327,18 +1146,10 @@ def execute(session, query: str) -> DataFrame:
             path = m.group(2) if os.path.isabs(m.group(2)) else os.path.join(root, m.group(2))
         else:
             path = m.group(3)
-        import glob as _glob
-
-        if os.path.isdir(path) and _glob.glob(
-                os.path.join(_glob.escape(path), "**", "*.parquet"),
-                recursive=True) and not os.path.isdir(
-                os.path.join(path, "_delta_log")) and not os.path.isdir(
-                os.path.join(path, "metadata")):
+        if os.path.isdir(path) and formats.infer_format(path, "") == "parquet":
             # plain parquet dir: write the .drill.parquet_metadata cache
             # (MetadataHandler.java; reads consult it to skip listing)
-            from drill_spark.readers.files import write_parquet_metadata_cache
-
-            cache = write_parquet_metadata_cache(path)
+            cache = files.write_parquet_metadata_cache(path)
             spark.catalog.refreshByPath(path)
             return _ok(spark, f"metadata cache updated for {path}: "
                               f"{len(cache['files'])} files, "
@@ -1351,8 +1162,6 @@ def execute(session, query: str) -> DataFrame:
 
     m = _CREATE_VIDX.match(query)
     if m:
-        import shutil
-
         from drill_spark.ops.vecindex import build_vector_index
 
         or_replace, name, src, col, opts_raw = m.groups()
@@ -1379,8 +1188,6 @@ def execute(session, query: str) -> DataFrame:
 
     m = _DROP_VIDX.match(query)
     if m:
-        import shutil
-
         if_exists, name = m.groups()
         path = session.vector_indexes.pop(name, None)
         if path is None:
@@ -1443,8 +1250,6 @@ def execute(session, query: str) -> DataFrame:
                 return _ok(spark, f"materialized view {name} did not exist")
             raise ValueError(f"materialized view not found: {name}")
         spark.catalog.dropTempView(name)
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)
         return _ok(spark, f"materialized view {name} dropped")
 

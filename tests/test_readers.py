@@ -655,6 +655,11 @@ def test_schema_store_csv_models(store_session, tmp_path, name, body, table):
         assert hit.columns == ["a", "b"]
     else:
         assert hit.columns == ["columns"]
+    if name in ("t.tsv", "p.psv"):
+        # the suffix picks the delimiter: one array element per field
+        sep = "\t" if name == "t.tsv" else "|"
+        assert sorted(r["columns"] for r in hit.collect()) == [
+            line.split(sep) for line in body.splitlines()]
 
 
 def test_schema_store_xml(store_session, tmp_path):

@@ -82,7 +82,7 @@ def test_default_split_size_adapts_to_small_inputs(spark, tmp_path):
     import hashlib
     import os
 
-    from drill_spark.readers.warc import _list_warc_files
+    from drill_spark.readers.formats import list_files
 
     def blob(i):  # incompressible-ish payload so the .gz stays > 128 KiB
         h = hashlib.sha256(str(i).encode()).hexdigest()
@@ -95,7 +95,7 @@ def test_default_split_size_adapts_to_small_inputs(spark, tmp_path):
     )
     d = str(tmp_path / "big")
     write_warc(docs.coalesce(1), d)
-    total = sum(os.path.getsize(f) for f in _list_warc_files(d))
+    total = sum(os.path.getsize(f) for f in list_files(d, "warc"))
     assert total > 2 * (64 << 10)  # fixture big enough to exercise the fan
     df = read_warc(spark, d)
     n_tasks = df.select(F.spark_partition_id().alias("p")).distinct().count()
@@ -195,6 +195,16 @@ def test_wat_metadata_records(spark, docs, tmp_path):
     assert len(rows) == 120
     parsed = _json.loads(rows[0]["json"])
     assert parsed["target_uri"] == rows[0]["target_uri"]
+
+
+def test_glob_path_reads_like_its_directory(session, warc_dir):
+    """A glob over the part files lists the same files, in the same
+    order, as the directory itself."""
+    cols = "record_id, file, record_offset, target_uri"
+    by_dir = session.sql(f"select {cols} from dfs.`{warc_dir}`").collect()
+    by_glob = session.sql(f"select {cols} from dfs.`{warc_dir}/*.warc.gz`").collect()
+    assert len(by_dir) == 123  # 120 responses + one warcinfo per part file
+    assert sorted(by_glob) == sorted(by_dir)
 
 
 def test_ctas_to_warc_and_back(session, spark, tmp_path):
