@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, Row
 
+from drill_spark.session import local_frame
+
 
 def resolve_table(session, name: str) -> DataFrame:
     """Resolve Drill-style names: registered view > workspace path > path."""
@@ -41,9 +43,9 @@ def information_schema_tables(session) -> DataFrame:
             TABLE_NAME=t.name, TABLE_TYPE="VIEW" if t.isTemporary else "TABLE")
         for t in session.spark.catalog.listTables()
     ]
-    return session.spark.createDataFrame(
-        rows, "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, TABLE_TYPE string"
-    )
+    return local_frame(
+        session.spark, rows,
+        "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, TABLE_TYPE string")
 
 
 def information_schema_columns(session, table: str | None = None) -> DataFrame:
@@ -62,8 +64,8 @@ def information_schema_columns(session, table: str | None = None) -> DataFrame:
                 DATA_TYPE=f.dataType.simpleString(), IS_NULLABLE="YES" if f.nullable else "NO")
             for i, f in enumerate(fields)
         ]
-    return session.spark.createDataFrame(
-        rows,
+    return local_frame(
+        session.spark, rows,
         "TABLE_NAME string, COLUMN_NAME string, ORDINAL_POSITION int, DATA_TYPE string, IS_NULLABLE string",
     )
 
@@ -73,7 +75,7 @@ def information_schema_schemata(session) -> DataFrame:
     rows = [Row(CATALOG_NAME="DRILL", SCHEMA_NAME=w, TYPE=ws.kind)
             for w, ws in sorted(session.workspaces.items())]
     rows += [Row(CATALOG_NAME="DRILL", SCHEMA_NAME=db.name, TYPE="spark") for db in session.spark.catalog.listDatabases()]
-    return session.spark.createDataFrame(rows, "CATALOG_NAME string, SCHEMA_NAME string, TYPE string")
+    return local_frame(session.spark, rows, "CATALOG_NAME string, SCHEMA_NAME string, TYPE string")
 
 
 # ---------------- sys.* tables (SystemTable.java analog) ----------------
@@ -86,21 +88,21 @@ def sys_options(session) -> DataFrame:
         for k, v in sorted(session.spark.sparkContext.getConf().getAll())
         if k.startswith("spark.sql")
     ]
-    return session.spark.createDataFrame(rows, "name string, val string, optionScope string")
+    return local_frame(session.spark, rows, "name string, val string, optionScope string")
 
 
 def sys_version(session) -> DataFrame:
     import drill_spark
 
-    return session.spark.createDataFrame(
-        [Row(version=drill_spark.__version__, spark_version=session.spark.version)],
+    return local_frame(
+        session.spark, [Row(version=drill_spark.__version__, spark_version=session.spark.version)],
         "version string, spark_version string",
     )
 
 
 def sys_functions(session) -> DataFrame:
     rows = [Row(name=r[0]) for r in session.spark.sql("SHOW FUNCTIONS").collect()]
-    return session.spark.createDataFrame(rows, "name string")
+    return local_frame(session.spark, rows, "name string")
 
 
 def sys_profiles(session) -> DataFrame:
@@ -117,7 +119,7 @@ def sys_profiles(session) -> DataFrame:
         for i, q in enumerate(getattr(session, "profiles", []))
     ]
     schema = "query_id int, query string, start_ts timestamp, plan_ms double, state string"
-    return session.spark.createDataFrame(rows, schema)
+    return local_frame(session.spark, rows, schema)
 
 
 def sys_drillbits(session) -> DataFrame:
@@ -130,7 +132,7 @@ def sys_drillbits(session) -> DataFrame:
     except Exception:
         rows = []
     rows = rows or [Row(hostname="driver", user_port=0, current=True)]
-    return session.spark.createDataFrame(rows, "hostname string, user_port int, current boolean")
+    return local_frame(session.spark, rows, "hostname string, user_port int, current boolean")
 
 
 def sys_memory(session) -> DataFrame:
@@ -153,7 +155,7 @@ def sys_memory(session) -> DataFrame:
         "hostname string, user_port int, heap_current bigint, heap_max bigint, "
         "direct_current bigint, jvm_direct_current bigint, direct_max bigint"
     )
-    return session.spark.createDataFrame([row], schema)
+    return local_frame(session.spark, [row], schema)
 
 
 def sys_threads(session) -> DataFrame:
@@ -169,8 +171,8 @@ def sys_threads(session) -> DataFrame:
         total_threads=int(tmx.getThreadCount()),
         busy_threads=int(tmx.getThreadCount()) - int(tmx.getDaemonThreadCount()),
     )
-    return session.spark.createDataFrame(
-        [row], "hostname string, user_port int, total_threads int, busy_threads int"
+    return local_frame(
+        session.spark, [row], "hostname string, user_port int, total_threads int, busy_threads int"
     )
 
 
@@ -179,8 +181,8 @@ def sys_aliases(session) -> DataFrame:
     registered table aliases (CREATE ALIAS surface)."""
     rows = [Row(alias=a, name=t, user="anonymous", isPublic=False)
             for a, t in sorted(getattr(session, "aliases", {}).items())]
-    return session.spark.createDataFrame(
-        rows, "alias string, name string, user string, isPublic boolean")
+    return local_frame(
+        session.spark, rows, "alias string, name string, user string, isPublic boolean")
 
 
 def sys_connections(session) -> DataFrame:
@@ -195,8 +197,8 @@ def sys_connections(session) -> DataFrame:
         session._started_at = started
     rows = [Row(user="anonymous", client="embedded",
                 established=started, queries=len(getattr(session, "profiles", [])))]
-    return session.spark.createDataFrame(
-        rows, "user string, client string, established timestamp, queries int")
+    return local_frame(
+        session.spark, rows, "user string, client string, established timestamp, queries int")
 
 
 def sys_internal_options(session) -> DataFrame:
@@ -210,9 +212,9 @@ def sys_internal_options(session) -> DataFrame:
         for k, v in sorted(session.spark.sparkContext.getConf().getAll())
         if not k.startswith("spark.sql")
     ]
-    return session.spark.createDataFrame(
-        rows, "name string, kind string, accessibleScopes string, "
-              "val string, optionScope string")
+    return local_frame(
+        session.spark, rows,
+        "name string, kind string, accessibleScopes string, val string, optionScope string")
 
 
 def sys_boot(session) -> DataFrame:
@@ -231,7 +233,7 @@ def sys_boot(session) -> DataFrame:
         Row(name="python.version", val=_sys.version.split()[0]),
         Row(name="default.parallelism", val=str(sc.defaultParallelism)),
     ]
-    return session.spark.createDataFrame(rows, "name string, val string")
+    return local_frame(session.spark, rows, "name string, val string")
 
 
 def sys_profiles_json(session) -> DataFrame:
@@ -244,7 +246,7 @@ def sys_profiles_json(session) -> DataFrame:
         Row(queryId=str(i), json=_json.dumps(q, default=str, sort_keys=True))
         for i, q in enumerate(getattr(session, "profiles", []))
     ]
-    return session.spark.createDataFrame(rows, "queryId string, json string")
+    return local_frame(session.spark, rows, "queryId string, json string")
 
 
 def sys_materialized_views(session) -> DataFrame:
@@ -257,8 +259,8 @@ def sys_materialized_views(session) -> DataFrame:
             incremental="merge" in session.mv_incr.get(n, {}))
         for n, p in sorted(getattr(session, "materialized", {}).items())
     ]
-    return session.spark.createDataFrame(
-        rows, "name string, path string, rows bigint, incremental boolean")
+    return local_frame(
+        session.spark, rows, "name string, path string, rows bigint, incremental boolean")
 
 
 def sys_vector_indexes(session) -> DataFrame:
@@ -278,9 +280,9 @@ def sys_vector_indexes(session) -> DataFrame:
         rows.append(Row(name=n, path=p, rows=meta.get("rows"),
                         n_cells=meta.get("n_cells"), m=meta.get("m"),
                         dim=meta.get("dim")))
-    return session.spark.createDataFrame(
-        rows, "name string, path string, rows bigint, n_cells int, "
-              "m int, dim int")
+    return local_frame(
+        session.spark, rows,
+        "name string, path string, rows bigint, n_cells int, m int, dim int")
 
 
 def register_system_views(session) -> None:

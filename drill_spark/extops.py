@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drill_spark.session import load_fixture
+from drill_spark.session import load_fixture, local_frame
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1703,7 +1703,8 @@ def q_range_join(spark, sf_dir):
     from drill_spark.ops.temporal import point_in_interval_join
 
     ev = load_fixture(spark, sf_dir, "events").where(F.col("user_id") < 50)
-    tiers = ev.sparkSession.createDataFrame(
+    tiers = local_frame(
+        ev.sparkSession,
         [("t0", 0.0, 5.0), ("t1", 5.0, 25.0), ("t2", 25.0, 100.0), ("t3", 100.0, 1000.0)],
         "tier string, lo double, hi double",
     )
@@ -2326,8 +2327,8 @@ def q_iceberg_v2_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_delete_files(
             d,
             position_deletes=[(r.fp, r.pos) for r in targets],
-            equality_deletes=spark.createDataFrame(
-                [("Brand#23",)], "p_brand string"
+            equality_deletes=local_frame(
+                spark, [("Brand#23",)], "p_brand string"
             ),
             equality_cols=["p_brand"],
         )
@@ -4794,7 +4795,8 @@ def q_bm25_batch(spark, sf_dir):
     for all three queries."""
     from drill_spark.ops.search import bm25_topk_batch
 
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [("q1", ["spark", "vector"]), ("q2", ["merge", "window"]),
          ("q3", ["customer", "order", "join"])],
         "query_id string, terms array<string>",
@@ -4857,7 +4859,8 @@ def q_retrieval_eval(spark, sf_dir):
     from drill_spark.ops.search import bm25_topk_batch
 
     docs = _docs(spark, sf_dir)
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [("q1", ["spark", "vector"]), ("q2", ["merge", "window"]),
          ("q3", ["customer", "order", "join"])],
         "query_id string, terms array<string>",
@@ -5555,7 +5558,8 @@ def q_robots_filter(spark, sf_dir):
     urls = docs.select(F.concat(
         F.lit("https://site"), (F.col("doc_id") % 4).cast("string"),
         F.lit(".example"), path).alias("url"))
-    rules = spark.createDataFrame(
+    rules = local_frame(
+        spark,
         [("site0.example", "/private/", False),
          ("site0.example", "/private/doc10", True),
          ("site0.example", "/*.pdf$", False),

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from drill_spark.session import local_frame
+
 
 def normalize_text(col):
     """Lowercase + collapse whitespace (fingerprint normalization)."""
@@ -378,7 +380,7 @@ def connected_components(
             StructField("component", node_type, False),
         ])
         rows = [(n, comp_min[find(n)]) for n in parent]
-        return edges.sparkSession.createDataFrame(rows, schema)
+        return local_frame(edges.sparkSession, rows, schema)
     labels = sym.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
     converged = False
     for _ in range(max_iter):

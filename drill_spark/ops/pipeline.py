@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
 from drill_spark.ops import quote_ident
+from drill_spark.session import local_frame
 
 # Engine-portable PII patterns (valid in both Java regex and RE2, so the
 # DuckDB oracles run the identical expressions).
@@ -824,8 +825,8 @@ def curation_audit(
                 & (F.col(id_col) == F.col("__canon"))
                 & F.col("__dirty").isNull())
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        [(s, float(w)) for s, w in sorted(weights.items())],
+    wdf = local_frame(
+        spark, [(s, float(w)) for s, w in sorted(weights.items())],
         f"{source_col} string, __w double")
     avail = (led.where(is_clean)
              .groupBy(source_col)
@@ -1355,8 +1356,8 @@ def build_mixture(
     toks = (tokens if tokens is not None
             else F.size(F.filter(_words(text_col), lambda w: w != "")))
     spark = df.sparkSession
-    wdf = spark.createDataFrame(
-        [(s, float(w)) for s, w in sorted(weights.items())],
+    wdf = local_frame(
+        spark, [(s, float(w)) for s, w in sorted(weights.items())],
         f"{source_col} string, __w double",
     )
     # The mixture consumes its input from TWO branches (the per-source

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from drill_spark.session import local_frame
+
 
 def _dot(a: str, b: str):
     return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0D, (acc, v) -> acc + v)")
@@ -656,8 +658,8 @@ def pq_topk(df: DataFrame, query_ids, codebooks=None,
         df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         "cv", "cn")
     qdf = with_norm(
-        df.sparkSession.createDataFrame(
-            [(int(r[0]), list(map(float, r[1]))) for r in q_rows],
+        local_frame(
+            df.sparkSession, [(int(r[0]), list(map(float, r[1]))) for r in q_rows],
             "query_id bigint, qv array<double>"),
         "qv", "qn")
     scored = (
@@ -719,8 +721,8 @@ def ivfpq_topk(df: DataFrame, query_ids,
         ]
         for cell in np.argsort(d2)[:nprobe]:
             probe_rows.append((int(r[0]), int(cell), lut))
-    probes = df.sparkSession.createDataFrame(
-        probe_rows, "query_id bigint, cell int, lut array<array<double>>")
+    probes = local_frame(
+        df.sparkSession, probe_rows, "query_id bigint, cell int, lut array<array<double>>")
     dist = ("aggregate(zip_with(lut, codes, "
             "(l, c) -> element_at(l, c + 1)), 0D, (acc, v) -> acc + v)")
     cand = (
@@ -738,8 +740,8 @@ def ivfpq_topk(df: DataFrame, query_ids,
         df.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
         "cv", "cn")
     qdf = with_norm(
-        df.sparkSession.createDataFrame(
-            [(int(r[0]), list(map(float, r[1]))) for r in q_rows],
+        local_frame(
+            df.sparkSession, [(int(r[0]), list(map(float, r[1]))) for r in q_rows],
             "query_id bigint, qv array<double>"),
         "qv", "qn")
     scored = (

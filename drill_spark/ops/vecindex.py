@@ -41,6 +41,7 @@ from drill_spark.ops.similarity import (
     pq_train,
     with_norm,
 )
+from drill_spark.session import local_frame
 
 _META = "meta.json"
 
@@ -259,8 +260,8 @@ def index_topk(
         for cell in np.argsort(d2)[:nprobe]:
             probe_rows.append((int(r["query_id"]), int(cell), lut))
             probe_cells.add(int(cell))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id bigint, cell int, lut array<array<double>>")
+    probes = local_frame(
+        spark, probe_rows, "query_id bigint, cell int, lut array<array<double>>")
     dist = ("aggregate(zip_with(lut, codes, "
             "(l, c) -> element_at(l, c + 1)), 0D, (acc, v) -> acc + v)")
     cand = (
@@ -297,9 +298,9 @@ def index_topk(
     if (len(q_rows) * rerank <= _PUSHDOWN_MAX_IDS
             and _scan_bytes(base) >= _PUSHDOWN_MIN_BYTES):
         short_rows = shortlist.collect()
-        shortlist = F.broadcast(spark.createDataFrame(
-            [(int(r["query_id"]), int(r["neighbor_id"]))
-             for r in short_rows],
+        shortlist = F.broadcast(local_frame(
+            spark,
+            [(int(r["query_id"]), int(r["neighbor_id"])) for r in short_rows],
             "query_id bigint, neighbor_id bigint"))
         if short_rows:
             ids = sorted({int(r["neighbor_id"]) for r in short_rows})
@@ -328,7 +329,7 @@ def index_topk(
         )
     else:
         qdf = with_norm(
-            spark.createDataFrame(qpairs, "query_id bigint, qv array<double>"),
+            local_frame(spark, qpairs, "query_id bigint, qv array<double>"),
             "qv", "qn")
         scored = (side.join(shortlist, "neighbor_id")
                   .join(F.broadcast(qdf), "query_id"))

@@ -7,6 +7,7 @@ from drill_spark.plans.checks import (
     has_python_eval,
     has_take_ordered,
     pushed_filters,
+    python_rdd_scans,
     read_schema_columns,
     wholestage_codegen_spans,
 )
@@ -16,6 +17,7 @@ __all__ = [
     "explain_report",
     "explain_str",
     "pushed_filters",
+    "python_rdd_scans",
     "read_schema_columns",
     "has_broadcast_hash_join",
     "has_partial_aggregate",

@@ -18,7 +18,8 @@ that matter at 100 TB:
 - **TakeOrderedAndProject** — ORDER BY+LIMIT as top-k, not full sort
   (Drill TopN: physical/impl/TopN/TopNBatch.java:87).
 - **WholeStageCodegen spans** — expressions stay JVM-side; a
-  BatchEvalPython/ArrowEvalPython node in a hot path is a red flag.
+  BatchEvalPython/ArrowEvalPython node in a hot path is a red flag, and
+  so is a ``Scan ExistingRDD`` over a Python-backed RDD.
 """
 
 from __future__ import annotations
@@ -63,9 +64,31 @@ def has_partial_aggregate(df: DataFrame) -> bool:
     return "partial_" in s or s.count("HashAggregate") >= 2 or s.count("SortAggregate") >= 2
 
 
+def python_rdd_scans(df: DataFrame) -> int:
+    """Scans of an RDD whose lineage holds a ``PythonRDD``: what
+    ``createDataFrame(<list>)``, ``parallelize`` and an RDD ``map``
+    lifted to a DataFrame plan. Each prints as a plain ``Scan
+    ExistingRDD`` but runs Python workers at the action. Counts every
+    such node of the optimized plan, subqueries and broadcast sides
+    included; a checkpoint's scan (its lineage cut) does not count."""
+    stack, n = [df._jdf.queryExecution().optimizedPlan()], 0
+    while stack:
+        node = stack.pop()
+        if (node.getClass().getSimpleName() == "LogicalRDD"
+                and "PythonRDD" in node.rdd().toDebugString()):
+            n += 1
+        for seq in (node.children(), node.subqueries()):
+            stack += [seq.apply(i) for i in range(seq.size())]
+    return n
+
+
 def has_python_eval(df: DataFrame) -> bool:
+    """True when the plan runs Python: a Python evaluator node, or a
+    scan of a Python-backed RDD (``python_rdd_scans``)."""
     s = explain_str(df)
-    return "BatchEvalPython" in s or "ArrowEvalPython" in s or "MapInPandas" in s
+    if "BatchEvalPython" in s or "ArrowEvalPython" in s or "MapInPandas" in s:
+        return True
+    return "Scan ExistingRDD" in s and python_rdd_scans(df) > 0
 
 
 def wholestage_codegen_spans(df: DataFrame) -> int:

@@ -79,6 +79,7 @@ from drill_spark.readers.delta_stats import (
     prune_snapshot_files,
     zorder_expression,
 )
+from drill_spark.session import local_frame
 
 _SUPPORTED_READER_FEATURES = {
     "timestampNtz",
@@ -369,7 +370,7 @@ def _norm_uri(col):
 
 
 # Total DV cardinality up to which deleted-row identities are decoded on
-# the driver (one createDataFrame, no extra jobs). Beyond it — or when a
+# the driver (one local_frame, no extra jobs). Beyond it — or when a
 # descriptor carries no cardinality — descriptors ship to executors and
 # each DV explodes to (file, row_index) rows inside mapInPandas, so the
 # driver never materializes per-row tuples no matter how many billions
@@ -401,12 +402,12 @@ def _dv_pairs_df(spark: SparkSession, table_path: str,
         deleted = [(fp, int(ri))
                    for fp, desc in entries
                    for ri in read_descriptor(table_path, desc)]
-        return spark.createDataFrame(deleted, "__fp string, __ri bigint"), True
+        return local_frame(spark, deleted, "__fp string, __ri bigint"), True
 
     rows = [(fp, json.dumps(desc)) for fp, desc in entries]
     n_slices = min(len(rows), spark.sparkContext.defaultParallelism)
     desc_df = (
-        spark.createDataFrame(rows, "__fp string, __desc string")
+        local_frame(spark, rows, "__fp string, __desc string")
         .repartition(n_slices)
     )
     tp = table_path
@@ -487,7 +488,7 @@ def read_delta(spark: SparkSession, path: str,
                              snap.tombstones)
 
     if not snap.files:
-        out = spark.createDataFrame([], _clean_type(snap.schema))
+        out = local_frame(spark, [], _clean_type(snap.schema))
         return out.where(F.expr(predicate)) if predicate else out
 
     mapped = snap.column_mapping_mode in ("name", "id")
@@ -559,7 +560,7 @@ def read_delta(spark: SparkSession, path: str,
                 [T.StructField("__file", T.StringType())]
                 + [T.StructField(f"__pv_{c}", T.StringType()) for c in snap.partition_columns]
             )
-            pv = spark.createDataFrame(pv_rows, pv_schema)
+            pv = local_frame(spark, pv_rows, pv_schema)
             df = scan([p for paths in groups.values() for p in paths])
             file_col = F.col("__fp") if has_dv else _norm_uri(F.input_file_name())
             out = (
@@ -788,8 +789,8 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
                     op = action["commitInfo"].get("operation")
                     ts = action["commitInfo"].get("timestamp")
         rows.append((v, ts, op))
-    return spark.createDataFrame(
-        rows, "version long, timestamp_ms long, operation string"
+    return local_frame(
+        spark, rows, "version long, timestamp_ms long, operation string"
     )
 
 
@@ -897,8 +898,8 @@ def table_changes(spark: SparkSession, path: str, from_version: int,
                     new = set(read_descriptor(path, new_dv)) if new_dv else set()
                     fresh = sorted(new - old)
                     if fresh:
-                        pos = spark.createDataFrame(
-                            [(int(p),) for p in fresh], "__ri long")
+                        pos = local_frame(
+                            spark, [(int(p),) for p in fresh], "__ri long")
                         pieces.append(
                             (scan_rows(rel, pos, True, None, pv), "delete", v))
                 elif new_dv:
@@ -935,7 +936,7 @@ def table_changes(spark: SparkSession, path: str, from_version: int,
             + [T.StructField("_change_type", T.StringType()),
                T.StructField("_commit_version", T.LongType())]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     return out
 
 
@@ -1086,7 +1087,7 @@ def write_checkpoint(spark: SparkSession, path: str) -> str:
     for app_id, ver in sorted(snap.txns.items()):
         rows.append({"protocol": None, "metaData": None, "add": None,
                      "txn": {"appId": app_id, "version": int(ver)}})
-    df = spark.createDataFrame(rows, schema)
+    df = local_frame(spark, rows, schema)
     tmp = os.path.join(log_dir, ".ckpt_tmp")
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = _glob.glob(os.path.join(_glob.escape(tmp), "part-*.parquet"))[0]
@@ -1161,7 +1162,7 @@ def _annotated_table_scan(spark: SparkSession, path: str,
             [T.StructField("__fp", T.StringType())]
             + [T.StructField(f"__pv_{c}", T.StringType()) for c in snap.partition_columns]
         )
-        df = df.join(F.broadcast(spark.createDataFrame(pv_rows, pv_schema)), "__fp")
+        df = df.join(F.broadcast(local_frame(spark, pv_rows, pv_schema)), "__fp")
         for c in snap.partition_columns:
             df = df.withColumn(c, F.col(f"__pv_{c}").cast(by_type[c])).drop(f"__pv_{c}")
     return df

@@ -9,7 +9,7 @@ the standard-library zipfile + ElementTree.
 
 Scale: spreadsheets are small driver-side artifacts with no splittable
 layout (the reference's POI reader is likewise single-fragment); the
-parsed rows are distributed via createDataFrame and everything
+parsed rows are distributed via session.local_frame and everything
 downstream is ordinary Catalyst.
 
 Cell typing: t="s" shared string, t="inlineStr" inline, t="b" boolean,
@@ -25,6 +25,8 @@ import zipfile
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
+
+from drill_spark.session import local_frame
 
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
 _REL_NS = {"r": "http://schemas.openxmlformats.org/package/2006/relationships"}
@@ -115,7 +117,7 @@ def read_excel(spark: SparkSession, path: str, sheet: str | int = 0, header: boo
     cell is numeric, else STRING."""
     names, rows = parse_xlsx(path, sheet=sheet, header=header)
     if not names:
-        return spark.createDataFrame([], "empty string")
+        return local_frame(spark, [], "empty string")
     ncols = len(names)
     numeric = [
         all(isinstance(r[i], (int, float)) and not isinstance(r[i], bool) for r in rows if r[i] is not None)
@@ -133,7 +135,7 @@ def read_excel(spark: SparkSession, path: str, sheet: str | int = 0, header: boo
     ]
     safe = [re.sub(r"\W", "_", n) for n in names]
     schema = ", ".join(f"`{n}` {'double' if numeric[i] else 'string'}" for i, n in enumerate(safe))
-    return spark.createDataFrame(typed, schema)
+    return local_frame(spark, typed, schema)
 
 
 def _cell_ref(row: int, col: int) -> str:

@@ -210,11 +210,9 @@ def read_opentsdb_metric(
         T.StructField("ts", T.LongType()),
         T.StructField("val", T.DoubleType()),
     ])
-    lines = [_json.dumps(r) for r in rows]
-    if not lines:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).json(
-        spark.sparkContext.parallelize(lines, max(1, len(lines) // 5000 + 1)))
+    from drill_spark.session import json_frame
+
+    return json_frame(spark, [_json.dumps(r) for r in rows], schema)
 
 
 
@@ -355,19 +353,12 @@ def read_drill_query(
     cols = list(payload.get("columns") or [])
     rows = payload.get("rows") or []
     schema = _drill_rest_schema(cols, payload.get("metadata"))
-    lines = [_json.dumps(r) for r in rows]
-    if schema is not None:
-        if not lines:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).json(
-            spark.sparkContext.parallelize(
-                lines, max(1, len(lines) // 5000 + 1)))
-    if not lines:
+    if schema is None and not rows:
         # complex metadata + zero rows: all we know are the names
-        return spark.createDataFrame(
-            [], T.StructType([T.StructField(c, T.StringType()) for c in cols]))
-    return spark.read.json(
-        spark.sparkContext.parallelize(lines, max(1, len(lines) // 5000 + 1)))
+        schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
+    from drill_spark.session import json_frame
+
+    return json_frame(spark, [_json.dumps(r) for r in rows], schema)
 
 
 def read_drill_table(

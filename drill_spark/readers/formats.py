@@ -72,7 +72,10 @@ class Format:
     table-format functions are ``"<module>.<function>"`` refs:
     ``write(df, path[, partition_by=])`` (``partitions`` when it takes
     PARTITION BY), ``insert(df, path)``, ``merge``/``update``/``delete``
-    as in readers/delta.py and ``history(spark, path)``."""
+    as in readers/delta.py and ``history(spark, path)``. ``typed_files``
+    formats keep their schema in their files, so an INSERT appending
+    other column types would leave files no read of the table decodes:
+    INSERT casts to the table's schema first."""
 
     names: tuple[str, ...]
     suffixes: tuple[str, ...] = ()
@@ -91,6 +94,7 @@ class Format:
     update: str | None = None
     delete: str | None = None
     history: str | None = None
+    typed_files: bool = False
 
     @property
     def name(self) -> str:
@@ -129,10 +133,10 @@ class Format:
         return kwargs
 
 
-def _spark_row(name: str, suffixes: tuple[str, ...] = ()) -> Format:
+def _spark_row(name: str, suffixes: tuple[str, ...] = (), **kw) -> Format:
     """A format Spark reads and writes by name."""
     return Format((name,), suffixes, options=_SCHEMA,
-                  defaults={"fmt": name}, spark=name)
+                  defaults={"fmt": name}, spark=name, **kw)
 
 
 def row(name: str) -> Format:
@@ -227,9 +231,11 @@ def scan_files(spark, items: list, decode: Callable, schema):
     """``mapInPandas(decode, schema)`` over ``items``: file paths (a
     ``path`` column) or ``(path, start, end)`` byte ranges, spread over
     ``min(len(items), defaultParallelism)`` partitions."""
+    from drill_spark.session import local_frame
+
     ranges = isinstance(items[0], tuple)
-    frame = spark.createDataFrame(
-        items if ranges else [(p,) for p in items],
+    frame = local_frame(
+        spark, items if ranges else [(p,) for p in items],
         "path string, start long, end long" if ranges else "path string")
     n = min(len(items), spark.sparkContext.defaultParallelism)
     return frame.repartition(n).mapInPandas(decode, schema)
@@ -263,8 +269,8 @@ FORMATS: dict[str, Format] = {f.name: f for f in (
            spark_options={"delimiter": "|"}),
     Format(("xml",), (".xml",), "files.read_xml", _SCHEMA, store=True, spark="xml"),
     Format(("parquet",), (".parquet",), options={**_SCHEMA, "predicate": ("predicate", str)},
-           defaults={"fmt": "parquet"}, spark="parquet"),
-    _spark_row("orc", (".orc",)),
+           defaults={"fmt": "parquet"}, spark="parquet", typed_files=True),
+    _spark_row("orc", (".orc",), typed_files=True),
     # native readers
     Format(("log",), (), "logs.read_log",
            {"regex": ("regex", str), "schema": ("fields", _log_fields)},

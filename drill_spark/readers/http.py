@@ -6,10 +6,10 @@ payload (contrib/storage-http/README.md usage; HttpBatchReader).
 
 Spark shape: the fetch runs driver-side (Drill's http scan is likewise
 single-fragment — an HTTP endpoint has no splits); the parsed records
-are then distributed via spark.read.json over a parallelized collection
-so downstream operators scale normally. Pagination: fetch all pages
-driver-side (bounded by max_pages), then distribute once — the row set,
-not the fetch, is the scalable part.
+are then read by spark.read.json from a driver-side local relation
+(``session.json_frame``) so downstream operators scale normally.
+Pagination: fetch all pages driver-side (bounded by max_pages), then
+distribute once — the row set, not the fetch, is the scalable part.
 """
 
 from __future__ import annotations
@@ -62,5 +62,6 @@ def read_http(
         records.extend(payload)
         if not page_param:
             break
-    lines = [json.dumps(r) for r in records]
-    return spark.read.json(spark.sparkContext.parallelize(lines or ["{}"], max(1, len(lines) // 5000 + 1)))
+    from drill_spark.session import json_frame
+
+    return json_frame(spark, [json.dumps(r) for r in records] or ["{}"])

@@ -66,6 +66,7 @@ from drill_spark.readers.iceberg_stats import (
     partition_field_summaries,
     stats_to_delta_shape,
 )
+from drill_spark.session import local_frame
 
 
 def _table_metadata(path: str) -> dict:
@@ -199,7 +200,7 @@ def read_iceberg(spark: SparkSession, path: str,
         cur = meta.get("current-snapshot-id")
         snap = next((s for s in snaps if s["snapshot-id"] == cur), None)
     if snap is None:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     predicate_opt = opts.get("predicate")
     data_files, pos_deletes, eq_deletes = _snapshot_files(
@@ -220,7 +221,7 @@ def read_iceberg(spark: SparkSession, path: str,
     pred_col = F.expr(predicate) if predicate else None
 
     if not data_files:
-        out = spark.createDataFrame([], schema)
+        out = local_frame(spark, [], schema)
         return out.where(pred_col) if pred_col is not None else out
 
     df = spark.read.schema(schema).parquet(*[p for p, _, _, _ in data_files])
@@ -421,8 +422,8 @@ def _annotate_scan(spark, df, data_files):
     from pyspark.sql import functions as F
 
     strip = lambda c: F.regexp_replace(c, "^file:/*", "/")
-    seq_map = spark.createDataFrame(
-        [(os.path.abspath(p), u, s) for p, u, s, _m in data_files],
+    seq_map = local_frame(
+        spark, [(os.path.abspath(p), u, s) for p, u, s, _m in data_files],
         "_df_path string, _df_uri string, _df_seq long",
     )
     return (
@@ -961,8 +962,8 @@ def describe_history(spark: SparkSession, path: str) -> DataFrame:
     """DESCRIBE HISTORY: one row per snapshot (id, commit time,
     operation) from the table metadata."""
     snaps = _table_metadata(path).get("snapshots") or []
-    return spark.createDataFrame(
-        [(int(s["snapshot-id"]), int(s.get("timestamp-ms", 0)),
+    return local_frame(
+        spark, [(int(s["snapshot-id"]), int(s.get("timestamp-ms", 0)),
           (s.get("summary") or {}).get("operation"))
          for s in snaps],
         "version long, timestamp_ms long, operation string",
@@ -1195,7 +1196,7 @@ def read_incremental(spark: SparkSession, path: str, from_snapshot: int,
         empty = T.StructType(
             list(schema.fields) + [T.StructField("_snapshot_id", T.LongType())]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     return out
 
 

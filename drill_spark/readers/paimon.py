@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from drill_spark.session import local_frame
+
 
 # ------------------------------------------------------------- schema
 
@@ -174,7 +176,7 @@ def read_paimon(spark: SparkSession, path: str,
         out_schema = T.StructType(
             [T.StructField(f["name"], _sql_type_to_spark(f["type"])) for f in fields]
         )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     # one walk locates every (uuid-named) data file
     by_name: dict[str, str] = {}

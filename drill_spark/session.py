@@ -22,6 +22,7 @@ Scale notes (100 TB target):
 
 from __future__ import annotations
 
+import itertools
 import os
 import threading
 from dataclasses import dataclass, field
@@ -102,6 +103,61 @@ _HADOOP_OPTION_MAP: dict[str, tuple[str, "callable"]] = {
         "parquet.enable.dictionary", lambda v: str(_truthy(v)).lower(),
     ),
 }
+
+
+def local_frame(spark: SparkSession, rows, schema=None) -> DataFrame:
+    """A bounded list of driver-side rows as a Catalyst ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` pickles the rows into a
+    parallelized RDD: the plan scans a ``LogicalRDD`` whose action
+    unpickles every row in a Python worker, and Catalyst sizes it as
+    unknown, so a join against it never broadcasts on its own. An Arrow
+    table reaches the JVM as a ``LocalRelation`` instead: no Python
+    worker, and the planner knows its size.
+
+    ``schema`` (a ``StructType`` or a DDL string) is read as
+    ``createDataFrame`` reads it; without one it is inferred from the
+    rows the way ``createDataFrame`` infers it (``int`` is bigint,
+    ``Row(**kw)`` keeps its field order, every column nullable). Rows are
+    tuples or ``Row``s, matched to the fields by position, or dicts,
+    matched by name. A naive ``datetime`` is local time, as in
+    ``createDataFrame``; timestamps go to Arrow as UTC."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType, TimestampType
+
+    rows = list(rows)
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows)
+    elif isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    columns = [[] for _ in names]
+    for row in rows:
+        values = [row.get(n) for n in names] if isinstance(row, dict) else row
+        for column, v in zip(columns, values, strict=True):
+            column.append(v)
+    arrays = []
+    for f, column in zip(schema.fields, columns):
+        if isinstance(f.dataType, TimestampType):
+            column = [None if v is None else v.astimezone(datetime.timezone.utc)
+                      for v in column]
+        arrays.append(pa.array(column, type=to_arrow_type(f.dataType)))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=names), schema)
+
+
+def json_frame(spark: SparkSession, lines: list[str], schema=None) -> DataFrame:
+    """JSON text lines read by Spark's JSON reader, inferring the schema
+    unless ``schema`` is given. The lines reach the reader as a
+    ``local_frame`` string column through the JVM's
+    ``json(Dataset[String])``, so no Python worker runs."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    jdf = local_frame(spark, [(s,) for s in lines], "value string")._jdf
+    # Dataset.as(Encoders.STRING()); `as` is a Python keyword
+    strings = getattr(jdf, "as")(spark._jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(reader._jreader.json(strings), spark)
 
 
 def _default_parallelism() -> int:
@@ -276,7 +332,9 @@ class DrillSession:
     temp_tables: list[str] = field(default_factory=list)
     # inferred path-table schemas reused across statements (readers/files.py)
     schema_store: SchemaStore = field(default_factory=SchemaStore)
-    _view_counter: int = 0
+    # rewrite view name suffixes: next() on a count is one atomic call,
+    # so two threads never draw the same name
+    _view_ids: itertools.count = field(default_factory=itertools.count, repr=False)
     # rewrite temp views (_drill_path_N/_drill_tf_N): the running
     # statement's, per thread, and those kept until close()
     _statement: threading.local = field(default_factory=threading.local, repr=False)
@@ -460,8 +518,7 @@ class DrillSession:
         return self.options.get(name, default)
 
     def _fresh_view(self, hint: str = "t") -> str:
-        self._view_counter += 1
-        name = f"_drill_{hint}_{self._view_counter}"
+        name = f"_drill_{hint}_{next(self._view_ids)}"
         views = getattr(self._statement, "views", None)
         (self._kept_views if views is None else views).append(name)
         return name

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, Row
 
 from drill_spark.readers import files, formats
 from drill_spark.readers.formats import flag
+from drill_spark.session import local_frame
 
 # ws.`/path` or ws.sub.`/path`  (workspace part without backticks)
 _PATH_TABLE = re.compile(r"(?<![\w`])((?:\w+\.)+)`([^`]+)`")
@@ -205,17 +206,35 @@ def _split_set_clause(clause: str) -> dict[str, str]:
     return out
 
 
-# MERGE INTO ws.`path` USING (<subquery>)|<table> [AS] src ON cond
+# MERGE INTO ws.`path` [[AS] <alias>] USING (<subquery>)|<table> [AS] <alias>
+#   ON cond
 #   [WHEN MATCHED THEN UPDATE SET ... | WHEN MATCHED THEN DELETE]
 #   [WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)]
 _MERGE_PATH = re.compile(
-    r"^\s*MERGE\s+INTO\s+((?:\w+\.)+)`([^`]+)`(?:\s+AS\s+t)?\s+USING\s+(.+?)\s+"
-    r"(?:AS\s+)?src\s+ON\s+(.+?)"
+    r"^\s*MERGE\s+INTO\s+((?:\w+\.)+)`([^`]+)`(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+"
+    r"(\(.*\)|(?:[^\s`]|`[^`]*`)+)\s+(?:AS\s+)?(\w+)\s+ON\s+(.+?)"
     r"(?:\s+WHEN\s+MATCHED\s+THEN\s+(?:UPDATE\s+SET\s+(.+?)|(DELETE)))?"
     r"(?:\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*\(([^)]*)\)\s*"
     r"VALUES\s*\((.+?)\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# a table qualifier, a plain or backquoted name before a dot (group 1);
+# else a string literal or a backquoted name, kept as it is
+_QUALIFIER = re.compile(r"(?<![\w.`])(\w+|`[^`]*`)(?=\s*\.)"
+                        r"|'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`")
+
+
+def _realias(expr: str | None, aliases: dict[str, str]) -> str | None:
+    """``expr`` with each table qualifier ``<alias>.`` outside string
+    literals renamed by ``aliases`` (lower-case keys: SQL names match
+    in any case). MERGE's table functions name its sides t and src."""
+    if expr is None:
+        return None
+    return _QUALIFIER.sub(
+        lambda m: aliases.get(m.group(1).strip("`").lower(), m.group(1))
+        if m.group(1) else m.group(0), expr)
+
+
 # Drill aliases (planner/sql/handlers/CreateAliasHandler.java; PUBLIC =
 # system-wide vs user scope — one session here, so scope is cosmetic)
 _CREATE_ALIAS = re.compile(
@@ -829,7 +848,7 @@ def rewrite(session, query: str) -> str:
 
 
 def _ok(spark, summary: str) -> DataFrame:
-    return spark.createDataFrame([Row(ok=True, summary=summary)])
+    return local_frame(spark, [Row(ok=True, summary=summary)])
 
 
 _DRILL_TO_SPARK_TYPE = {
@@ -900,6 +919,47 @@ def _writable_path(session, ws_name: str, rel_path: str) -> tuple[str, str]:
     return path, fmt
 
 
+def _has_data(path: str) -> bool:
+    """True when ``path`` is a file or a directory holding an entry
+    that is not hidden (``_SUCCESS``, ``.crc``): a table to append to."""
+    if os.path.isdir(path):
+        return any(not n.startswith(("_", ".")) for n in os.listdir(path))
+    return os.path.isfile(path)
+
+
+def _cast_to_table(spark, df: DataFrame, target, table: str) -> DataFrame:
+    """``df`` stored by position in the ``target`` schema as Spark's own
+    INSERT INTO a table stores it: ANSI store assignment. Raises
+    ValueError, before anything is written, when the column counts
+    differ or the rules forbid a cast (``Cast.canANSIStoreAssign``, e.g.
+    string or boolean to a number). A value the cast cannot hold (an
+    overflow, such as 4294967297 into int, or NaN into int) fails the
+    write's job with USER_RAISED_EXCEPTION, so no file is committed;
+    the session's non-ANSI cast would wrap or null it instead."""
+    from pyspark.sql import functions as F
+
+    from drill_spark.ops import quote_ident
+
+    if len(df.columns) != len(target.fields):
+        raise ValueError(f"INSERT INTO {table}: the table has {len(target.fields)} "
+                         f"columns, the query {len(df.columns)}")
+    allowed = spark._jvm.org.apache.spark.sql.catalyst.expressions.Cast.canANSIStoreAssign
+    parse = spark._jsparkSession.parseDataType
+    cols = []
+    for src, dst in zip(df.schema.fields, target.fields):
+        what = (f"{src.dataType.simpleString()} column {quote_ident(src.name)} in "
+                f"{dst.dataType.simpleString()} column {quote_ident(dst.name)}")
+        if not allowed(parse(src.dataType.json()), parse(dst.dataType.json())):
+            raise ValueError(f"INSERT INTO {table}: cannot store {what}")
+        col = F.col(quote_ident(dst.name))
+        if src.dataType != dst.dataType:
+            stored = col.try_cast(dst.dataType)  # null where the value overflows
+            col = F.when(col.isNotNull() & stored.isNull(), F.raise_error(
+                f"INSERT INTO {table}: a value overflows storing {what}")).otherwise(stored)
+        cols.append(col.alias(dst.name))
+    return df.toDF(*target.fieldNames()).select(cols)
+
+
 def execute(session, query: str) -> DataFrame:
     spark = session.spark
 
@@ -922,8 +982,8 @@ def execute(session, query: str) -> DataFrame:
         ws = session.workspaces.get(m.group(1))
         if ws is None:
             raise ValueError(f"unknown schema: {m.group(1)}")
-        return spark.createDataFrame(
-            [
+        return local_frame(
+            spark, [
                 Row(
                     schema_name=ws.name,
                     location=ws.path,
@@ -985,6 +1045,9 @@ def execute(session, query: str) -> DataFrame:
         if row.insert:
             formats.load(row.insert)(df, path)
         else:
+            if row.typed_files and _has_data(path):
+                target = spark.read.format(row.spark or row.name).load(path).schema
+                df = _cast_to_table(spark, df, target, f"{ws_name}.`{rel_path}`")
             df.write.format(row.spark or row.name).options(
                 **row.spark_options).mode("append").save(path)
         spark.catalog.refreshByPath(path)
@@ -1000,7 +1063,7 @@ def execute(session, query: str) -> DataFrame:
         path, _ = _writable_path(session, ws_name, rel_path)
         stats = optimize(spark, path, zorder_by=zcols)
         spark.catalog.refreshByPath(path)
-        return spark.createDataFrame([Row(ok=True, **stats)])
+        return local_frame(spark, [Row(ok=True, **stats)])
 
     m = _VACUUM_PATH.match(query)
     if m:
@@ -1012,9 +1075,7 @@ def execute(session, query: str) -> DataFrame:
         gone = vacuum(spark, path,
                       retention_hours=float(hours) if hours else 168,
                       dry_run=bool(dry))
-        return spark.createDataFrame(
-            [Row(ok=True, n_removed=len(gone), dry_run=bool(dry))]
-        )
+        return local_frame(spark, [Row(ok=True, n_removed=len(gone), dry_run=bool(dry))])
 
     m = _DESCRIBE_HISTORY.match(query)
     if m:
@@ -1038,13 +1099,16 @@ def execute(session, query: str) -> DataFrame:
                               version=int(ver) if ver else None,
                               timestamp=ts)
         spark.catalog.refreshByPath(path)
-        return spark.createDataFrame([Row(ok=True, **stats)])
+        return local_frame(spark, [Row(ok=True, **stats)])
 
     m = _MERGE_PATH.match(query)
     if m:
-        ws_name, rel_path, src_text, on_cond, set_clause, del_kw, ins_cols, ins_vals = (
-            m.group(1).rstrip("."), m.group(2), m.group(3).strip(), m.group(4),
-            m.group(5), m.group(6), m.group(7), m.group(8))
+        (ws_name, rel_path, t_alias, src_text, src_alias, on_cond, set_clause,
+         del_kw, ins_cols, ins_vals) = m.groups()
+        ws_name = ws_name.rstrip(".")
+        aliases = {src_alias.lower(): "src", (t_alias or "t").lower(): "t"}
+        on_cond, set_clause, ins_vals = (
+            _realias(e, aliases) for e in (on_cond, set_clause, ins_vals))
         path, _ = _writable_path(session, ws_name, rel_path)
         merge_into = _table_fn(path, "merge")
         if merge_into is None:
@@ -1068,7 +1132,7 @@ def execute(session, query: str) -> DataFrame:
             when_not_matched_insert=insert_map,
         )
         spark.catalog.refreshByPath(path)
-        return spark.createDataFrame([Row(ok=True, **stats)])
+        return local_frame(spark, [Row(ok=True, **stats)])
 
     m = _UPDATE_PATH.match(query)
     if m:
@@ -1083,10 +1147,9 @@ def execute(session, query: str) -> DataFrame:
             )
         n = update_where(spark, path, cond, _split_set_clause(set_clause))
         spark.catalog.refreshByPath(path)
-        return spark.createDataFrame(
-            [Row(ok=True, summary=f"updated {n} rows in {ws_name}.`{rel_path}`",
-                 rows_updated=n)]
-        )
+        return local_frame(
+            spark, [Row(ok=True, summary=f"updated {n} rows in {ws_name}.`{rel_path}`",
+                        rows_updated=n)])
 
     m = _DELETE_PATH.match(query)
     if m:
@@ -1100,10 +1163,9 @@ def execute(session, query: str) -> DataFrame:
             )
         n = delete_where(spark, path, cond)
         spark.catalog.refreshByPath(path)
-        return spark.createDataFrame(
-            [Row(ok=True, summary=f"deleted {n} rows from {ws_name}.`{rel_path}`",
-                 rows_deleted=n)]
-        )
+        return local_frame(
+            spark, [Row(ok=True, summary=f"deleted {n} rows from {ws_name}.`{rel_path}`",
+                        rows_deleted=n)])
 
     m = _DROP_TABLE.match(query)
     if m:
@@ -1132,11 +1194,7 @@ def execute(session, query: str) -> DataFrame:
 
     if _SHOW_ALIASES.match(query):
         rows = [Row(alias=a, target=t) for a, t in sorted(session.aliases.items())]
-        return (
-            spark.createDataFrame(rows)
-            if rows
-            else spark.createDataFrame([], "alias string, target string")
-        )
+        return local_frame(spark, rows, "alias string, target string")
 
     m = _REFRESH_META.match(query)
     if m:
@@ -1319,9 +1377,9 @@ def execute(session, query: str) -> DataFrame:
         )
         with open(target, "w") as f:
             _json.dump(stats, f)
-        return spark.createDataFrame(
-            [Row(ok=True, summary=f"analyzed {rel_path}", rows=stats["rowcount"],
-                 columns=len(df.columns))],
+        return local_frame(
+            spark, [Row(ok=True, summary=f"analyzed {rel_path}", rows=stats["rowcount"],
+                        columns=len(df.columns))],
             "ok boolean, summary string, rows bigint, columns int",
         )
 
@@ -1404,12 +1462,12 @@ def execute(session, query: str) -> DataFrame:
     if m:
         _, name, value = m.groups()
         session.set_option(name, value)
-        return spark.createDataFrame([Row(ok=True, summary=f"{name} updated")])
+        return local_frame(spark, [Row(ok=True, summary=f"{name} updated")])
 
     m = _RESET.match(query)
     if m:
         session.reset_option(m.group(1))
-        return spark.createDataFrame([Row(ok=True, summary=f"{m.group(1)} reset")])
+        return local_frame(spark, [Row(ok=True, summary=f"{m.group(1)} reset")])
 
     m = _SHOW_TABLES_WS.match(query)
     if m:
@@ -1426,10 +1484,7 @@ def execute(session, query: str) -> DataFrame:
                 if name.startswith((".", "_")):
                     continue
                 rows.append(Row(TABLE_SCHEMA=target, TABLE_NAME=name))
-        if not rows:
-            return spark.createDataFrame(
-                [], "TABLE_SCHEMA string, TABLE_NAME string")
-        return spark.createDataFrame(rows)
+        return local_frame(spark, rows, "TABLE_SCHEMA string, TABLE_NAME string")
 
     m = _SHOW_FILES.match(query)
     if m:
@@ -1461,7 +1516,7 @@ def execute(session, query: str) -> DataFrame:
             "name string, isDirectory boolean, isFile boolean, length long, "
             "modificationTime timestamp, accessTime timestamp, permissions string"
         )
-        return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
+        return local_frame(spark, rows, schema)
 
     # EXPLAIN PLAN FOR <q> (Drill grammar) -> Spark EXPLAIN <q>.
     # When the inner query is answered by a materialized view
@@ -1479,8 +1534,8 @@ def execute(session, query: str) -> DataFrame:
         except Exception:
             mv = None
         if mv is not None:
-            return spark.createDataFrame(
-                [(mv._jdf.queryExecution().toString(),)], "plan string")
+            return local_frame(
+                spark, [(mv._jdf.queryExecution().toString(),)], "plan string")
     query = re.sub(r"^\s*EXPLAIN\s+PLAN\s+(?:WITH\s+IMPLEMENTATION\s+)?FOR\s+", "EXPLAIN ", query, flags=re.IGNORECASE)
 
     # INFORMATION_SCHEMA.x / sys.x tables (store/ischema/, store/sys/):

@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drill_spark.session import local_frame
+
 
 _STREAM_EPOCH_BASE = 1_000_000_000  # streaming batch-id namespace
 
@@ -658,8 +660,7 @@ def stream_lang_mix(
                   .where(F.col("batch_id") <= int(bid))
                   .groupBy("pred_lang")
                   .agg(F.sum("n").cast("long").alias("n_docs")))
-        base = spark.createDataFrame(base_ppm,
-                                     "pred_lang string, base_ppm long")
+        base = local_frame(spark, base_ppm, "pred_lang string, base_ppm long")
         # total and l1-drift as UNPARTITIONED windows over the bounded
         # (language-space) mix table: the previous two
         # crossJoin(broadcast(agg)) branches each ran their own

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from drill_spark.ops.chat import render_chat, validate_conversations
 from drill_spark.plans.checks import explain_report
+from drill_spark.session import local_frame
 
 _SCHEMA = (
     "conv_id bigint, "
@@ -15,7 +16,7 @@ _SCHEMA = (
 
 
 def _conv(spark, rows):
-    return spark.createDataFrame(rows, _SCHEMA)
+    return local_frame(spark, rows, _SCHEMA)
 
 
 def _t(role, content):
@@ -89,8 +90,8 @@ def test_preference_pairs_single_aggregation(spark):
     extremes (max/min over a (score, response) struct)."""
     from drill_spark.ops.chat import preference_pairs
 
-    df = spark.createDataFrame(
-        [(f"p{i%4}", f"r{i}", i % 7) for i in range(40)],
+    df = local_frame(
+        spark, [(f"p{i%4}", f"r{i}", i % 7) for i in range(40)],
         "prompt_id string, response string, score bigint",
     )
     rep = explain_report(preference_pairs(df))

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from drill_spark import extops
+from drill_spark.session import local_frame
 
 from .conftest import SF_DIR, assert_same_results
 
@@ -2207,7 +2208,7 @@ def test_phrase_and_window_search_shapes(spark):
     from drill_spark import plans
     from drill_spark.ops.search import phrase_search, window_cooccur
 
-    df = spark.createDataFrame([
+    df = local_frame(spark, [
         (1, "alpha beta gamma alpha beta delta"),
         (2, "beta alpha nothing here"),
         (3, "alpha beta"),
@@ -2322,7 +2323,7 @@ def test_collocations_lift_replay(spark):
     # "new york" always adjacent (strong lift); "the" everywhere
     for i in range(60):
         rows.append((i, "the city of new york is the place the best"))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = local_frame(spark, rows, "doc_id long, text string")
     got = collocations(df, min_count=5, top_k=10).collect()
     by_pair = {(r.a, r.b): (r.n_pair, r.lift) for r in got}
     assert ("new", "york") in by_pair

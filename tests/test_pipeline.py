@@ -17,12 +17,13 @@ from drill_spark.ops.pipeline import (
     stratified_sample,
 )
 from drill_spark.plans.checks import explain_report
+from drill_spark.session import local_frame
 
 SF_MED = "/root/testdata/sf0.01"
 
 
 def _df(spark, rows, schema="id bigint, text string"):
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def test_pii_scan_counts_and_redacts(spark):
@@ -139,7 +140,7 @@ def test_quality_mixture_rates_favor_quality(spark):
             rows.append((i, "x y"))
         else:  # clean english-ish, 60 words
             rows.append((i, "the quick brown fox jumps over the lazy dog and " * 6))
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    df = local_frame(spark, rows, "doc_id bigint, text string")
     kept = quality_mixture_sample(df, "doc_id", "text").collect()
     junk_rate = sum(1 for r in kept if r.doc_id % 2 == 0) / 200
     clean_rate = sum(1 for r in kept if r.doc_id % 2 == 1) / 200
@@ -1167,7 +1168,7 @@ def test_binary_auc_matches_pair_counting(spark):
         y = 1 if i % 3 == 0 else 0
         h = int(hashlib.md5(str(i).encode()).hexdigest()[:6], 16)
         rows.append((i, y, (h % 700000) / 1e6 + 0.3 * y))
-    df = spark.createDataFrame(rows, "doc_id long, y int, score double")
+    df = local_frame(spark, rows, "doc_id long, y int, score double")
 
     r = binary_auc(df, "y", "score").collect()[0]
     pos = [s for _, y, s in rows if y == 1]

@@ -8,10 +8,11 @@ from __future__ import annotations
 
 from drill_spark.ops.text import c4_clean, gopher_quality
 from drill_spark.plans.checks import explain_report
+from drill_spark.session import local_frame
 
 
 def _df(spark, rows):
-    return spark.createDataFrame(rows, "id bigint, text string")
+    return local_frame(spark, rows, "id bigint, text string")
 
 
 def test_c4_line_rules(spark):
