@@ -17,9 +17,10 @@ that matter at 100 TB:
   (Drill 2-phase agg: planner/physical/HashAggPrule.java).
 - **TakeOrderedAndProject** — ORDER BY+LIMIT as top-k, not full sort
   (Drill TopN: physical/impl/TopN/TopNBatch.java:87).
-- **WholeStageCodegen spans** — expressions stay JVM-side; a
-  BatchEvalPython/ArrowEvalPython node in a hot path is a red flag, and
-  so is a ``Scan ExistingRDD`` over a Python-backed RDD.
+- **WholeStageCodegen spans** — expressions stay JVM-side; a Python
+  node (BatchEvalPython, ArrowEvalPython, FlatMapGroupsInPandas, ...)
+  in a hot path is a red flag, and so is a ``Scan ExistingRDD`` over a
+  Python-backed RDD.
 """
 
 from __future__ import annotations
@@ -83,12 +84,24 @@ def python_rdd_scans(df: DataFrame) -> int:
 
 
 def has_python_eval(df: DataFrame) -> bool:
-    """True when the plan runs Python: a Python evaluator node, or a
-    scan of a Python-backed RDD (``python_rdd_scans``)."""
-    s = explain_str(df)
-    if "BatchEvalPython" in s or "ArrowEvalPython" in s or "MapInPandas" in s:
-        return True
-    return "Scan ExistingRDD" in s and python_rdd_scans(df) > 0
+    """True when the plan runs Python: a physical node of Spark's
+    ``org.apache.spark.sql.execution.python`` package (a Python UDF,
+    pandas or Arrow map, grouped, cogrouped or window evaluator), or a
+    scan of a Python-backed RDD (``python_rdd_scans``). Every node
+    counts: subqueries, adaptive query stages and cached plans too."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass()
+        if cls.getName().startswith("org.apache.spark.sql.execution.python."):
+            return True
+        if cls.getSimpleName() == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif cls.getSimpleName().endswith("QueryStageExec"):
+            stack.append(node.plan())
+        for seq in (node.children(), node.innerChildren()):
+            stack += [seq.apply(i) for i in range(seq.size())]
+    return python_rdd_scans(df) > 0
 
 
 def wholestage_codegen_spans(df: DataFrame) -> int:

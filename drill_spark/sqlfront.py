@@ -8,7 +8,7 @@ FILES, table functions with reader options
 grammar covers standard SQL; this module translates the Drill-isms and
 delegates everything else untouched — **no Catalyst fork**.
 
-Rewrites performed:
+Rewrites performed on every statement (``rewrite``):
 - ``<workspace>.`<path>``` table refs  → read the file(s), register a
   temp view, substitute the view name. Format chosen by
   ``readers/formats.py::infer_format`` (table-format directory, file
@@ -19,30 +19,12 @@ Rewrites performed:
   (TestSelectWithOption.java semantics).
 - ``table(pipeline.`<name>`(<k> => '<v>', ...))`` → an ops/ operator,
   its options bound through the ``PIPELINE`` table.
-- ``ALTER SESSION|SYSTEM SET `opt` = val`` → DrillSession.set_option.
-- ``SHOW FILES [IN <ws>]`` / ``SHOW FILES FROM <path>`` → a DataFrame of
-  the directory listing (store/ischema analog).
-- ``RESET `opt``` / ``SET`` passthrough.
-- ``USE <ws>`` → session default workspace (parserImpls.ftl:135).
-- ``SHOW SCHEMAS`` / ``SHOW DATABASES`` → workspace + catalog listing
-  (parserImpls.ftl:42-110).
-- ``SHOW TABLES`` → Spark catalog passthrough.
-- ``DESCRIBE <table>`` → Spark passthrough (path tables rewritten first).
-- ``CREATE TABLE <ws>.`path` AS SELECT ...`` (CTAS,
-  CreateTableHandler.java) → ``df.write`` to the workspace path.
-- ``DROP TABLE [IF EXISTS] <ws>.`path``` → recursive delete within a
-  *writable* workspace only.
-- ``CREATE [OR REPLACE] VIEW name AS ...`` → Spark temp view
-  (ViewHandler.java; Drill stores views as .view.drill JSON — ours live
-  in the Spark temp catalog).
-- ``CREATE/DROP [PUBLIC] ALIAS`` / ``SHOW ALIASES`` → session alias
-  registry, resolved textually before table lookup
-  (CreateAliasHandler.java; docs/dev/Aliases.md).
-- ``REFRESH TABLE METADATA <t>`` → ``spark.catalog.refreshByPath``
-  (parserImpls.ftl:556-579 — parquet metadata cache invalidation).
-- ``CREATE/DROP MATERIALIZED VIEW`` → materialize to parquet + view
-  over it (MaterializedViewHandler.java; automatic query rewrite to
-  matching MVs is out of scope, as in Drill it is experimental).
+
+Drill's own statements (USE, SHOW FILES, CTAS, ALTER SESSION, views,
+aliases, materialized views, ...) are the ``STATEMENTS`` rows, each
+naming the Drill handler it stands for. Everything else, EXPLAIN PLAN
+FOR and ``sys.``/``information_schema.`` tables included, runs as a
+Spark statement (``_plain_query``).
 """
 
 from __future__ import annotations
@@ -52,7 +34,7 @@ import re
 import shutil
 from dataclasses import dataclass
 from importlib import import_module
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Row
 
@@ -60,22 +42,14 @@ from drill_spark.readers import files, formats
 from drill_spark.readers.formats import flag
 from drill_spark.session import local_frame
 
-# ws.`/path` or ws.sub.`/path`  (workspace part without backticks)
-_PATH_TABLE = re.compile(r"(?<![\w`])((?:\w+\.)+)`([^`]+)`")
-# option names may carry hyphens (store.parquet.block-size et al.)
-_ALTER_SET = re.compile(
-    r"^\s*ALTER\s+(SESSION|SYSTEM)\s+SET\s+`?([\w.-]+)`?\s*=\s*'?([^'\s;]+)'?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_RESET = re.compile(r"^\s*(?:ALTER\s+SESSION\s+)?RESET\s+`?([\w.-]+)`?\s*;?\s*$", re.IGNORECASE)
-_SHOW_FILES = re.compile(r"^\s*SHOW\s+FILES(?:\s+(?:IN|FROM)\s+(\S+))?\s*;?\s*$", re.IGNORECASE)
-_SHOW_TABLES_WS = re.compile(
-    r"^\s*SHOW\s+TABLES\s+(?:IN|FROM)\s+((?:dfs|s3|cp)(?:\.\w+)*)\s*;?\s*$",
-    re.IGNORECASE)
+# ws.`/path` or ws.sub.`/path` (workspace part without backticks): the
+# path-table token, ``{table}`` in a STATEMENTS pattern
+_TABLE = r"(?P<ws>(?:\w+\.)+)`(?P<rel>[^`]+)`"
+_PATH_TABLE = re.compile(r"(?<![\w`])" + _TABLE)
 # option values may be quoted strings containing ')' or ',' (e.g. a
 # regex or a schema DDL) — consume quoted segments atomically
 _TABLE_FN = re.compile(
-    r"table\(\s*((?:\w+\.)+)`([^`]+)`\s*\(((?:'[^']*'|\"[^\"]*\"|[^)])*)\)\s*\)",
+    r"table\(\s*" + _TABLE + r"\s*\(((?:'[^']*'|\"[^\"]*\"|[^)])*)\)\s*\)",
     re.IGNORECASE,
 )
 # a query, EXPLAIN/DESCRIBE of one, or an INSERT into a Spark table
@@ -85,66 +59,13 @@ _TABLE_FN = re.compile(
 _PLAIN_QUERY = re.compile(
     r"(?:\s|--[^\n]*|/\*.*?\*/|\()*(?:SELECT|WITH|VALUES|EXPLAIN|DESC|DESCRIBE|INSERT)\b",
     re.IGNORECASE | re.DOTALL)
-_USE = re.compile(r"^\s*USE\s+`?([\w.]+)`?\s*;?\s*$", re.IGNORECASE)
-_SHOW_SCHEMAS = re.compile(r"^\s*SHOW\s+(?:SCHEMAS|DATABASES)\s*;?\s*$", re.IGNORECASE)
-_DESCRIBE_SCHEMA = re.compile(r"^\s*DESCRIBE\s+SCHEMA\s+`?([\w.]+)`?\s*;?\s*$", re.IGNORECASE)
-_CTAS = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(TEMPORARY\s+)?TABLE\s+((?:\w+\.)+)`([^`]+)`"
-    r"(?:\s+PARTITION\s+BY\s*\(([^)]*)\))?\s+AS\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_TABLE = re.compile(
-    r"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?((?:\w+\.)+)`([^`]+)`\s*;?\s*$", re.IGNORECASE
-)
-_CREATE_VIEW = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+((?:\w+\.)+)?`?([\w]+)`?\s+AS\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_VIEW = re.compile(
-    r"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?((?:\w+\.)+)?`?([\w]+)`?\s*;?\s*$", re.IGNORECASE
-)
-# Drill dynamic UDFs: CREATE FUNCTION USING JAR 'x.jar'
-# (planner/sql/handlers/CreateFunctionHandler.java)
-_CREATE_FN_JAR = re.compile(
-    r"^\s*(CREATE|DROP)\s+FUNCTION\s+USING\s+JAR\s+'([^']+)'\s*;?\s*$", re.IGNORECASE
-)
-_INSERT_PATH = re.compile(
-    r"^\s*INSERT\s+INTO\s+((?:\w+\.)+)`([^`]+)`\s+(.*)$", re.IGNORECASE | re.DOTALL
-)
-# OPTIMIZE / VACUUM — Delta table maintenance (compaction + orphan
-# cleanup), the operational pair every lakehouse writer needs
-_OPTIMIZE_PATH = re.compile(
-    r"^\s*OPTIMIZE\s+((?:\w+\.)+)`([^`]+)`"
-    r"(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?\s*;?\s*$", re.IGNORECASE
-)
-_VACUUM_PATH = re.compile(
-    r"^\s*VACUUM\s+((?:\w+\.)+)`([^`]+)`(?:\s+RETAIN\s+(\d+)\s+HOURS)?"
-    r"(\s+DRY\s+RUN)?\s*;?\s*$",
-    re.IGNORECASE,
-)
-# RESTORE TABLE ws.`t` TO VERSION AS OF n | TO TIMESTAMP AS OF 'ts'
-# (Delta's time-travel write; no Drill analog — read-mostly engine)
-_RESTORE_PATH = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+((?:\w+\.)+)`([^`]+)`\s+TO\s+"
-    r"(?:VERSION\s+AS\s+OF\s+(\d+)|TIMESTAMP\s+AS\s+OF\s+'([^']+)')\s*;?\s*$",
-    re.IGNORECASE,
-)
-# DESCRIBE HISTORY ws.`t` — the commit/snapshot audit listing
-_DESCRIBE_HISTORY = re.compile(
-    r"^\s*DESCRIBE\s+HISTORY\s+((?:\w+\.)+)`([^`]+)`\s*;?\s*$", re.IGNORECASE
-)
-# DELETE FROM ws.`path` WHERE ... — row-level delete, routed to the
-# table-format delete (delta deletion vectors / iceberg position
-# deletes). The reference has no DELETE (read-mostly engine); lakehouse
-# tables make it expressible without rewriting data files.
-_DELETE_PATH = re.compile(
-    r"^\s*DELETE\s+FROM\s+((?:\w+\.)+)`([^`]+)`\s+WHERE\s+(.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_PATH = re.compile(
-    r"^\s*UPDATE\s+((?:\w+\.)+)`([^`]+)`\s+SET\s+(.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
+_EXPLAIN_PLAN = re.compile(
+    r"\s*EXPLAIN\s+PLAN\s+(?:WITH\s+IMPLEMENTATION\s+)?FOR\s+(.*)", re.IGNORECASE | re.DOTALL)
+# INFORMATION_SCHEMA.x / sys.x tables (store/ischema/, store/sys/), x
+# plain or backquoted. A backquoted span matches first and is kept, so
+# tsdb.`sys.cpu.user` (a path that merely contains "sys.") stays a path
+_SYSTEM_TABLE = re.compile(
+    r"`[^`]*`|\b(sys|information_schema)\s*\.\s*(?:`(\w+)`|(\w+))", re.IGNORECASE)
 
 
 def _split_where(tail: str) -> tuple[str, str]:
@@ -206,18 +127,6 @@ def _split_set_clause(clause: str) -> dict[str, str]:
     return out
 
 
-# MERGE INTO ws.`path` [[AS] <alias>] USING (<subquery>)|<table> [AS] <alias>
-#   ON cond
-#   [WHEN MATCHED THEN UPDATE SET ... | WHEN MATCHED THEN DELETE]
-#   [WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)]
-_MERGE_PATH = re.compile(
-    r"^\s*MERGE\s+INTO\s+((?:\w+\.)+)`([^`]+)`(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+"
-    r"(\(.*\)|(?:[^\s`]|`[^`]*`)+)\s+(?:AS\s+)?(\w+)\s+ON\s+(.+?)"
-    r"(?:\s+WHEN\s+MATCHED\s+THEN\s+(?:UPDATE\s+SET\s+(.+?)|(DELETE)))?"
-    r"(?:\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s*\(([^)]*)\)\s*"
-    r"VALUES\s*\((.+?)\))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 # a table qualifier, a plain or backquoted name before a dot (group 1);
 # else a string literal or a backquoted name, kept as it is
 _QUALIFIER = re.compile(r"(?<![\w.`])(\w+|`[^`]*`)(?=\s*\.)"
@@ -235,67 +144,11 @@ def _realias(expr: str | None, aliases: dict[str, str]) -> str | None:
         if m.group(1) else m.group(0), expr)
 
 
-# Drill aliases (planner/sql/handlers/CreateAliasHandler.java; PUBLIC =
-# system-wide vs user scope — one session here, so scope is cosmetic)
-_CREATE_ALIAS = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:PUBLIC\s+)?ALIAS\s+`?(\w+)`?\s+FOR\s+(?:TABLE\s+)?(.+?)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_DROP_ALIAS = re.compile(
-    r"^\s*DROP\s+(?:PUBLIC\s+)?ALIAS\s+(IF\s+EXISTS\s+)?`?(\w+)`?\s*;?\s*$", re.IGNORECASE
-)
-_SHOW_ALIASES = re.compile(r"^\s*SHOW\s+ALIASES\s*;?\s*$", re.IGNORECASE)
-# provided schema DDL (planner/sql/handlers/SchemaHandler.java): persist
-# a column list for a (usually schema-less text) table directory
-_CREATE_SCHEMA_FT = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?SCHEMA\s*\(([^)]*)\)\s*FOR\s+TABLE\s+"
-    r"((?:\w+\.)+)`([^`]+)`\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_SCHEMA_FT = re.compile(
-    r"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?FOR\s+TABLE\s+((?:\w+\.)+)`([^`]+)`\s*;?\s*$",
-    re.IGNORECASE,
-)
+# a table directory's provided schema (CREATE SCHEMA ... FOR TABLE) and
+# statistics (ANALYZE TABLE)
 SCHEMA_FILE = ".drill.schema"
-# ANALYZE TABLE ... COMPUTE STATISTICS [SAMPLE n PERCENT]
-# (planner/sql/handlers/AnalyzeTableHandler.java; artifact shape from
-# planner/common/DrillStatsTable.java: rowcount + per-column ndv /
-# non-null count / histogram buckets)
-_ANALYZE = re.compile(
-    r"^\s*ANALYZE\s+TABLE\s+((?:\w+\.)+)`([^`]+)`\s+COMPUTE\s+STATISTICS"
-    r"(?:\s+SAMPLE\s+(\d+)\s+PERCENT)?\s*;?\s*$",
-    re.IGNORECASE,
-)
 STATS_FILE = ".stats.drill"
-# REFRESH TABLE METADATA (parserImpls.ftl:556-579 — rebuilds the parquet
-# metadata cache; Spark analog: invalidate cached listings/footers)
-_REFRESH_META = re.compile(
-    r"^\s*REFRESH\s+TABLE\s+METADATA\s+(?:((?:\w+\.)+)`([^`]+)`|`?([\w./-]+)`?)\s*;?\s*$",
-    re.IGNORECASE,
-)
-_CREATE_MV = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+"
-    r"(IF\s+NOT\s+EXISTS\s+)?`?(\w+)`?\s+AS\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-# CREATE VECTOR INDEX (net-new DDL over ops/vecindex.py — the
-# similarity stack's build-once/probe-many surface)
-_CREATE_VIDX = re.compile(
-    r"^\s*CREATE\s+(OR\s+REPLACE\s+)?VECTOR\s+INDEX\s+`?(\w+)`?\s+ON\s+"
-    r"(.+?)\s*\(\s*`?(\w+)`?\s*\)\s*(?:WITH\s*\((.*?)\)\s*)?;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DROP_VIDX = re.compile(
-    r"^\s*DROP\s+VECTOR\s+INDEX\s+(IF\s+EXISTS\s+)?`?(\w+)`?\s*;?\s*$",
-    re.IGNORECASE,
-)
-_DROP_MV = re.compile(
-    r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?`?(\w+)`?\s*;?\s*$", re.IGNORECASE
-)
-_REFRESH_MV = re.compile(
-    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+`?(\w+)`?(\s+FULL)?\s*;?\s*$",
-    re.IGNORECASE,
-)
+
 # the incrementally-maintainable MV shape: single source, optional
 # WHERE, GROUP BY, and a select list of group columns + decomposable
 # aggregates (COUNT/SUM/MIN/MAX)
@@ -897,13 +750,6 @@ def _drill_cols_to_spark_ddl(cols: str) -> str:
     return ", ".join(out)
 
 
-def _table_fn(path: str, op: str):
-    """The ``op`` function (a ``formats.Format`` field) of the table
-    format at ``path``, or None when its row has none."""
-    ref = getattr(formats.row(formats.infer_format(path, "")), op)
-    return formats.load(ref) if ref else None
-
-
 def _writable_path(session, ws_name: str, rel_path: str) -> tuple[str, str]:
     """Resolve a CTAS/INSERT/DROP target inside a writable workspace."""
     ws = session.workspaces.get(ws_name)
@@ -911,7 +757,7 @@ def _writable_path(session, ws_name: str, rel_path: str) -> tuple[str, str]:
         raise ValueError(f"unknown workspace: {ws_name}")
     if not ws.writable:
         raise ValueError(f"workspace {ws_name} is not writable (CreateTableHandler analog)")
-    path = rel_path if os.path.isabs(rel_path) else os.path.join(ws.path, rel_path)
+    path = os.path.join(ws.path, rel_path)
     # `store.format` session option overrides the workspace default
     # (ExecConstants OUTPUT_FORMAT_OPTION — Drill's CTAS output format)
     default_fmt = session.get_option("store.format", ws.default_format)
@@ -960,635 +806,678 @@ def _cast_to_table(spark, df: DataFrame, target, table: str) -> DataFrame:
     return df.toDF(*target.fieldNames()).select(cols)
 
 
-def execute(session, query: str) -> DataFrame:
+# -- Drill-side statements ---------------------------------------------------
+#
+# Drill's DrillSqlWorker hands each parsed statement kind to one
+# SqlHandler. Here a ``STATEMENTS`` row does: the row whose pattern
+# matches the statement runs its handler, and any other statement is a
+# plain query for Spark (``_plain_query``). No statement matches two
+# rows (tests/test_statements.py), so the row order does not matter.
+
+
+class Target(NamedTuple):
+    """A statement's ``ws.`rel``` table and the file path it names."""
+
+    ws: str
+    rel: str
+    path: str
+    fmt: str  # the format a write stores; "" for a table it only reads
+
+    def __str__(self) -> str:
+        return f"{self.ws}.`{self.rel}`"
+
+
+@dataclass(frozen=True)
+class Statement:
+    """One statement kind. ``handler(session, **groups)`` receives the
+    pattern's named groups; a ``{table}`` target arrives as ``table``, a
+    ``Target`` inside a writable workspace when ``writable``. ``op``
+    names the ``formats.Format`` function of the target's table format,
+    which the handler receives as ``fn``. A ``refresh`` row changes its
+    table in place, so Spark's cached reads of it are refreshed after
+    the handler. A handler returns a DataFrame, a summary string, a dict
+    of result columns that follow ``ok``, or None to run the statement
+    as Spark's own."""
+
+    kind: str
+    pattern: re.Pattern
+    handler: Callable[..., DataFrame | str | dict | None]
+    writable: bool = False
+    op: str = ""
+    refresh: bool = False
+
+
+def _stmt(kind: str, text: str, handler, **flags) -> Statement:
+    """A row. ``text`` is the statement's own pattern: each space stands
+    for any whitespace, ``{table}`` for the path-table token; the row
+    adds the anchor and the optional ``;``."""
+    text = text.replace(" ", r"\s+").replace("{table}", _TABLE)
+    return Statement(kind, re.compile(rf"^\s*{text}\s*;?\s*$", re.IGNORECASE | re.DOTALL),
+                     handler, **flags)
+
+
+# what a table format without the ``op`` function raises
+_NO_TABLE_FN = {
+    "merge": (NotImplementedError, "MERGE needs a delta or iceberg table"),
+    "update": (NotImplementedError, "UPDATE needs a delta, iceberg or paimon-PK table "
+                                    "(plain parquet: rewrite via CTAS)"),
+    "delete": (NotImplementedError, "DELETE needs a delta, iceberg or paimon-PK table "
+                                    "(plain parquet files are immutable — rewrite via "
+                                    "CTAS instead)"),
+    "history": (ValueError, "DESCRIBE HISTORY needs a delta or iceberg table: {path}"),
+}
+
+
+def _table_fn(path: str, op: str):
+    """The ``op`` function (a ``formats.Format`` field) of the table
+    format at ``path``."""
+    ref = getattr(formats.row(formats.infer_format(path, "")), op)
+    if not ref:
+        exc, msg = _NO_TABLE_FN[op]
+        raise exc(msg.format(path=path))
+    return formats.load(ref)
+
+
+def _scratch_dir(session, kind: str, name: str) -> str:
+    """Where a session-built artifact lives: under the dfs.tmp workspace."""
+    tmp_ws = session.workspaces.get("dfs.tmp")
+    return os.path.join(tmp_ws.path if tmp_ws else "/tmp", kind, name)
+
+
+def _remove(path: str) -> None:
+    shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
+
+
+def _use(session, name):
+    if name not in session.workspaces:
+        return None  # a Spark database
+    session.options["drill.default_workspace"] = name
+    return f"Default schema changed to [{name}]"
+
+
+def _show_schemas(session):
+    from drill_spark.catalog import information_schema_schemata
+
+    return information_schema_schemata(session)
+
+
+def _describe_schema(session, name):
+    ws = session.workspaces.get(name)
+    if ws is None:
+        raise ValueError(f"unknown schema: {name}")
+    return local_frame(
+        session.spark, [(ws.name, ws.path, ws.default_format, ws.writable, ws.kind)],
+        "schema_name string, location string, default_format string, writable boolean, "
+        "type string")
+
+
+def _ctas(session, table, replace, temporary, partition, select):
+    df = session.spark.sql(rewrite(session, select))
+    cols = [c.strip().strip("`") for c in (partition or "").split(",") if c.strip()]
+    row = formats.row(table.fmt)
+    if row.write:
+        # formats written by our native writers, not a JVM datasource
+        if cols and not row.partitions:
+            raise NotImplementedError(f"PARTITION BY is not supported for {row.name} CTAS")
+        if os.path.exists(table.path):
+            if not replace:
+                raise ValueError(f"table already exists: {table.path}")
+            _remove(table.path)
+        formats.load(row.write)(df, table.path, **({"partition_by": cols} if cols else {}))
+    else:
+        writer = df.write.format(row.spark or row.name).options(**row.spark_options).mode(
+            "overwrite" if replace else "errorifexists")
+        if cols:
+            # CTAS PARTITION BY -> Hive-layout directories; filters on
+            # partition columns prune at listing time on readback
+            # (Drill's dir-pruning, natively)
+            writer = writer.partitionBy(*cols)
+        writer.save(table.path)
+    if temporary:
+        # session-scoped table, dropped by DrillSession.close()
+        session.temp_tables.append(table.path)
+    suffix = f" partitioned by ({partition})" if partition else ""
+    return f"created table {table} ({table.fmt}){suffix}"
+
+
+def _insert(session, table, select):
     spark = session.spark
+    df = spark.sql(rewrite(session, select))
+    row = formats.row(table.fmt)
+    if row.insert:
+        formats.load(row.insert)(df, table.path)
+    else:
+        if row.typed_files and _has_data(table.path):
+            target = spark.read.format(row.spark or row.name).load(table.path).schema
+            df = _cast_to_table(spark, df, target, str(table))
+        df.write.format(row.spark or row.name).options(
+            **row.spark_options).mode("append").save(table.path)
+    return f"appended to {table}"
 
-    m = _USE.match(query)
-    if m:
-        name = m.group(1)
-        if name in session.workspaces:
-            session.options["drill.default_workspace"] = name
-            return _ok(spark, f"Default schema changed to [{name}]")
-        return spark.sql(query)  # a Spark database name
 
-    if _SHOW_SCHEMAS.match(query):
-        from drill_spark.catalog import information_schema_schemata
+def _optimize(session, table, zorder):
+    from drill_spark.readers.delta import optimize
 
-        return information_schema_schemata(session)
+    cols = [c.strip().strip("`") for c in zorder.split(",")] if zorder else None
+    return optimize(session.spark, table.path, zorder_by=cols)
 
-    m = _DESCRIBE_SCHEMA.match(query)
-    if m:
-        # DescribeSchemaHandler analog: workspace properties as one row
-        ws = session.workspaces.get(m.group(1))
-        if ws is None:
-            raise ValueError(f"unknown schema: {m.group(1)}")
-        return local_frame(
-            spark, [
-                Row(
-                    schema_name=ws.name,
-                    location=ws.path,
-                    default_format=ws.default_format,
-                    writable=ws.writable,
-                    type=ws.kind,
-                )
-            ],
-            "schema_name string, location string, default_format string, writable boolean, "
-            "type string",
-        )
 
-    m = _CTAS.match(query)
-    if m:
-        temporary, ws_name, rel_path, part_cols, select = (
-            m.group(1),
-            m.group(2).rstrip("."),
-            m.group(3),
-            m.group(4),
-            m.group(5),
-        )
-        path, fmt = _writable_path(session, ws_name, rel_path)
-        df = spark.sql(rewrite(session, select))
-        mode = "overwrite" if re.match(r"\s*CREATE\s+OR\s+REPLACE", query, re.IGNORECASE) else "errorifexists"
-        cols = [c.strip().strip("`") for c in (part_cols or "").split(",") if c.strip()]
-        row = formats.row(fmt)
-        if row.write:
-            # formats written by our native writers, not a JVM datasource
-            if cols and not row.partitions:
-                raise NotImplementedError(
-                    f"PARTITION BY is not supported for {row.name} CTAS")
-            if os.path.exists(path):
-                if mode != "overwrite":
-                    raise ValueError(f"table already exists: {path}")
-                shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
-            formats.load(row.write)(df, path, **({"partition_by": cols} if cols else {}))
-        else:
-            writer = df.write.format(row.spark or row.name).options(
-                **row.spark_options).mode(mode)
-            if cols:
-                # CTAS PARTITION BY (CreateTableHandler.java) -> Hive-layout
-                # directories; filters on partition columns prune at listing
-                # time on readback (Drill's dir-pruning, natively)
-                writer = writer.partitionBy(*cols)
-            writer.save(path)
-        if temporary:
-            # session-scoped table (CreateTableHandler temporary path):
-            # dropped by DrillSession.close()
-            session.temp_tables.append(path)
-        suffix = f" partitioned by ({part_cols})" if part_cols else ""
-        return _ok(spark, f"created table {ws_name}.`{rel_path}` ({fmt}){suffix}")
+def _vacuum(session, table, hours, dry_run):
+    from drill_spark.readers.delta import vacuum
 
-    m = _INSERT_PATH.match(query)
-    if m:
-        ws_name, rel_path, select = m.group(1).rstrip("."), m.group(2), m.group(3)
-        path, fmt = _writable_path(session, ws_name, rel_path)
-        df = spark.sql(rewrite(session, select))
-        row = formats.row(fmt)
-        if row.insert:
-            formats.load(row.insert)(df, path)
-        else:
-            if row.typed_files and _has_data(path):
-                target = spark.read.format(row.spark or row.name).load(path).schema
-                df = _cast_to_table(spark, df, target, f"{ws_name}.`{rel_path}`")
-            df.write.format(row.spark or row.name).options(
-                **row.spark_options).mode("append").save(path)
-        spark.catalog.refreshByPath(path)
-        return _ok(spark, f"appended to {ws_name}.`{rel_path}`")
+    gone = vacuum(session.spark, table.path,
+                  retention_hours=float(hours) if hours else 168, dry_run=bool(dry_run))
+    return {"n_removed": len(gone), "dry_run": bool(dry_run)}
 
-    m = _OPTIMIZE_PATH.match(query)
-    if m:
-        from drill_spark.readers.delta import optimize
 
-        ws_name, rel_path = m.group(1).rstrip("."), m.group(2)
-        zcols = [c.strip().strip("`") for c in m.group(3).split(",")] \
-            if m.group(3) else None
-        path, _ = _writable_path(session, ws_name, rel_path)
-        stats = optimize(spark, path, zorder_by=zcols)
-        spark.catalog.refreshByPath(path)
-        return local_frame(spark, [Row(ok=True, **stats)])
+def _restore(session, table, version, timestamp):
+    from drill_spark.readers.delta import restore_table
 
-    m = _VACUUM_PATH.match(query)
-    if m:
-        from drill_spark.readers.delta import vacuum
+    return restore_table(session.spark, table.path,
+                         version=int(version) if version else None, timestamp=timestamp)
 
-        ws_name, rel_path, hours, dry = (
-            m.group(1).rstrip("."), m.group(2), m.group(3), m.group(4))
-        path, _ = _writable_path(session, ws_name, rel_path)
-        gone = vacuum(spark, path,
-                      retention_hours=float(hours) if hours else 168,
-                      dry_run=bool(dry))
-        return local_frame(spark, [Row(ok=True, n_removed=len(gone), dry_run=bool(dry))])
 
-    m = _DESCRIBE_HISTORY.match(query)
-    if m:
-        ws_name, rel_path = m.group(1).rstrip("."), m.group(2)
-        ws = session.workspaces.get(ws_name)
-        root = ws.path if ws else "/"
-        path = rel_path if os.path.isabs(rel_path) else os.path.join(root, rel_path)
-        describe_history = _table_fn(path, "history")
-        if describe_history is None:
-            raise ValueError(f"DESCRIBE HISTORY needs a delta or iceberg table: {path}")
-        return describe_history(spark, path)
+def _merge(session, table, fn, target_alias, source, source_alias, on, assign, delete,
+           insert_cols, insert_vals):
+    aliases = {source_alias.lower(): "src", (target_alias or "t").lower(): "t"}
+    on, assign, insert_vals = (_realias(e, aliases) for e in (on, assign, insert_vals))
+    subquery = source.startswith("(") and source.endswith(")")
+    source_sql = source[1:-1] if subquery else f"select * from {source}"
+    insert_map = None
+    if insert_cols is not None:
+        cols = [c.strip().strip("`") for c in insert_cols.split(",")]
+        vals = [v.strip() for v in _split_top_level(insert_vals)]
+        if len(cols) != len(vals):
+            raise ValueError("INSERT column/value count mismatch")
+        insert_map = dict(zip(cols, vals))
+    return fn(session.spark, table.path, session.spark.sql(rewrite(session, source_sql)),
+              on.strip(),
+              when_matched_update=_split_set_clause(assign) if assign else None,
+              when_matched_delete=bool(delete), when_not_matched_insert=insert_map)
 
-    m = _RESTORE_PATH.match(query)
-    if m:
-        from drill_spark.readers.delta import restore_table
 
-        ws_name, rel_path, ver, ts = (
-            m.group(1).rstrip("."), m.group(2), m.group(3), m.group(4))
-        path, _ = _writable_path(session, ws_name, rel_path)
-        stats = restore_table(spark, path,
-                              version=int(ver) if ver else None,
-                              timestamp=ts)
-        spark.catalog.refreshByPath(path)
-        return local_frame(spark, [Row(ok=True, **stats)])
+def _update(session, table, fn, tail):
+    assign, cond = _split_where(tail)
+    n = fn(session.spark, table.path, cond, _split_set_clause(assign))
+    return {"summary": f"updated {n} rows in {table}", "rows_updated": n}
 
-    m = _MERGE_PATH.match(query)
-    if m:
-        (ws_name, rel_path, t_alias, src_text, src_alias, on_cond, set_clause,
-         del_kw, ins_cols, ins_vals) = m.groups()
-        ws_name = ws_name.rstrip(".")
-        aliases = {src_alias.lower(): "src", (t_alias or "t").lower(): "t"}
-        on_cond, set_clause, ins_vals = (
-            _realias(e, aliases) for e in (on_cond, set_clause, ins_vals))
-        path, _ = _writable_path(session, ws_name, rel_path)
-        merge_into = _table_fn(path, "merge")
-        if merge_into is None:
-            raise NotImplementedError("MERGE needs a delta or iceberg table")
 
-        if src_text.startswith("(") and src_text.endswith(")"):
-            source = spark.sql(rewrite(session, src_text[1:-1]))
-        else:
-            source = spark.sql(rewrite(session, f"select * from {src_text}"))
-        insert_map = None
-        if ins_cols is not None:
-            cols = [c.strip().strip("`") for c in ins_cols.split(",")]
-            vals = [v.strip() for v in _split_top_level(ins_vals)]
-            if len(cols) != len(vals):
-                raise ValueError("INSERT column/value count mismatch")
-            insert_map = dict(zip(cols, vals))
-        stats = merge_into(
-            spark, path, source, on_cond.strip(),
-            when_matched_update=_split_set_clause(set_clause) if set_clause else None,
-            when_matched_delete=bool(del_kw),
-            when_not_matched_insert=insert_map,
-        )
-        spark.catalog.refreshByPath(path)
-        return local_frame(spark, [Row(ok=True, **stats)])
+def _delete(session, table, fn, cond):
+    n = fn(session.spark, table.path, cond)
+    return {"summary": f"deleted {n} rows from {table}", "rows_deleted": n}
 
-    m = _UPDATE_PATH.match(query)
-    if m:
-        ws_name, rel_path = m.group(1).rstrip("."), m.group(2)
-        set_clause, cond = _split_where(m.group(3))
-        path, _ = _writable_path(session, ws_name, rel_path)
-        update_where = _table_fn(path, "update")
-        if update_where is None:
-            raise NotImplementedError(
-                "UPDATE needs a delta, iceberg or paimon-PK table "
-                "(plain parquet: rewrite via CTAS)"
-            )
-        n = update_where(spark, path, cond, _split_set_clause(set_clause))
-        spark.catalog.refreshByPath(path)
-        return local_frame(
-            spark, [Row(ok=True, summary=f"updated {n} rows in {ws_name}.`{rel_path}`",
-                        rows_updated=n)])
 
-    m = _DELETE_PATH.match(query)
-    if m:
-        ws_name, rel_path, cond = m.group(1).rstrip("."), m.group(2), m.group(3)
-        path, _ = _writable_path(session, ws_name, rel_path)
-        delete_where = _table_fn(path, "delete")
-        if delete_where is None:
-            raise NotImplementedError(
-                "DELETE needs a delta, iceberg or paimon-PK table (plain parquet "
-                "files are immutable — rewrite via CTAS instead)"
-            )
-        n = delete_where(spark, path, cond)
-        spark.catalog.refreshByPath(path)
-        return local_frame(
-            spark, [Row(ok=True, summary=f"deleted {n} rows from {ws_name}.`{rel_path}`",
-                        rows_deleted=n)])
+def _drop_table(session, table, if_exists):
+    if not os.path.exists(table.path):
+        if if_exists:
+            return f"table {table.rel} did not exist"
+        raise ValueError(f"table not found: {table}")
+    _remove(table.path)
+    return f"dropped table {table}"
 
-    m = _DROP_TABLE.match(query)
-    if m:
-        if_exists, ws_name, rel_path = m.group(1), m.group(2).rstrip("."), m.group(3)
-        path, _ = _writable_path(session, ws_name, rel_path)
-        if not os.path.exists(path):
-            if if_exists:
-                return _ok(spark, f"table {rel_path} did not exist")
-            raise ValueError(f"table not found: {ws_name}.`{rel_path}`")
-        shutil.rmtree(path) if os.path.isdir(path) else os.remove(path)
-        return _ok(spark, f"dropped table {ws_name}.`{rel_path}`")
 
-    m = _CREATE_ALIAS.match(query)
-    if m:
-        alias, target = m.group(1), m.group(2)
-        session.aliases[alias] = target
-        return _ok(spark, f"alias {alias} -> {target}")
+def _create_alias(session, alias, target):
+    session.aliases[alias] = target
+    return f"alias {alias} -> {target}"
 
-    m = _DROP_ALIAS.match(query)
-    if m:
-        if_exists, alias = m.group(1), m.group(2)
-        if alias not in session.aliases and not if_exists:
-            raise ValueError(f"alias not found: {alias}")
-        session.aliases.pop(alias, None)
-        return _ok(spark, f"alias {alias} dropped")
 
-    if _SHOW_ALIASES.match(query):
-        rows = [Row(alias=a, target=t) for a, t in sorted(session.aliases.items())]
-        return local_frame(spark, rows, "alias string, target string")
+def _drop_alias(session, if_exists, alias):
+    if alias not in session.aliases and not if_exists:
+        raise ValueError(f"alias not found: {alias}")
+    session.aliases.pop(alias, None)
+    return f"alias {alias} dropped"
 
-    m = _REFRESH_META.match(query)
-    if m:
-        if m.group(2):  # ws.`path` form
-            ws = session.workspaces.get(m.group(1).rstrip("."))
-            root = ws.path if ws else "/"
-            path = m.group(2) if os.path.isabs(m.group(2)) else os.path.join(root, m.group(2))
-        else:
-            path = m.group(3)
-        if os.path.isdir(path) and formats.infer_format(path, "") == "parquet":
-            # plain parquet dir: write the .drill.parquet_metadata cache
-            # (MetadataHandler.java; reads consult it to skip listing)
-            cache = files.write_parquet_metadata_cache(path)
-            spark.catalog.refreshByPath(path)
-            return _ok(spark, f"metadata cache updated for {path}: "
-                              f"{len(cache['files'])} files, "
-                              f"{cache['total_rows']} rows")
-        if os.path.exists(path):
-            spark.catalog.refreshByPath(path)
-            return _ok(spark, f"metadata refreshed for {path}")
-        spark.catalog.refreshTable(path)
-        return _ok(spark, f"metadata refreshed for table {path}")
 
-    m = _CREATE_VIDX.match(query)
-    if m:
-        from drill_spark.ops.vecindex import build_vector_index
+def _refresh_metadata(session, name, table=None):
+    path = table.path if table else name
+    if not os.path.exists(path):
+        session.spark.catalog.refreshTable(path)
+        return f"metadata refreshed for table {path}"
+    summary = f"metadata refreshed for {path}"
+    if os.path.isdir(path) and formats.infer_format(path, "") == "parquet":
+        # plain parquet dir: write the .drill.parquet_metadata cache
+        # (MetadataHandler.java; reads consult it to skip listing)
+        cache = files.write_parquet_metadata_cache(path)
+        summary = (f"metadata cache updated for {path}: {len(cache['files'])} files, "
+                   f"{cache['total_rows']} rows")
+    session.spark.catalog.refreshByPath(path)
+    return summary
 
-        or_replace, name, src, col, opts_raw = m.groups()
-        if name in session.vector_indexes and not or_replace:
-            raise ValueError(
-                f"vector index already exists: {name} "
-                "(use CREATE OR REPLACE VECTOR INDEX)")
-        opts = dict(re.findall(r"(\w+)\s*=>?\s*'?([\w./-]+)'?",
-                               opts_raw or ""))
-        df = _resolve_input(session, src.strip().strip("`"))
-        tmp_ws = session.workspaces.get("dfs.tmp")
-        path = os.path.join(tmp_ws.path if tmp_ws else "/tmp",
-                            "_vector_indexes", name)
-        shutil.rmtree(path, ignore_errors=True)
-        meta = build_vector_index(
-            df, path, id_col=opts.get("id", "vec_id"), vec_col=col,
-            n_cells=int(opts.get("cells", 8)),
-            m=int(opts.get("m", 8)),
-            n_codes=int(opts.get("codes", 16)))
-        session.vector_indexes[name] = path
-        return _ok(spark, f"vector index {name} at {path} "
-                          f"({meta['rows']} vectors, "
-                          f"{meta['n_cells']} cells)")
 
-    m = _DROP_VIDX.match(query)
-    if m:
-        if_exists, name = m.groups()
-        path = session.vector_indexes.pop(name, None)
-        if path is None:
-            if if_exists:
-                return _ok(spark, f"vector index {name} did not exist")
-            raise ValueError(f"vector index not found: {name}")
-        shutil.rmtree(path, ignore_errors=True)
-        return _ok(spark, f"vector index {name} dropped")
+# CREATE VECTOR INDEX ... WITH (<option> => <value>, ...): option ->
+# (build_vector_index parameter, converter, default)
+_VECTOR_INDEX_OPTIONS = {"id": ("id_col", str, "vec_id"), "cells": ("n_cells", int, 8),
+                         "m": ("m", int, 8), "codes": ("n_codes", int, 16)}
 
-    m = _CREATE_MV.match(query)
-    if m:
-        or_replace, if_not_exists = m.group(1), m.group(2)
-        name, select = m.group(3), m.group(4)
-        if name in session.materialized:
-            # reference syntax (docs/dev/MaterializedViews.md): plain
-            # CREATE errors on an existing MV, IF NOT EXISTS no-ops,
-            # OR REPLACE rebuilds
-            if if_not_exists:
-                return _ok(spark,
-                           f"materialized view {name} already exists")
-            if not or_replace:
-                raise ValueError(
-                    f"materialized view already exists: {name} "
-                    "(use CREATE OR REPLACE MATERIALIZED VIEW)")
-        tmp_ws = session.workspaces.get("dfs.tmp")
-        path = os.path.join(tmp_ws.path if tmp_ws else "/tmp", "_materialized", name)
-        df = spark.sql(rewrite(session, select))
-        df.write.mode("overwrite").parquet(path)
-        spark.read.parquet(path).createOrReplaceTempView(name)
-        session.materialized[name] = path
-        # memoize the definition for automatic rewrite (DefaultSqlHandler
-        # .java:209 / docs/dev/MaterializedViews.md): normalized text for
-        # the fast path, canonicalized analyzed plan for semantic match
-        session.mv_defs[name] = (_normalize_sql(select), _canonical_plan(df))
-        recipe = _parse_incr_mv(select) or {"select": select}
-        if "merge" in recipe:
-            recipe["files"] = sorted(set(df.inputFiles()))
-            # rollup-candidate ranking: when several MVs can answer a
-            # query, prefer the smallest materialization
-            recipe["rows"] = spark.read.parquet(path).count()
-        session.mv_incr[name] = recipe
-        return _ok(spark, f"materialized view {name} at {path}")
 
-    m = _REFRESH_MV.match(query)
-    if m:
-        name, force_full = m.group(1), bool(m.group(2))
-        path = session.materialized.get(name)
-        if path is None:
-            raise ValueError(f"materialized view not found: {name}")
-        return _refresh_matview(session, name, path, force_full)
+def _create_vector_index(session, replace, name, source, col, options):
+    from drill_spark.ops.vecindex import build_vector_index
 
-    m = _DROP_MV.match(query)
-    if m:
-        if_exists, name = m.group(1), m.group(2)
-        path = session.materialized.pop(name, None)
-        session.mv_defs.pop(name, None)
-        session.mv_incr.pop(name, None)
-        if path is None:
-            if if_exists:
-                return _ok(spark, f"materialized view {name} did not exist")
-            raise ValueError(f"materialized view not found: {name}")
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(path, ignore_errors=True)
-        return _ok(spark, f"materialized view {name} dropped")
+    if name in session.vector_indexes and not replace:
+        raise ValueError(
+            f"vector index already exists: {name} (use CREATE OR REPLACE VECTOR INDEX)")
+    opts = _parse_tf_options(options or "")
+    given = [p for p in _split_top_level(options or "") if p.strip()]
+    unknown = sorted(set(opts) - set(_VECTOR_INDEX_OPTIONS))
+    if unknown or len(opts) != len(given):
+        raise ValueError(f"CREATE VECTOR INDEX: bad option(s) in ({options}); accepted, "
+                         f"as name => value: {', '.join(sorted(_VECTOR_INDEX_OPTIONS))}")
+    kwargs = {param: conv(opts.get(key, default))
+              for key, (param, conv, default) in _VECTOR_INDEX_OPTIONS.items()}
+    df = _resolve_input(session, source.strip().strip("`"))
+    path = _scratch_dir(session, "_vector_indexes", name)
+    shutil.rmtree(path, ignore_errors=True)
+    meta = build_vector_index(df, path, vec_col=col, **kwargs)
+    session.vector_indexes[name] = path
+    return (f"vector index {name} at {path} ({meta['rows']} vectors, "
+            f"{meta['n_cells']} cells)")
 
-    m = _ANALYZE.match(query)
-    if m:
-        ws_name, rel_path, sample_pct = m.groups()
-        path, _ = _writable_path(session, ws_name.rstrip("."), rel_path)
-        df = _read_path(session, ws_name.rstrip(".").split(".")[0], path)
-        if sample_pct:
-            df = df.sample(fraction=int(sample_pct) / 100.0, seed=42)
-        from pyspark.sql import functions as F
 
-        # one distributed agg computes every column's stats (rowcount,
-        # ndv, non-null count, and equi-depth histogram boundaries for
-        # numeric/date columns via approx percentiles — DrillStatsTable
-        # holds the same shape: its t-digest serializes to equi-depth
-        # bucket boundaries, HistogramUtils.java)
-        _HIST_BUCKETS = 10
-        grid = [i / _HIST_BUCKETS for i in range(_HIST_BUCKETS + 1)]
-        numeric = {
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString() in (
-                "tinyint", "smallint", "int", "bigint", "float", "double",
-                "date", "timestamp", "timestamp_ntz")
-            or f.dataType.simpleString().startswith("decimal")
+def _drop_vector_index(session, if_exists, name):
+    path = session.vector_indexes.pop(name, None)
+    if path is None:
+        if if_exists:
+            return f"vector index {name} did not exist"
+        raise ValueError(f"vector index not found: {name}")
+    shutil.rmtree(path, ignore_errors=True)
+    return f"vector index {name} dropped"
+
+
+def _create_materialized_view(session, replace, if_not_exists, name, select):
+    spark = session.spark
+    if name in session.materialized:
+        # reference syntax (docs/dev/MaterializedViews.md): plain
+        # CREATE errors on an existing MV, IF NOT EXISTS no-ops,
+        # OR REPLACE rebuilds
+        if if_not_exists:
+            return f"materialized view {name} already exists"
+        if not replace:
+            raise ValueError(f"materialized view already exists: {name} "
+                             "(use CREATE OR REPLACE MATERIALIZED VIEW)")
+    path = _scratch_dir(session, "_materialized", name)
+    df = spark.sql(rewrite(session, select))
+    df.write.mode("overwrite").parquet(path)
+    spark.read.parquet(path).createOrReplaceTempView(name)
+    session.materialized[name] = path
+    # memoize the definition for automatic rewrite (DefaultSqlHandler
+    # .java:209 / docs/dev/MaterializedViews.md): normalized text for
+    # the fast path, canonicalized analyzed plan for semantic match
+    session.mv_defs[name] = (_normalize_sql(select), _canonical_plan(df))
+    recipe = _parse_incr_mv(select) or {"select": select}
+    if "merge" in recipe:
+        recipe["files"] = sorted(set(df.inputFiles()))
+        # rollup-candidate ranking: when several MVs can answer a
+        # query, prefer the smallest materialization
+        recipe["rows"] = spark.read.parquet(path).count()
+    session.mv_incr[name] = recipe
+    return f"materialized view {name} at {path}"
+
+
+def _refresh_materialized_view(session, name, full):
+    path = session.materialized.get(name)
+    if path is None:
+        raise ValueError(f"materialized view not found: {name}")
+    return _refresh_matview(session, name, path, bool(full))
+
+
+def _drop_materialized_view(session, if_exists, name):
+    path = session.materialized.pop(name, None)
+    session.mv_defs.pop(name, None)
+    session.mv_incr.pop(name, None)
+    if path is None:
+        if if_exists:
+            return f"materialized view {name} did not exist"
+        raise ValueError(f"materialized view not found: {name}")
+    session.spark.catalog.dropTempView(name)
+    shutil.rmtree(path, ignore_errors=True)
+    return f"materialized view {name} dropped"
+
+
+_HIST_BUCKETS = 10
+
+
+def _analyze(session, table, sample):
+    """Write the table's statistics file. One distributed agg computes
+    every column's stats (rowcount, ndv, non-null count, and equi-depth
+    histogram boundaries for numeric/date columns via approx
+    percentiles — DrillStatsTable holds the same shape: its t-digest
+    serializes to equi-depth bucket boundaries, HistogramUtils.java)."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    df = _read_path(session, table.ws.split(".")[0], table.path)
+    if sample:
+        df = df.sample(fraction=int(sample) / 100.0, seed=42)
+    grid = [i / _HIST_BUCKETS for i in range(_HIST_BUCKETS + 1)]
+    numeric = {
+        f.name for f in df.schema.fields
+        if f.dataType.simpleString() in (
+            "tinyint", "smallint", "int", "bigint", "float", "double",
+            "date", "timestamp", "timestamp_ntz")
+        or f.dataType.simpleString().startswith("decimal")
+    }
+    aggs = [F.count(F.lit(1)).alias("__rowcount")]
+    for c in df.columns:
+        aggs.append(F.approx_count_distinct(c).alias(f"__ndv_{c}"))
+        aggs.append(F.count(c).alias(f"__nn_{c}"))
+        if c in numeric:
+            aggs.append(F.percentile_approx(F.col(c).cast("double"), grid).alias(f"__hist_{c}"))
+    row = df.agg(*aggs).head().asDict()
+
+    def _col_stats(c):
+        out = {
+            "column": c,
+            "ndv": row[f"__ndv_{c}"],
+            "nonnullcount": row[f"__nn_{c}"],
+            "nullcount": row["__rowcount"] - row[f"__nn_{c}"],
         }
-        aggs = [F.count(F.lit(1)).alias("__rowcount")]
-        for c in df.columns:
-            aggs.append(F.approx_count_distinct(c).alias(f"__ndv_{c}"))
-            aggs.append(F.count(c).alias(f"__nn_{c}"))
-            if c in numeric:
-                aggs.append(
-                    F.percentile_approx(
-                        F.col(c).cast("double"), grid
-                    ).alias(f"__hist_{c}"))
-        row = df.agg(*aggs).head().asDict()
-
-        def _col_stats(c):
-            out = {
-                "column": c,
-                "ndv": row[f"__ndv_{c}"],
-                "nonnullcount": row[f"__nn_{c}"],
-                "nullcount": row["__rowcount"] - row[f"__nn_{c}"],
+        bounds = row.get(f"__hist_{c}")
+        if bounds is not None:
+            out["histogram"] = {
+                "category": "numeric-histogram",
+                "numRowsPerBucket": row[f"__nn_{c}"] // _HIST_BUCKETS,
+                "buckets": bounds,
             }
-            bounds = row.get(f"__hist_{c}")
-            if bounds is not None:
-                out["histogram"] = {
-                    "category": "numeric-histogram",
-                    "numRowsPerBucket": row[f"__nn_{c}"] // _HIST_BUCKETS,
-                    "buckets": bounds,
-                }
-            return out
+        return out
 
-        stats = {
-            "statistics_version": "v1",
-            "computed": True,
-            "rowcount": row["__rowcount"],
-            "sample_percent": int(sample_pct) if sample_pct else 100,
-            "columns": [_col_stats(c) for c in df.columns],
-        }
-        import json as _json
+    stats = {
+        "statistics_version": "v1",
+        "computed": True,
+        "rowcount": row["__rowcount"],
+        "sample_percent": int(sample) if sample else 100,
+        "columns": [_col_stats(c) for c in df.columns],
+    }
+    path = table.path
+    with open(os.path.join(path, STATS_FILE) if os.path.isdir(path) else path + STATS_FILE,
+              "w") as f:
+        json.dump(stats, f)
+    return local_frame(
+        session.spark, [(True, f"analyzed {table.rel}", stats["rowcount"], len(df.columns))],
+        "ok boolean, summary string, rows bigint, columns int")
 
-        target = (
-            os.path.join(path, STATS_FILE)
-            if os.path.isdir(path)
-            else path + STATS_FILE
-        )
-        with open(target, "w") as f:
-            _json.dump(stats, f)
-        return local_frame(
-            spark, [Row(ok=True, summary=f"analyzed {rel_path}", rows=stats["rowcount"],
-                        columns=len(df.columns))],
-            "ok boolean, summary string, rows bigint, columns int",
-        )
 
-    m = _CREATE_SCHEMA_FT.match(query)
-    if m:
-        replace, cols, ws_name, rel_path = m.groups()
-        path, _ = _writable_path(session, ws_name.rstrip("."), rel_path)
-        sf = os.path.join(path, SCHEMA_FILE)
-        if os.path.exists(sf) and not replace:
-            raise ValueError(f"schema already exists for table {rel_path}")
-        import json as _json
+def _create_schema(session, replace, cols, table):
+    import json
 
-        os.makedirs(path, exist_ok=True)
-        with open(sf, "w") as f:
-            _json.dump({"ddl": _drill_cols_to_spark_ddl(cols)}, f)
-        return _ok(spark, f"created schema for table {ws_name}`{rel_path}`")
+    sf = os.path.join(table.path, SCHEMA_FILE)
+    if os.path.exists(sf) and not replace:
+        raise ValueError(f"schema already exists for table {table.rel}")
+    os.makedirs(table.path, exist_ok=True)
+    with open(sf, "w") as f:
+        json.dump({"ddl": _drill_cols_to_spark_ddl(cols)}, f)
+    return f"created schema for table {table}"
 
-    m = _DROP_SCHEMA_FT.match(query)
-    if m:
-        if_exists, ws_name, rel_path = m.groups()
-        path, _ = _writable_path(session, ws_name.rstrip("."), rel_path)
-        sf = os.path.join(path, SCHEMA_FILE)
-        if not os.path.exists(sf):
-            if if_exists:
-                return _ok(spark, "schema did not exist")
-            raise ValueError(f"no schema for table {rel_path}")
-        os.remove(sf)
-        return _ok(spark, f"dropped schema for table {ws_name}`{rel_path}`")
 
-    m = _CREATE_FN_JAR.match(query)
-    if m:
-        # CreateFunctionHandler.java registers jar-packaged
-        # DrillSimpleFuncs; the Spark-first equivalents are SQL UDFs
-        # (CREATE TEMPORARY FUNCTION f(...) RETURN <expr> — JVM-inlined)
-        # and spark.udf.register — a Drill UDF jar has no Spark entry
-        # points, so loading one cannot work by construction
-        raise NotImplementedError(
-            "CREATE FUNCTION USING JAR loads Drill-interface UDFs, which "
-            "have no Spark entry points. Use CREATE TEMPORARY FUNCTION "
-            "name(args) RETURN <expr> (inlined into codegen) or "
-            "spark.udf.register for Python/pandas UDFs."
-        )
+def _drop_schema(session, if_exists, table):
+    sf = os.path.join(table.path, SCHEMA_FILE)
+    if not os.path.exists(sf):
+        if if_exists:
+            return "schema did not exist"
+        raise ValueError(f"no schema for table {table.rel}")
+    os.remove(sf)
+    return f"dropped schema for table {table}"
 
-    m = _CREATE_VIEW.match(query)
-    if m:
-        replace, ws_prefix, name, select = m.groups()
-        df = spark.sql(rewrite(session, select))
-        if replace:
-            df.createOrReplaceTempView(name)
+
+def _function_jar(session):
+    # CreateFunctionHandler.java registers jar-packaged
+    # DrillSimpleFuncs; the Spark-first equivalents are SQL UDFs
+    # (CREATE TEMPORARY FUNCTION f(...) RETURN <expr> — JVM-inlined)
+    # and spark.udf.register — a Drill UDF jar has no Spark entry
+    # points, so loading one cannot work by construction
+    raise NotImplementedError(
+        "CREATE FUNCTION USING JAR loads Drill-interface UDFs, which "
+        "have no Spark entry points. Use CREATE TEMPORARY FUNCTION "
+        "name(args) RETURN <expr> (inlined into codegen) or "
+        "spark.udf.register for Python/pandas UDFs."
+    )
+
+
+def _create_view(session, replace, prefix, name, select):
+    df = session.spark.sql(rewrite(session, select))
+    if replace:
+        df.createOrReplaceTempView(name)
+    else:
+        df.createTempView(name)
+    # workspace-qualified views persist as <name>.view.drill JSON in
+    # the workspace root (dotdrill/ — Drill views are files, visible to
+    # SHOW FILES and future sessions)
+    ws = session.workspaces.get(prefix.rstrip(".")) if prefix else None
+    if ws is not None and ws.kind == "file" and ws.writable:
+        import json
+
+        with open(os.path.join(ws.path, f"{name}.view.drill"), "w") as f:
+            json.dump({"name": name, "sql": select.strip()}, f)
+        return f"view {name} persisted in {ws.name}"
+    return f"view {name} created"
+
+
+def _drop_view(session, if_exists, prefix, name):
+    dropped = session.spark.catalog.dropTempView(name)
+    ws = session.workspaces.get(prefix.rstrip(".")) if prefix else None
+    p = os.path.join(ws.path, f"{name}.view.drill") if ws else None
+    if p and os.path.exists(p):
+        os.remove(p)
+        dropped = True
+    if not dropped and not if_exists:
+        raise ValueError(f"view not found: {name}")
+    return f"view {name} dropped"
+
+
+def _alter_set(session, name, value):
+    session.set_option(name, value)
+    return f"{name} updated"
+
+
+def _reset(session, name):
+    session.reset_option(name)
+    return f"{name} reset"
+
+
+def _show_tables(session, name):
+    """A file workspace's tables: its files and directories, minus
+    dot/underscore metadata entries."""
+    ws = session.workspaces.get(name)
+    if ws is None:
+        return None  # a Spark database
+    names = sorted(os.listdir(ws.path)) if os.path.isdir(ws.path) else []
+    return local_frame(session.spark, [(name, n) for n in names if not n.startswith((".", "_"))],
+                       "TABLE_SCHEMA string, TABLE_NAME string")
+
+
+def _show_files(session, target):
+    import datetime
+
+    target = (target or "dfs").strip("`")
+    ws = session.workspaces.get(target)
+    if ws is not None and ws.kind != "file":
+        raise ValueError(f"SHOW FILES lists file workspaces; {target} is a {ws.kind} workspace")
+    if ws is None and not os.path.isdir(target):
+        raise ValueError(f"SHOW FILES: {target} is neither a workspace nor a directory")
+    root = ws.path if ws else target
+    rows = []
+    for name in sorted(os.listdir(root)) if os.path.isdir(root) else []:
+        p = os.path.join(root, name)
+        st = os.stat(p)
+        rows.append((name, os.path.isdir(p), os.path.isfile(p), st.st_size,
+                     datetime.datetime.fromtimestamp(st.st_mtime),
+                     datetime.datetime.fromtimestamp(st.st_atime),
+                     oct(st.st_mode & 0o777)[2:]))
+    return local_frame(
+        session.spark, rows,
+        "name string, isDirectory boolean, isFile boolean, length long, "
+        "modificationTime timestamp, accessTime timestamp, permissions string")
+
+
+_IF_EXISTS = "(?P<if_exists>IF EXISTS )?"
+_NAME = r"`?(?P<name>\w+)`?"
+
+# Each row names the Drill handler (exec/java-exec/.../planner/sql/
+# handlers/) or grammar rule (parserImpls.ftl) it stands for.
+STATEMENTS: tuple[Statement, ...] = (
+    # UseSchemaHandler (parserImpls.ftl:135); a non-workspace name is a
+    # Spark database
+    _stmt("use", r"USE `?(?P<name>[\w.]+)`?", _use),
+    # ShowSchemasHandler (parserImpls.ftl:42-110)
+    _stmt("show_schemas", "SHOW (?:SCHEMAS|DATABASES)", _show_schemas),
+    # DescribeSchemaHandler: the workspace's properties as one row
+    _stmt("describe_schema", r"DESCRIBE SCHEMA `?(?P<name>[\w.]+)`?", _describe_schema),
+    # ShowTablesHandler in a workspace; else Spark's SHOW TABLES
+    _stmt("show_tables", r"SHOW TABLES (?:IN|FROM) (?P<name>[\w.]+)", _show_tables),
+    # ShowFilesHandler: a file workspace's or a directory's listing
+    _stmt("show_files", r"SHOW FILES(?: (?:IN|FROM) (?P<target>[^\s;]+))?", _show_files),
+    # SetOptionHandler / ResetOptionHandler; option names may carry
+    # hyphens (store.parquet.block-size et al.)
+    _stmt("alter_session", r"ALTER (?:SESSION|SYSTEM) SET `?(?P<name>[\w.-]+)`?\s*=\s*"
+          r"'?(?P<value>[^'\s;]+)'?", _alter_set),
+    _stmt("reset", r"(?:ALTER SESSION )?RESET `?(?P<name>[\w.-]+)`?", _reset),
+    # CreateTableHandler (CTAS, TEMPORARY, PARTITION BY) / DropTableHandler
+    _stmt("ctas", r"CREATE (?P<replace>OR REPLACE )?(?P<temporary>TEMPORARY )?TABLE {table}"
+          r"(?: PARTITION BY\s*\((?P<partition>[^)]*)\))? AS (?P<select>.*)", _ctas,
+          writable=True),
+    _stmt("drop_table", f"DROP TABLE {_IF_EXISTS}{{table}}", _drop_table, writable=True),
+    # INSERT INTO a path table: appends in the table's format and types
+    # (no Drill analog — read-mostly engine — like the lakehouse rows
+    # below, which run the table format's own function)
+    _stmt("insert", r"INSERT INTO {table} (?P<select>.*)", _insert, writable=True,
+          refresh=True),
+    _stmt("optimize", r"OPTIMIZE {table}(?: ZORDER BY\s*\((?P<zorder>[^)]+)\))?", _optimize,
+          writable=True, refresh=True),
+    _stmt("vacuum", r"VACUUM {table}(?: RETAIN (?P<hours>\d+) HOURS)?(?P<dry_run> DRY RUN)?",
+          _vacuum, writable=True),
+    _stmt("restore", r"RESTORE TABLE {table} TO (?:VERSION AS OF (?P<version>\d+)"
+          r"|TIMESTAMP AS OF '(?P<timestamp>[^']+)')", _restore, writable=True, refresh=True),
+    _stmt("describe_history", "DESCRIBE HISTORY {table}",
+          lambda session, table, fn: fn(session.spark, table.path), op="history"),
+    # MERGE INTO ws.`path` [[AS] <alias>] USING (<subquery>)|<table> [AS] <alias>
+    #   ON cond [WHEN MATCHED THEN UPDATE SET ... | WHEN MATCHED THEN DELETE]
+    #   [WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)]
+    _stmt("merge", r"MERGE INTO {table}(?: (?:AS )?(?P<target_alias>\w+))? USING "
+          r"(?P<source>\(.*\)|(?:[^\s`]|`[^`]*`)+) (?:AS )?(?P<source_alias>\w+) ON (?P<on>.+?)"
+          r"(?: WHEN MATCHED THEN (?:UPDATE SET (?P<assign>.+?)|(?P<delete>DELETE)))?"
+          r"(?: WHEN NOT MATCHED THEN INSERT\s*\((?P<insert_cols>[^)]*)\)\s*"
+          r"VALUES\s*\((?P<insert_vals>.+?)\))?", _merge, writable=True, op="merge",
+          refresh=True),
+    _stmt("update", r"UPDATE {table} SET (?P<tail>.*?)", _update, writable=True, op="update",
+          refresh=True),
+    _stmt("delete", r"DELETE FROM {table} WHERE (?P<cond>.*?)", _delete, writable=True,
+          op="delete", refresh=True),
+    # CreateAliasHandler / DropAliasHandler (docs/dev/Aliases.md; PUBLIC
+    # = system-wide vs user scope — one session here, so scope is cosmetic)
+    _stmt("create_alias", r"CREATE (?:OR REPLACE )?(?:PUBLIC )?ALIAS `?(?P<alias>\w+)`? FOR "
+          r"(?:TABLE )?(?P<target>.+?)", _create_alias),
+    _stmt("drop_alias", rf"DROP (?:PUBLIC )?ALIAS {_IF_EXISTS}`?(?P<alias>\w+)`?", _drop_alias),
+    _stmt("show_aliases", "SHOW ALIASES", lambda session: local_frame(
+        session.spark, sorted(session.aliases.items()), "alias string, target string")),
+    # REFRESH TABLE METADATA (parserImpls.ftl:556-579, MetadataHandler):
+    # rebuild the parquet metadata cache, invalidate Spark's cached reads
+    _stmt("refresh_metadata", r"REFRESH TABLE METADATA (?:{table}|`?(?P<name>[\w./-]+)`?)",
+          _refresh_metadata),
+    # CREATE/DROP VECTOR INDEX (net-new DDL over ops/vecindex.py — the
+    # similarity stack's build-once/probe-many surface)
+    _stmt("create_vector_index", r"CREATE (?P<replace>OR REPLACE )?VECTOR INDEX " + _NAME +
+          r" ON (?P<source>.+?)\s*\(\s*`?(?P<col>\w+)`?\s*\)(?:\s*WITH\s*\((?P<options>.*?)\))?",
+          _create_vector_index),
+    _stmt("drop_vector_index", f"DROP VECTOR INDEX {_IF_EXISTS}{_NAME}", _drop_vector_index),
+    # materialized views (MaterializedViewHandler, docs/dev/MaterializedViews.md)
+    _stmt("create_mv", r"CREATE (?P<replace>OR REPLACE )?MATERIALIZED VIEW "
+          r"(?P<if_not_exists>IF NOT EXISTS )?" + _NAME + " AS (?P<select>.*)",
+          _create_materialized_view),
+    _stmt("refresh_mv", f"REFRESH MATERIALIZED VIEW {_NAME}(?P<full> FULL)?",
+          _refresh_materialized_view),
+    _stmt("drop_mv", f"DROP MATERIALIZED VIEW {_IF_EXISTS}{_NAME}", _drop_materialized_view),
+    # AnalyzeTableHandler; the artifact's shape follows
+    # planner/common/DrillStatsTable.java: rowcount + per-column ndv /
+    # non-null count / histogram buckets
+    _stmt("analyze", r"ANALYZE TABLE {table} COMPUTE STATISTICS"
+          r"(?: SAMPLE (?P<sample>\d+) PERCENT)?", _analyze, writable=True),
+    # SchemaHandler: a provided schema for a (usually schema-less text)
+    # table directory, read instead of inferring
+    _stmt("create_schema", r"CREATE (?P<replace>OR REPLACE )?SCHEMA\s*\((?P<cols>[^)]*)\)\s*"
+          "FOR TABLE {table}", _create_schema, writable=True),
+    _stmt("drop_schema", f"DROP SCHEMA {_IF_EXISTS}FOR TABLE {{table}}", _drop_schema,
+          writable=True),
+    # CreateFunctionHandler / DropFunctionHandler (dynamic UDF jars)
+    _stmt("function_jar", "(?:CREATE|DROP) FUNCTION USING JAR '[^']+'", _function_jar),
+    # ViewHandler: a Spark temp view; a workspace-qualified one persists
+    # as a .view.drill file
+    _stmt("create_view", r"CREATE (?P<replace>OR REPLACE )?VIEW (?P<prefix>(?:\w+\.)+)?"
+          + _NAME + " AS (?P<select>.*)", _create_view),
+    _stmt("drop_view", rf"DROP VIEW {_IF_EXISTS}(?P<prefix>(?:\w+\.)+)?{_NAME}", _drop_view),
+)
+
+
+def execute(session, query: str) -> DataFrame:
+    for row in STATEMENTS:
+        m = row.pattern.match(query)
+        if m:
+            return _run(session, row, query, m.groupdict())
+    return _plain_query(session, query)
+
+
+def _run(session, row: Statement, query: str, groups: dict) -> DataFrame:
+    """Bind the row's target, run its handler and make its result a
+    DataFrame."""
+    spark = session.spark
+    ws, rel = groups.pop("ws", None), groups.pop("rel", None)
+    if ws:
+        ws = ws.rstrip(".")
+        if row.writable:
+            table = Target(ws, rel, *_writable_path(session, ws, rel))
         else:
-            df.createTempView(name)
-        # workspace-qualified views persist as <name>.view.drill JSON in
-        # the workspace root (ViewHandler.java / dotdrill/ — Drill views
-        # are files, visible to SHOW FILES and future sessions)
-        if ws_prefix:
-            ws = session.workspaces.get(ws_prefix.rstrip("."))
-            if ws is not None and ws.kind == "file" and ws.writable:
-                import json as _json
+            root = session.workspaces[ws].path if ws in session.workspaces else "/"
+            table = Target(ws, rel, os.path.join(root, rel), "")
+        groups["table"] = table
+        if row.op:
+            groups["fn"] = _table_fn(table.path, row.op)
+    out = row.handler(session, **groups)
+    if row.refresh:
+        spark.catalog.refreshByPath(groups["table"].path)
+    if out is None:
+        return spark.sql(query)
+    if isinstance(out, str):
+        return _ok(spark, out)
+    if isinstance(out, dict):
+        return local_frame(spark, [Row(ok=True, **out)])
+    return out
 
-                with open(os.path.join(ws.path, f"{name}.view.drill"), "w") as f:
-                    _json.dump({"name": name, "sql": select.strip()}, f)
-                return _ok(spark, f"view {name} persisted in {ws.name}")
-        return _ok(spark, f"view {name} created")
 
-    m = _DROP_VIEW.match(query)
-    if m:
-        if_exists, ws_prefix, name = m.groups()
-        dropped = spark.catalog.dropTempView(name)
-        if ws_prefix:
-            ws = session.workspaces.get(ws_prefix.rstrip("."))
-            p = os.path.join(ws.path, f"{name}.view.drill") if ws else None
-            if p and os.path.exists(p):
-                os.remove(p)
-                dropped = True
-        if not dropped and not if_exists:
-            raise ValueError(f"view not found: {name}")
-        return _ok(spark, f"view {name} dropped")
-
-    m = _ALTER_SET.match(query)
-    if m:
-        _, name, value = m.groups()
-        session.set_option(name, value)
-        return local_frame(spark, [Row(ok=True, summary=f"{name} updated")])
-
-    m = _RESET.match(query)
-    if m:
-        session.reset_option(m.group(1))
-        return local_frame(spark, [Row(ok=True, summary=f"{m.group(1)} reset")])
-
-    m = _SHOW_TABLES_WS.match(query)
-    if m:
-        # Drill's SHOW TABLES in a file workspace lists its tables
-        # (files/dirs, minus dot/underscore metadata entries) as
-        # (TABLE_SCHEMA, TABLE_NAME) — ShowTablesHandler.java
-        target = m.group(1)
-        ws = session.workspaces.get(target)
-        if ws is None:
-            raise ValueError(f"unknown workspace {target!r}")
-        rows = []
-        if os.path.isdir(ws.path):
-            for name in sorted(os.listdir(ws.path)):
-                if name.startswith((".", "_")):
-                    continue
-                rows.append(Row(TABLE_SCHEMA=target, TABLE_NAME=name))
-        return local_frame(spark, rows, "TABLE_SCHEMA string, TABLE_NAME string")
-
-    m = _SHOW_FILES.match(query)
-    if m:
-        target = (m.group(1) or "dfs").strip("`")
-        ws = session.workspaces.get(target)
-        if ws is not None and ws.kind != "file":
-            raise ValueError(
-                f"SHOW FILES lists file workspaces; {target} is a {ws.kind} workspace")
-        root = ws.path if ws else target
-        rows = []
-        if os.path.isdir(root):
-            import datetime
-
-            for name in sorted(os.listdir(root)):
-                p = os.path.join(root, name)
-                st = os.stat(p)
-                rows.append(
-                    Row(
-                        name=name,
-                        isDirectory=os.path.isdir(p),
-                        isFile=os.path.isfile(p),
-                        length=st.st_size,
-                        modificationTime=datetime.datetime.fromtimestamp(st.st_mtime),
-                        accessTime=datetime.datetime.fromtimestamp(st.st_atime),
-                        permissions=oct(st.st_mode & 0o777)[2:],
-                    )
-                )
-        schema = (
-            "name string, isDirectory boolean, isFile boolean, length long, "
-            "modificationTime timestamp, accessTime timestamp, permissions string"
-        )
-        return local_frame(spark, rows, schema)
-
-    # EXPLAIN PLAN FOR <q> (Drill grammar) -> Spark EXPLAIN <q>.
-    # When the inner query is answered by a materialized view
-    # (docs/dev/MaterializedViews.md: "Use EXPLAIN to see if a
-    # materialized view is being used"), explain the REWRITTEN plan —
-    # its FileScan points at the materialization.
-    em = re.match(
-        r"^\s*EXPLAIN\s+PLAN\s+(?:WITH\s+IMPLEMENTATION\s+)?FOR\s+(.*)$",
-        query, re.IGNORECASE | re.DOTALL)
-    if em and getattr(session, "mv_defs", None):
+def _plain_query(session, sql: str) -> DataFrame:
+    """A statement no STATEMENTS row takes, run by Spark after the
+    rewrite; a query a materialized view answers reads the view."""
+    spark = session.spark
+    em = _EXPLAIN_PLAN.match(sql)
+    if em:
+        # EXPLAIN PLAN FOR <q> (Drill grammar) -> Spark EXPLAIN <q>.
+        # When the inner query is answered by a materialized view
+        # (docs/dev/MaterializedViews.md: "Use EXPLAIN to see if a
+        # materialized view is being used"), explain the REWRITTEN plan —
+        # its FileScan points at the materialization.
         inner = em.group(1)
-        try:
-            inner_df = spark.sql(rewrite(session, inner))
-            mv = _match_materialized(session, inner, inner_df)
-        except Exception:
-            mv = None
-        if mv is not None:
-            return local_frame(
-                spark, [(mv._jdf.queryExecution().toString(),)], "plan string")
-    query = re.sub(r"^\s*EXPLAIN\s+PLAN\s+(?:WITH\s+IMPLEMENTATION\s+)?FOR\s+", "EXPLAIN ", query, flags=re.IGNORECASE)
-
-    # INFORMATION_SCHEMA.x / sys.x tables (store/ischema/, store/sys/):
-    # materialize the snapshot views and rewrite the dotted names.
-    # The bare-name form must never fire INSIDE a backtick-quoted path
-    # (`tsdb.`sys.cpu.user`` is a workspace table whose name merely
-    # contains "sys."), so it substitutes only outside backtick spans;
-    # the sys.`name` form is handled first and is unambiguous.
-    if re.search(r"\binformation_schema\s*\.|\bsys\s*\.", query, re.IGNORECASE):
+        if getattr(session, "mv_defs", None):
+            try:
+                mv = _match_materialized(session, inner, spark.sql(rewrite(session, inner)))
+            except Exception:
+                mv = None
+            if mv is not None:
+                return local_frame(
+                    spark, [(mv._jdf.queryExecution().toString(),)], "plan string")
+        sql = "EXPLAIN " + inner
+    # the sys/information_schema names read snapshot views
+    renamed = _SYSTEM_TABLE.sub(lambda m: m.group(0) if not m.group(1) else (
+        f"{m.group(1)}_{m.group(2) or m.group(3)}".lower()), sql)
+    if renamed != sql:
         from drill_spark.catalog import register_system_views
 
         register_system_views(session)
-        query = re.sub(
-            r"\binformation_schema\s*\.\s*`(\w+)`",
-            lambda m: f"information_schema_{m.group(1).lower()}",
-            query,
-            flags=re.IGNORECASE,
-        )
-        query = re.sub(
-            r"\bsys\s*\.\s*`(\w+)`",
-            lambda m: f"sys_{m.group(1).lower()}",
-            query,
-            flags=re.IGNORECASE,
-        )
-        backtick = re.compile(r"`[^`]*`")
-        parts, last = [], 0
-        for m in backtick.finditer(query):
-            seg = query[last: m.start()]
-            seg = re.sub(r"\binformation_schema\s*\.\s*(\w+)",
-                         lambda mm: f"information_schema_{mm.group(1).lower()}",
-                         seg, flags=re.IGNORECASE)
-            seg = re.sub(r"\bsys\s*\.\s*(\w+)",
-                         lambda mm: f"sys_{mm.group(1).lower()}",
-                         seg, flags=re.IGNORECASE)
-            parts += [seg, m.group(0)]
-            last = m.end()
-        seg = query[last:]
-        seg = re.sub(r"\binformation_schema\s*\.\s*(\w+)",
-                     lambda mm: f"information_schema_{mm.group(1).lower()}",
-                     seg, flags=re.IGNORECASE)
-        seg = re.sub(r"\bsys\s*\.\s*(\w+)",
-                     lambda mm: f"sys_{mm.group(1).lower()}",
-                     seg, flags=re.IGNORECASE)
-        parts.append(seg)
-        query = "".join(parts)
-
-    text = rewrite(session, query)
-    if not _PLAIN_QUERY.match(query):
+        sql = renamed
+    text = rewrite(session, sql)
+    if not _PLAIN_QUERY.match(sql):
         # Spark may store this statement's text (a SQL function body, a
         # temp view, CACHE TABLE) and resolve it on every later use
         session._keep_statement_views()
     df = spark.sql(text)
-    mv = _match_materialized(session, query, df)
+    mv = _match_materialized(session, sql, df)
     return mv if mv is not None else df
 
 

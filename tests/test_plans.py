@@ -224,6 +224,22 @@ def test_minhash_near_dupes_shuffle_count(spark):
     assert rep["python_eval"] is False
 
 
+def test_python_eval_seen_in_every_python_node(spark):
+    """``pack_bins`` packs each group in a pandas function, a
+    ``FlatMapGroupsInPandas`` node; a plan with it runs Python before
+    and after its action, and a plan without one does not."""
+    from drill_spark.ops.pipeline import chunk_tokens, pack_bins
+
+    df = local_frame(spark, [(i, "word " * (7 * i)) for i in range(5)], "id long, text string")
+    chunks = chunk_tokens(df, "id", "text", 8)
+    packed = pack_bins(chunks, id_cols=("id", "chunk_id"), capacity=32)
+    assert "FlatMapGroupsInPandas" in plans.explain_str(packed)
+    assert plans.has_python_eval(packed)
+    packed.collect()  # the adaptive plan is now made of query stages
+    assert plans.has_python_eval(packed)
+    assert not plans.has_python_eval(chunks)
+
+
 def test_search_and_fuzzy_plan_invariants(spark):
     """r8 retrieval/resolution operators: BM25 top-k must be a
     TakeOrderedAndProject (never a global sort), its df/corpus sides

@@ -2,10 +2,12 @@
 driver-side rows planned as Catalyst local relations, never a
 Python-backed ``Scan ExistingRDD``, with the same schema as before;
 INSERT INTO a path table casts to the table's schema; MERGE takes any
-alias; rewrite view names stay unique across threads."""
+alias; rewrite view names stay unique across threads; every statement
+reaches its own ``sqlfront.STATEMENTS`` row."""
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import os
 import sys
@@ -15,7 +17,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import StructType
 
-from drill_spark import plans
+from drill_spark import plans, sqlfront
 from drill_spark.session import DrillSession, local_frame
 
 
@@ -82,6 +84,25 @@ STATEMENTS = [
     ("show_aliases", "show aliases", "alias string, target string"),
     ("drop_alias", "drop alias if exists a1", _OK),
     ("drop_table", "drop table if exists dfs.st.`nothing`", _OK),
+    ("describe_history", "describe history dfs.st.`d`",
+     "version bigint, timestamp_ms bigint, operation string"),
+    ("restore", "restore table dfs.st.`d` to version as of 0",
+     "ok boolean, restored_version bigint, added bigint, removed bigint"),
+    ("refresh_metadata", "refresh table metadata dfs.st.`plain`", _OK),
+    ("create_schema", "create or replace schema (a int) for table dfs.st.`texts`", _OK),
+    ("drop_schema", "drop schema if exists for table dfs.st.`texts`", _OK),
+    ("create_view", "create or replace view st_v as select 1 as x", _OK),
+    ("drop_view", "drop view if exists st_v", _OK),
+    ("create_mv", "create or replace materialized view st_mv as select 1 as x", _OK),
+    ("refresh_mv", "refresh materialized view st_mv", _OK),
+    ("drop_mv", "drop materialized view if exists st_mv", _OK),
+    ("drop_vector_index", "drop vector index if exists st_vix", _OK),
+]
+# statements of the other rows: building an index is slow, and the
+# jar statement raises
+ROW_ONLY = [
+    ("create_vector_index", "create vector index st_vix on st_vecs (embedding) with (cells => 2)"),
+    ("function_jar", "create function using jar 'udf.jar'"),
 ]
 
 
@@ -93,6 +114,61 @@ def test_statement_results_plan_no_python_scan(st, stmt, schema):
     assert not plans.has_python_eval(df)
     assert df.schema == StructType.fromDDL(schema)
     assert df.collect() is not None
+
+
+SAMPLES = [s[:2] for s in STATEMENTS] + ROW_ONLY
+
+
+def test_every_statement_row_has_a_sample():
+    assert {r.kind for r in sqlfront.STATEMENTS} <= {kind for kind, _ in SAMPLES}
+
+
+@pytest.mark.parametrize("kind, stmt", SAMPLES, ids=[s[0] for s in SAMPLES])
+def test_statement_reaches_its_row(st, monkeypatch, kind, stmt):
+    """Each sample matches one row at most, the row of its kind (the
+    sys and information_schema queries match none), and
+    ``DrillSession.sql`` hands it to that row's handler."""
+    rows = [r for r in sqlfront.STATEMENTS if r.pattern.match(stmt)]
+    assert [r.kind for r in rows] == [kind][:len(rows)]
+    if not rows:
+        assert kind.startswith(("sys_", "information_schema"))
+        return
+    seen = []
+
+    def spy(row):
+        return lambda session, **groups: seen.append((row.kind, groups)) or "spied"
+
+    monkeypatch.setattr(sqlfront, "STATEMENTS", tuple(
+        dataclasses.replace(r, handler=spy(r)) for r in sqlfront.STATEMENTS))
+    assert st.sql(stmt).head().summary == "spied"
+    assert [k for k, _ in seen] == [kind]
+    table = seen[0][1].get("table")
+    if "`" in stmt and table is not None:
+        assert table.path.startswith(st.workspaces["dfs.st"].path)
+
+
+def test_show_tables_in_any_workspace(st, spark, tmp_path):
+    """SHOW TABLES lists any workspace; another name is Spark's."""
+    (tmp_path / "t1.json").write_text("{}")
+    st.register_workspace("data", str(tmp_path), "json", writable=True)
+    rows = st.sql("show tables in data").collect()
+    assert [(r.TABLE_SCHEMA, r.TABLE_NAME) for r in rows] == [("data", "t1.json")]
+    assert st.sql("show tables in default").columns == spark.sql(
+        "show tables in default").columns
+
+
+def test_show_files_in_unknown_name_raises(st, tmp_path):
+    (tmp_path / "f.csv").write_text("a\n")
+    with pytest.raises(ValueError, match="nosuch_ws is neither a workspace nor a directory"):
+        st.sql("show files in nosuch_ws")
+    assert [r.name for r in st.sql(f"show files from {tmp_path};").collect()] == ["f.csv"]
+
+
+@pytest.mark.parametrize("options", ["cels => 4", "cells = 4", "cells => 4, m"])
+def test_vector_index_options_are_checked(st, options):
+    with pytest.raises(ValueError, match=r"accepted, as name => value: cells, codes, id, m"):
+        st.sql(f"create vector index st_bad on st_vecs (embedding) with ({options})")
+    assert "st_bad" not in st.vector_indexes
 
 
 @pytest.mark.parametrize("rows, schema", [
