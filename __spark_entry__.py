@@ -1,13 +1,19 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
+The driver's verify runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-Queries are contributed by drill_spark modules; each module exposes a
-``queries()`` dict of (spark, sf_dir) -> DataFrame callables and an
-``oracle_sql()`` dict of DuckDB-runnable SQL with matching column names.
+Each query is one ``drill_spark.registry.Query`` row: its name, its
+builder ``(spark, sf_dir) -> DataFrame``, and either the DuckDB oracle
+SQL with matching column names or the reason it has none (rows-only).
+The rows live in the ``ROWS`` of the five family modules imported below;
+``REGISTRY`` joins them and rejects a name registered twice. To add a
+query, add its row to its family: ``_q(name, sql)`` in ``tpch``/``relops``
+(one SQL text, optionally with a separate oracle), ``_decorrelated(name,
+body)`` in ``tpcds``, or ``Query(name, builder, oracle)`` at the bottom of
+any family for a hand-written builder.
 """
 
 from __future__ import annotations
@@ -16,156 +22,48 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_MODULES = None
+from drill_spark import extops, relops, scanops, tpcds, tpch
+from drill_spark.registry import Query, table
 
-
-def _modules():
-    global _MODULES
-    if _MODULES is None:
-        from drill_spark import tpch
-
-        mods = [tpch]
-        try:
-            from drill_spark import relops
-
-            mods.append(relops)
-        except ImportError:
-            pass
-        try:
-            from drill_spark import extops
-
-            mods.append(extops)
-        except ImportError:
-            pass
-        try:
-            from drill_spark import scanops
-
-            mods.append(scanops)
-        except ImportError:
-            pass
-        try:
-            from drill_spark import tpcds
-
-            mods.append(tpcds)
-        except ImportError:
-            pass
-        _MODULES = mods
-    return _MODULES
+REGISTRY: dict[str, Query] = table(
+    tpch.ROWS, relops.ROWS, extops.ROWS, scanops.ROWS, tpcds.ROWS)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1) on /root/testdata/sf0.001."""
-    from drill_spark import tpch
-
-    return tpch.queries()["tpch_q01"](spark, "/root/testdata/sf0.001")
+    return REGISTRY["tpch_q01"].build(spark, "/root/testdata/sf0.001")
 
 
-# Every operator family appears inside the first 50 entries, so even a
-# harness that caps the number of evaluated queries records at least one
-# row per SURVEY §2 family (r1's run stopped at 50).
+# A driver that caps the number of evaluated queries evaluates these
+# first, so the cap holds at least one row per SURVEY §2 family. Every
+# other query follows in registry order; the full sweep
+# (scripts/check_correctness.py) runs them all.
 _PRIORITY = [
     "tpch_q01", "tpch_q02", "tpch_q13", "tpch_q18", "tpch_q22",
-    "tpcds_q73",
-    "op_join_inner",
-    "ext_curation_pipeline",
-    # r12: the drop ledger, the trained-BPE oracle row (newly
-    # hash-pass), and the AUC metric take three slots; the op_* rows
-    # they displace have been green since the early rounds and stay
-    # sweep-verified (§2.4 keeps op_agg_rollup, §2.8 keeps
-    # op_flatten_explode + op_union_type)
+    "tpcds_q73", "op_join_inner", "ext_curation_pipeline",
     "ext_curation_audit", "ext_bpe_tokens", "ext_quality_auc",
-    "op_union_all",
-    "op_agg_rollup",
-    "op_window_ranks",
-    "op_flatten_explode",
-    "op_string_fns",
-    "op_correlated_subquery",
-    "op_null_safe_join",
-    "op_time_window_tumbling",
-    # r11b: the decontamination + Gopher flagships take two slots;
-    # op_scalar_subquery / op_session_window stay sweep-verified (their
-    # families keep op_correlated_subquery / op_time_window_tumbling +
-    # ext_stream_heavy_hitters up top)
-    "ext_substr_decontam", "ext_gopher_repetition",
-    # r13: per-document language ID + per-language mixture (the new
-    # capability this round) take two slots; op_delta_scan /
-    # op_pdf_scan rotate below the cap (green since r5/r8, their
-    # format family stays sweep-verified every round):
-    "ext_lang_id", "ext_lang_mixture",
-    # r13: digest mode joins the ExactSubstr representatives (spans +
-    # contam_report rotate below — stable since r12, still
-    # sweep-verified every round):
+    "op_union_all", "op_agg_rollup", "op_window_ranks",
+    "op_flatten_explode", "op_string_fns", "op_correlated_subquery",
+    "op_null_safe_join", "op_time_window_tumbling", "ext_substr_decontam",
+    "ext_gopher_repetition", "ext_lang_id", "ext_lang_mixture",
     "ext_substr_dedup", "ext_substr_dedup_digest",
-    "ext_incremental_substr", "ext_stream_substr_dedup",
-    "ext_pack_bins", "ext_event_paths",
-    "ext_incremental_setsim", "ext_setsim_tables",
-    "ext_stream_setsim_dedup",
-    "tpcds_q47", "tpcds_q95", "tpcds_q14",
-    # r13: the r12 evaluation/observability flagships take the cap
-    # first-class (per the r12 verdict rotation list); the rows they
-    # displace — tpcds_q01/q31, ext_substr_spans/_contam_report,
-    # ext_html_extract, ext_snapshot_diff, ext_rolling_quantiles,
-    # ext_line_dedup, ext_pagerank, ext_stream_heavy_hitters — have
-    # been green for 2+ rounds and stay in the full sweep:
+    "ext_incremental_substr", "ext_stream_substr_dedup", "ext_pack_bins",
+    "ext_event_paths", "ext_incremental_setsim", "ext_setsim_tables",
+    "ext_stream_setsim_dedup", "tpcds_q47", "tpcds_q95", "tpcds_q14",
     "ext_retrieval_eval", "ext_quality_auc_by_group",
     "ext_calibration_bins", "ext_stream_quality_auc",
     "ext_stratified_weighted_sample", "ext_collocations",
-    "ext_incremental_curation_audit",
-    "tpcds_q64", "tpcds_q78",
-    # r10b flagships rotated into the driver cap:
-    "ext_setsim_join", "ext_containment_join",
-    "ext_dedup_exact", "ext_pii_redact",
-    "ext_vector_index",
-    # r9/r10 flagships rotated into the driver cap (r9 verdict item 6):
-    "ext_skew_join",
-    # ---- driver-cap boundary (~50): everything below is covered by the
-    # judge's full sweep (scripts/check_correctness.py) every round.
-    "op_delta_scan", "op_pdf_scan",
-    "ext_substr_spans", "ext_substr_contam_report",
-    "ext_pagerank", "ext_line_dedup", "ext_stream_heavy_hitters",
-    "ext_html_extract", "ext_rolling_quantiles", "ext_snapshot_diff",
-    "tpcds_q01", "tpcds_q31",
-    "op_agg_stats", "op_topn", "op_convert_from_json", "tpcds_q51",
-    "op_csv_scan", "op_json_scan", "op_warc_scan", "op_iceberg_scan",
-    "op_union_type",
-    "ext_kmv_distinct", "ext_cms_estimate", "ext_mixture_build",
-    "op_scalar_subquery", "op_session_window",
-    "op_avro_scan", "op_paimon_scan", "op_msaccess_scan", "op_dfdl_scan",
-    "op_pcapng_scan", "op_hdf5_scan",
-    "op_sort_nulls", "op_partition_limit", "op_array_fns", "op_date_fns",
-    "op_agg_nulls", "op_orc_scan", "op_pivot", "op_spss_scan",
-    "op_shp_scan", "op_image_scan",
-    "tpcds_q06", "tpcds_q30", "tpcds_q81",
-    "op_join_full", "op_join_semi", "op_join_anti", "op_except",
-    "ext_heavy_hitters", "ext_kmv_overlap",
-    "ext_rolling_distinct", "ext_epoch_shuffle",
-    "tpcds_q07", "tpcds_q67", "tpcds_q44", "tpcds_q70", "tpcds_q23", "tpcds_q11",
-    "op_agg_percentile", "op_window_frames",
-    "op_delta_dv_scan", "op_iceberg_v2_scan", "op_iceberg_skip_scan",
-    "op_csv_columns", "op_json_text_mode", "op_json_extended", "op_xml_scan", "op_ltsv_scan",
-    "op_log_scan", "op_httpd_scan", "op_syslog_scan",
-    "op_sequencefile_scan", "op_excel_scan", "op_sas_scan", "op_http_scan",
-    "op_join_theta", "op_window_ignore_nulls", "op_delta_zorder_scan",
-    "op_contrib_fns", "tpch_q04", "op_agg_having",
-    "ext_embed_topk", "ext_multimodal_decode", "ext_text_stats",
-    "ext_decontaminate", "ext_chunk_pack", "ext_repetition", "ext_stratified_sample",
-    "ext_dedup_minhash", "ext_ann_lsh", "ext_text_quality", "ext_multimodal_meta",
-    "ext_asof_join", "ext_range_join", "ext_sample_hash",
-    "op_math_fns", "op_cast_fns", "op_decimal_agg", "op_values", "op_count_star",
+    "ext_incremental_curation_audit", "tpcds_q64", "tpcds_q78",
+    "ext_setsim_join", "ext_containment_join", "ext_dedup_exact",
+    "ext_pii_redact", "ext_vector_index", "ext_skew_join",
 ]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in _modules():
-        out.update(mod.queries())
-    ordered = {k: out[k] for k in _PRIORITY if k in out}
-    ordered.update(out)  # remaining queries keep their module order
+    ordered = {k: REGISTRY[k].build for k in _PRIORITY}
+    ordered.update((k, q.build) for k, q in REGISTRY.items())  # keeps positions
     return ordered
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _modules():
-        out.update(mod.oracle_sql())
-    return out
+    return {k: q.oracle for k, q in REGISTRY.items() if q.oracle is not None}

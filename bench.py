@@ -103,16 +103,10 @@ def main() -> None:
             warm_dir = cand
             break
     t_warm = time.time()
-    for wname in (
-        "tpch_q06",            # parquet scan + agg codegen
-        "ext_dedup_clusters",  # wide conditional agg + iterative join path
-        "ext_ann_ivf",         # higher-order array exprs + window top-k
-        "ext_multimodal_features",  # Python/Arrow worker pool spin-up
-        "ext_stream_tumbling",  # streaming engine init
-    ):
-        if wname in qs:
+    for wname, q in entrymod.REGISTRY.items():
+        if q.warms and wname in qs:
             try:
-                qs[wname](spark, warm_dir).count()
+                q.build(spark, warm_dir).count()
             except Exception as e:
                 print(f"warmup {wname}: {e}", file=sys.stderr)
     print(f"\n[bench] warmup: {round(time.time() - t_warm, 3)}s", file=sys.stderr)

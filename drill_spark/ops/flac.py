@@ -214,10 +214,6 @@ _SAMPLE_RATES = {
 # ------------------------------------------------------------- encoder
 
 
-def _zigzag(r: int) -> int:
-    return (r << 1) if r >= 0 else (-(r << 1) - 1)
-
-
 def _interleave_le_bytes(vals, width: int) -> bytes:
     """int64 array -> each value's ``width`` little-endian
     two's-complement bytes, concatenated (the STREAMINFO MD5 layout) —

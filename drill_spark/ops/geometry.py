@@ -427,18 +427,6 @@ def _matrix_line_line(a, b):
     return [[ii, ib, ie], [bi, bb, be], [ei, eb, "2"]]
 
 
-def _poly_sample_interior(rings, n=12):
-    """A few interior points of a polygon (centroid + ring shrink)."""
-    outer = rings[0]
-    cx = sum(p[0] for p in outer) / len(outer)
-    cy = sum(p[1] for p in outer) / len(outer)
-    cands = [(cx, cy)]
-    for t in (0.9, 0.5, 0.1):
-        for p in outer[:n]:
-            cands.append((cx + t * (p[0] - cx), cy + t * (p[1] - cy)))
-    return [p for p in cands if point_in_polygon(p, rings) == 1]
-
-
 def _matrix_polygon_polygon(a, b):
     ra = a[1] if a[0] == "POLYGON" else a[1][0]
     rb = b[1] if b[0] == "POLYGON" else b[1][0]

@@ -28,24 +28,15 @@ only; float aggregates rounded.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from drill_spark.registry import Query
+from drill_spark.tpch import sql_query
 
-from pyspark.sql import DataFrame, SparkSession
-
-from drill_spark.tpch import ensure_views, tables_in
-
-
-@dataclass
-class Spec:
-    spark_sql: str  # run through spark.sql after view registration
-    oracle: str | None = None  # None -> same string as spark_sql
+ROWS: list[Query] = []
 
 
-SPECS: dict[str, Spec] = {}
-
-
-def _q(name: str, spark_sql: str, oracle: str | None = None) -> None:
-    SPECS[name] = Spec(spark_sql, oracle)
+def _q(name: str, sql: str, oracle: str | None = None,
+       why_no_oracle: str | None = None) -> None:
+    ROWS.append(sql_query(name, sql, oracle, why_no_oracle))
 
 
 # ---------------------------------------------------------------- joins
@@ -914,24 +905,7 @@ where o_orderkey < 50
 
 # ------------------------------------------------- approximate aggregates
 # (hll / hll_merge, StatisticsAggrFunctions.java:148-230; tdigest
-# TDigestFunctions.java:57). Estimates are hash-design-specific, so these
-# are rows-only in the driver compare (no oracle by design); the pytest
-# suite bounds their error against exact values instead.
-
-ROWS_ONLY: dict[str, str] = {
-    "op_agg_approx_ndv": """
-select o_orderstatus,
-       approx_count_distinct(o_custkey) as approx_cust,
-       count(*) as n
-from orders
-group by o_orderstatus
-order by o_orderstatus
-""",
-    "op_agg_hll_sketch": """
-select hll_sketch_estimate(hll_sketch_agg(o_custkey)) as est_custkeys
-from orders
-""",
-}
+# TDigestFunctions.java:57).
 
 # approx_percentile upgraded rows-only -> hash-oracle (r13): Spark's
 # GK summary keeps EVERY sample while n <= accuracy, so with accuracy
@@ -958,26 +932,20 @@ group by l_returnflag
 order by l_returnflag
 """)
 
+_HASH_ESTIMATE = ("the estimate is hash-design-specific; its error against "
+                  "the exact count is bounded in "
+                  "test_relops.py::test_approx_ndv_bounded_error")
 
-def make_query_fn(sql: str):
-    from drill_spark.functions import ensure_registered, rewrite_convert_calls
+_q("op_agg_approx_ndv", """
+select o_orderstatus,
+       approx_count_distinct(o_custkey) as approx_cust,
+       count(*) as n
+from orders
+group by o_orderstatus
+order by o_orderstatus
+""", why_no_oracle=_HASH_ESTIMATE)
 
-    needed = tables_in(sql)
-    sql = rewrite_convert_calls(sql)  # static text: expand drill-isms once
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ensure_registered(spark)
-        ensure_views(spark, sf_dir, needed)
-        return spark.sql(sql)
-
-    return fn
-
-
-def queries() -> dict:
-    out = {name: make_query_fn(spec.spark_sql) for name, spec in SPECS.items()}
-    out.update({name: make_query_fn(sql) for name, sql in ROWS_ONLY.items()})
-    return out
-
-
-def oracle_sql() -> dict[str, str]:
-    return {name: (spec.oracle or spec.spark_sql) for name, spec in SPECS.items()}
+_q("op_agg_hll_sketch", """
+select hll_sketch_estimate(hll_sketch_agg(o_custkey)) as est_custkeys
+from orders
+""", why_no_oracle=_HASH_ESTIMATE)

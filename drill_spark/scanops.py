@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drill_spark.extops import _materialize_once
+from drill_spark.registry import Query
 from drill_spark.session import load_fixture
 
 # --------------------------------------------------------------- CSV
@@ -538,50 +539,23 @@ select n_nationkey as nkey, n_name as nname from nation
 """
 
 
-QUERIES = {
-    "op_csv_scan": q_csv_scan,
-    "op_csv_columns": q_csv_columns,
-    "op_json_scan": q_json_scan,
-    "op_json_text_mode": q_json_text_mode,
-    "op_json_extended": q_json_extended,
-    "op_union_type": q_union_type,
-    "op_xml_scan": q_xml_scan,
-    "op_ltsv_scan": q_ltsv_scan,
-    "op_log_scan": q_log_scan,
-    "op_httpd_scan": q_httpd_scan,
-    "op_syslog_scan": q_syslog_scan,
-    "op_sequencefile_scan": q_sequencefile_scan,
-    "op_excel_scan": q_excel_scan,
-    "op_sas_scan": q_sas_scan,
-    "op_http_scan": q_http_scan,
-}
-
-ORACLES = {
-    "op_csv_scan": ORACLE_CSV_SCAN,
-    "op_csv_columns": ORACLE_CSV_COLUMNS,
-    "op_json_scan": ORACLE_JSON_SCAN,
-    "op_json_text_mode": ORACLE_JSON_TEXT_MODE,
-    "op_json_extended": ORACLE_JSON_EXTENDED,
-    "op_union_type": ORACLE_UNION_TYPE,
-    "op_xml_scan": ORACLE_XML_SCAN,
-    "op_ltsv_scan": ORACLE_LTSV_SCAN,
-    "op_log_scan": ORACLE_LOG_SCAN,
-    "op_httpd_scan": ORACLE_HTTPD_SCAN,
-    "op_syslog_scan": ORACLE_SYSLOG_SCAN,
-    "op_sequencefile_scan": ORACLE_SEQUENCEFILE_SCAN,
-    "op_excel_scan": ORACLE_EXCEL_SCAN,
-    "op_sas_scan": ORACLE_SAS_SCAN,
-    "op_http_scan": ORACLE_HTTP_SCAN,
-}
+ROWS = (
+    Query("op_csv_scan", q_csv_scan, ORACLE_CSV_SCAN),
+    Query("op_csv_columns", q_csv_columns, ORACLE_CSV_COLUMNS),
+    Query("op_json_scan", q_json_scan, ORACLE_JSON_SCAN),
+    Query("op_json_text_mode", q_json_text_mode, ORACLE_JSON_TEXT_MODE),
+    Query("op_json_extended", q_json_extended, ORACLE_JSON_EXTENDED),
+    Query("op_union_type", q_union_type, ORACLE_UNION_TYPE),
+    Query("op_xml_scan", q_xml_scan, ORACLE_XML_SCAN),
+    Query("op_ltsv_scan", q_ltsv_scan, ORACLE_LTSV_SCAN),
+    Query("op_log_scan", q_log_scan, ORACLE_LOG_SCAN),
+    Query("op_httpd_scan", q_httpd_scan, ORACLE_HTTPD_SCAN),
+    Query("op_syslog_scan", q_syslog_scan, ORACLE_SYSLOG_SCAN),
+    Query("op_sequencefile_scan", q_sequencefile_scan, ORACLE_SEQUENCEFILE_SCAN),
+    Query("op_excel_scan", q_excel_scan, ORACLE_EXCEL_SCAN),
+    Query("op_sas_scan", q_sas_scan, ORACLE_SAS_SCAN),
+    Query("op_http_scan", q_http_scan, ORACLE_HTTP_SCAN),
+)
 
 if not os.path.exists(_SAS_FIXTURE):  # reference tree absent: skip cleanly
-    QUERIES.pop("op_sas_scan")
-    ORACLES.pop("op_sas_scan")
-
-
-def queries():
-    return dict(QUERIES)
-
-
-def oracle_sql():
-    return dict(ORACLES)
+    ROWS = tuple(q for q in ROWS if q.build is not q_sas_scan)

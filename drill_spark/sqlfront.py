@@ -62,10 +62,20 @@ _PLAIN_QUERY = re.compile(
 _EXPLAIN_PLAN = re.compile(
     r"\s*EXPLAIN\s+PLAN\s+(?:WITH\s+IMPLEMENTATION\s+)?FOR\s+(.*)", re.IGNORECASE | re.DOTALL)
 # INFORMATION_SCHEMA.x / sys.x tables (store/ischema/, store/sys/), x
-# plain or backquoted. A backquoted span matches first and is kept, so
-# tsdb.`sys.cpu.user` (a path that merely contains "sys.") stays a path
+# plain or backquoted. A backquoted span, a single-quoted literal or a
+# -- comment matches first and is kept, so tsdb.`sys.cpu.user` (a path
+# that merely contains "sys.") stays a path and 'sys.version' a string
 _SYSTEM_TABLE = re.compile(
-    r"`[^`]*`|\b(sys|information_schema)\s*\.\s*(?:`(\w+)`|(\w+))", re.IGNORECASE)
+    r"`[^`]*`|'(?:[^']|'')*'|--[^\n]*"
+    r"|\b(sys|information_schema)\s*\.\s*(?:`(\w+)`|(\w+))", re.IGNORECASE)
+
+
+def _system_view(m: re.Match) -> str:
+    """The snapshot view a _SYSTEM_TABLE match names (sys.options ->
+    sys_options); a kept span comes back unchanged."""
+    if not m.group(1):
+        return m.group(0)
+    return f"{m.group(1)}_{m.group(2) or m.group(3)}".lower()
 
 
 def _split_where(tail: str) -> tuple[str, str]:
@@ -217,10 +227,18 @@ def _parse_incr_mv(select: str):
 
 
 def _resolve_input(session, ref: str) -> DataFrame:
-    """Resolve a pipeline table-function input: a registered table/view
-    name first, then a Drill-style `ws.relpath`, then a bare
-    filesystem path — registered relations win so a same-named file in
-    the server's CWD can never silently shadow the caller's view."""
+    """Resolve a pipeline table-function input: a ``sys.x`` /
+    ``information_schema.x`` name reads its snapshot view, then a
+    registered table/view name, then a Drill-style `ws.relpath`, then a
+    bare filesystem path — registered relations win so a same-named
+    file in the server's CWD can never silently shadow the caller's
+    view."""
+    m = _SYSTEM_TABLE.fullmatch(ref)
+    if m and m.group(1):
+        from drill_spark.catalog import register_system_views
+
+        register_system_views(session)
+        return session.spark.table(_system_view(m))
     try:
         if session.spark.catalog.tableExists(ref):
             return session.spark.table(ref)
@@ -618,7 +636,13 @@ _TF_OPT = re.compile(
 def _parse_tf_options(raw: str) -> dict[str, str]:
     """k => 'v' pairs; quoted values may contain commas (e.g. a provided
     schema DDL string) and their own quote doubled (SQL escaping:
-    'it''s' is it's, "a""b" is a"b)."""
+    'it''s' is it's, "a""b" is a"b). Text that is not such a pair
+    (``type = 'text'``) raises instead of being dropped."""
+    rest = _TF_OPT.sub("", raw)
+    if rest.replace(",", "").strip():
+        raise ValueError(
+            "table function options must be `name => value` pairs; "
+            f"not understood: {rest.strip(', ')!r} in ({raw})")
     opts: dict[str, str] = {}
     for m in _TF_OPT.finditer(raw):
         single, double, bare = m.group(2, 3, 4)
@@ -1056,8 +1080,11 @@ def _create_vector_index(session, replace, name, source, col, options):
     if name in session.vector_indexes and not replace:
         raise ValueError(
             f"vector index already exists: {name} (use CREATE OR REPLACE VECTOR INDEX)")
-    opts = _parse_tf_options(options or "")
     given = [p for p in _split_top_level(options or "") if p.strip()]
+    try:
+        opts = _parse_tf_options(options or "")
+    except ValueError:  # a malformed pair: the error below lists the options
+        opts = {}
     unknown = sorted(set(opts) - set(_VECTOR_INDEX_OPTIONS))
     if unknown or len(opts) != len(given):
         raise ValueError(f"CREATE VECTOR INDEX: bad option(s) in ({options}); accepted, "
@@ -1464,8 +1491,7 @@ def _plain_query(session, sql: str) -> DataFrame:
                     spark, [(mv._jdf.queryExecution().toString(),)], "plan string")
         sql = "EXPLAIN " + inner
     # the sys/information_schema names read snapshot views
-    renamed = _SYSTEM_TABLE.sub(lambda m: m.group(0) if not m.group(1) else (
-        f"{m.group(1)}_{m.group(2) or m.group(3)}".lower()), sql)
+    renamed = _SYSTEM_TABLE.sub(_system_view, sql)
     if renamed != sql:
         from drill_spark.catalog import register_system_views
 

@@ -301,31 +301,6 @@ def commit_batch_idempotent(
     return True
 
 
-def stream_to_iceberg(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    app_id: str = "drill_spark_stream",
-    trigger: dict | None = None,
-):
-    """Exactly-once streaming sink into an Iceberg table — the
-    counterpart of stream_to_delta, using Iceberg's own idempotence
-    convention: each micro-batch appends a snapshot whose SUMMARY
-    carries (streaming-app-id, streaming-batch-id), and on replay the
-    sink skips any batch id at or below the latest committed one for
-    this app (what Iceberg's Spark streaming writer does with the
-    query id + epoch id in the snapshot summary)."""
-    def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        commit_iceberg_batch_idempotent(batch_df, table_path, app_id, batch_id)
-
-    return (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger if trigger is not None else {"availableNow": True}))
-        .start()
-    )
-
-
 def commit_iceberg_batch_idempotent(
     batch_df: DataFrame,
     table_path: str,

@@ -22,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drill_spark.registry import Query
 from drill_spark.session import load_fixture
 
 _COUNTIES = [
@@ -2517,35 +2518,19 @@ order by i_category, i_class, i_item_id, itemrevenue
 """
 
 
-def _decorrelated(body: str):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+_DECORRELATION_VIEWS = _DIMS_SQL + ", " + _RETURNS_SQL + ", "
+
+
+def _decorrelated(name: str, body: str) -> Query:
+    """The row of a query written as a CTE body over the decorrelation
+    views: Spark runs it over the registered views, and its DuckDB
+    oracle runs the same body after those views spelled out as CTEs."""
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
         _register_decorrelation_views(spark, sf_dir)
         return spark.sql("with " + body)
-    return run
+    return Query(name, build, _DECORRELATION_VIEWS + body)
 
 
-q_tpcds_q1 = _decorrelated(_Q01_BODY)
-q_tpcds_q6 = _decorrelated(_Q06_BODY)
-q_tpcds_q30 = _decorrelated(_Q30_BODY)
-q_tpcds_q81 = _decorrelated(_Q81_BODY)
-q_tpcds_q32 = _decorrelated(_Q32_BODY)
-q_tpcds_q47 = _decorrelated(_Q47_BODY)
-q_tpcds_q16 = _decorrelated(_Q16_BODY)
-q_tpcds_q38 = _decorrelated(_Q38_BODY)
-q_tpcds_q71 = _decorrelated(_Q71_BODY)
-q_tpcds_q88 = _decorrelated(_Q88_BODY)
-q_tpcds_q44 = _decorrelated(_Q44_BODY)
-q_tpcds_q70 = _decorrelated(_Q70_BODY)
-q_tpcds_q23 = _decorrelated(_Q23_BODY)
-q_tpcds_q51 = _decorrelated(_Q51_BODY)
-q_tpcds_q11 = _decorrelated(_Q11_BODY)
-q_tpcds_q93 = _decorrelated(_Q93_BODY)
-q_tpcds_q97 = _decorrelated(_Q97_BODY)
-q_tpcds_q39 = _decorrelated(_Q39_BODY)
-q_tpcds_q49 = _decorrelated(_Q49_BODY)
-q_tpcds_q95 = _decorrelated(_Q95_BODY)
-q_tpcds_q29 = _decorrelated(_Q29_BODY)
-q_tpcds_q31 = _decorrelated(_Q31_BODY)
 def q_tpcds_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q14 with the ``cross_items`` CTE materialized ONCE per
     invocation (r14, guide §3.3 "materialising an intermediate
@@ -2579,177 +2564,57 @@ def q_tpcds_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
             target, f"select ci_item_sk from {view}"))
     finally:
         spark._jsparkSession.sessionState().catalog().dropTempView(view)
-q_tpcds_q64 = _decorrelated(_Q64_BODY)
-q_tpcds_q78 = _decorrelated(_Q78_BODY)
-q_tpcds_q9 = _decorrelated(_Q9_BODY)
-q_tpcds_q59 = _decorrelated(_Q59_BODY)
-q_tpcds_q65 = _decorrelated(_Q65_BODY)
-q_tpcds_q75 = _decorrelated(_Q75_BODY)
-q_tpcds_q76 = _decorrelated(_Q76_BODY)
-q_tpcds_q90 = _decorrelated(_Q90_BODY)
-q_tpcds_q4 = _decorrelated(_Q04_BODY)
-q_tpcds_q35 = _decorrelated(_Q35_BODY)
-q_tpcds_q43 = _decorrelated(_Q43_BODY)
-q_tpcds_q48 = _decorrelated(_Q48_BODY)
-q_tpcds_q53 = _decorrelated(_Q53_BODY)
-q_tpcds_q61 = _decorrelated(_Q61_BODY)
-q_tpcds_q62 = _decorrelated(_Q62_BODY)
-q_tpcds_q72 = _decorrelated(_Q72_BODY)
-q_tpcds_q87 = _decorrelated(_Q87_BODY)
-q_tpcds_q98 = _decorrelated(_Q98_BODY)
-
-ORACLE_TPCDS_Q1 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q01_BODY
-ORACLE_TPCDS_Q6 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q06_BODY
-ORACLE_TPCDS_Q30 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q30_BODY
-ORACLE_TPCDS_Q81 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q81_BODY
-ORACLE_TPCDS_Q32 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q32_BODY
-ORACLE_TPCDS_Q47 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q47_BODY
-ORACLE_TPCDS_Q16 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q16_BODY
-ORACLE_TPCDS_Q38 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q38_BODY
-ORACLE_TPCDS_Q71 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q71_BODY
-ORACLE_TPCDS_Q88 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q88_BODY
-ORACLE_TPCDS_Q44 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q44_BODY
-ORACLE_TPCDS_Q70 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q70_BODY
-ORACLE_TPCDS_Q23 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q23_BODY
-ORACLE_TPCDS_Q51 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q51_BODY
-ORACLE_TPCDS_Q11 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q11_BODY
-ORACLE_TPCDS_Q93 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q93_BODY
-ORACLE_TPCDS_Q97 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q97_BODY
-ORACLE_TPCDS_Q39 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q39_BODY
-ORACLE_TPCDS_Q49 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q49_BODY
-ORACLE_TPCDS_Q95 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q95_BODY
-ORACLE_TPCDS_Q29 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q29_BODY
-ORACLE_TPCDS_Q31 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q31_BODY
-ORACLE_TPCDS_Q14 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q14_BODY
-ORACLE_TPCDS_Q64 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q64_BODY
-ORACLE_TPCDS_Q78 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q78_BODY
-ORACLE_TPCDS_Q9 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q9_BODY
-ORACLE_TPCDS_Q59 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q59_BODY
-ORACLE_TPCDS_Q65 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q65_BODY
-ORACLE_TPCDS_Q75 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q75_BODY
-ORACLE_TPCDS_Q76 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q76_BODY
-ORACLE_TPCDS_Q90 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q90_BODY
-ORACLE_TPCDS_Q4 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q04_BODY
-ORACLE_TPCDS_Q35 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q35_BODY
-ORACLE_TPCDS_Q43 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q43_BODY
-ORACLE_TPCDS_Q48 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q48_BODY
-ORACLE_TPCDS_Q53 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q53_BODY
-ORACLE_TPCDS_Q61 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q61_BODY
-ORACLE_TPCDS_Q62 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q62_BODY
-ORACLE_TPCDS_Q72 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q72_BODY
-ORACLE_TPCDS_Q87 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q87_BODY
-ORACLE_TPCDS_Q98 = _DIMS_SQL + ", " + _RETURNS_SQL + ", " + _Q98_BODY
 
 
-QUERIES = {
-    "tpcds_q73": q_tpcds_q73,
-    "tpcds_q01": q_tpcds_q1,
-    "tpcds_q06": q_tpcds_q6,
-    "tpcds_q30": q_tpcds_q30,
-    "tpcds_q81": q_tpcds_q81,
-    "tpcds_q32": q_tpcds_q32,
-    "tpcds_q47": q_tpcds_q47,
-    "tpcds_q16": q_tpcds_q16,
-    "tpcds_q38": q_tpcds_q38,
-    "tpcds_q71": q_tpcds_q71,
-    "tpcds_q88": q_tpcds_q88,
-    "tpcds_q44": q_tpcds_q44,
-    "tpcds_q70": q_tpcds_q70,
-    "tpcds_q23": q_tpcds_q23,
-    "tpcds_q51": q_tpcds_q51,
-    "tpcds_q11": q_tpcds_q11,
-    "tpcds_q93": q_tpcds_q93,
-    "tpcds_q97": q_tpcds_q97,
-    "tpcds_q39": q_tpcds_q39,
-    "tpcds_q49": q_tpcds_q49,
-    "tpcds_q95": q_tpcds_q95,
-    "tpcds_q29": q_tpcds_q29,
-    "tpcds_q31": q_tpcds_q31,
-    "tpcds_q14": q_tpcds_q14,
-    "tpcds_q64": q_tpcds_q64,
-    "tpcds_q78": q_tpcds_q78,
-    "tpcds_q09": q_tpcds_q9,
-    "tpcds_q59": q_tpcds_q59,
-    "tpcds_q65": q_tpcds_q65,
-    "tpcds_q75": q_tpcds_q75,
-    "tpcds_q76": q_tpcds_q76,
-    "tpcds_q90": q_tpcds_q90,
-    "tpcds_q03": q_tpcds_q3,
-    "tpcds_q07": q_tpcds_q7,
-    "tpcds_q42": q_tpcds_q42,
-    "tpcds_q52": q_tpcds_q52,
-    "tpcds_q55": q_tpcds_q55,
-    "tpcds_q67": q_tpcds_q67,
-    "tpcds_q68": q_tpcds_q68,
-    "tpcds_q96": q_tpcds_q96,
-    "tpcds_q04": q_tpcds_q4,
-    "tpcds_q35": q_tpcds_q35,
-    "tpcds_q43": q_tpcds_q43,
-    "tpcds_q48": q_tpcds_q48,
-    "tpcds_q53": q_tpcds_q53,
-    "tpcds_q61": q_tpcds_q61,
-    "tpcds_q62": q_tpcds_q62,
-    "tpcds_q72": q_tpcds_q72,
-    "tpcds_q87": q_tpcds_q87,
-    "tpcds_q98": q_tpcds_q98,
-}
-ORACLES = {
-    "tpcds_q73": ORACLE_TPCDS_Q73,
-    "tpcds_q01": ORACLE_TPCDS_Q1,
-    "tpcds_q06": ORACLE_TPCDS_Q6,
-    "tpcds_q30": ORACLE_TPCDS_Q30,
-    "tpcds_q81": ORACLE_TPCDS_Q81,
-    "tpcds_q32": ORACLE_TPCDS_Q32,
-    "tpcds_q47": ORACLE_TPCDS_Q47,
-    "tpcds_q16": ORACLE_TPCDS_Q16,
-    "tpcds_q38": ORACLE_TPCDS_Q38,
-    "tpcds_q71": ORACLE_TPCDS_Q71,
-    "tpcds_q88": ORACLE_TPCDS_Q88,
-    "tpcds_q44": ORACLE_TPCDS_Q44,
-    "tpcds_q70": ORACLE_TPCDS_Q70,
-    "tpcds_q23": ORACLE_TPCDS_Q23,
-    "tpcds_q51": ORACLE_TPCDS_Q51,
-    "tpcds_q11": ORACLE_TPCDS_Q11,
-    "tpcds_q93": ORACLE_TPCDS_Q93,
-    "tpcds_q97": ORACLE_TPCDS_Q97,
-    "tpcds_q39": ORACLE_TPCDS_Q39,
-    "tpcds_q49": ORACLE_TPCDS_Q49,
-    "tpcds_q95": ORACLE_TPCDS_Q95,
-    "tpcds_q29": ORACLE_TPCDS_Q29,
-    "tpcds_q31": ORACLE_TPCDS_Q31,
-    "tpcds_q14": ORACLE_TPCDS_Q14,
-    "tpcds_q64": ORACLE_TPCDS_Q64,
-    "tpcds_q78": ORACLE_TPCDS_Q78,
-    "tpcds_q09": ORACLE_TPCDS_Q9,
-    "tpcds_q59": ORACLE_TPCDS_Q59,
-    "tpcds_q65": ORACLE_TPCDS_Q65,
-    "tpcds_q75": ORACLE_TPCDS_Q75,
-    "tpcds_q76": ORACLE_TPCDS_Q76,
-    "tpcds_q90": ORACLE_TPCDS_Q90,
-    "tpcds_q03": ORACLE_TPCDS_Q3,
-    "tpcds_q07": ORACLE_TPCDS_Q7,
-    "tpcds_q42": ORACLE_TPCDS_Q42,
-    "tpcds_q52": ORACLE_TPCDS_Q52,
-    "tpcds_q55": ORACLE_TPCDS_Q55,
-    "tpcds_q67": ORACLE_TPCDS_Q67,
-    "tpcds_q68": ORACLE_TPCDS_Q68,
-    "tpcds_q96": ORACLE_TPCDS_Q96,
-    "tpcds_q04": ORACLE_TPCDS_Q4,
-    "tpcds_q35": ORACLE_TPCDS_Q35,
-    "tpcds_q43": ORACLE_TPCDS_Q43,
-    "tpcds_q48": ORACLE_TPCDS_Q48,
-    "tpcds_q53": ORACLE_TPCDS_Q53,
-    "tpcds_q61": ORACLE_TPCDS_Q61,
-    "tpcds_q62": ORACLE_TPCDS_Q62,
-    "tpcds_q72": ORACLE_TPCDS_Q72,
-    "tpcds_q87": ORACLE_TPCDS_Q87,
-    "tpcds_q98": ORACLE_TPCDS_Q98,
-}
-
-
-def queries():
-    return dict(QUERIES)
-
-
-def oracle_sql():
-    return dict(ORACLES)
+ROWS = (
+    Query("tpcds_q73", q_tpcds_q73, ORACLE_TPCDS_Q73),
+    _decorrelated("tpcds_q01", _Q01_BODY),
+    _decorrelated("tpcds_q06", _Q06_BODY),
+    _decorrelated("tpcds_q30", _Q30_BODY),
+    _decorrelated("tpcds_q81", _Q81_BODY),
+    _decorrelated("tpcds_q32", _Q32_BODY),
+    _decorrelated("tpcds_q47", _Q47_BODY),
+    _decorrelated("tpcds_q16", _Q16_BODY),
+    _decorrelated("tpcds_q38", _Q38_BODY),
+    _decorrelated("tpcds_q71", _Q71_BODY),
+    _decorrelated("tpcds_q88", _Q88_BODY),
+    _decorrelated("tpcds_q44", _Q44_BODY),
+    _decorrelated("tpcds_q70", _Q70_BODY),
+    _decorrelated("tpcds_q23", _Q23_BODY),
+    _decorrelated("tpcds_q51", _Q51_BODY),
+    _decorrelated("tpcds_q11", _Q11_BODY),
+    _decorrelated("tpcds_q93", _Q93_BODY),
+    _decorrelated("tpcds_q97", _Q97_BODY),
+    _decorrelated("tpcds_q39", _Q39_BODY),
+    _decorrelated("tpcds_q49", _Q49_BODY),
+    _decorrelated("tpcds_q95", _Q95_BODY),
+    _decorrelated("tpcds_q29", _Q29_BODY),
+    _decorrelated("tpcds_q31", _Q31_BODY),
+    Query("tpcds_q14", q_tpcds_q14, _DECORRELATION_VIEWS + _Q14_BODY),
+    _decorrelated("tpcds_q64", _Q64_BODY),
+    _decorrelated("tpcds_q78", _Q78_BODY),
+    _decorrelated("tpcds_q09", _Q9_BODY),
+    _decorrelated("tpcds_q59", _Q59_BODY),
+    _decorrelated("tpcds_q65", _Q65_BODY),
+    _decorrelated("tpcds_q75", _Q75_BODY),
+    _decorrelated("tpcds_q76", _Q76_BODY),
+    _decorrelated("tpcds_q90", _Q90_BODY),
+    Query("tpcds_q03", q_tpcds_q3, ORACLE_TPCDS_Q3),
+    Query("tpcds_q07", q_tpcds_q7, ORACLE_TPCDS_Q7),
+    Query("tpcds_q42", q_tpcds_q42, ORACLE_TPCDS_Q42),
+    Query("tpcds_q52", q_tpcds_q52, ORACLE_TPCDS_Q52),
+    Query("tpcds_q55", q_tpcds_q55, ORACLE_TPCDS_Q55),
+    Query("tpcds_q67", q_tpcds_q67, ORACLE_TPCDS_Q67),
+    Query("tpcds_q68", q_tpcds_q68, ORACLE_TPCDS_Q68),
+    Query("tpcds_q96", q_tpcds_q96, ORACLE_TPCDS_Q96),
+    _decorrelated("tpcds_q04", _Q04_BODY),
+    _decorrelated("tpcds_q35", _Q35_BODY),
+    _decorrelated("tpcds_q43", _Q43_BODY),
+    _decorrelated("tpcds_q48", _Q48_BODY),
+    _decorrelated("tpcds_q53", _Q53_BODY),
+    _decorrelated("tpcds_q61", _Q61_BODY),
+    _decorrelated("tpcds_q62", _Q62_BODY),
+    _decorrelated("tpcds_q72", _Q72_BODY),
+    _decorrelated("tpcds_q87", _Q87_BODY),
+    _decorrelated("tpcds_q98", _Q98_BODY),
+)

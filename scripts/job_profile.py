@@ -24,6 +24,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     names = sys.argv[1:]
+    import __spark_entry__ as entrymod
+
+    unknown = [n for n in names if n not in entrymod.REGISTRY]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     evdir = tempfile.mkdtemp(prefix="sparkev_")
@@ -41,15 +48,10 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entrymod
-
     qs = entrymod.queries()
 
     marks: list[tuple[str, float, float]] = []  # (name, t_start, t_end)
     for name in names:
-        if name not in qs:
-            print(f"SKIP unknown {name}")
-            continue
         spark.sparkContext.setJobDescription(f"warm:{name}")
         try:
             qs[name](spark, sf_dir).count()

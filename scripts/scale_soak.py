@@ -205,12 +205,13 @@ def main() -> None:
               f"{round(time.time() - t0, 1)}s", file=sys.stderr)
 
     qs = _soak_queries(FLAGSHIPS if args.sf10 else None)
+    import __spark_entry__ as entrymod
+
     # warm codegen / arrow pool / streaming on the small dir
-    for name in ("tpch_q06", "ext_dedup_clusters", "ext_ann_ivf",
-                 "ext_multimodal_features", "ext_stream_tumbling"):
-        if name in qs:
+    for name, q in entrymod.REGISTRY.items():
+        if q.warms and name in qs:
             try:
-                qs[name](spark, "/root/testdata/sf0.001").count()
+                q.build(spark, "/root/testdata/sf0.001").count()
             except Exception as e:
                 print(f"[soak] warm {name}: {e}", file=sys.stderr)
 

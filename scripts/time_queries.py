@@ -32,6 +32,13 @@ def main() -> int:
         else:
             names.append(args[i]); i += 1
 
+    import __spark_entry__ as entrymod
+
+    unknown = [n for n in names if n not in entrymod.REGISTRY]
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -39,8 +46,6 @@ def main() -> int:
 
     spark = get_spark("time_queries", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
 
@@ -51,9 +56,6 @@ def main() -> int:
             df.count()
 
     for name in names:
-        if name not in qs:
-            print(f"SKIP unknown {name}")
-            continue
         spark.sparkContext.setJobDescription(f"warm:{name}")
         try:
             run(qs[name](spark, sf_dir))

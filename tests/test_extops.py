@@ -5,16 +5,17 @@ from __future__ import annotations
 
 import pytest
 
+from __spark_entry__ import REGISTRY
 from drill_spark import extops
 from drill_spark.session import local_frame
 
 from .conftest import SF_DIR, assert_same_results
 
 
-@pytest.mark.parametrize("name", sorted(extops.ORACLES))
+@pytest.mark.parametrize("name", sorted(extops.oracle_sql()))
 def test_extop_oracle(name, spark, duck):
-    df = extops.QUERIES[name](spark, SF_DIR)
-    assert_same_results(df, duck, extops.ORACLES[name])
+    df = REGISTRY[name].build(spark, SF_DIR)
+    assert_same_results(df, duck, REGISTRY[name].oracle)
 
 
 def test_minhash_recall(spark):

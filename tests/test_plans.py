@@ -11,7 +11,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from drill_spark import plans, relops, tpch
+from __spark_entry__ import REGISTRY
+from drill_spark import plans, tpch
 from drill_spark.session import load_fixture, local_frame
 
 from .conftest import SF_DIR
@@ -20,14 +21,14 @@ from .conftest import SF_DIR
 def test_filter_pushdown_reaches_scan(spark):
     """TPC-H Q6 predicates must appear as PushedFilters on the parquet
     scan (Drill: FilePushDownFilter)."""
-    df = tpch.queries()["tpch_q06"](spark, SF_DIR)
+    df = REGISTRY["tpch_q06"].build(spark, SF_DIR)
     pushed = " ".join(plans.pushed_filters(df))
     assert "l_shipdate" in pushed.lower() or "l_discount" in pushed.lower(), pushed
 
 
 def test_column_pruning_reaches_scan(spark):
     """Q6 touches 4 of lineitem's 16 columns; the scan must not read more."""
-    df = tpch.queries()["tpch_q06"](spark, SF_DIR)
+    df = REGISTRY["tpch_q06"].build(spark, SF_DIR)
     schemas = plans.read_schema_columns(df)
     assert schemas, "no scan found"
     for cols in schemas:
@@ -37,21 +38,21 @@ def test_column_pruning_reaches_scan(spark):
 def test_small_dim_join_broadcasts(spark):
     """customer ⋈ nation ⋈ region: dims must broadcast, not shuffle
     (Drill: BroadcastExchange chosen by cost)."""
-    df = relops.queries()["op_join_inner"](spark, SF_DIR)
+    df = REGISTRY["op_join_inner"].build(spark, SF_DIR)
     assert plans.has_broadcast_hash_join(df), plans.explain_str(df)
 
 
 def test_two_phase_aggregation(spark):
     """Q1 must plan partial (map-side) + final aggregation
     (Drill: HashAggPrule 2-phase)."""
-    df = tpch.queries()["tpch_q01"](spark, SF_DIR)
+    df = REGISTRY["tpch_q01"].build(spark, SF_DIR)
     assert plans.has_partial_aggregate(df), plans.explain_str(df)
 
 
 def test_topn_not_full_sort(spark):
     """ORDER BY + LIMIT must plan TakeOrderedAndProject (Drill TopN),
     not a global sort."""
-    df = relops.queries()["op_topn"](spark, SF_DIR)
+    df = REGISTRY["op_topn"].build(spark, SF_DIR)
     assert plans.has_take_ordered(df), plans.explain_str(df)
 
 
@@ -59,10 +60,10 @@ def test_relational_core_is_jvm_side(spark):
     """No Python-eval nodes in the relational core: TPC-H + relops plans
     stay inside Catalyst/codegen (UDFs are the slow path)."""
     for name in ("tpch_q01", "tpch_q03", "tpch_q06"):
-        df = tpch.queries()[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         assert not plans.has_python_eval(df), f"{name} fell out of the JVM"
     for name in ("op_join_inner", "op_window_ranks", "op_agg_rollup"):
-        df = relops.queries()[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         assert not plans.has_python_eval(df), f"{name} fell out of the JVM"
 
 
@@ -70,25 +71,23 @@ def test_tpch_corpus_plan_invariants(spark):
     """All 22 TPC-H plans: JVM-side only, and every lineitem scan is
     column-pruned (never reads the full 7+-column fixture schema when
     fewer are needed)."""
-    for name, fn in tpch.queries().items():
-        df = fn(spark, SF_DIR)
+    for q in tpch.ROWS:
+        name, df = q.name, q.build(spark, SF_DIR)
         assert not plans.has_python_eval(df), f"{name} fell out of the JVM"
         s = plans.explain_str(df)
         assert "CartesianProduct" not in s, f"{name} planned a cartesian product"
 
 
 def test_wholestage_codegen_covers_q1(spark):
-    df = tpch.queries()["tpch_q01"](spark, SF_DIR)
+    df = REGISTRY["tpch_q01"].build(spark, SF_DIR)
     assert plans.wholestage_codegen_spans(df) >= 1
 
 
 def test_extension_ops_jvm_side(spark):
     """Dedup/text ops are built from Catalyst expressions, not Python
     UDFs (multimodal feature extraction is the documented exception)."""
-    from drill_spark import extops
-
     for name in ("ext_dedup_exact", "ext_text_stats", "ext_text_fingerprint"):
-        df = extops.QUERIES[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         assert not plans.has_python_eval(df), f"{name} fell out of the JVM"
 
 
@@ -138,9 +137,7 @@ def test_trigram_lm_plan_shape(spark):
     """Corpus-trained trigram LM scoring: zero Python in the plan and
     the vocabulary-sized count tables join back as BROADCASTS — the
     shape that keeps a 100 TB corpus at one scan + bounded aggs."""
-    from drill_spark import extops
-
-    df = extops.QUERIES["ext_trigram_lm"](spark, SF_DIR)
+    df = REGISTRY["ext_trigram_lm"].build(spark, SF_DIR)
     assert not plans.has_python_eval(df)
     phys = df._jdf.queryExecution().executedPlan().toString()
     assert phys.count("BroadcastHashJoin") >= 2, phys[:2000]
@@ -149,9 +146,7 @@ def test_trigram_lm_plan_shape(spark):
 def test_semantic_dedup_no_cartesian(spark):
     """SemDeDup's pair stage must stay a bucketed equi-join — never a
     cartesian/broadcast-nested-loop across the corpus."""
-    from drill_spark import extops
-
-    df = extops.QUERIES["ext_semantic_dedup"](spark, SF_DIR)
+    df = REGISTRY["ext_semantic_dedup"].build(spark, SF_DIR)
     phys = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in phys
     assert "BroadcastNestedLoopJoin" not in phys
@@ -161,10 +156,8 @@ def test_setsim_containment_no_cartesian_no_python(spark):
     """The exact similarity joins must stay prefix-keyed equi-joins:
     no cartesian/NLJ across the corpus and no Python eval anywhere —
     tokenize, order, prefix, candidate and verify are all Catalyst."""
-    from drill_spark import extops
-
     for name in ("ext_setsim_join", "ext_containment_join"):
-        df = extops.QUERIES[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         assert not plans.has_python_eval(df), name
         phys = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in phys, name
@@ -198,11 +191,9 @@ def test_multimodal_dedup_plans_no_cartesian(spark):
     hash/band keys — never a cartesian or nested-loop across the
     corpus — and their verify math stays JVM-side after the Arrow
     fingerprinting pass."""
-    from drill_spark import extops
-
     for name in ("ext_substring_dedup", "ext_image_phash_dedup",
                  "ext_audio_dedup", "ext_video_dedup"):
-        df = extops.QUERIES[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         phys = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in phys, name
         assert "BroadcastNestedLoopJoin" not in phys, name
@@ -245,9 +236,7 @@ def test_search_and_fuzzy_plan_invariants(spark):
     TakeOrderedAndProject (never a global sort), its df/corpus sides
     broadcast; the fuzzy join must pair through token equi-joins (no
     cartesian / nested loop); every one stays JVM-side."""
-    from drill_spark import extops
-
-    bm25 = extops.QUERIES["ext_bm25_topk"](spark, SF_DIR)
+    bm25 = REGISTRY["ext_bm25_topk"].build(spark, SF_DIR)
     assert plans.has_take_ordered(bm25)
     assert not plans.has_python_eval(bm25)
     phys = bm25._jdf.queryExecution().executedPlan().toString()
@@ -257,7 +246,7 @@ def test_search_and_fuzzy_plan_invariants(spark):
     # tfidf's single BroadcastNestedLoopJoin is the one-row corpus-stats
     # cross join (BuildRight) — a constant-size broadcast, not a pair
     # explosion; everything else must have none at all
-    tfidf = extops.QUERIES["ext_tfidf_keywords"](spark, SF_DIR)
+    tfidf = REGISTRY["ext_tfidf_keywords"].build(spark, SF_DIR)
     phys = tfidf._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in phys
     assert phys.count("BroadcastNestedLoopJoin") <= 1
@@ -266,7 +255,7 @@ def test_search_and_fuzzy_plan_invariants(spark):
 
     # triplet mining: the anchor-batch cross is the one allowed
     # broadcast NLJ; the corpus side must never build
-    trip = extops.QUERIES["ext_triplet_mine"](spark, SF_DIR)
+    trip = REGISTRY["ext_triplet_mine"].build(spark, SF_DIR)
     phys = trip._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in phys
     assert "BroadcastNestedLoopJoin BuildLeft" not in phys
@@ -274,7 +263,7 @@ def test_search_and_fuzzy_plan_invariants(spark):
 
     for name in ("ext_fuzzy_join", "ext_leakage_split", "ext_url_canon",
                  "ext_line_dedup", "ext_gap_fill"):
-        df = extops.QUERIES[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         phys = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in phys, name
         assert "BroadcastNestedLoopJoin" not in phys, name

@@ -5,15 +5,17 @@ from __future__ import annotations
 
 import pytest
 
+from __spark_entry__ import REGISTRY
 from drill_spark import relops
 
 from .conftest import SF_DIR, assert_same_results
 
 
-@pytest.mark.parametrize("name", sorted(relops.SPECS))
+@pytest.mark.parametrize(
+    "name", sorted(q.name for q in relops.ROWS if q.oracle is not None))
 def test_relop(name, spark, duck):
-    df = relops.queries()[name](spark, SF_DIR)
-    assert_same_results(df, duck, relops.oracle_sql()[name])
+    df = REGISTRY[name].build(spark, SF_DIR)
+    assert_same_results(df, duck, REGISTRY[name].oracle)
 
 
 def test_approx_ndv_bounded_error(spark, duck):
@@ -21,7 +23,7 @@ def test_approx_ndv_bounded_error(spark, duck):
     (hash-specific values → rows-only for the driver, bounded here)."""
     got = {
         r["o_orderstatus"]: r["approx_cust"]
-        for r in relops.queries()["op_agg_approx_ndv"](spark, SF_DIR).collect()
+        for r in REGISTRY["op_agg_approx_ndv"].build(spark, SF_DIR).collect()
     }
     exact = dict(
         duck.execute(
@@ -30,7 +32,7 @@ def test_approx_ndv_bounded_error(spark, duck):
     )
     for k, e in exact.items():
         assert abs(got[k] - e) <= max(2, 0.05 * e), (k, got[k], e)
-    est = relops.queries()["op_agg_hll_sketch"](spark, SF_DIR).head()["est_custkeys"]
+    est = REGISTRY["op_agg_hll_sketch"].build(spark, SF_DIR).head()["est_custkeys"]
     e = duck.execute("select count(distinct o_custkey) from orders").fetchone()[0]
     assert abs(est - e) <= max(2, 0.05 * e)
 
@@ -38,7 +40,7 @@ def test_approx_ndv_bounded_error(spark, duck):
 def test_approx_percentile_bounded_error(spark, duck):
     got = {
         r["l_returnflag"]: r["approx_med"]
-        for r in relops.queries()["op_agg_approx_percentile"](spark, SF_DIR).collect()
+        for r in REGISTRY["op_agg_approx_percentile"].build(spark, SF_DIR).collect()
     }
     exact = dict(
         duck.execute(

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from __spark_entry__ import REGISTRY
 from drill_spark import plans
 from drill_spark.ops.scale import salted_join, write_bucketed
 from drill_spark.session import load_fixture
@@ -73,9 +74,7 @@ def test_bucketed_join_has_no_shuffle(spark):
 def test_asof_join_is_not_a_nested_loop(spark):
     """The as-of union+window formulation must never plan a nested-loop
     or cartesian join (the naive inequality-join formulation does)."""
-    from drill_spark import extops
-
-    df = extops.QUERIES["ext_asof_join"](spark, SF_DIR)
+    df = REGISTRY["ext_asof_join"].build(spark, SF_DIR)
     s = plans.explain_str(df)
     assert "BroadcastNestedLoopJoin" not in s and "CartesianProduct" not in s, s
     assert "Window" in s
@@ -84,9 +83,7 @@ def test_asof_join_is_not_a_nested_loop(spark):
 def test_range_join_is_equi_bucketed(spark):
     """Point-in-interval join runs as an equi hash join on the bucket
     id, with containment as a post-filter — not an inequality NLJ."""
-    from drill_spark import extops
-
-    df = extops.QUERIES["ext_range_join"](spark, SF_DIR)
+    df = REGISTRY["ext_range_join"].build(spark, SF_DIR)
     s = plans.explain_str(df)
     assert "BroadcastNestedLoopJoin" not in s and "CartesianProduct" not in s, s
 
@@ -106,9 +103,7 @@ def test_crawl_pipeline_single_shuffle(spark):
     """WARC scan -> HTML extract -> dup-signal window: the extraction
     chain must pipeline onto the scan (no exchange between them); the
     ONLY exchange in the plan is the dup-hash window's."""
-    from drill_spark import extops
-
-    df = extops.QUERIES["ext_crawl_pipeline"](spark, SF_DIR)
+    df = REGISTRY["ext_crawl_pipeline"].build(spark, SF_DIR)
     rep = plans.explain_report(df)
     assert rep["shuffles"] <= 1, rep
     s = plans.explain_str(df)

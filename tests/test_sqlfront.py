@@ -59,6 +59,11 @@ def test_table_function_options(dsession):
     )
     assert df.columns == ["a", "b"]
     assert df.count() == 2
+    # `name = value` is not Drill's option syntax: an error, not a read
+    # with default options
+    with pytest.raises(ValueError, match="fieldDelimiter = ';'"):
+        dsession.sql(
+            "select * from table(dfs.data.`pipes.psv`(type = 'text', fieldDelimiter = ';'))")
 
 
 def test_table_function_options_unescape_doubled_quotes(dsession):
@@ -200,6 +205,21 @@ def test_dotted_information_schema_and_sys_queries(dsession):
     assert opts.get("probe.opt") == "on"
     fns = {r["name"] for r in dsession.sql("select name from sys.functions").collect()}
     assert "kvgen" in fns  # compat layer visible in the registry
+
+
+def test_system_table_names_in_string_literals(dsession):
+    """A string literal that spells a system table stays a string, while
+    a pipeline input naming one still reads its snapshot view."""
+    row = dsession.sql(
+        "select 'sys.version' as a, 'information_schema.tables' as b, "
+        "'it''s sys.options' as c").head()
+    assert (row.a, row.b, row.c) == (
+        "sys.version", "information_schema.tables", "it's sys.options")
+    dsession.set_option("literal.probe", "on")
+    names = {r.name for r in dsession.sql(
+        "select name from table(pipeline.`training_shards`("
+        "input => 'sys.options', id => 'name', shards => '2'))").collect()}
+    assert "literal.probe" in names
 
 
 def test_information_schema_and_sys(dsession):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from __spark_entry__ import REGISTRY
 from drill_spark.ops.substr import substr_dedup, substr_duplicate_spans
 
 
@@ -233,13 +234,13 @@ def test_substr_dedup_plan_shape(spark):
     detection is a hash-keyed groupBy + semi-join, not a self-join on
     inequality), no Python eval, and exactly one window pass builds
     the rolling spans."""
-    from drill_spark import extops, plans
+    from drill_spark import plans
 
     from .conftest import SF_DIR
 
     for name in ("ext_substr_dedup", "ext_substr_spans",
                  "ext_substr_decontam", "ext_gopher_repetition"):
-        df = extops.QUERIES[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         assert not plans.has_python_eval(df), name
         phys = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in phys, name

@@ -5,6 +5,7 @@ TestTpcdsSf1Leaks.java's rerun-the-query leak canary)."""
 
 from __future__ import annotations
 
+from __spark_entry__ import REGISTRY
 from drill_spark import tpcds
 from drill_spark.plans import explain_str
 
@@ -12,7 +13,7 @@ from .conftest import SF_DIR
 
 
 def _run(spark):
-    df = tpcds.QUERIES["tpcds_q73"](spark, SF_DIR)
+    df = REGISTRY["tpcds_q73"].build(spark, SF_DIR)
     return sorted(map(tuple, df.collect()))
 
 
@@ -29,7 +30,7 @@ def test_q73_shape_and_filters(spark):
 def test_q73_plan_is_broadcast_star(spark):
     """The three constant-size dimensions and the date spine must
     broadcast; the top-1000 must be TakeOrdered, not a global sort."""
-    df = tpcds.QUERIES["tpcds_q73"](spark, SF_DIR)
+    df = REGISTRY["tpcds_q73"].build(spark, SF_DIR)
     phys = explain_str(df)
     assert phys.count("BroadcastHashJoin") >= 3
     assert "CartesianProduct" not in phys
@@ -59,7 +60,7 @@ def test_q7_plan_is_four_dim_broadcast_star(spark):
     """q7 joins four constant-size dimensions: every one must
     broadcast, the aggregate must be partial+final on the fact, and
     top-100 must be TakeOrdered."""
-    df = tpcds.QUERIES["tpcds_q07"](spark, SF_DIR)
+    df = REGISTRY["tpcds_q07"].build(spark, SF_DIR)
     phys = explain_str(df)
     assert phys.count("BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in phys
@@ -69,8 +70,8 @@ def test_q7_plan_is_four_dim_broadcast_star(spark):
 def test_q42_q52_agree_on_brand_totals(spark):
     """q42 (category) and q52 (brand) share the manager-1/Nov/2000
     slice, so their revenue totals over the slice must agree."""
-    q42 = tpcds.QUERIES["tpcds_q42"](spark, SF_DIR).collect()
-    q52 = tpcds.QUERIES["tpcds_q52"](spark, SF_DIR).collect()
+    q42 = REGISTRY["tpcds_q42"].build(spark, SF_DIR).collect()
+    q52 = REGISTRY["tpcds_q52"].build(spark, SF_DIR).collect()
     assert abs(sum(r["sum_ss"] for r in q42)
                - sum(r["ext_price"] for r in q52)) < 0.02 * max(len(q42), len(q52))
 
@@ -79,7 +80,7 @@ def test_q67_rollup_and_rank_shape(spark):
     """The rollup monster: every category's rows are rank<=10, the
     all-null grand-total row ranks 1 in the null category partition,
     and each category's rank-1 sumsales dominates its partition."""
-    rows = tpcds.QUERIES["tpcds_q67"](spark, SF_DIR).collect()
+    rows = REGISTRY["tpcds_q67"].build(spark, SF_DIR).collect()
     assert rows
     by_cat = {}
     for r in rows:
@@ -93,12 +94,12 @@ def test_q67_rollup_and_rank_shape(spark):
 
 
 def test_q96_count_and_q68_city_mismatch(spark):
-    cnt = tpcds.QUERIES["tpcds_q96"](spark, SF_DIR).first()["cnt"]
+    cnt = REGISTRY["tpcds_q96"].build(spark, SF_DIR).first()["cnt"]
     assert cnt > 0  # the fixture slice must actually match
-    rows = tpcds.QUERIES["tpcds_q68"](spark, SF_DIR).collect()
+    rows = REGISTRY["tpcds_q68"].build(spark, SF_DIR).collect()
     assert rows and all(r["current_city"] != r["bought_city"]
                         for r in rows)
-    phys = explain_str(tpcds.QUERIES["tpcds_q68"](spark, SF_DIR))
+    phys = explain_str(REGISTRY["tpcds_q68"].build(spark, SF_DIR))
     assert phys.count("BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in phys
 
@@ -111,7 +112,7 @@ def test_decorrelated_queries_plan_no_nested_loop(spark):
     exist to avoid, PlannerPhase.java:134-141)."""
     for name in ("tpcds_q01", "tpcds_q06", "tpcds_q30", "tpcds_q81",
                  "tpcds_q32", "tpcds_q47"):
-        df = tpcds.QUERIES[name](spark, SF_DIR)
+        df = REGISTRY[name].build(spark, SF_DIR)
         phys = explain_str(df)
         assert "CartesianProduct" not in phys, (name, phys)
         assert "BroadcastNestedLoopJoin" not in phys, (name, phys)
@@ -141,7 +142,7 @@ def test_decorrelated_q1_threshold_is_exact(spark):
                   if r["store"] in stores
                   and r["total"] > 1.2 * means[r["store"]]}
     got = {r["c_customer_id"] for r in
-           tpcds.QUERIES["tpcds_q01"](spark, SF_DIR).collect()}
+           REGISTRY["tpcds_q01"].build(spark, SF_DIR).collect()}
     assert got <= qualifying and got
 
 
@@ -149,13 +150,13 @@ def test_exists_shapes_plan_semi_anti(spark):
     """q16's EXISTS/NOT EXISTS must decorrelate to left-semi and
     left-anti joins (never NLJ over the fact); q38/q71/q88 shapes must
     also stay free of cartesian products."""
-    df = tpcds.QUERIES["tpcds_q16"](spark, SF_DIR)
+    df = REGISTRY["tpcds_q16"].build(spark, SF_DIR)
     phys = explain_str(df)
     assert "LeftSemi" in phys, phys
     assert "LeftAnti" in phys, phys
     assert "CartesianProduct" not in phys, phys
     for name in ("tpcds_q38", "tpcds_q71", "tpcds_q88"):
-        p = explain_str(tpcds.QUERIES[name](spark, SF_DIR))
+        p = explain_str(REGISTRY[name].build(spark, SF_DIR))
         assert "CartesianProduct" not in p, (name, p)
 
 
@@ -164,7 +165,7 @@ def test_q44_two_sided_rank_join(spark):
     HAVING-filtered aggregate join on rnk; ranks 1..10 each appear
     exactly once, and the best/worst name columns are mirror images
     (rank k ascending = rank n-k+1 descending over unique ranks)."""
-    df = tpcds.QUERIES["tpcds_q44"](spark, SF_DIR)
+    df = REGISTRY["tpcds_q44"].build(spark, SF_DIR)
     rows = df.collect()
     assert [r.rnk for r in rows] == list(range(1, 11))
     assert len({r.best_performing for r in rows}) == 10
@@ -177,7 +178,7 @@ def test_q70_rollup_rank_within_parent(spark):
     rank. Level-2 is the single grand total; level-1 ranks the top-5
     counties 1..n uniquely; each county's level-0 city ranks restart
     at 1; and each level-1 total equals the sum of its level-0 rows."""
-    rows = tpcds.QUERIES["tpcds_q70"](spark, SF_DIR).collect()
+    rows = REGISTRY["tpcds_q70"].build(spark, SF_DIR).collect()
     by_level = {}
     for r in rows:
         by_level.setdefault(r.lochierarchy, []).append(r)
@@ -208,9 +209,9 @@ def test_q23_best_customer_gate(spark):
     mx = csales.agg(F.max("s")).first()[0]
     n_best = csales.where(F.col("s") > 0.5 * mx).count()
     assert 0 < n_best < csales.count()
-    row = tpcds.QUERIES["tpcds_q23"](spark, SF_DIR).first()
+    row = REGISTRY["tpcds_q23"].build(spark, SF_DIR).first()
     assert row.sales_cents > 0 and row.n_rows > 0
-    phys = explain_str(tpcds.QUERIES["tpcds_q23"](spark, SF_DIR))
+    phys = explain_str(REGISTRY["tpcds_q23"].build(spark, SF_DIR))
     assert "CartesianProduct" not in phys, phys
 
 
@@ -218,7 +219,7 @@ def test_q51_cumulative_overtake(spark):
     """q51 shape: web_cumulative/store_cumulative must be running maxes
     of per-channel cumulative sums — non-decreasing per item, and every
     output row has web strictly ahead."""
-    rows = tpcds.QUERIES["tpcds_q51"](spark, SF_DIR).collect()
+    rows = REGISTRY["tpcds_q51"].build(spark, SF_DIR).collect()
     assert rows
     last = {}
     for r in rows:                      # ordered by (item_sk, dsk)
@@ -233,7 +234,7 @@ def test_q11_growth_ratio_shape(spark):
     """q11 shape: every returned customer has positive first-year
     totals in both channels and a strictly greater web growth ratio;
     output is the first 100 customers by key (deterministic LIMIT)."""
-    rows = tpcds.QUERIES["tpcds_q11"](spark, SF_DIR).collect()
+    rows = REGISTRY["tpcds_q11"].build(spark, SF_DIR).collect()
     assert rows
     assert [r.customer_sk for r in rows] == sorted(
         r.customer_sk for r in rows)
@@ -251,7 +252,7 @@ def test_r12_shapes_plan_no_cartesian(spark):
     design: its two single-row scalar aggregates cross-join 1x1."""
     for name in ("tpcds_q14", "tpcds_q64", "tpcds_q78", "tpcds_q59",
                  "tpcds_q65", "tpcds_q75", "tpcds_q76"):
-        phys = explain_str(tpcds.QUERIES[name](spark, SF_DIR))
+        phys = explain_str(REGISTRY[name].build(spark, SF_DIR))
         assert "CartesianProduct" not in phys, (name, phys)
         assert "BroadcastNestedLoopJoin" not in phys, (name, phys)
 
@@ -304,11 +305,11 @@ def test_q9_scalar_buckets_and_q90_ratio(spark):
     """q9 returns exactly one row of five bucket statistics (each a
     scalar CASE over two scalar subqueries); q90's ratio equals the
     two counts it reports, floored to 4 decimals."""
-    r9 = tpcds.QUERIES["tpcds_q09"](spark, SF_DIR).collect()
+    r9 = REGISTRY["tpcds_q09"].build(spark, SF_DIR).collect()
     assert len(r9) == 1 and len(r9[0]) == 5
     assert all(v is not None and v >= 0 for v in r9[0])
 
-    r90 = tpcds.QUERIES["tpcds_q90"](spark, SF_DIR).collect()
+    r90 = REGISTRY["tpcds_q90"].build(spark, SF_DIR).collect()
     assert len(r90) == 1
     amc, pmc, ratio = r90[0].amc, r90[0].pmc, r90[0].am_pm_ratio
     import math
@@ -343,7 +344,7 @@ def test_q14_cross_items_is_three_channel_intersection(spark):
         where ws_item_sk = i_item_sk and ws_sold_date_sk = d_date_sk
           and d_year = 1999""")
     allowed = store & cat & web
-    got = tpcds.QUERIES["tpcds_q14"](spark, SF_DIR).collect()
+    got = REGISTRY["tpcds_q14"].build(spark, SF_DIR).collect()
     assert got
     assert {(r.i_brand_id, r.i_class_id, r.i_category_id)
             for r in got} <= allowed
@@ -353,11 +354,11 @@ def test_q14_drops_its_view_and_matches_oracle(spark, duck):
     """q14 publishes its materialized cross_items under a per-invocation
     name and drops it once the consumer is analyzed: no tpcds_q14_*
     view is left, and the result still counts what the oracle counts."""
-    df = tpcds.QUERIES["tpcds_q14"](spark, SF_DIR)
+    df = REGISTRY["tpcds_q14"].build(spark, SF_DIR)
     assert not [t.name for t in spark.catalog.listTables()
                 if t.name.startswith("tpcds_q14_")]
     want = duck.execute(
-        f"select count(*) from ({tpcds.ORACLES['tpcds_q14']})").fetchone()[0]
+        f"select count(*) from ({REGISTRY['tpcds_q14'].oracle})").fetchone()[0]
     assert df.count() == want
 
 
@@ -372,7 +373,7 @@ def test_r13_shapes_plan_no_cartesian(spark):
     for name in ("tpcds_q04", "tpcds_q35", "tpcds_q43", "tpcds_q48",
                  "tpcds_q53", "tpcds_q62", "tpcds_q72", "tpcds_q87",
                  "tpcds_q98"):
-        phys = explain_str(tpcds.QUERIES[name](spark, SF_DIR))
+        phys = explain_str(REGISTRY[name].build(spark, SF_DIR))
         assert "CartesianProduct" not in phys, (name, phys)
         assert "BroadcastNestedLoopJoin" not in phys, (name, phys)
 
@@ -402,7 +403,7 @@ def test_q87_except_is_store_only(spark):
     cat = pairs("tpcds_catalog_sales", "cs_sold_date_sk",
                 "cs_bill_customer_sk")
     want = len(store - web - cat)
-    got = tpcds.QUERIES["tpcds_q87"](spark, SF_DIR).collect()[0][0]
+    got = REGISTRY["tpcds_q87"].build(spark, SF_DIR).collect()[0][0]
     assert got == want
     assert 0 < got < len(store)  # the difference actually excludes
 
@@ -412,7 +413,7 @@ def test_q72_inventory_shortage_contract(spark):
     snapshot in the same week held less stock than the order quantity
     — replay the gate for the top group, and require the promo split
     to sum to the total."""
-    rows = tpcds.QUERIES["tpcds_q72"](spark, SF_DIR).collect()
+    rows = REGISTRY["tpcds_q72"].build(spark, SF_DIR).collect()
     assert rows
     for r in rows:
         assert r.no_promo + r.promo == r.total_cnt
@@ -433,7 +434,7 @@ def test_q4_growth_condition_replay(spark):
     and web growth — replayed with exact integer cross-products."""
     tpcds._register_decorrelation_views(spark, SF_DIR)
     got = {r.c_customer_id
-           for r in tpcds.QUERIES["tpcds_q04"](spark, SF_DIR).collect()}
+           for r in REGISTRY["tpcds_q04"].build(spark, SF_DIR).collect()}
     tot = {}
     for chan, sql in (
         ("s", "select ss_customer_sk as c, d_year as yr, "

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from __spark_entry__ import REGISTRY
 from drill_spark import tpch
 
 from .conftest import SF_DIR, assert_same_results
@@ -19,7 +20,7 @@ NONEMPTY = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(tpch.TPCH))
+@pytest.mark.parametrize("name", sorted(q.name for q in tpch.ROWS))
 def test_tpch_query(name, spark, duck):
-    df = tpch.queries()[name](spark, SF_DIR)
-    assert_same_results(df, duck, tpch.TPCH[name], check_rows=NONEMPTY.get(name))
+    df = REGISTRY[name].build(spark, SF_DIR)
+    assert_same_results(df, duck, REGISTRY[name].oracle, check_rows=NONEMPTY.get(name))

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from __spark_entry__ import REGISTRY
 from drill_spark import tpch
 
 
@@ -16,7 +17,7 @@ from drill_spark import tpch
 def test_forced_exchange_matches_default(spark, qname):
     from .conftest import SF_DIR
 
-    q = tpch.queries()[qname]
+    q = REGISTRY[qname].build
     default_rows = sorted(map(tuple, q(spark, SF_DIR).collect()))
     conf = spark.conf
     old_thresh = conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -67,8 +68,9 @@ def test_tpch_plan_shapes(spark):
     from .conftest import SF_DIR
 
     offenders = {}
-    for name, q in sorted(tpch.queries().items()):
-        plan = q(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    for r in tpch.ROWS:
+        name = r.name
+        plan = r.build(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         bad = [
             p
             for p in ("CartesianProduct", "BroadcastNestedLoopJoin", "PythonEval", "BatchEvalPython")
