@@ -18,6 +18,7 @@ any family for a hand-written builder.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,3 +68,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {k: q.oracle for k, q in REGISTRY.items() if q.oracle is not None}
+
+
+def warm(spark: SparkSession, sf_dir: str, names) -> None:
+    """Run each row of ``names`` that sets ``warms`` once over ``sf_dir``,
+    so the machinery it spins up is started before anything is timed. A
+    failing warm-up is reported on stderr and does not stop the run."""
+    for name, q in REGISTRY.items():
+        if q.warms and name in names:
+            try:
+                q.build(spark, sf_dir).count()
+            except Exception as e:
+                print(f"warmup {name}: {e}", file=sys.stderr)

@@ -103,12 +103,7 @@ def main() -> None:
             warm_dir = cand
             break
     t_warm = time.time()
-    for wname, q in entrymod.REGISTRY.items():
-        if q.warms and wname in qs:
-            try:
-                q.build(spark, warm_dir).count()
-            except Exception as e:
-                print(f"warmup {wname}: {e}", file=sys.stderr)
+    entrymod.warm(spark, warm_dir, qs)
     print(f"\n[bench] warmup: {round(time.time() - t_warm, 3)}s", file=sys.stderr)
     probe("post-warmup")
 

@@ -7675,7 +7675,7 @@ ROWS = (
           "connected components are iterative; equality with "
           "union-find is asserted in "
           "test_extops.py::test_dedup_clusters_match_union_find"),
-          warms="wide conditional agg + iterative join path"),
+          warms=True),  # wide conditional agg + iterative join path
     Query("ext_embed_topk", q_embed_topk, ORACLE_EMBED_TOPK),
     Query("ext_embed_dedup", q_embed_dedup, ORACLE_EMBED_DEDUP),
     Query("ext_ann_lsh", q_ann_lsh, why_no_oracle=(
@@ -7684,7 +7684,7 @@ ROWS = (
     Query("ext_ann_ivf", q_ann_ivf, why_no_oracle=(
           "k-means training is not SQL-expressible; recall is bounded "
           "in test_extops.py::test_ann_ivf_recall"),
-          warms="higher-order array exprs + window top-k"),
+          warms=True),  # higher-order array exprs + window top-k
     Query("ext_text_stats", q_text_stats, ORACLE_TEXT_STATS),
     Query("ext_text_tokens_bpe", q_text_tokens_bpe, ORACLE_TEXT_TOKENS_BPE),
     Query("ext_mixture_build_bpe", q_mixture_build_bpe,
@@ -7722,7 +7722,7 @@ ROWS = (
     Query("ext_multimodal_meta", q_multimodal_meta, ORACLE_MULTIMODAL_META),
     Query("ext_multimodal_features", q_multimodal_features,
           ORACLE_MULTIMODAL_FEATURES,
-          warms="Python/Arrow worker pool spin-up"),
+          warms=True),  # Python/Arrow worker pool spin-up
     Query("ext_multimodal_probe", q_multimodal_probe, ORACLE_MULTIMODAL_PROBE),
     Query("ext_multimodal_decode", q_multimodal_decode,
           ORACLE_MULTIMODAL_DECODE),
@@ -7730,7 +7730,7 @@ ROWS = (
     Query("ext_asof_join", q_asof_join, ORACLE_ASOF_JOIN),
     Query("ext_range_join", q_range_join, ORACLE_RANGE_JOIN),
     Query("ext_stream_tumbling", q_stream_tumbling, ORACLE_STREAM_TUMBLING,
-          warms="streaming engine init"),
+          warms=True),  # streaming engine init
     Query("ext_stream_sliding", q_stream_sliding, ORACLE_STREAM_SLIDING),
     Query("ext_stream_join", q_stream_join, ORACLE_STREAM_JOIN),
     Query("ext_stream_dedup", q_stream_dedup, ORACLE_STREAM_DEDUP),

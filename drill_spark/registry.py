@@ -21,17 +21,17 @@ class Query:
     fixtures in ``sf_dir``. ``oracle`` is DuckDB SQL whose rows must
     hash-match it. A query with no oracle is checked by row count only
     and says why in ``why_no_oracle``; a row must carry exactly one of
-    the two, so an oracle cannot go missing without a reason. ``warms``
-    names the engine machinery a first run of the query spins up
-    (codegen, the Python worker pool, ...): ``bench.py`` and
-    ``scripts/scale_soak.py`` run the rows that set it once, untimed,
-    before they time anything."""
+    the two, so an oracle cannot go missing without a reason. A row sets
+    ``warms`` when a first run of it spins up engine machinery (codegen,
+    the Python worker pool, ...): ``__spark_entry__.warm`` runs those
+    rows once, untimed, before ``bench.py`` and ``scripts/scale_soak.py``
+    time anything."""
 
     name: str
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None
     why_no_oracle: str | None = None
-    warms: str | None = None
+    warms: bool = False
 
     def __post_init__(self):
         if (self.oracle is None) == (self.why_no_oracle is None):

@@ -61,13 +61,19 @@ _PLAIN_QUERY = re.compile(
     re.IGNORECASE | re.DOTALL)
 _EXPLAIN_PLAN = re.compile(
     r"\s*EXPLAIN\s+PLAN\s+(?:WITH\s+IMPLEMENTATION\s+)?FOR\s+(.*)", re.IGNORECASE | re.DOTALL)
+# a string literal as Spark reads one (single- or double-quoted, a quote
+# escaped by a backslash or by doubling it) or a -- comment: text that an
+# identifier rewrite must leave as it is
+_LITERAL_OR_COMMENT = re.compile(
+    r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"|--[^\n]*", re.DOTALL)
 # INFORMATION_SCHEMA.x / sys.x tables (store/ischema/, store/sys/), x
-# plain or backquoted. A backquoted span, a single-quoted literal or a
-# -- comment matches first and is kept, so tsdb.`sys.cpu.user` (a path
-# that merely contains "sys.") stays a path and 'sys.version' a string
+# plain or backquoted. A backquoted span, a literal or a comment matches
+# first and is kept, so tsdb.`sys.cpu.user` (a path that merely contains
+# "sys.") stays a path and 'sys.version' a string
 _SYSTEM_TABLE = re.compile(
-    r"`[^`]*`|'(?:[^']|'')*'|--[^\n]*"
-    r"|\b(sys|information_schema)\s*\.\s*(?:`(\w+)`|(\w+))", re.IGNORECASE)
+    rf"`[^`]*`|{_LITERAL_OR_COMMENT.pattern}"
+    r"|\b(sys|information_schema)\s*\.\s*(?:`(\w+)`|(\w+))",
+    re.IGNORECASE | re.DOTALL)
 
 
 def _system_view(m: re.Match) -> str:
@@ -653,11 +659,6 @@ def _parse_tf_options(raw: str) -> dict[str, str]:
         else:
             opts[m.group(1)] = bare
     return opts
-
-
-# single-quoted string literals ('' escapes) and -- comments: segments an
-# identifier substitution must never touch
-_LITERAL_OR_COMMENT = re.compile(r"('(?:[^']|'')*')|(--[^\n]*)")
 
 
 def _sub_outside_literals(pattern: re.Pattern, repl: str, query: str) -> str:

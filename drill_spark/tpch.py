@@ -88,7 +88,7 @@ def ensure_views(spark: SparkSession, sf_dir: str, tables=None) -> None:
 
 def sql_query(name: str, sql: str, oracle: str | None = None,
               why_no_oracle: str | None = None, *,
-              drill_functions: bool = True, warms: str | None = None) -> Query:
+              drill_functions: bool = True, warms: bool = False) -> Query:
     """The row of a query that is one SQL text over the fixture views.
     Its oracle is the same text (see the dialect rules above) unless the
     row gives its own or says why it has none. ``drill_functions``
@@ -117,7 +117,7 @@ def sql_query(name: str, sql: str, oracle: str | None = None,
 ROWS: list[Query] = []
 
 
-def _q(name: str, sql: str, warms: str | None = None) -> None:
+def _q(name: str, sql: str, warms: bool = False) -> None:
     ROWS.append(sql_query(name, sql, drill_functions=False, warms=warms))
 
 
@@ -228,7 +228,7 @@ from lineitem
 where l_shipdate >= date '1996-01-01' and l_shipdate < date '1997-01-01'
   and l_discount between 0.05 and 0.07
   and l_quantity < 24
-""", warms="parquet scan + agg codegen")
+""", warms=True)  # parquet scan + agg codegen
 
 # Q7 — volume shipping (07.sql). Unmodified shape (two nation aliases).
 _q("tpch_q07", """

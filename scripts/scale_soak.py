@@ -208,12 +208,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     # warm codegen / arrow pool / streaming on the small dir
-    for name, q in entrymod.REGISTRY.items():
-        if q.warms and name in qs:
-            try:
-                q.build(spark, "/root/testdata/sf0.001").count()
-            except Exception as e:
-                print(f"[soak] warm {name}: {e}", file=sys.stderr)
+    entrymod.warm(spark, "/root/testdata/sf0.001", qs)
 
     t01 = time_queries(spark, qs, SF01)
     t1 = time_queries(spark, qs, sf_big_dir)

@@ -220,6 +220,13 @@ def test_system_table_names_in_string_literals(dsession):
         "select name from table(pipeline.`training_shards`("
         "input => 'sys.options', id => 'name', shards => '2'))").collect()}
     assert "literal.probe" in names
+    # Spark's other literal forms: a backslash-escaped quote and a
+    # double-quoted string holding "--" do not hide the table name
+    for lit, text in (("'a\\'b'", "a'b"), ('"a--b"', "a--b")):
+        row = dsession.sql(
+            f"select {lit} as x, name from sys.options "
+            "where name like 'literal.%'").head()
+        assert (row.x, row.name) == (text, "literal.probe")
 
 
 def test_information_schema_and_sys(dsession):
